@@ -74,7 +74,7 @@ def test_incremental_store_equals_from_scratch(spark, tmp_path):
         | ((F.to_date("ts") == F.lit(days[-1])) & (F.crc32("conv_id") % 2 == 0))
     )
     stats = refresh_tiers(spark, part, store, with_cms=False, with_kmv=False)
-    assert [s["day"] for s in stats] == days[-2:]
+    assert [s["days"] for s in stats] == [[d] for d in days[-2:]]
 
     # late data lands for the newest day: stale_days flags ONLY that day
     # (its raw count changed), and one replay absorbs it
@@ -121,7 +121,7 @@ def test_store_layout_prunes_by_day(spark, tmp_path):
     raw = transcripts_df(spark, C=10, seed=3)
     store = str(tmp_path / "store3")
     stats = refresh_tiers(spark, raw, store, with_cms=False, with_kmv=False)  # auto → batch for a fresh load
-    some_day = (stats[0].get("days") or [stats[0]["day"]])[0]
+    some_day = stats[0]["days"][0]
     assert os.path.isdir(os.path.join(store, "1h", f"day={some_day}"))
     one = spark.read.parquet(os.path.join(store, "1h", f"day={some_day}"))
     assert one.count() > 0
@@ -135,23 +135,50 @@ def test_store_layout_prunes_by_day(spark, tmp_path):
 
 def test_batch_equals_per_day_equals_scratch(spark, tmp_path):
     """The bulk-load batch path (one cascade, dynamic partition overwrite)
-    must produce byte-identical stores to the per-day path — and both to
-    the from-scratch cascade."""
-    raw = transcripts_df(spark, C=25, seed=13).cache()
+    must produce the same store as the per-day path for every family —
+    and both the same base/HLL tiers as the from-scratch cascade."""
+    from timeseriestokenizer_spark.plans.manifest import read_manifest
+
+    raw = transcripts_df(spark, C=25, seed=13)
+    days = sorted(
+        str(r["d"]) for r in raw.select(F.to_date("ts").alias("d")).distinct().collect()
+    )
+    raw = raw.filter(F.to_date("ts") <= F.lit(days[4])).cache()
+    sig = derive_signals(raw)
+    crossers = sig.filter(
+        (F.to_date("ts") != F.to_date(F.col("ts") - F.expr("INTERVAL 1 SECOND") * F.col("latency_s")))
+        & F.col("latency_s").isNotNull()
+    ).count()
+    assert crossers > 0  # the slice's lag window really spans a midnight
+
     s_batch, s_daily = str(tmp_path / "b"), str(tmp_path / "d")
-    out_b = refresh_tiers(spark, raw, s_batch, mode="batch", with_cms=False, with_kmv=False)
-    assert out_b[0]["mode"] == "batch"
-    refresh_tiers(spark, raw, s_daily, mode="per_day", with_cms=False, with_kmv=False)
-    cols = [
-        "conv_id", "bucket_ts", "n_turns", "n_lat", "sum_lat", "min_lat",
-        "max_lat", "sum_chars", "sum_tokens", "n_tool_calls",
-    ]
-    for tier in TIERS:
-        b = _rows(read_tier(spark, s_batch, tier), cols)
-        d = _rows(read_tier(spark, s_daily, tier), cols)
-        assert b == d, f"tier {tier}: batch != per_day"
+    out_b = refresh_tiers(spark, raw, s_batch, mode="batch")
+    assert [(o["mode"], o["days"]) for o in out_b] == [("batch", days[:5])]
+    out_d = refresh_tiers(spark, raw, s_daily, mode="per_day")
+    assert [o["days"] for o in out_d] == [[d] for d in days[:5]]
+    families = ["", "hll", "hist", "kll", "heavy", "cms", "kmv"]
+    for fam in families:
+        for tier in TIERS:
+            name = f"{fam}_{tier}" if fam else tier
+            b, d = read_tier(spark, s_batch, name), read_tier(spark, s_daily, name)
+            if fam == "hll":  # sketch blobs depend on merge order
+                b, d = with_distinct_estimate(b), with_distinct_estimate(d)
+                cols = ["bucket_ts", "n_distinct"]
+            else:
+                cols = b.columns
+            got_b, got_d = _rows(b, cols), _rows(d, cols)
+            assert got_b and got_b == got_d, f"{name}: batch != per_day"
+
+    def manifest_rows(store):
+        m = read_manifest(spark, os.path.join(store, "_manifest"))
+        return _rows(m, ["tier", "part_key", "n_rows"])
+
+    got = manifest_rows(s_batch)
+    assert got == manifest_rows(s_daily)
+    assert {t for t, _, _ in got} == {
+        f"{f}_{t}" if f else t for f in families for t in TIERS
+    } | {"_day"}
     _assert_store_equals_scratch(spark, s_batch, raw)
-    # a later single-day append continues from the batch's final snapshot
     raw.unpersist()
 
 
@@ -175,11 +202,9 @@ def test_batch_rejects_holes(spark, tmp_path):
     days = sorted(
         str(r["d"]) for r in raw.select(F.to_date("ts").alias("d")).distinct().collect()
     )
-    from timeseriestokenizer_spark.plans.incremental import refresh_days_batch
-
     with pytest.raises(ValueError, match="skips raw day"):
-        refresh_days_batch(
-            spark, raw, str(tmp_path / "h"), [days[0], days[2]]
+        refresh_tiers(
+            spark, raw, str(tmp_path / "h"), days=[days[0], days[2]], mode="batch"
         )
 
 

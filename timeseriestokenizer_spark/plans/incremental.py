@@ -1,22 +1,33 @@
 """Incremental tier refresh — the production shape of the retention engine.
 
-A day of transcripts lands; the 1m/5m/1h/1d tiers (and the HLL distinct
-tiers) refresh by computing ONLY that day's partitions and dynamically
-overwriting them in the tier store — history is never rescanned. This is
-exact because every tier bucket (minute/5-minute/hour/day) nests inside a
-calendar day, so a day's tier partitions are a pure function of that day's
-signal rows.
+A day of transcripts lands; the 1m/5m/1h/1d tiers and their sketch side
+states refresh by computing ONLY that day's partitions and overwriting them
+in the tier store — history is never rescanned. This is exact because every
+tier bucket (minute/5-minute/hour/day) nests inside a calendar day, so a
+day's tier partitions are a pure function of that day's signal rows.
 
 The one cross-day dependency is ``latency_s``: a turn's latency lags
 against the conversation's PREVIOUS turn, which for the first turn after
 midnight lives in an earlier day (possibly much earlier for dormant
 conversations). A fixed lookback would be approximate; instead the store
 carries a per-conversation WATERMARK state table — ``_conv_state/through=D``
-holds each conversation's last turn timestamp over all days <= D. Refreshing
-day D joins day-D raw turns with the state through D-1 as pseudo-rows in
-the lag window, so the first turn's latency is exact no matter how old the
-previous turn is. The state for day D is then merged from (state through
-D-1, day D maxima) — incremental itself, #active-conversations rows.
+holds each conversation's last turn timestamp over all days <= D. A refresh
+starting at day D joins its raw turns with the state through D-1 as
+pseudo-rows in the lag window, so the first turn's latency is exact no
+matter how old the previous turn is. The state through the refresh's last
+day is then merged from (state through D-1, the refresh's maxima) —
+incremental itself, #active-conversations rows.
+
+One refresh body handles a contiguous RUN of days: derive signals once,
+then one cascade per family (``_families``: the base rollup state plus the
+HLL/histogram/KLL/heavy-hitter/CMS/KMV sketches), each coarser tier built
+from the cached finer one. ``refresh_tiers``' ``mode`` only groups days
+into runs — ``per_day`` makes one run per day (a snapshot per day, the
+nightly shape), ``batch`` one run for all days (the bulk-load/backfill
+shape). How a tier is written follows from the run's length: one day
+overwrites ``<tier>/day=D`` and counts the cached tier; several days write
+all their partitions in one dynamic-partition-overwrite job and count rows
+per day with one group-by, so N days cost O(1) job rounds.
 
 Ingest is FORWARD-ONLY in event time (the classic warehouse constraint):
 each refresh's days must be >= every completed day; re-refreshing the
@@ -36,6 +47,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from datetime import datetime, timedelta
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,55 +68,27 @@ from ..operators.rollup import (
 )
 from .manifest import commit_partition, read_manifest
 
-TIER_ORDER = ["1m", "5m", "1h", "1d"]
+
+def _families() -> dict[str, tuple]:
+    """Tier-store families: prefix -> (finest tier from signals, coarser
+    tier from the next finer one). ``""`` is the base rollup state stored
+    as ``<tier>``; every other family is a sketch side state stored as
+    ``<prefix>_<tier>``, with the operators' default sketch sizes. Built
+    per call, so the builders are the module's names at call time (the
+    perfbench tracer wraps ``rollup_tier``/``rollup_from_finer`` here)."""
+    return {
+        "": (rollup_tier, rollup_from_finer),
+        "hll": (distinct_rollup_tier, distinct_rollup_from_finer),
+        "hist": (histogram_rollup_tier, histogram_rollup_from_finer),
+        "kll": (kll_rollup_tier, kll_rollup_from_finer),
+        "heavy": (heavy_rollup_tier, heavy_rollup_from_finer),
+        "cms": (cms_rollup_tier, cms_rollup_from_finer),
+        "kmv": (kmv_rollup_tier, kmv_rollup_from_finer),
+    }
 
 
-def _side_tier_day(spark, store_root, manifest, day, t0, prefix, first, finer):
-    """One sketch family's 1m->1d cascade for a single day partition —
-    finest tier from signals, coarser tiers by sketch merge (identical to
-    the cascade path, so refreshed state equals scratch state)."""
-    cur, prev_cache = None, None
-    for i, tier in enumerate(TIER_ORDER):
-        cur = (first(tier) if i == 0 else finer(cur, tier)).persist()
-        cur.write.mode("overwrite").parquet(
-            os.path.join(store_root, f"{prefix}_{tier}", f"day={day}")
-        )
-        commit_partition(
-            spark, manifest, "incremental", f"{prefix}_{tier}", day,
-            cur.count(), wall_s=time.time() - t0,
-        )
-        if prev_cache is not None:
-            prev_cache.unpersist()
-        prev_cache = cur
-    prev_cache.unpersist()
-
-
-def _side_tier_batch(spark, store_root, manifest, days, t0, prefix, first, finer):
-    """Batch-mode twin of _side_tier_day: one cascade for the whole run,
-    day partitions split out by dynamic partition overwrite."""
-    cur, prev_cache = None, None
-    for i, tier in enumerate(TIER_ORDER):
-        cur = (first(tier) if i == 0 else finer(cur, tier)).persist()
-        cur.withColumn("day", F.to_date("bucket_ts")).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "day"
-        ).parquet(os.path.join(store_root, f"{prefix}_{tier}"))
-        per_day = {
-            str(r["d"]): r["n"]
-            for r in cur.groupBy(F.to_date("bucket_ts").alias("d"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        for d in days:
-            commit_partition(
-                spark, manifest, "incremental", f"{prefix}_{tier}", d,
-                per_day.get(d, 0), wall_s=time.time() - t0,
-            )
-        if prev_cache is not None:
-            prev_cache.unpersist()
-        prev_cache = cur
-    prev_cache.unpersist()
+def _tier_dir(prefix: str, tier: str) -> str:
+    return f"{prefix}_{tier}" if prefix else tier
 
 
 def _state_path(store_root: str, through_day: str) -> str:
@@ -131,8 +115,7 @@ def completed_days(spark: SparkSession, store_root: str) -> list[str]:
     return sorted(r["part_key"] for r in rows)
 
 
-def stale_days(spark: SparkSession, raw: DataFrame, store_root: str,
-               ts_col: str = "ts") -> list[str]:
+def stale_days(spark: SparkSession, raw: DataFrame, store_root: str) -> list[str]:
     """Days present in the raw table whose row count differs from what the
     manifest recorded at last refresh — new days plus late-data days. The
     scan touches ONLY the ``ts`` column (column pruning drops text/value
@@ -142,7 +125,7 @@ def stale_days(spark: SparkSession, raw: DataFrame, store_root: str,
     pass — not free, but never a full-width read."""
     counts = {
         str(r["_day"]): r["n"]
-        for r in raw.groupBy(F.to_date(ts_col).alias("_day"))
+        for r in raw.groupBy(F.to_date("ts").alias("_day"))
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     }
@@ -161,12 +144,12 @@ def stale_days(spark: SparkSession, raw: DataFrame, store_root: str,
     return sorted(d for d, n in counts.items() if n not in recorded.get(d, set()))
 
 
-def _signals_for_day(day_raw: DataFrame, prev_state: DataFrame | None) -> DataFrame:
-    """derive_signals restricted to one day, with the previous turn's
+def _signals_for_days(run_raw: DataFrame, prev_state: DataFrame | None) -> DataFrame:
+    """derive_signals restricted to a run of days, with the previous turn's
     timestamp injected from the state table so the first turn after
     midnight lags exactly (functions/signals.derive_signals twin — narrow
     projection: text reduces to counts before the shuffle)."""
-    narrow = day_raw.select(
+    narrow = run_raw.select(
         "conv_id",
         F.col("ts").cast("timestamp").alias("ts"),
         F.col("turn_idx"),
@@ -222,414 +205,103 @@ def _prev_state_checked(
     return state
 
 
-def refresh_day(
-    spark: SparkSession,
-    raw: DataFrame,
-    store_root: str,
-    day: str,
-    key: str = "conv_id",
-    ts_col: str = "ts",
-    with_hll: bool = True,
-    lg_k: int = 12,
-    with_hist: bool = True,
-    with_kll: bool = True,
-    kll_k: int = 512,
-    with_heavy: bool = True,
-    mg_k: int = 256,
-    with_cms: bool = True,
-    cms_depth: int = 4,
-    cms_width: int = 256,
-    with_kmv: bool = True,
-    kmv_k: int = 64,
-) -> dict:
-    """Refresh every tier's ``day=<day>`` partition (and the conv-state
-    snapshot ``through=<day>``) from that day's raw rows + the previous
-    day's state. The day filter prunes at the scan on a days(ts) layout."""
-    t0 = time.time()
-    day_raw = raw.filter(F.to_date(ts_col) == F.lit(day))
-    done = completed_days(spark, store_root)
-    prev_state = _prev_state_checked(spark, store_root, done, day)
-
-    signals = _signals_for_day(day_raw, prev_state).persist()
-    n_raw = signals.count()
-
-    stats = {"day": day, "n_raw": n_raw, "tiers": {}}
-    manifest = os.path.join(store_root, "_manifest")
-    tier_df, prev_cache = None, None
-    for i, tier in enumerate(TIER_ORDER):
-        tier_df = (
-            rollup_tier(signals, tier, key=key)
-            if i == 0
-            else rollup_from_finer(tier_df, tier, key=key)
-        ).persist()  # the next coarser tier derives from this cache, not raw
-        tier_df.write.mode("overwrite").parquet(
-            os.path.join(store_root, tier, f"day={day}")
-        )
-        n = tier_df.count()
-        stats["tiers"][tier] = n
-        commit_partition(
-            spark, manifest, "incremental", tier, day, n,
-            metrics={"n_buckets": n}, wall_s=time.time() - t0,
-        )
-        if prev_cache is not None:
-            prev_cache.unpersist()
-        prev_cache = tier_df
-    prev_cache.unpersist()
-
-    if with_hll:
-        hll, prev_cache = None, None
-        for i, tier in enumerate(TIER_ORDER):
-            hll = (
-                distinct_rollup_tier(signals, tier, key, lg_k)
-                if i == 0
-                else distinct_rollup_from_finer(hll, tier)
-            ).persist()
-            hll.write.mode("overwrite").parquet(
-                os.path.join(store_root, f"hll_{tier}", f"day={day}")
-            )
-            commit_partition(
-                spark, manifest, "incremental", f"hll_{tier}", day,
-                hll.count(), wall_s=time.time() - t0,
-            )
-            if prev_cache is not None:
-                prev_cache.unpersist()
-            prev_cache = hll
-        prev_cache.unpersist()
-
-    if with_hist:
-        hist, prev_cache = None, None
-        for i, tier in enumerate(TIER_ORDER):
-            hist = (
-                histogram_rollup_tier(signals, tier)
-                if i == 0
-                else histogram_rollup_from_finer(hist, tier)
-            ).persist()
-            hist.write.mode("overwrite").parquet(
-                os.path.join(store_root, f"hist_{tier}", f"day={day}")
-            )
-            commit_partition(
-                spark, manifest, "incremental", f"hist_{tier}", day,
-                hist.count(), wall_s=time.time() - t0,
-            )
-            if prev_cache is not None:
-                prev_cache.unpersist()
-            prev_cache = hist
-        prev_cache.unpersist()
-
-    if with_kll:
-        kll, prev_cache = None, None
-        for i, tier in enumerate(TIER_ORDER):
-            kll = (
-                kll_rollup_tier(signals, tier, k=kll_k)
-                if i == 0
-                else kll_rollup_from_finer(kll, tier, k=kll_k)
-            ).persist()
-            kll.write.mode("overwrite").parquet(
-                os.path.join(store_root, f"kll_{tier}", f"day={day}")
-            )
-            commit_partition(
-                spark, manifest, "incremental", f"kll_{tier}", day,
-                kll.count(), wall_s=time.time() - t0,
-            )
-            if prev_cache is not None:
-                prev_cache.unpersist()
-            prev_cache = kll
-        prev_cache.unpersist()
-
-    if with_heavy:
-        hh, prev_cache = None, None
-        for i, tier in enumerate(TIER_ORDER):
-            hh = (
-                heavy_rollup_tier(signals, tier, key, "ts", mg_k)
-                if i == 0
-                else heavy_rollup_from_finer(hh, tier, mg_k)
-            ).persist()
-            hh.write.mode("overwrite").parquet(
-                os.path.join(store_root, f"heavy_{tier}", f"day={day}")
-            )
-            commit_partition(
-                spark, manifest, "incremental", f"heavy_{tier}", day,
-                hh.count(), wall_s=time.time() - t0,
-            )
-            if prev_cache is not None:
-                prev_cache.unpersist()
-            prev_cache = hh
-        prev_cache.unpersist()
-
-    if with_cms:
-        _side_tier_day(
-            spark, store_root, manifest, day, t0, "cms",
-            lambda tier: cms_rollup_tier(signals, tier, key, cms_depth, cms_width),
-            lambda cur, tier: cms_rollup_from_finer(cur, tier),
-        )
-    if with_kmv:
-        _side_tier_day(
-            spark, store_root, manifest, day, t0, "kmv",
-            lambda tier: kmv_rollup_tier(signals, tier, key, kmv_k),
-            lambda cur, tier: kmv_rollup_from_finer(cur, tier, kmv_k),
-        )
-
-    # state through this day = merge(previous state, today's last turn)
-    day_max = signals.groupBy("conv_id").agg(F.max("ts").alias("last_ts"))
-    if prev_state is not None:
-        merged = (
-            prev_state.unionByName(day_max)
-            .groupBy("conv_id")
-            .agg(F.max("last_ts").alias("last_ts"))
-        )
-    else:
-        merged = day_max
-    merged.write.mode("overwrite").parquet(_state_path(store_root, day))
-
-    commit_partition(
-        spark, manifest, "incremental", "_day", day, n_raw,
-        wall_s=time.time() - t0,
-    )
-    signals.unpersist()
-    stats["wall_s"] = round(time.time() - t0, 2)
-    return stats
+def _write_tier(df: DataFrame, root: str, days: list[str]) -> None:
+    """Write a run's partitions of one tier: one day overwrites
+    ``day=D``; several days go in one job that overwrites only the day
+    partitions present (dynamic overwrite scoped to this write — a
+    session-wide conf would race with concurrent jobs on the session)."""
+    if len(days) == 1:
+        df.write.mode("overwrite").parquet(os.path.join(root, f"day={days[0]}"))
+        return
+    df.withColumn("day", F.to_date("bucket_ts")).write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("day").parquet(root)
 
 
-def refresh_days_batch(
+def _rows_per_day(df: DataFrame, ts_col: str, days: list[str]) -> dict[str, int]:
+    """{day: rows} over the run (a cached one-day frame is just counted)."""
+    if len(days) == 1:
+        return {days[0]: df.count()}
+    per_day = {
+        str(r["d"]): r["n"]
+        for r in df.groupBy(F.to_date(ts_col).alias("d"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    return {d: per_day.get(d, 0) for d in days}
+
+
+def _refresh_run(
     spark: SparkSession,
     raw: DataFrame,
     store_root: str,
     days: list[str],
-    key: str = "conv_id",
-    ts_col: str = "ts",
-    with_hll: bool = True,
-    lg_k: int = 12,
-    with_hist: bool = True,
-    with_kll: bool = True,
-    kll_k: int = 512,
-    with_heavy: bool = True,
-    mg_k: int = 256,
-    with_cms: bool = True,
-    cms_depth: int = 4,
-    cms_width: int = 256,
-    with_kmv: bool = True,
-    kmv_k: int = 64,
+    families: dict[str, tuple],
 ) -> dict:
-    """Refresh a CONTIGUOUS run of days as ONE cascade — the bulk-load /
-    backfill path. The per-day loop costs O(days) Spark job rounds (fine
-    for the nightly single day, serial for a year of history); here the
-    whole range derives signals once (the in-range lag window spans
-    midnights natively; only the leading edge needs the state snapshot) and
-    each tier writes ALL its day partitions in one dynamic-partition-
-    overwrite job: O(1) job rounds for N days.
+    """Refresh every family's tiers and the conv-state snapshot for a
+    CONTIGUOUS sorted run of days as one cascade: signals are derived once
+    (the in-run lag window spans midnights natively; only the leading edge
+    needs the state snapshot). The day filter prunes at the scan on a
+    days(ts) layout.
 
     Only the LAST day's conv-state snapshot is written (state for interior
     days never existed as a boundary); a later replay of an interior day
     detects the missing snapshot and instructs a forward replay
     (_prev_state_checked). ``days`` must include EVERY raw day inside its
-    span — a hole would make the in-range lag silently bridge over the
+    span — a hole would make the in-run lag silently bridge over the
     excluded day's turns."""
-    days = sorted(days)
-    day_lo, day_hi = days[0], days[-1]
-    range_raw = raw.filter(
-        (F.to_date(ts_col) >= F.lit(day_lo)) & (F.to_date(ts_col) <= F.lit(day_hi))
-    )
-    in_range = sorted(
-        str(r["d"])
-        for r in range_raw.select(F.to_date(ts_col).alias("d")).distinct().collect()
-    )
-    missing = [d for d in in_range if d not in set(days)]
-    if missing:
-        raise ValueError(
-            f"batch range [{day_lo}, {day_hi}] skips raw day(s) {missing}; "
-            "the in-range lag would bridge over their turns — include them"
-        )
     t0 = time.time()
+    day_lo, day_hi = days[0], days[-1]
+    run_raw = raw.filter(F.to_date("ts").between(day_lo, day_hi))
+    if len(days) > 1:
+        in_run = {str(r["d"]) for r in run_raw.select(F.to_date("ts").alias("d")).distinct().collect()}
+        missing = sorted(in_run - set(days))
+        if missing:
+            raise ValueError(
+                f"batch range [{day_lo}, {day_hi}] skips raw day(s) {missing}; "
+                "the in-range lag would bridge over their turns — include them"
+            )
     done = completed_days(spark, store_root)
     prev_state = _prev_state_checked(spark, store_root, done, day_lo)
-    signals = _signals_for_day(range_raw, prev_state).persist()
-    day_counts = {
-        str(r["d"]): r["n"]
-        for r in signals.groupBy(F.to_date("ts").alias("d"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
+    signals = _signals_for_days(run_raw, prev_state).persist()
+    raw_rows = _rows_per_day(signals, "ts", days)
     manifest = os.path.join(store_root, "_manifest")
-    stats = {"days": days, "n_raw": sum(day_counts.values()), "tiers": {}}
 
-    # dynamic partition overwrite is scoped to each WRITE via the
-    # DataFrameWriter option (round-5 ADVICE fix) — the old session-wide
-    # conf set/restore raced with concurrent jobs sharing the session
-    tier_df, prev_cache = None, None
-    for i, tier in enumerate(TIER_ORDER):
-        tier_df = (
-            rollup_tier(signals, tier, key=key)
-            if i == 0
-            else rollup_from_finer(tier_df, tier, key=key)
-        ).persist()
-        tier_df.withColumn("day", F.to_date("bucket_ts")).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "day"
-        ).parquet(os.path.join(store_root, tier))
-        per_day = {
-            str(r["d"]): r["n"]
-            for r in tier_df.groupBy(F.to_date("bucket_ts").alias("d"))
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        stats["tiers"][tier] = sum(per_day.values())
-        for d in days:
+    def commit(tier: str, rows: dict[str, int]) -> None:
+        for d, n in rows.items():
             commit_partition(
-                spark, manifest, "incremental", tier, d,
-                per_day.get(d, 0), wall_s=time.time() - t0,
+                spark, manifest, "incremental", tier, d, n, wall_s=time.time() - t0
             )
-        if prev_cache is not None:
-            prev_cache.unpersist()
-        prev_cache = tier_df
-    prev_cache.unpersist()
 
-    if with_hll:
-        hll, prev_cache = None, None
-        for i, tier in enumerate(TIER_ORDER):
-            hll = (
-                distinct_rollup_tier(signals, tier, key, lg_k)
-                if i == 0
-                else distinct_rollup_from_finer(hll, tier)
-            ).persist()
-            hll.withColumn("day", F.to_date("bucket_ts")).write.mode(
-                "overwrite"
-            ).option("partitionOverwriteMode", "dynamic").partitionBy(
-                "day"
-            ).parquet(os.path.join(store_root, f"hll_{tier}"))
-            per_day = {
-                str(r["d"]): r["n"]
-                for r in hll.groupBy(F.to_date("bucket_ts").alias("d"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            for d in days:
-                commit_partition(
-                    spark, manifest, "incremental", f"hll_{tier}", d,
-                    per_day.get(d, 0), wall_s=time.time() - t0,
-                )
-            if prev_cache is not None:
-                prev_cache.unpersist()
-            prev_cache = hll
-        prev_cache.unpersist()
+    stats = {"days": days, "n_raw": sum(raw_rows.values()), "tiers": {}}
+    for prefix, (first, from_finer) in families.items():
+        cur = None
+        for tier in TIERS:  # finest first
+            finer = cur
+            # the next coarser tier derives from this cache, not raw
+            cur = (first(signals, tier) if finer is None else from_finer(finer, tier)).persist()
+            name = _tier_dir(prefix, tier)
+            _write_tier(cur, os.path.join(store_root, name), days)
+            rows = _rows_per_day(cur, "bucket_ts", days)
+            commit(name, rows)
+            if not prefix:
+                stats["tiers"][tier] = sum(rows.values())
+            if finer is not None:
+                finer.unpersist()
+        cur.unpersist()
 
-    if with_hist:
-        hist, prev_cache = None, None
-        for i, tier in enumerate(TIER_ORDER):
-            hist = (
-                histogram_rollup_tier(signals, tier)
-                if i == 0
-                else histogram_rollup_from_finer(hist, tier)
-            ).persist()
-            hist.withColumn("day", F.to_date("bucket_ts")).write.mode(
-                "overwrite"
-            ).option("partitionOverwriteMode", "dynamic").partitionBy(
-                "day"
-            ).parquet(os.path.join(store_root, f"hist_{tier}"))
-            per_day = {
-                str(r["d"]): r["n"]
-                for r in hist.groupBy(F.to_date("bucket_ts").alias("d"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            for d in days:
-                commit_partition(
-                    spark, manifest, "incremental", f"hist_{tier}", d,
-                    per_day.get(d, 0), wall_s=time.time() - t0,
-                )
-            if prev_cache is not None:
-                prev_cache.unpersist()
-            prev_cache = hist
-        prev_cache.unpersist()
-
-    if with_kll:
-        kll, prev_cache = None, None
-        for i, tier in enumerate(TIER_ORDER):
-            kll = (
-                kll_rollup_tier(signals, tier, k=kll_k)
-                if i == 0
-                else kll_rollup_from_finer(kll, tier, k=kll_k)
-            ).persist()
-            kll.withColumn("day", F.to_date("bucket_ts")).write.mode(
-                "overwrite"
-            ).option("partitionOverwriteMode", "dynamic").partitionBy(
-                "day"
-            ).parquet(os.path.join(store_root, f"kll_{tier}"))
-            per_day = {
-                str(r["d"]): r["n"]
-                for r in kll.groupBy(F.to_date("bucket_ts").alias("d"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            for d in days:
-                commit_partition(
-                    spark, manifest, "incremental", f"kll_{tier}", d,
-                    per_day.get(d, 0), wall_s=time.time() - t0,
-                )
-            if prev_cache is not None:
-                prev_cache.unpersist()
-            prev_cache = kll
-        prev_cache.unpersist()
-
-    if with_heavy:
-        hh, prev_cache = None, None
-        for i, tier in enumerate(TIER_ORDER):
-            hh = (
-                heavy_rollup_tier(signals, tier, key, "ts", mg_k)
-                if i == 0
-                else heavy_rollup_from_finer(hh, tier, mg_k)
-            ).persist()
-            hh.withColumn("day", F.to_date("bucket_ts")).write.mode(
-                "overwrite"
-            ).option("partitionOverwriteMode", "dynamic").partitionBy(
-                "day"
-            ).parquet(os.path.join(store_root, f"heavy_{tier}"))
-            per_day = {
-                str(r["d"]): r["n"]
-                for r in hh.groupBy(F.to_date("bucket_ts").alias("d"))
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
-            for d in days:
-                commit_partition(
-                    spark, manifest, "incremental", f"heavy_{tier}", d,
-                    per_day.get(d, 0), wall_s=time.time() - t0,
-                )
-            if prev_cache is not None:
-                prev_cache.unpersist()
-            prev_cache = hh
-        prev_cache.unpersist()
-
-    if with_cms:
-        _side_tier_batch(
-            spark, store_root, manifest, days, t0, "cms",
-            lambda tier: cms_rollup_tier(signals, tier, key, cms_depth, cms_width),
-            lambda cur, tier: cms_rollup_from_finer(cur, tier),
+    # state through the run's last day = merge(previous state, the run's last turns)
+    state = signals.groupBy("conv_id").agg(F.max("ts").alias("last_ts"))
+    if prev_state is not None:
+        state = (
+            prev_state.unionByName(state)
+            .groupBy("conv_id")
+            .agg(F.max("last_ts").alias("last_ts"))
         )
-    if with_kmv:
-        _side_tier_batch(
-            spark, store_root, manifest, days, t0, "kmv",
-            lambda tier: kmv_rollup_tier(signals, tier, key, kmv_k),
-            lambda cur, tier: kmv_rollup_from_finer(cur, tier, kmv_k),
-        )
-
-    batch_max = signals.groupBy("conv_id").agg(F.max("ts").alias("last_ts"))
-    merged = (
-        prev_state.unionByName(batch_max)
-        .groupBy("conv_id")
-        .agg(F.max("last_ts").alias("last_ts"))
-        if prev_state is not None
-        else batch_max
-    )
-    merged.write.mode("overwrite").parquet(_state_path(store_root, day_hi))
-    for d in days:
-        commit_partition(
-            spark, manifest, "incremental", "_day", d,
-            day_counts.get(d, 0), wall_s=time.time() - t0,
-        )
+    state.write.mode("overwrite").parquet(_state_path(store_root, day_hi))
+    commit("_day", raw_rows)
     signals.unpersist()
     stats["wall_s"] = round(time.time() - t0, 2)
-    stats["mode"] = "batch"
     return stats
 
 
@@ -638,32 +310,34 @@ def refresh_tiers(
     raw: DataFrame,
     store_root: str,
     days: list[str] | None = None,
-    key: str = "conv_id",
-    ts_col: str = "ts",
-    with_hll: bool = True,
-    lg_k: int = 12,
+    *,
     mode: str = "auto",
+    with_hll: bool = True,
     with_hist: bool = True,
     with_kll: bool = True,
-    kll_k: int = 512,
     with_heavy: bool = True,
-    mg_k: int = 256,
     with_cms: bool = True,
     with_kmv: bool = True,
 ) -> list[dict]:
     """Refresh the tier store for ``days`` (default: stale_days — new days
     plus days whose raw count changed). Days run in ascending order so each
-    day's state snapshot feeds the next. Forward-only: refreshing a day
+    run's state snapshot feeds the next. Forward-only: refreshing a day
     earlier than an already-completed LATER day raises (replay forward from
     the backfilled day instead — its state snapshot is on disk).
 
-    ``mode``: 'per_day' (one cascade per day, snapshot per day — the
-    nightly shape), 'batch' (one cascade for the whole contiguous run —
-    the bulk-load/backfill shape, O(1) job rounds), or 'auto' (default):
-    batch when 3+ days and none is already completed (initial load /
-    multi-day catch-up), per-day otherwise."""
+    ``mode``: 'per_day' (one run per day, snapshot per day — the nightly
+    shape), 'batch' (one run for the whole contiguous range — the
+    bulk-load/backfill shape, O(1) job rounds), or 'auto' (default): batch
+    when 3+ days and none is already completed (initial load / multi-day
+    catch-up), per-day otherwise. ``with_<family>`` turns a sketch family
+    of ``_families`` on or off; the base tiers always refresh.
+
+    Returns one {days, n_raw, tiers, wall_s, mode} dict per run; ``tiers``
+    holds the base tiers' row counts."""
+    flags = locals()  # with_<prefix> for every sketch family
+    families = {p: f for p, f in _families().items() if not p or flags[f"with_{p}"]}
     if days is None:
-        days = stale_days(spark, raw, store_root, ts_col)
+        days = stale_days(spark, raw, store_root)
     days = sorted(days)
     if not days:
         return []
@@ -677,21 +351,10 @@ def refresh_tiers(
         )
     if mode == "auto":
         mode = "batch" if len(days) >= 3 and not any(d in done for d in days) else "per_day"
-    if mode == "batch":
-        return [
-            refresh_days_batch(
-                spark, raw, store_root, days, key, ts_col, with_hll, lg_k,
-                with_hist, with_kll, kll_k, with_heavy, mg_k,
-                with_cms=with_cms, with_kmv=with_kmv,
-            )
-        ]
+    runs = [days] if mode == "batch" else [[d] for d in days]
     return [
-        refresh_day(
-            spark, raw, store_root, d, key, ts_col, with_hll, lg_k, with_hist,
-            with_kll, kll_k, with_heavy, mg_k,
-            with_cms=with_cms, with_kmv=with_kmv,
-        )
-        for d in days
+        {**_refresh_run(spark, raw, store_root, run, families), "mode": mode}
+        for run in runs
     ]
 
 
@@ -720,7 +383,6 @@ def retention_sweep(
     cold_pack_tiers: tuple[str, ...] = ("1m",),
     key: str = "conv_id",
     value_col: str = "sum_lat",
-    side_prefixes: tuple[str, ...] = ("hll_", "hist_", "kll_", "heavy_", "cms_", "kmv_"),
     sdt_comp_dev: float | None = None,
 ) -> dict:
     """Enforce TTLs on the tier store PHYSICALLY — the retention leg of the
@@ -733,8 +395,8 @@ def retention_sweep(
     dropping expired fine buckets loses nothing the policy wants kept
     (operators/retention.py docstring; this is its store-level twin).
 
-    Side states (``hll_<tier>``, ``hist_<tier>``) expire with their base
-    tier. Every retired day commits a ``retired_<tier>`` manifest row, so
+    Every family's side state (``hll_<tier>``, ``hist_<tier>``, ...)
+    expires with its base tier. Every retired day commits a ``retired_<tier>`` manifest row, so
     stale-day detection never resurrects an expired day as "missing".
 
     Returns {tier: [retired days]}."""
@@ -751,13 +413,9 @@ def retention_sweep(
         if keep_seconds is None:
             continue
         cutoff = (
-            pd_timestamp(now_day) - pd_timedelta(seconds=keep_seconds)
+            datetime.fromisoformat(now_day) - timedelta(seconds=keep_seconds)
         ).strftime("%Y-%m-%d")
-        tier_dirs = [tier] + [
-            f"{p}{tier}" for p in side_prefixes
-            if os.path.isdir(os.path.join(store_root, f"{p}{tier}"))
-        ]
-        for tdir in tier_dirs:
+        for tdir in (_tier_dir(prefix, tier) for prefix in _families()):
             root = os.path.join(store_root, tdir)
             if not os.path.isdir(root):
                 continue
@@ -824,18 +482,6 @@ def retention_sweep(
                 )
                 retired.setdefault(tdir, []).append(day)
     return retired
-
-
-def pd_timestamp(day: str):
-    import pandas as pd
-
-    return pd.Timestamp(day)
-
-
-def pd_timedelta(**kw):
-    import pandas as pd
-
-    return pd.Timedelta(**kw)
 
 
 def compact_store(
