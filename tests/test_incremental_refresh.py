@@ -17,11 +17,13 @@ from timeseriestokenizer_spark.operators.rollup import (
     with_distinct_estimate,
 )
 from timeseriestokenizer_spark.plans.incremental import (
+    compact_store,
     completed_days,
     read_tier,
     refresh_tiers,
     stale_days,
 )
+from timeseriestokenizer_spark.plans.manifest import read_manifest
 
 TIERS = ["1m", "5m", "1h", "1d"]
 
@@ -51,6 +53,20 @@ def _assert_store_equals_scratch(spark, store, full_raw):
         assert got == exp, f"hll tier {tier} estimate diverged"
 
 
+def _assert_day_rows_equal_raw(spark, store, raw):
+    """Each completed day's latest ``_day`` row (counts only grow under
+    append ingest) records that day's raw row count."""
+    want = {
+        str(r["d"]): r["n"]
+        for r in raw.groupBy(F.to_date("ts").alias("d")).agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    got = {}
+    m = read_manifest(spark, os.path.join(store, "_manifest"))
+    for r in m.filter(F.col("tier") == "_day").collect():
+        got[r["part_key"]] = max(got.get(r["part_key"], 0), r["n_rows"])
+    assert got == want
+
+
 def test_incremental_store_equals_from_scratch(spark, tmp_path):
     raw = transcripts_df(spark, C=40, seed=7).cache()
     days = sorted(
@@ -75,6 +91,10 @@ def test_incremental_store_equals_from_scratch(spark, tmp_path):
     )
     stats = refresh_tiers(spark, part, store, with_cms=False, with_kmv=False)
     assert [s["days"] for s in stats] == [[d] for d in days[-2:]]
+    # before the late-data replay rewrites day -1: its run must have read
+    # the snapshot through day -2, written by the run just before it
+    _assert_store_equals_scratch(spark, store, part)
+    _assert_day_rows_equal_raw(spark, store, part)
 
     # late data lands for the newest day: stale_days flags ONLY that day
     # (its raw count changed), and one replay absorbs it
@@ -84,6 +104,7 @@ def test_incremental_store_equals_from_scratch(spark, tmp_path):
     assert stale_days(spark, raw, store) == []
 
     _assert_store_equals_scratch(spark, store, raw)
+    _assert_day_rows_equal_raw(spark, store, raw)
     raw.unpersist()
 
 
@@ -133,12 +154,43 @@ def test_store_layout_prunes_by_day(spark, tmp_path):
     assert total == stats[0]["tiers"]["1h"]
 
 
+def test_per_day_run_appends_once_and_needs_no_compaction(spark, tmp_path):
+    """A one-day refresh commits all its manifest rows in ONE append and
+    writes its partitions at the compaction target, so compact_store has
+    nothing to rewrite for it."""
+    raw = transcripts_df(spark, C=10, seed=3)
+    days = sorted(
+        str(r["d"]) for r in raw.select(F.to_date("ts").alias("d")).distinct().collect()
+    )
+    store = str(tmp_path / "one")
+    manifest = os.path.join(store, "_manifest")
+
+    def manifest_files():
+        return len([f for f in os.listdir(manifest) if f.endswith(".parquet")])
+
+    refresh_tiers(spark, raw, store, days=[days[0]])
+    before = manifest_files()
+    refresh_tiers(spark, raw, store, days=[days[1]], mode="per_day")
+    assert manifest_files() == before + 1
+    assert completed_days(spark, store) == days[:2]
+    assert compact_store(spark, store) == {}
+
+
+def test_corrupt_manifest_raises(spark, tmp_path):
+    """A manifest file that is not parquet fails the read instead of
+    passing for "no completed days" (which would bypass the forward-only
+    guard and recompute every day)."""
+    manifest = tmp_path / "store" / "_manifest"
+    manifest.mkdir(parents=True)
+    (manifest / "part-00000.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Exception, match="not a Parquet file"):
+        completed_days(spark, str(tmp_path / "store"))
+
+
 def test_batch_equals_per_day_equals_scratch(spark, tmp_path):
     """The bulk-load batch path (one cascade, dynamic partition overwrite)
     must produce the same store as the per-day path for every family —
     and both the same base/HLL tiers as the from-scratch cascade."""
-    from timeseriestokenizer_spark.plans.manifest import read_manifest
-
     raw = transcripts_df(spark, C=25, seed=13)
     days = sorted(
         str(r["d"]) for r in raw.select(F.to_date("ts").alias("d")).distinct().collect()
@@ -233,7 +285,6 @@ def test_retention_sweep_store(spark, tmp_path):
 
     from timeseriestokenizer_spark.operators.gorilla import gorilla_unpack
     from timeseriestokenizer_spark.plans.incremental import retention_sweep
-    from timeseriestokenizer_spark.plans.manifest import read_manifest
 
     raw = transcripts_df(spark, C=20, seed=17).cache()
     days = sorted(
@@ -287,8 +338,16 @@ def test_retention_sweep_store(spark, tmp_path):
     assert merged_nonnull == full_nonnull
 
     m = read_manifest(spark, _os.path.join(store, "_manifest"))
-    rows = m.filter(F.col("tier") == "retired_1m").select("part_key").collect()
+    rows = m.filter(F.col("tier") == "retired_1m").select("part_key", "n_rows").collect()
     assert sorted(r["part_key"] for r in rows) == expect_retired
+    # retirement counts rows from parquet footers; the refresh counted them in Spark
+    refreshed = {
+        r["part_key"]: r["n_rows"]
+        for r in m.filter(F.col("tier") == "1m").select("part_key", "n_rows").collect()
+    }
+    assert {r["part_key"]: r["n_rows"] for r in rows} == {
+        d: refreshed[d] for d in expect_retired
+    }
     raw.unpersist()
 
 

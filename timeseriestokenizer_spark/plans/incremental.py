@@ -25,9 +25,15 @@ from the cached finer one. ``refresh_tiers``' ``mode`` only groups days
 into runs — ``per_day`` makes one run per day (a snapshot per day, the
 nightly shape), ``batch`` one run for all days (the bulk-load/backfill
 shape). How a tier is written follows from the run's length: one day
-overwrites ``<tier>/day=D`` and counts the cached tier; several days write
-all their partitions in one dynamic-partition-overwrite job and count rows
-per day with one group-by, so N days cost O(1) job rounds.
+overwrites ``<tier>/day=D`` as files of about ``TARGET_FILE_BYTES`` (so
+``compact_store`` has nothing to do for it) and takes its row count from an
+``observe()`` on that write; several days write all their partitions in one
+dynamic-partition-overwrite job and count rows per day with one group-by,
+so N days cost O(1) job rounds. A day's raw row count is the ``1m`` tier's
+``sum(n_turns)`` — every turn adds 1 to exactly one bucket — so the signals
+are never counted on their own. All manifest rows of a run go in one append
+after the conv-state snapshot, ``_day`` among them, so a crash anywhere
+before it leaves the run's days incomplete.
 
 Ingest is FORWARD-ONLY in event time (the classic warehouse constraint):
 each refresh's days must be >= every completed day; re-refreshing the
@@ -45,7 +51,9 @@ day-partition granularity with exact cross-boundary state.
 from __future__ import annotations
 
 import json
+import math
 import os
+import shutil
 import time
 from datetime import datetime, timedelta
 
@@ -66,7 +74,12 @@ from ..operators.rollup import (
     rollup_from_finer,
     rollup_tier,
 )
-from .manifest import commit_partition, read_manifest
+from .manifest import commit_partition, read_manifest, write_counted
+
+# file size a freshly written or compacted day partition aims at
+TARGET_FILE_BYTES = 128 * 1024 * 1024
+# the snapshot's fixed schema: reading it needs no inference job
+_STATE_SCHEMA = "conv_id string, last_ts timestamp"
 
 
 def _families() -> dict[str, tuple]:
@@ -99,7 +112,7 @@ def read_conv_state(spark: SparkSession, store_root: str, through_day: str) -> D
     p = _state_path(store_root, through_day)
     if not os.path.exists(p):
         return None
-    return spark.read.parquet(p)
+    return spark.read.schema(_STATE_SCHEMA).parquet(p)
 
 
 def completed_days(spark: SparkSession, store_root: str) -> list[str]:
@@ -109,10 +122,9 @@ def completed_days(spark: SparkSession, store_root: str) -> list[str]:
     rows = (
         m.filter((F.col("tier") == "_day") & (F.col("status") == "done"))
         .select("part_key")
-        .distinct()
         .collect()
     )
-    return sorted(r["part_key"] for r in rows)
+    return sorted({r["part_key"] for r in rows})
 
 
 def stale_days(spark: SparkSession, raw: DataFrame, store_root: str) -> list[str]:
@@ -182,7 +194,7 @@ def _signals_for_days(run_raw: DataFrame, prev_state: DataFrame | None) -> DataF
 
 
 def _prev_state_checked(
-    spark: SparkSession, store_root: str, done: list[str], first_day: str
+    spark: SparkSession, store_root: str, done: set[str], first_day: str
 ):
     """State snapshot covering every completed day before ``first_day``.
     Batch refreshes only write the snapshot for their LAST day, so an
@@ -205,30 +217,45 @@ def _prev_state_checked(
     return state
 
 
-def _write_tier(df: DataFrame, root: str, days: list[str]) -> None:
-    """Write a run's partitions of one tier: one day overwrites
-    ``day=D``; several days go in one job that overwrites only the day
-    partitions present (dynamic overwrite scoped to this write — a
-    session-wide conf would race with concurrent jobs on the session)."""
+def _data_files(part: str) -> list[str]:
+    """The parquet data files of a partition directory (Spark's listing
+    skips dot- and underscore-prefixed names)."""
+    return [
+        os.path.join(part, f) for f in os.listdir(part)
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    ]
+
+
+def _file_count(df: DataFrame) -> int:
+    """Files for one day of ``df`` at ``TARGET_FILE_BYTES`` each, from the
+    optimizer's size estimate, capped at the shuffle partitions a one-day
+    tier comes out of: an input without statistics (an RDD) is estimated
+    at Long.MaxValue bytes."""
+    est = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    cap = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return max(1, min(math.ceil(est / TARGET_FILE_BYTES), cap))
+
+
+def _write_tier(df: DataFrame, root: str, days: list[str], *metrics) -> dict[str, dict]:
+    """Write a run's partitions of one tier; return {day: {"n_rows": ...,
+    plus each named aggregate in ``metrics``}}. One day overwrites
+    ``day=D`` and observes its counts in the write; several days go in one
+    job that overwrites only the day partitions present (dynamic overwrite
+    scoped to this write — a session-wide conf would race with concurrent
+    jobs on the session), then one group-by counts them."""
     if len(days) == 1:
-        df.write.mode("overwrite").parquet(os.path.join(root, f"day={days[0]}"))
-        return
+        path = os.path.join(root, f"day={days[0]}")
+        return {days[0]: write_counted(df, path, *metrics, n_files=_file_count(df))}
     df.withColumn("day", F.to_date("bucket_ts")).write.mode("overwrite").option(
         "partitionOverwriteMode", "dynamic"
     ).partitionBy("day").parquet(root)
-
-
-def _rows_per_day(df: DataFrame, ts_col: str, days: list[str]) -> dict[str, int]:
-    """{day: rows} over the run (a cached one-day frame is just counted)."""
-    if len(days) == 1:
-        return {days[0]: df.count()}
     per_day = {
-        str(r["d"]): r["n"]
-        for r in df.groupBy(F.to_date(ts_col).alias("d"))
-        .agg(F.count(F.lit(1)).alias("n"))
+        str(r["d"]): r.asDict()
+        for r in df.groupBy(F.to_date("bucket_ts").alias("d"))
+        .agg(F.count(F.lit(1)).alias("n_rows"), *metrics)
         .collect()
     }
-    return {d: per_day.get(d, 0) for d in days}
+    return {d: per_day.get(d, {"n_rows": 0}) for d in days}
 
 
 def _refresh_run(
@@ -237,6 +264,7 @@ def _refresh_run(
     store_root: str,
     days: list[str],
     families: dict[str, tuple],
+    done: set[str],
 ) -> dict:
     """Refresh every family's tiers and the conv-state snapshot for a
     CONTIGUOUS sorted run of days as one cascade: signals are derived once
@@ -261,19 +289,18 @@ def _refresh_run(
                 f"batch range [{day_lo}, {day_hi}] skips raw day(s) {missing}; "
                 "the in-range lag would bridge over their turns — include them"
             )
-    done = completed_days(spark, store_root)
     prev_state = _prev_state_checked(spark, store_root, done, day_lo)
     signals = _signals_for_days(run_raw, prev_state).persist()
-    raw_rows = _rows_per_day(signals, "ts", days)
-    manifest = os.path.join(store_root, "_manifest")
+    manifest_rows = []  # committed in one append at the end of the run
 
-    def commit(tier: str, rows: dict[str, int]) -> None:
-        for d, n in rows.items():
-            commit_partition(
-                spark, manifest, "incremental", tier, d, n, wall_s=time.time() - t0
-            )
+    def record(tier: str, rows: dict[str, int]) -> None:
+        manifest_rows.extend(
+            {"run_id": "incremental", "tier": tier, "part_key": d, "n_rows": n,
+             "wall_s": time.time() - t0}
+            for d, n in rows.items()
+        )
 
-    stats = {"days": days, "n_raw": sum(raw_rows.values()), "tiers": {}}
+    tiers = {}
     for prefix, (first, from_finer) in families.items():
         cur = None
         for tier in TIERS:  # finest first
@@ -281,11 +308,17 @@ def _refresh_run(
             # the next coarser tier derives from this cache, not raw
             cur = (first(signals, tier) if finer is None else from_finer(finer, tier)).persist()
             name = _tier_dir(prefix, tier)
-            _write_tier(cur, os.path.join(store_root, name), days)
-            rows = _rows_per_day(cur, "bucket_ts", days)
-            commit(name, rows)
+            base = not prefix and finer is None  # 1m: sum(n_turns) = raw rows
+            counts = _write_tier(
+                cur, os.path.join(store_root, name), days,
+                *([F.sum("n_turns").alias("n_turns")] if base else []),
+            )
+            rows = {d: c["n_rows"] for d, c in counts.items()}
+            record(name, rows)
+            if base:
+                raw_rows = {d: c.get("n_turns") or 0 for d, c in counts.items()}
             if not prefix:
-                stats["tiers"][tier] = sum(rows.values())
+                tiers[tier] = sum(rows.values())
             if finer is not None:
                 finer.unpersist()
         cur.unpersist()
@@ -299,10 +332,11 @@ def _refresh_run(
             .agg(F.max("last_ts").alias("last_ts"))
         )
     state.write.mode("overwrite").parquet(_state_path(store_root, day_hi))
-    commit("_day", raw_rows)
+    record("_day", raw_rows)  # with this row the run's days are complete
+    commit_partition(spark, os.path.join(store_root, "_manifest"), manifest_rows)
     signals.unpersist()
-    stats["wall_s"] = round(time.time() - t0, 2)
-    return stats
+    return {"days": days, "n_raw": sum(raw_rows.values()), "tiers": tiers,
+            "wall_s": round(time.time() - t0, 2)}
 
 
 def refresh_tiers(
@@ -341,8 +375,8 @@ def refresh_tiers(
     days = sorted(days)
     if not days:
         return []
-    done = completed_days(spark, store_root)
-    later = [d for d in done if d > days[0]]
+    done = set(completed_days(spark, store_root))
+    later = sorted(d for d in done if d > days[0])
     if any(d not in days for d in later):
         raise ValueError(
             f"forward-only ingest: refreshing {days[0]} would invalidate "
@@ -352,10 +386,11 @@ def refresh_tiers(
     if mode == "auto":
         mode = "batch" if len(days) >= 3 and not any(d in done for d in days) else "per_day"
     runs = [days] if mode == "batch" else [[d] for d in days]
-    return [
-        {**_refresh_run(spark, raw, store_root, run, families), "mode": mode}
-        for run in runs
-    ]
+    out = []
+    for run in runs:
+        out.append({**_refresh_run(spark, raw, store_root, run, families, done), "mode": mode})
+        done |= set(run)  # the next run's snapshot lookup must see this run
+    return out
 
 
 def read_tier(spark: SparkSession, store_root: str, tier: str) -> DataFrame:
@@ -400,7 +435,7 @@ def retention_sweep(
     stale-day detection never resurrects an expired day as "missing".
 
     Returns {tier: [retired days]}."""
-    import shutil
+    import pyarrow.parquet as pq
 
     from ..operators.gorilla import gorilla_pack
     from ..operators.retention import DEFAULT_POLICY
@@ -474,12 +509,12 @@ def retention_sweep(
                     if os.path.isdir(cold_final):
                         shutil.rmtree(cold_final)  # re-run after crash
                     os.rename(cold_tmp, cold_final)
-                n = spark.read.parquet(part).count()
+                n = sum(pq.read_metadata(f).num_rows for f in _data_files(part))
                 shutil.rmtree(part)
-                commit_partition(
-                    spark, manifest, "retention", f"retired_{tdir}", day, n,
-                    wall_s=time.time() - t0,
-                )
+                commit_partition(spark, manifest, [{
+                    "run_id": "retention", "tier": f"retired_{tdir}", "part_key": day,
+                    "n_rows": n, "wall_s": time.time() - t0,
+                }])
                 retired.setdefault(tdir, []).append(day)
     return retired
 
@@ -487,17 +522,18 @@ def retention_sweep(
 def compact_store(
     spark: SparkSession,
     store_root: str,
-    target_bytes: int = 128 * 1024 * 1024,
+    target_bytes: int = TARGET_FILE_BYTES,
     tiers: tuple[str, ...] | None = None,
 ) -> dict:
-    """Small-file compaction for the tier store — every refresh writes a
-    day partition with one file per shuffle task, so a long-lived store
-    accumulates many tiny parquet files per day (the classic streaming/
-    incremental-ingest problem; at scale this is what an Iceberg
-    rewrite_data_files action does). Each day directory whose file count
+    """Small-file compaction for the tier store — a multi-day refresh
+    writes each day partition with one file per shuffle task, so a
+    long-lived store accumulates many tiny parquet files per day (the
+    classic streaming/incremental-ingest problem; at scale this is what an
+    Iceberg rewrite_data_files action does). Each day directory whose file count
     exceeds ceil(bytes/target) is rewritten to that many files via
     coalesce — data unchanged (row-identity pytest-pinned), then swapped
-    in. Idempotent: a compacted day is skipped on the next pass.
+    in. Idempotent: a compacted day is skipped on the next pass, and so is
+    a day a one-day refresh wrote (already at the target size).
 
     Crash-safety (round-5 ADVICE fix): the rewrite lands in a DOT-prefixed
     temp dir (`.day=D.compact.tmp`) — Spark's file listing ignores
@@ -512,9 +548,6 @@ def compact_store(
     one window where the day is briefly invisible.
 
     Returns {tier: {day: (files_before, files_after)}}."""
-    import math
-    import shutil
-
     out: dict[str, dict[str, tuple[int, int]]] = {}
     roots = tiers or [
         d for d in os.listdir(store_root)
@@ -527,11 +560,8 @@ def compact_store(
             if not dname.startswith("day="):
                 continue
             part = os.path.join(root, dname)
-            files = [
-                f for f in os.listdir(part)
-                if f.endswith(".parquet") and not f.startswith(".")
-            ]
-            size = sum(os.path.getsize(os.path.join(part, f)) for f in files)
+            files = _data_files(part)
+            size = sum(os.path.getsize(f) for f in files)
             want = max(1, math.ceil(size / target_bytes))
             if len(files) <= want:
                 continue
@@ -552,8 +582,6 @@ def _recover_compact(root: str) -> None:
     renames — restore the old copy (the rewrite is re-done next pass).
     Orphaned `.compact.tmp`/`.compact.old` dirs (visible partition intact)
     are stale debris — delete them."""
-    import shutil
-
     for dname in list(os.listdir(root)):
         if not dname.startswith(".day="):
             continue

@@ -10,10 +10,14 @@ a rerun anti-joins done partitions and only computes the remainder
 (BASELINE.json north_rule: "resumable from checkpoint with per-partition
 lineage + metrics").
 
-Storage is a parquet directory append (one tiny file per partition commit) —
-the same protocol targets an Iceberg table at cluster scale (Iceberg commits
+Storage is a parquet directory append, one tiny file per commit: a commit
+carries every row of one run (a tier-store refresh appends its tier rows and
+its ``_day`` row together), so a run costs one append, not one per partition.
+The same protocol targets an Iceberg table at cluster scale (Iceberg commits
 give snapshot isolation; the parquet fallback relies on per-partition
-subdirectories being self-contained).
+subdirectories being self-contained). The manifest is read with its fixed
+schema: no inference job, and a corrupt file fails the read instead of
+passing for an empty manifest.
 """
 
 from __future__ import annotations
@@ -23,19 +27,22 @@ import os
 import time
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+MANIFEST_SCHEMA = (
+    "run_id string, tier string, part_key string, status string, "
+    "n_rows bigint, metrics string, wall_s double"
+)
 MANIFEST_COLS = ["run_id", "tier", "part_key", "status", "n_rows", "metrics", "wall_s"]
 
 
 def read_manifest(spark: SparkSession, manifest_path: str) -> DataFrame | None:
+    """The manifest, or None when it was never created (an existing empty
+    directory reads as an empty frame)."""
     if not os.path.exists(manifest_path):
         return None
-    try:
-        return spark.read.parquet(manifest_path)
-    except Exception:
-        return None
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path)
 
 
 def done_partitions(spark: SparkSession, manifest_path: str, run_id: str, tier: str) -> set[str]:
@@ -50,31 +57,37 @@ def done_partitions(spark: SparkSession, manifest_path: str, run_id: str, tier: 
     return {r["part_key"] for r in rows}
 
 
-def commit_partition(
-    spark: SparkSession,
-    manifest_path: str,
-    run_id: str,
-    tier: str,
-    part_key: str,
-    n_rows: int,
-    metrics: dict | None = None,
-    wall_s: float = 0.0,
-) -> None:
-    """Append one manifest row (called after the partition's data is on disk)."""
+def commit_partition(spark: SparkSession, manifest_path: str, rows: list[dict]) -> None:
+    """Append manifest rows as ONE file, after their partitions' data is on
+    disk. Each row is a dict with ``run_id``, ``tier``, ``part_key``,
+    ``n_rows`` and optionally ``metrics`` (a dict) and ``wall_s``."""
     pdf = pd.DataFrame(
         [
-            {
-                "run_id": run_id,
-                "tier": tier,
-                "part_key": part_key,
-                "status": "done",
-                "n_rows": n_rows,
-                "metrics": json.dumps(metrics or {}),
-                "wall_s": wall_s,
-            }
-        ]
+            (r["run_id"], r["tier"], r["part_key"], "done", r["n_rows"],
+             json.dumps(r.get("metrics") or {}), float(r.get("wall_s", 0.0)))
+            for r in rows
+        ],
+        columns=MANIFEST_COLS,
     )
-    spark.createDataFrame(pdf).write.mode("append").parquet(manifest_path)
+    # from pandas: with Arrow on (session.get_spark) no Python worker starts
+    spark.createDataFrame(pdf, MANIFEST_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(manifest_path)
+
+
+def write_counted(
+    df: DataFrame, path: str, *metrics: Column, n_files: int | None = None
+) -> dict:
+    """Overwrite ``path`` with ``df`` (as at most ``n_files`` files) and
+    return ``{"n_rows": rows written}`` plus each named aggregate in
+    ``metrics``, all observed during the write itself — no second action
+    re-reads the output to count it."""
+    obs = Observation()
+    out = df.observe(obs, F.count(F.lit(1)).alias("n_rows"), *metrics)
+    if n_files is not None:
+        out = out.coalesce(n_files)
+    out.write.mode("overwrite").parquet(path)
+    return obs.get
 
 
 def resumable_rollup(
@@ -113,19 +126,11 @@ def resumable_rollup(
             continue
         t0 = time.time()
         part = rollup_tier(with_day.filter(F.col("day") == day), tier, key=key)
-        part_path = os.path.join(out_path, f"day={day}")
-        part.write.mode("overwrite").parquet(part_path)
-        n = spark.read.parquet(part_path).count()
-        commit_partition(
-            spark,
-            manifest_path,
-            run_id,
-            tier,
-            day,
-            n,
-            metrics={"n_buckets": n},
-            wall_s=time.time() - t0,
-        )
+        n = write_counted(part, os.path.join(out_path, f"day={day}"))["n_rows"]
+        commit_partition(spark, manifest_path, [{
+            "run_id": run_id, "tier": tier, "part_key": day, "n_rows": n,
+            "metrics": {"n_buckets": n}, "wall_s": time.time() - t0,
+        }])
         computed.append(day)
     if cached:
         with_day.unpersist()
