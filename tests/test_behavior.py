@@ -201,6 +201,28 @@ def test_global_ntile_matches_sql_semantics(spark):
     assert "ntile(" not in plan.lower()  # no NTILE window function anywhere
 
 
+def test_rfm_segments_releases_its_cache(spark):
+    """rfm_segments' result carries its cache handle: after the consuming
+    action and release_running_total_cache, no persistent RDD is left."""
+    from timeseriestokenizer_spark.operators.behavior import rfm_segments
+    from timeseriestokenizer_spark.operators.packing import (
+        release_running_total_cache,
+    )
+
+    jsc = spark.sparkContext._jsc
+    baseline = jsc.getPersistentRDDs().size()
+    events = pd.DataFrame(
+        [(u, 7 * u + e, e) for u in range(12) for e in range(u % 4 + 1)],
+        columns=["user_id", "h", "value"],
+    )
+    events["ts"] = pd.Timestamp("2024-01-01") + pd.to_timedelta(events.h, unit="h")
+    df = spark.createDataFrame(events.drop(columns="h"))
+    scored = rfm_segments(df, k=3)
+    assert scored.count() == 12
+    release_running_total_cache(scored)
+    assert jsc.getPersistentRDDs().size() == baseline
+
+
 def test_rfm_segments_oracle(spark):
     from timeseriestokenizer_spark.operators.behavior import rfm_segments
     from timeseriestokenizer_spark.operators.packing import (

@@ -305,6 +305,82 @@ def test_connected_components_deep_matches_default_on_shallow(spark):
     assert a == b
 
 
+def test_connected_components_default_long_chain(spark):
+    """The default union-find path resolves a 1000-node chain (diameter
+    999) with default arguments: one component labelled by its minimum."""
+    from timeseriestokenizer_spark.operators.dedup import connected_components
+
+    n = 1000
+    pairs = spark.createDataFrame(
+        [(i + 1, i) for i in range(n - 1)], "id_a long, id_b long"
+    ).repartition(4)
+    labels = connected_components(pairs).toPandas()
+    assert len(labels) == n
+    assert set(labels["doc_id"]) == set(range(n))
+    assert (labels["cluster_id"] == 0).all()
+
+
+def test_connected_components_default_matches_deep_random_graph(spark):
+    """Default path == deep=True on a seeded random sparse graph (many
+    components of mixed sizes and depths, duplicate edges)."""
+    from timeseriestokenizer_spark.operators.dedup import connected_components
+
+    rng = np.random.RandomState(17)
+    ids = rng.permutation(5000)[:600] * 7 + 3  # sparse, unordered ids
+    edges = [
+        (int(ids[a]), int(ids[b]))
+        for a, b in rng.randint(0, len(ids), (300, 2))
+        if a != b  # deep=True drops self-loop-only nodes
+    ]
+    pairs = spark.createDataFrame(edges, "id_a long, id_b long")
+    a = {tuple(r) for r in connected_components(pairs).collect()}
+    b = {tuple(r) for r in connected_components(pairs, deep=True).collect()}
+    assert a == b
+    assert len({c for _, c in a}) > 50  # many components, not one blob
+
+
+def test_connected_components_build_fires_no_job(spark):
+    """Building the default path's DataFrame runs no Spark job: the
+    union-find runs inside the consuming action. Empty input yields no
+    rows."""
+    from timeseriestokenizer_spark.operators.dedup import connected_components
+
+    sc = spark.sparkContext
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)], "id_a long, id_b long"
+    )
+    group = "cc-build-no-job"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        df = connected_components(pairs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert dict(df.collect()) == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10}
+
+    empty = spark.createDataFrame([], "id_a long, id_b long")
+    assert connected_components(empty).collect() == []
+
+
+def test_simhash_table_null_text(spark):
+    """A NULL-text document gets a NULL simhash (as the expression form
+    simhash32 gives); the other rows match simhash32 exactly."""
+    from timeseriestokenizer_spark.operators.dedup import simhash32, simhash_table
+
+    df = spark.createDataFrame(
+        [(1, "the quick brown fox"), (2, None), (3, "lorem ipsum dolor sit")],
+        "doc_id long, text string",
+    )
+    got = {r["id"]: r["sh"] for r in simhash_table(df, "doc_id").collect()}
+    want = {
+        r["doc_id"]: r["sh"]
+        for r in df.select("doc_id", simhash32("text").alias("sh")).collect()
+    }
+    assert got == want
+    assert got[2] is None and got[1] is not None
+
+
 def test_simhash_deep_block_combination_recall(spark):
     """simhash_near_pairs_deep (60-bit, 6C3 Manku block-combination keys):
     pairs whose flipped bits SPREAD across up to max_hamming blocks — the

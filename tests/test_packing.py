@@ -142,6 +142,21 @@ def test_grouped_running_total_empty(spark):
     assert with_grouped_running_total(df, "g", "o", "w").count() == 0
 
 
+def test_running_totals_empty_input_leave_no_cache(spark):
+    """Empty input returns early with no cache handle, so the early return
+    itself must release the input cache it made."""
+    from timeseriestokenizer_spark.operators.packing import (
+        with_grouped_running_total,
+    )
+
+    jsc = spark.sparkContext._jsc
+    baseline = jsc.getPersistentRDDs().size()
+    df = spark.createDataFrame([], "g string, o long, w long")
+    assert with_running_total(df, "o", "w").count() == 0
+    assert with_grouped_running_total(df, "g", "o", "w").count() == 0
+    assert jsc.getPersistentRDDs().size() == baseline
+
+
 def test_running_total_survives_cache_eviction(spark):
     """Recompute-stability (round-5 VERDICT "What's wrong" #2): evicting the
     pass-1 cache AFTER the offsets were collected must not change the

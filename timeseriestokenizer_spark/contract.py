@@ -2419,7 +2419,7 @@ def q_session_agg(spark, sf_dir):
 
 def q_dedup_clusters(spark, sf_dir):
     """Near-dup CLUSTER RESOLUTION: verified pairs → connected components
-    (min-label propagation, operators/dedup.py) — the step between pair
+    (one-task union-find, operators/dedup.py) — the step between pair
     generation and keep-first removal. The oracle is a recursive-CTE
     transitive closure over the same pairs."""
     from .operators.dedup import connected_components, jaccard_verified_pairs

@@ -290,7 +290,7 @@ def rfm_segments(
     # one fused pass for all three scores: shared quantile + histogram jobs
     # (global_ntile_multi) instead of three sequential two-pass ntiles
     staged = base.withColumn("_mr", -F.col("recency_days"))
-    out = global_ntile_multi(
+    scored = global_ntile_multi(
         staged,
         [
             (["_mr", key], "r_score"),
@@ -298,7 +298,9 @@ def rfm_segments(
             (["total", key], "m_score"),
         ],
         k,
-    ).drop("_mr")
+    )
+    out = scored.drop("_mr")
+    out._graft_packing_cache = getattr(scored, "_graft_packing_cache", None)
     return out
 
 

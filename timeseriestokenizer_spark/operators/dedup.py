@@ -440,12 +440,17 @@ def simhash_table(
         bits = np.arange(n_bits, dtype=np.int64)
         for pdf in it:
             out = np.zeros(len(pdf), dtype=np.int64)
+            null = pdf["hs"].isna().to_numpy()  # NULL text: NULL simhash
             for i, hs in enumerate(pdf["hs"]):
+                if null[i]:
+                    continue
                 h = np.asarray(hs, dtype=np.int64)
                 if len(h):
                     votes = (((h[:, None] >> bits) & 1) * 2 - 1).sum(0)
                     out[i] = int(((votes > 0).astype(np.int64) << bits).sum())
-            yield pd.DataFrame({"id": pdf["id"], out_col: out})
+            yield pd.DataFrame(
+                {"id": pdf["id"], out_col: pd.arrays.IntegerArray(out, null)}
+            )
 
     return base.mapInPandas(_vote, f"id {id_type}, {out_col} long")
 
@@ -726,16 +731,19 @@ def connected_components(
     """Resolve near-dup pairs into clusters: (doc_id, cluster_id) where
     cluster_id = the minimum id reachable through the pair graph — the step
     a dedup pipeline needs between pair generation and keep-first removal.
+    Pairs with a NULL end carry no edge.
 
-    Default (deep=False) — min-label propagation: each round every node
-    takes the min of its own label and its neighbors' labels; converges in
-    <= graph-diameter rounds (near-dup clusters are shallow — typically
-    2-4). Each round is one join + one aggregate; the driver only runs the
-    (bounded) loop and the convergence count.
+    Default (deep=False) — one union-find task: the edge list is shuffled
+    into ONE partition and resolved there (ids mapped with numpy, then a
+    path-halving union-find, near-linear in the edge count whatever the
+    graph's depth). It fires no Spark job while the DataFrame is built and
+    its plan does not grow with the graph, but the whole edge list must fit
+    in one Python worker — right for near-dup pair lists (a small fraction
+    of the corpus); pass deep=True when it does not.
 
     deep=True — large-star/small-star contraction (_star_rounds): O(log n)
-    rounds regardless of diameter, for adversarially deep graphs (long
-    duplicate chains) where the default would need O(diameter) rounds."""
+    distributed rounds, each an eager checkpointed job. ``max_iter`` bounds
+    those rounds and applies to deep=True only."""
     if deep:
         canon = (
             pairs.select(
@@ -753,47 +761,44 @@ def connected_components(
             "cluster_id", F.col("doc_id")
         )
         return members.unionByName(roots)
-    fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    rev = pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
-    edges = fwd.unionByName(rev).distinct().cache()
-    # seed with round 1 already applied: label = min(self, direct neighbors)
-    # — one aggregate instead of the first join+diff round of the loop
-    labels = (
-        edges.groupBy("src")
-        .agg(F.min("dst").alias("mn"))
-        .select("src", F.least("src", "mn").alias("label"))
-        .cache()
+    id_type = pairs.schema[id_a].dataType.simpleString()
+    edges = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b")).filter(
+        F.col("a").isNotNull() & F.col("b").isNotNull()
     )
-    cached = labels  # the materialized frame backing `labels`
-    for _ in range(max_iter):
-        neigh = (
-            edges.join(
-                labels.select(F.col("src").alias("dst"), F.col("label").alias("nl")),
-                "dst",
-            )
-            .groupBy("src")
-            .agg(F.min("nl").alias("ml"))
-        )
-        # carry the old label through the ONE join so the convergence count
-        # and the next round's labels come from the same cached frame (the
-        # naive form pays a second labels-join per round just to diff)
-        stepped = (
-            labels.join(neigh, "src", "left")
-            .select(
-                "src",
-                F.col("label").alias("old"),
-                F.least("label", F.coalesce("ml", "label")).alias("label"),
-            )
-            .cache()
-        )
-        changed = stepped.filter(F.col("label") != F.col("old")).count()
-        cached.unpersist()
-        cached = stepped
-        labels = stepped.select("src", "label")
-        if changed == 0:
-            break
-    edges.unpersist()
-    return labels.select(F.col("src").alias("doc_id"), F.col("label").alias("cluster_id"))
+
+    def _union_find(it):
+        import numpy as np
+        import pandas as pd
+
+        chunks = list(it)
+        if not chunks:
+            return
+        a = np.concatenate([c["a"].to_numpy() for c in chunks])
+        b = np.concatenate([c["b"].to_numpy() for c in chunks])
+        # sorted unique ids: a smaller index is a smaller id, so linking
+        # every root under the smaller one leaves each component's root at
+        # its minimum id
+        ids, idx = np.unique(np.concatenate([a, b]), return_inverse=True)
+        parent = list(range(len(ids)))
+
+        def find(x):
+            while parent[x] != x:
+                parent[x] = parent[parent[x]]
+                x = parent[x]
+            return x
+
+        for u, v in zip(idx[: len(a)].tolist(), idx[len(a):].tolist()):
+            ru, rv = find(u), find(v)
+            if ru < rv:
+                parent[rv] = ru
+            elif rv < ru:
+                parent[ru] = rv
+        roots = np.fromiter((find(x) for x in range(len(ids))), np.int64, len(ids))
+        yield pd.DataFrame({"doc_id": ids, "cluster_id": ids[roots]})
+
+    return edges.repartition(1).mapInPandas(
+        _union_find, f"doc_id {id_type}, cluster_id {id_type}"
+    )
 
 
 def dedup_survivors(
@@ -801,9 +806,9 @@ def dedup_survivors(
     deep: bool = False,
 ) -> DataFrame:
     """Keep-first near-dup removal: drop every clustered doc except its
-    cluster's min id (docs not in any pair survive untouched). Corpus-scale
-    callers should pass deep=True (large-star/small-star O(log n) rounds —
-    adversarial duplicate chains otherwise cost O(diameter) rounds)."""
+    cluster's min id (docs not in any pair survive untouched). Pass
+    deep=True when the pair list does not fit one Python worker (see
+    connected_components)."""
     clusters = connected_components(pairs, max_iter=max_iter, deep=deep)
     losers = clusters.filter(F.col("doc_id") != F.col("cluster_id")).select(
         F.col("doc_id").alias(id_col)

@@ -140,7 +140,8 @@ def with_running_total(
     for r in part_sums:
         offsets[r["_pid"]] = acc
         acc += r["_s"] or 0
-    if not offsets:  # empty input: no partitions reported
+    if not offsets:  # empty input: no handle to release the cache later
+        base.unpersist()
         return ranged.withColumn(out_col, F.lit(None).cast("double")).drop("_pid")
     off_expr = F.element_at(
         _offset_map_expr([(str(pid), off) for pid, off in offsets.items()]),
@@ -289,7 +290,8 @@ def with_grouped_running_total(
         .orderBy(group_col, "_pid")
         .collect()
     )
-    if not part_sums:  # empty input
+    if not part_sums:  # empty input: no handle to release the cache later
+        base.unpersist()
         return ranged.withColumn(out_col, F.lit(None).cast("long")).drop("_pid")
     offsets: dict[tuple[int, object], int] = {}
     cur_group: object = object()

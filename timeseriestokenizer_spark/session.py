@@ -52,6 +52,16 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # Codegen class cache (a static conf: fixed at session creation).
+        # Spark's default LRU holds 100 classes, but one pass of the
+        # benchmark's registry_sweep rows generates 333 distinct classes and
+        # one pass over all 133 registry rows ~1,400, so the default evicts
+        # every class before its reuse and each warm pass recompiled all of
+        # them (Janino, then JIT re-optimization). At 4096 (~2x the
+        # registry's working set, room for the 39 pending rows) a warm
+        # registry_sweep pass compiles 0 classes and a second full-registry
+        # pass 10-12; metaspace after a full-registry pass 189 -> 192 MB.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
