@@ -102,10 +102,8 @@ def main(argv=None):
         exact_dedup,
         jaccard_verified_pairs,
     )
-    from timeseriestokenizer_spark.operators.packing import (
-        pack_shards,
-        release_running_total_cache,
-    )
+    from timeseriestokenizer_spark.operators.packing import pack_shards
+    from timeseriestokenizer_spark.session import release_held
 
     spark = SparkSession.builder.appName("tts-corpus-filter").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -157,10 +155,7 @@ def main(argv=None):
     #     "eval" side (positional grams) is our training corpus, and the
     #     answer per TRAINING doc is its longest run of eval-known grams.
     if args.decontaminate:
-        from timeseriestokenizer_spark.operators.dedup import (
-            release_span_cache,
-            span_contamination,
-        )
+        from timeseriestokenizer_spark.operators.dedup import span_contamination
 
         eval_docs = spark.read.parquet(args.decontaminate)
         max_span = args.decon_max_span or args.decon_ngram
@@ -175,7 +170,7 @@ def main(argv=None):
         n_clean = kept.count()
         if args.funnel:
             funnel["decontaminated"] = n_clean
-        release_span_cache(spans)
+        release_held()
         stage_cache.unpersist()
         stage_cache = kept
 
@@ -205,14 +200,13 @@ def main(argv=None):
         n_mixed = kept.count()
         if args.funnel:
             funnel["mixture"] = n_mixed
-        release_running_total_cache(taken)
+        release_held()
         stage_cache.unpersist()
         stage_cache = kept
 
     # 5. split + shard packing (shards numbered within each split)
     split = with_hash_split(kept, ["doc_id"], args.test_fraction, seed=args.seed)
     out = None
-    packed_frames = []
     for part in ("train", "test"):
         packed = pack_shards(
             split.filter(F.col("split") == part),
@@ -220,12 +214,10 @@ def main(argv=None):
             "n_chars",
             args.shard_chars,
         )
-        packed_frames.append(packed)
         out = packed if out is None else out.unionByName(packed)
 
     out.write.mode("overwrite").partitionBy("split").parquet(args.output)
-    for packed in packed_frames:  # packing's range caches served their write
-        release_running_total_cache(packed)
+    release_held()  # operator caches (packing's range caches) served the write
     stage_cache.unpersist()
     final = spark.read.parquet(args.output)
     funnel["output"] = final.count()

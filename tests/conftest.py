@@ -5,13 +5,21 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from timeseriestokenizer_spark.session import get_spark  # noqa: E402
+from timeseriestokenizer_spark.session import get_spark, release_held  # noqa: E402
 
 
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("tts-tests", master="local[8]", shuffle_partitions=8)
     yield s
+
+
+@pytest.fixture(autouse=True)
+def _release_operator_caches():
+    """Each test starts with no operator-held cache: a test that measures
+    persistent RDDs against a baseline sees only its own."""
+    yield
+    release_held()
 
 
 @pytest.fixture(scope="session")

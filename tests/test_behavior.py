@@ -168,9 +168,8 @@ def test_activity_gini_oracle(spark):
 
 
 def test_global_ntile_matches_sql_semantics(spark):
-    from timeseriestokenizer_spark.operators.packing import (
-        global_ntile, release_running_total_cache,
-    )
+    from timeseriestokenizer_spark.operators.packing import global_ntile_multi
+    from timeseriestokenizer_spark.session import release_held
 
     def ref_ntile(n, k):
         q, r = divmod(n, k)
@@ -186,28 +185,26 @@ def test_global_ntile_matches_sql_semantics(spark):
         df = spark.createDataFrame(
             pd.DataFrame({"x": list(range(n))[::-1], "id": range(n)})
         )
-        scored = global_ntile(df, ["x", "id"], k, num_partitions=3)
+        scored = global_ntile_multi(df, [(["x", "id"], "ntile")], k, num_partitions=3)
         got = [r["ntile"] for r in scored.orderBy("x").collect()]
-        release_running_total_cache(scored)
+        release_held()
         assert got == ref_ntile(n, k), (n, k)
     # the scalable shape: parallel deterministic-bucket windows, never a
     # global ntile window's single-partition funnel
     df = spark.createDataFrame(pd.DataFrame({"x": range(20), "id": range(20)}))
-    scored = global_ntile(df, ["x", "id"], 4, num_partitions=3)
+    scored = global_ntile_multi(df, [(["x", "id"], "ntile")], 4, num_partitions=3)
     plan = _plan(scored)
-    release_running_total_cache(scored)
+    release_held()
     assert "singlepartition" not in plan.lower()
     assert "_pid" in plan  # windows cluster on the literal-derived bucket
     assert "ntile(" not in plan.lower()  # no NTILE window function anywhere
 
 
 def test_rfm_segments_releases_its_cache(spark):
-    """rfm_segments' result carries its cache handle: after the consuming
-    action and release_running_total_cache, no persistent RDD is left."""
+    """After rfm_segments' consuming action and release_held(), no
+    persistent RDD is left."""
     from timeseriestokenizer_spark.operators.behavior import rfm_segments
-    from timeseriestokenizer_spark.operators.packing import (
-        release_running_total_cache,
-    )
+    from timeseriestokenizer_spark.session import release_held
 
     jsc = spark.sparkContext._jsc
     baseline = jsc.getPersistentRDDs().size()
@@ -219,15 +216,12 @@ def test_rfm_segments_releases_its_cache(spark):
     df = spark.createDataFrame(events.drop(columns="h"))
     scored = rfm_segments(df, k=3)
     assert scored.count() == 12
-    release_running_total_cache(scored)
+    release_held()
     assert jsc.getPersistentRDDs().size() == baseline
 
 
 def test_rfm_segments_oracle(spark):
     from timeseriestokenizer_spark.operators.behavior import rfm_segments
-    from timeseriestokenizer_spark.operators.packing import (
-        release_running_total_cache,
-    )
 
     rng = pd.DataFrame({
         "user_id": [u for u in range(10) for _ in range(u + 1)],
@@ -240,7 +234,6 @@ def test_rfm_segments_oracle(spark):
     df = spark.createDataFrame(rng)
     scored = rfm_segments(df, key="user_id", val_col="v", k=3)
     got = scored.orderBy("user_id").toPandas()
-    release_running_total_cache(scored)
 
     per = rng.groupby("user_id").agg(
         last=("ts", "max"), n_events=("event_id", "count"), total=("v", "sum")

@@ -322,7 +322,9 @@ def test_connected_components_default_long_chain(spark):
 
 def test_connected_components_default_matches_deep_random_graph(spark):
     """Default path == deep=True on a seeded random sparse graph (many
-    components of mixed sizes and depths, duplicate edges)."""
+    components of mixed sizes and depths, duplicate edges, self-pairs —
+    an id whose only pair is a self-pair is its own cluster — and a pair
+    with a NULL end, which carries no edge)."""
     from timeseriestokenizer_spark.operators.dedup import connected_components
 
     rng = np.random.RandomState(17)
@@ -330,8 +332,9 @@ def test_connected_components_default_matches_deep_random_graph(spark):
     edges = [
         (int(ids[a]), int(ids[b]))
         for a, b in rng.randint(0, len(ids), (300, 2))
-        if a != b  # deep=True drops self-loop-only nodes
     ]
+    edges += [(int(i), int(i)) for i in ids[rng.randint(0, len(ids), 30)]]
+    edges.append((1, None))
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     a = {tuple(r) for r in connected_components(pairs).collect()}
     b = {tuple(r) for r in connected_components(pairs, deep=True).collect()}

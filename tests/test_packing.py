@@ -81,18 +81,17 @@ def test_pack_shards_tie_break_columns(spark):
     assert list(out["shard_id"]) == list(expect)
 
 
-def test_release_running_total_cache(spark):
-    from timeseriestokenizer_spark.operators.packing import (
-        release_running_total_cache,
-    )
+def test_release_held_frees_packing_cache(spark):
+    from timeseriestokenizer_spark.session import release_held
 
+    jsc = spark.sparkContext._jsc
+    baseline = jsc.getPersistentRDDs().size()
     df, _ = _docs(spark, n=500)
     out = pack_shards(df, "doc_id", "n_chars", 1000)
     n_before = out.count()
-    cached = out._graft_packing_cache
-    assert cached.storageLevel.useMemory
-    release_running_total_cache(out)
-    assert not cached.storageLevel.useMemory
+    assert jsc.getPersistentRDDs().size() > baseline
+    release_held()
+    assert jsc.getPersistentRDDs().size() == baseline
     assert out.count() == n_before  # plan still valid after release
 
 
@@ -104,7 +103,6 @@ def test_grouped_running_total_matches_window(spark):
     from pyspark.sql import Window as W
 
     from timeseriestokenizer_spark.operators.packing import (
-        release_running_total_cache,
         with_grouped_running_total,
     )
 
@@ -130,7 +128,6 @@ def test_grouped_running_total_matches_window(spark):
     assert mism == 0
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan, plan
-    release_running_total_cache(got)
 
 
 def test_grouped_running_total_empty(spark):
@@ -143,17 +140,19 @@ def test_grouped_running_total_empty(spark):
 
 
 def test_running_totals_empty_input_leave_no_cache(spark):
-    """Empty input returns early with no cache handle, so the early return
-    itself must release the input cache it made."""
+    """Empty input takes the early return; its input cache is still held,
+    so release_held() frees it like any other."""
     from timeseriestokenizer_spark.operators.packing import (
         with_grouped_running_total,
     )
+    from timeseriestokenizer_spark.session import release_held
 
     jsc = spark.sparkContext._jsc
     baseline = jsc.getPersistentRDDs().size()
     df = spark.createDataFrame([], "g string, o long, w long")
     assert with_running_total(df, "o", "w").count() == 0
     assert with_grouped_running_total(df, "g", "o", "w").count() == 0
+    release_held()
     assert jsc.getPersistentRDDs().size() == baseline
 
 
@@ -163,21 +162,24 @@ def test_running_total_survives_cache_eviction(spark):
     result — bucket boundaries are driver literals, not a fresh reservoir
     sample, so pass-3 recomputation reproduces the exact pids the offsets
     were computed for."""
+    from timeseriestokenizer_spark.session import release_held
+
     df, weights = _docs(spark, n=4000, seed=9)
     out = with_running_total(df, "doc_id", "n_chars", num_partitions=7)
     # evict the intermediate BEFORE the consuming action: pass 3 must
     # recompute pass 1 from scratch with the already-collected offsets
-    out._graft_packing_cache.unpersist(blocking=True)
+    release_held()
     got = out.orderBy("doc_id").toPandas()["running_total"].to_numpy()
     np.testing.assert_array_equal(got, np.cumsum(np.asarray(weights, dtype=np.int64)))
 
 
 def test_global_ntile_survives_cache_eviction(spark):
-    from timeseriestokenizer_spark.operators.packing import global_ntile
+    from timeseriestokenizer_spark.operators.packing import global_ntile_multi
+    from timeseriestokenizer_spark.session import release_held
 
     df, _ = _docs(spark, n=1003, seed=5)
-    out = global_ntile(df, ["n_chars", "doc_id"], 5, num_partitions=6)
-    out._graft_packing_cache.unpersist(blocking=True)
+    out = global_ntile_multi(df, [(["n_chars", "doc_id"], "ntile")], 5, num_partitions=6)
+    release_held()
     got = out.orderBy("n_chars", "doc_id").toPandas()["ntile"].to_numpy()
     # SQL NTILE semantics: first n mod k buckets get ceil(n/k) rows
     n, k = 1003, 5

@@ -150,6 +150,53 @@ def test_quantize_catalyst_stays_in_codegen(spark):
     assert "EvalPython" not in plan and "Python" not in plan, plan
 
 
+def test_quantize_closed_form_path_is_pinned(spark, tmp_path):
+    """Equal-width edges quantize through the closed-form CASE tree over
+    (lo, hi), never the interpreted ``aggregate`` fold over the edges array:
+    for the two registry rows, and for an edges table that was filtered,
+    cached or written to parquet first (the bin count is column metadata
+    of ``edges``, so it survives all three)."""
+    from timeseriestokenizer_spark import contract
+    from timeseriestokenizer_spark.functions.quantize import (
+        dequantize_with_edges,
+        fit_edges_df,
+        quantize_with_edges,
+    )
+
+    spark.createDataFrame(
+        [(i, i % 3, float((i * 37) % 101)) for i in range(60)],
+        "event_id long, user_id long, value double",
+    ).write.parquet(str(tmp_path / "events.parquet"))
+
+    def closed_form(df):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return "CASE WHEN" in plan and "aggregate(" not in plan
+
+    for row in ("quantize_catalyst", "chronos_rebin_tokens"):
+        assert closed_form(contract.QUERIES[row](spark, str(tmp_path))), row
+
+    ev = contract.load(spark, str(tmp_path), "events").withColumn(
+        "uid", F.col("user_id").cast("string")
+    )
+    edges = fit_edges_df(ev, "uid", "value", 50)
+    edges.write.parquet(str(tmp_path / "edges.parquet"))
+    want = quantize_with_edges(ev, edges, "uid", "value").collect()
+    for variant in (
+        edges.filter(F.col("hi") >= F.col("lo")),
+        edges.filter(F.col("hi") >= F.col("lo")).cache(),
+        spark.read.parquet(str(tmp_path / "edges.parquet")),
+    ):
+        for mode in ("reference", "chronos"):
+            assert closed_form(quantize_with_edges(ev, variant, "uid", "value", mode=mode))
+        tokd = quantize_with_edges(ev, variant, "uid", "value")
+        assert closed_form(dequantize_with_edges(tokd, variant, "uid", "token"))
+        assert sorted(tokd.collect()) == sorted(want)
+    # without the extents the closed form cannot apply: the fold remains
+    folded = quantize_with_edges(ev, edges.drop("lo", "hi"), "uid", "value")
+    assert not closed_form(folded)
+    assert sorted(folded.collect()) == sorted(want)
+
+
 def test_reconcile_with_batch_has_no_join(spark):
     """The lambda read path (streaming tail + batch days) must compile to
     two day-pruned filters and a union — any Join node means the scale

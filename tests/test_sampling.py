@@ -213,9 +213,7 @@ def test_mixture_take_exact_quota(spark):
     """Exact fill: kept tokens reach the target and overshoot by less than
     one doc; keep set is a hash-order prefix; unlisted sources drop."""
     from timeseriestokenizer_spark.functions.sampling import mixture_take
-    from timeseriestokenizer_spark.operators.packing import (
-        release_running_total_cache,
-    )
+    from timeseriestokenizer_spark.session import release_held
 
     df = _mix_docs(spark)
     kept = mixture_take(df, {"big": 3.0, "tiny": 1.0}, 4000, ["doc_id"])
@@ -232,14 +230,13 @@ def test_mixture_take_exact_quota(spark):
     assert "unlisted" not in by_src
     # cum_tok is the inclusive per-source fill level in hash order
     assert max(r["cum_tok"] for r in by_src["big"]) == big_tok
-    release_running_total_cache(kept)
+    release_held()
     # determinism under repartitioning
     again = mixture_take(df.repartition(11), {"big": 3.0, "tiny": 1.0}, 4000,
                          ["doc_id"])
     ids_a = sorted(r["doc_id"] for r in rows)
     ids_b = sorted(r["doc_id"] for r in again.collect())
     assert ids_a == ids_b
-    release_running_total_cache(again)
 
 
 def test_stratified_take_exact_k(spark):
@@ -252,9 +249,7 @@ def test_stratified_take_exact_k(spark):
         _hash_u,
         stratified_take,
     )
-    from timeseriestokenizer_spark.operators.packing import (
-        release_running_total_cache,
-    )
+    from timeseriestokenizer_spark.session import release_held
 
     df = _mix_docs(spark).select("doc_id", "source")
     got = stratified_take(df, "source", 7, ["doc_id"])
@@ -266,7 +261,7 @@ def test_stratified_take_exact_k(spark):
     assert len(by_src["unlisted"]) == 7
     assert len(by_src["tiny"]) == 7  # tiny has 10 rows >= 7
     assert sorted(r["take_rank"] for r in by_src["big"]) == list(range(1, 8))
-    release_running_total_cache(got)
+    release_held()
 
     # reference: plain window over the same hash order
     ref = (
@@ -287,4 +282,3 @@ def test_stratified_take_exact_k(spark):
     assert sorted(r["doc_id"] for r in again.collect()) == sorted(
         r["doc_id"] for r in rows
     )
-    release_running_total_cache(again)

@@ -520,7 +520,7 @@ def q_rfm_segments(spark, sf_dir):
     """RFM segmentation (operators/behavior.rfm_segments): per-user
     recency/frequency/monetary with exact SQL-NTILE(5) scores computed
     by the two-pass range-partition global rank (operators/packing.
-    global_ntile) — never the single-partition NTILE window; user_id
+    global_ntile_multi) — never the single-partition NTILE window; user_id
     breaks ties so bucket assignment is engine-identical. All-BIGINT."""
     from .operators.behavior import rfm_segments
 
@@ -1860,8 +1860,9 @@ def q_tpe_models_roundtrip(spark, sf_dir):
         tpe_train,
         tokens_to_rows,
     )
+    from .session import hold
 
-    tok = _quantized_event_tokens(spark, sf_dir).cache()
+    tok = hold(_quantized_event_tokens(spark, sf_dir))
     models = tpe_train(tok, "uid", "token", "pos", N_BINS + 30, N_BINS)
     enc = tpe_encode_with_models(tok, models, "uid", "token", "pos")
     dec = tpe_decode_with_models(enc, models)

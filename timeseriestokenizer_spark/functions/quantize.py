@@ -79,6 +79,23 @@ def fit_edges(
     raise ValueError(kind)
 
 
+_EQUAL_WIDTH_BINS = "equal_width_bins"
+
+
+def _equal_width_bins(edges_df: DataFrame) -> int | None:
+    """n_bins of an equal-width ``fit_edges_df`` table when its closed form
+    applies, else None (the consumer falls back to the generic array fold).
+    Equal-width edges are a pure function of (lo, hi, n_bins), so a
+    consumer that knows n_bins at plan time evaluates single edges inline —
+    same IEEE ops, no array through the join. The count is metadata of the
+    ``edges`` column, which survives filter, cache, select and parquet; the
+    ``lo``/``hi`` extents must still be there."""
+    fields = {f.name: f for f in edges_df.schema.fields}
+    if "edges" not in fields or not {"lo", "hi"} <= fields.keys():
+        return None
+    return fields["edges"].metadata.get(_EQUAL_WIDTH_BINS)
+
+
 def fit_edges_df(
     df: DataFrame, key: str, value_col: str, n_bins: int, kind: str = "equal_width",
     accuracy: int = 100000,
@@ -96,7 +113,9 @@ def fit_edges_df(
         ext = df.groupBy(F.col(key).alias("series_id")).agg(
             F.min(value_col).alias("lo"), F.max(value_col).alias("hi")
         )
-        out = ext.select(
+        # the bin count rides in the edges column's metadata for the
+        # closed-form quantize/dequantize fast path (see _equal_width_bins)
+        return ext.select(
             "series_id",
             "lo",
             "hi",
@@ -107,17 +126,8 @@ def fit_edges_df(
                                     WHEN k = {n1} THEN hi
                                     ELSE lo + k * ((hi - lo) / {n1}) END)
                 """
-            ).alias("edges"),
+            ).alias("edges", metadata={_EQUAL_WIDTH_BINS: n_bins}),
         )
-        # plan-time bin count for the closed-form quantize/dequantize fast
-        # path (see quantize_with_edges): equal-width edges are a pure
-        # function of (lo, hi, n_bins), so consumers can evaluate single
-        # edges inline — same IEEE ops, no array through the join — when
-        # they know n_bins statically. The tag survives the direct
-        # fit_edges_df -> quantize_with_edges hand-off every caller uses;
-        # consumers fall back to the generic array fold without it.
-        out._graft_equal_width_bins = n_bins
-        return out
     if kind == "quantile":
         probs = "array(" + ",".join(str(p) for p in np.linspace(0.0, 1.0, n_bins + 1)) + ")"
         return df.groupBy(F.col(key).alias("series_id")).agg(
@@ -200,7 +210,7 @@ def quantize_with_edges(
     No broadcast hint: AQE broadcasts when the edges table is dimension-sized
     and falls back to a co-partitioned shuffle join when it is not (the
     per-conversation case the driver-dict path cannot survive)."""
-    n_bins = getattr(edges_df, "_graft_equal_width_bins", None)
+    n_bins = _equal_width_bins(edges_df)
     if n_bins is not None:
         # closed-form fast path: join only (lo, hi) — Catalyst prunes the
         # edges array out of the join entirely — and count the edges below
@@ -257,7 +267,7 @@ def dequantize_with_edges(
     """Scale-path dequantize: bin centers with the reference's extrapolation
     rules (utils/discretisize.py:246-279) as Catalyst expressions over the
     joined edges array (1-indexed element_at)."""
-    n_bins = getattr(edges_df, "_graft_equal_width_bins", None)
+    n_bins = _equal_width_bins(edges_df)
     if n_bins is not None:
         # closed-form twin of the array path: evaluate the two needed edges
         # inline from (lo, hi) — identical IEEE ops as the array elements

@@ -237,8 +237,7 @@ def stratified_take(
     into the group rank), so a handful of huge groups never serialize
     into one window task each. Emits the input columns plus ``take_rank``
     (1-based hash-order rank). Release the intermediate cache with
-    ``operators.packing.release_running_total_cache`` after the consuming
-    action."""
+    ``session.release_held()`` after the consuming action."""
     from ..operators.packing import with_grouped_running_total
 
     keys = list(key_cols) if key_cols else ["doc_id"]
@@ -252,9 +251,7 @@ def stratified_take(
         num_partitions=num_partitions, tie_cols=keys,
         splits=_uniform_hash_splits(df, num_partitions),
     )
-    out = ranked.filter(F.col("take_rank") <= F.lit(int(k))).drop("_u", "_one")
-    out._graft_packing_cache = getattr(ranked, "_graft_packing_cache", None)
-    return out
+    return ranked.filter(F.col("take_rank") <= F.lit(int(k))).drop("_u", "_one")
 
 
 def mixture_take(
@@ -288,8 +285,7 @@ def mixture_take(
     tracks partition count. The kept-tokens comparison is exact: the
     cumsum is BIGINT, the target a double literal (long < double promotes
     exactly below 2^53). Release the intermediate cache with
-    ``operators.packing.release_running_total_cache`` after the consuming
-    action."""
+    ``session.release_held()`` after the consuming action."""
     from ..operators.packing import with_grouped_running_total
 
     keys = list(key_cols) if key_cols else ["doc_id"]
@@ -311,9 +307,4 @@ def mixture_take(
         num_partitions=num_partitions, tie_cols=keys,
         splits=_uniform_hash_splits(docs, num_partitions),
     )
-    out = (
-        totaled.filter((F.col("cum_tok") - F.col("n_tok")) < target)
-        .drop("_u")
-    )
-    out._graft_packing_cache = getattr(totaled, "_graft_packing_cache", None)
-    return out
+    return totaled.filter((F.col("cum_tok") - F.col("n_tok")) < target).drop("_u")

@@ -265,13 +265,13 @@ def rfm_segments(
 
     Shape: one groupBy(key) exchange to the per-key table (events
     collapse 3–5 orders of magnitude), the anchor day as a broadcast
-    1-row join (never a single-partition global window), then three
-    ``global_ntile`` passes — each the two-pass deterministic-bucket
-    rank, never ``NTILE() OVER (ORDER BY ...)``'s one-task funnel. Pass
-    boundaries are driver literals (packing._range_pid), so the result
-    is identical even if a pass's cache is evicted mid-query; the
-    caller releases all three via ``release_running_total_cache`` after
-    the consuming action."""
+    1-row join (never a single-partition global window), then one fused
+    ``global_ntile_multi`` pass for the three scores — the two-pass
+    deterministic-bucket rank, never ``NTILE() OVER (ORDER BY ...)``'s
+    one-task funnel. Bucket boundaries are driver literals
+    (packing._range_pid), so the result is identical even if the cache is
+    evicted mid-query; the caller releases it with
+    ``session.release_held()`` after the consuming action."""
     from .packing import global_ntile_multi
 
     ts = F.col(ts_col).cast("timestamp")
@@ -290,7 +290,7 @@ def rfm_segments(
     # one fused pass for all three scores: shared quantile + histogram jobs
     # (global_ntile_multi) instead of three sequential two-pass ntiles
     staged = base.withColumn("_mr", -F.col("recency_days"))
-    scored = global_ntile_multi(
+    return global_ntile_multi(
         staged,
         [
             (["_mr", key], "r_score"),
@@ -298,10 +298,7 @@ def rfm_segments(
             (["total", key], "m_score"),
         ],
         k,
-    )
-    out = scored.drop("_mr")
-    out._graft_packing_cache = getattr(scored, "_graft_packing_cache", None)
-    return out
+    ).drop("_mr")
 
 
 def transition_concentration(

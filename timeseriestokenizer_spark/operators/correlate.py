@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from ..session import hold
 from .rollup import bucket_ts
 
 
@@ -203,10 +204,13 @@ def correlate_pairs(
         .alias("i"),
         "nb",
     )
-    vecs = withi.groupBy("k").agg(
+    # held: the collect below and the final pair pass both read vecs, which
+    # would otherwise be aggregated twice (release with
+    # session.release_held() after the consuming action)
+    vecs = hold(withi.groupBy("k").agg(
         F.first("nb").alias("nb"),
         F.map_from_entries(F.collect_list(F.struct("i", "v"))).alias("m"),
-    ).select("k", F.expr("transform(sequence(0, nb-1), j -> m[j])").alias("vec"))
+    ).select("k", F.expr("transform(sequence(0, nb-1), j -> m[j])").alias("vec")))
     # One copy of the vector matrix per executor via an explicit broadcast —
     # the SAME rows a broadcast self-join would pull to the driver anyway,
     # but without re-shipping both vectors on every pair row (n² × 2

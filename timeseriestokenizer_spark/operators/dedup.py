@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from ..session import hold
+
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
     """Keep-first exact dedup: one keeper (min id) per distinct text.
@@ -127,8 +129,10 @@ def shingle_sets(
     parallelism: int | None = None,
 ) -> DataFrame:
     """(id, hs) with the DISTINCT 60-bit hashes of the k-word shingles.
-    Cached: every downstream stage (signatures, banding self-join, Jaccard
-    verify) reuses it — without this, Catalyst re-evaluates the md5/shingle
+    Cached (``session.hold``; the caller releases it with
+    ``session.release_held()`` after its consuming action): every
+    downstream stage (signatures, banding self-join, Jaccard verify)
+    reuses it — without this, Catalyst re-evaluates the md5/shingle
     expressions on BOTH sides of the self-join (4x the hashing at scale).
     Only the int hashes are kept: raw shingle strings never leave the one
     projection that builds them (cache ~10x smaller, intersections on int64).
@@ -141,10 +145,10 @@ def shingle_sets(
     splits."""
     if parallelism:
         df = df.repartition(parallelism, id_col)
-    return df.select(
+    return hold(df.select(
         F.col(id_col).alias("id"),
         F.array_distinct(shingle_hashes(word_shingles(text_col, k))).alias("hs"),
-    ).cache()
+    ))
 
 
 def _bands_from_sets(
@@ -201,9 +205,9 @@ def _bands_from_sets(
                     )
             yield pd.DataFrame({"id": ids, "band_id": bids, "band_sig": bsigs})
 
-    bands = sets_.select("id", "hs").mapInPandas(
+    bands = hold(sets_.select("id", "hs").mapInPandas(
         _band_rows, f"id {id_type}, band_id int, band_sig string"
-    ).cache()
+    ))
     if max_bucket is not None:
         hot = (
             bands.groupBy("band_id", "band_sig")
@@ -484,7 +488,7 @@ def simhash_near_pairs(
         )
     bits_per = 32 // n_bands
     mask = (1 << bits_per) - 1
-    s = simhash_table(df, id_col, text_col, n_bits=32).cache()
+    s = hold(simhash_table(df, id_col, text_col, n_bits=32))
     bands = s.select(
         "id",
         "sh",
@@ -549,7 +553,8 @@ def _star_rounds(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
     Each round is two join+agg passes over the (shrinking) edge list;
     converges in O(log n) rounds on ANY graph shape — the deep-chain case
     where diameter-bounded min-label propagation needs O(diameter) rounds.
-    Input: directed edges src > dst, no self-loops. Returns the converged
+    Input: directed edges src > dst, no self-loops, over a short lineage
+    (connected_components checkpoints them first). Returns the converged
     star edges (src > dst = component min) and the round count.
 
     Each round ends in an eager localCheckpoint: iterative plans DOUBLE per
@@ -559,7 +564,7 @@ def _star_rounds(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
     lineage to a leaf. (On a real cluster prefer spark.checkpoint with a
     reliable dir — localCheckpoint re-computes from scratch on executor
     loss; same truncation semantics.)"""
-    e = edges.localCheckpoint(eager=True)
+    e = edges
     rounds = 0
     for _ in range(max_iter):
         rounds += 1
@@ -667,7 +672,7 @@ def simhash_near_pairs_deep(
     mask = (1 << bits_per) - 1
     keep = n_blocks - max_hamming
     combos = list(combinations(range(n_blocks), keep))
-    s = simhash_table(df, id_col, text_col, n_bits=60).cache()
+    s = hold(simhash_table(df, id_col, text_col, n_bits=60))
 
     def _block(b):
         return F.shiftright("sh", b * bits_per).bitwiseAND(F.lit(mask))
@@ -745,22 +750,31 @@ def connected_components(
     distributed rounds, each an eager checkpointed job. ``max_iter`` bounds
     those rounds and applies to deep=True only."""
     if deep:
+        # self-pairs stay in canon: their id is a node (its own one-doc
+        # cluster) even though the star rounds drop the loop edge
         canon = (
-            pairs.select(
+            pairs.filter(F.col(id_a).isNotNull() & F.col(id_b).isNotNull())
+            .select(
                 F.greatest(F.col(id_a), F.col(id_b)).alias("src"),
                 F.least(F.col(id_a), F.col(id_b)).alias("dst"),
             )
-            .filter(F.col("src") != F.col("dst"))
             .distinct()
+            .localCheckpoint(eager=True)
         )
-        stars, _ = _star_rounds(canon, max_iter)
+        stars, _ = _star_rounds(canon.filter(F.col("src") != F.col("dst")), max_iter)
         members = stars.select(
             F.col("src").alias("doc_id"), F.col("dst").alias("cluster_id")
         )
-        roots = stars.select(F.col("dst").alias("doc_id")).distinct().withColumn(
-            "cluster_id", F.col("doc_id")
+        nodes = (
+            canon.select(F.col("src").alias("doc_id"))
+            .unionByName(canon.select(F.col("dst").alias("doc_id")))
+            .distinct()
         )
-        return members.unionByName(roots)
+        # converged stars point every non-root node at its component min;
+        # roots and self-pair-only ids label themselves
+        return nodes.join(members, "doc_id", "left").select(
+            "doc_id", F.coalesce("cluster_id", "doc_id").alias("cluster_id")
+        )
     id_type = pairs.schema[id_a].dataType.simpleString()
     edges = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b")).filter(
         F.col("a").isNotNull() & F.col("b").isNotNull()
@@ -885,7 +899,12 @@ def span_contamination(
     Returns (id_col, n_grams, n_hit, max_span_tokens); span converts from
     gram-run length L to tokens as min(L + w - 1, n_words) — the min
     handles the shorter-than-w doc branch, whose single whole-text gram
-    can only ever span the doc itself."""
+    can only ever span the doc itself.
+
+    The positional eval side is cached (``session.hold``). It is the BIG
+    corpus when a decontamination job swaps roles (train docs screened
+    against an eval set), so a long-lived job calls
+    ``session.release_held()`` after the consuming action."""
     from pyspark.sql import Window as W
 
     tr = (
@@ -902,11 +921,11 @@ def span_contamination(
     # cached for the same reason as shingle_sets: the positional explode
     # AND the final all-docs base both read it — uncached, the eval-side
     # md5 hashing runs twice (once per side of the left join)
-    ev = eval_df.select(
+    ev = hold(eval_df.select(
         F.col(id_col).alias("id"),
         F.size(words).alias("n_words"),
         shingle_hashes(word_shingles(text_col, w)).alias("hp"),
-    ).cache()
+    ))
     pos = ev.select(
         "id", F.posexplode("hp").alias("pos", "h")
     ).join(tr, "h", "left_semi")
@@ -919,7 +938,7 @@ def span_contamination(
         .groupBy("id")
         .agg(F.max("run").alias("max_run"), F.sum("run").alias("n_hit"))
     )
-    out = (
+    return (
         ev.select("id", "n_words", F.size("hp").alias("n_grams"))
         .join(runs, "id", "left")
         .select(
@@ -933,20 +952,6 @@ def span_contamination(
             ).cast("long").alias("max_span_tokens"),
         )
     )
-    # release handle for pipeline callers (same convention as
-    # operators.packing): the cached side is EVAL here, which is the BIG
-    # corpus when a decontamination job swaps roles (train docs screened
-    # against an eval set) — a long-lived job must be able to drop it
-    out._graft_span_cache = ev
-    return out
-
-
-def release_span_cache(df: DataFrame) -> None:
-    """Unpersist the eval-side cache behind a span_contamination result.
-    Call AFTER the consuming action — the result plan reads from it."""
-    cached = getattr(df, "_graft_span_cache", None)
-    if cached is not None:
-        cached.unpersist()
 
 
 def jaccard_topk(

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..session import hold
+
 
 def _split_tree(order_col: str, splits: list):
     """Balanced codegen'd WHEN tree: #{s in splits : value >= s} — the
@@ -121,14 +123,17 @@ def with_running_total(
     cumsum (and shard assignment downstream) could differ across runs. Pass
     ``tie_cols`` to break ties, or use a unique ``order_col``.
 
-    The intermediate cache is released by ``release_running_total_cache`` —
-    call it after the consuming action so long multi-stage jobs don't
-    accumulate full-corpus copies in executor storage."""
+    The split points come from ``approxQuantile``, so ``order_col`` must be
+    numeric unless ``splits`` is passed. The input cache is held
+    (``session.hold``): the caller releases it with
+    ``session.release_held()`` after the consuming action, so long
+    multi-stage jobs don't accumulate full-corpus copies in executor
+    storage."""
     order_cols = [order_col, *(tie_cols or [])]
     # cache the INPUT and derive everything (splits, pids, sums, windows)
     # from it: upstream is computed once, and the pid column is a cheap
     # deterministic expression over the cached rows
-    base = df.cache()
+    base = hold(df)
     ranged = base.withColumn(
         "_pid", _range_pid(base, order_col, num_partitions, splits)
     )
@@ -140,8 +145,7 @@ def with_running_total(
     for r in part_sums:
         offsets[r["_pid"]] = acc
         acc += r["_s"] or 0
-    if not offsets:  # empty input: no handle to release the cache later
-        base.unpersist()
+    if not offsets:  # empty input
         return ranged.withColumn(out_col, F.lit(None).cast("double")).drop("_pid")
     off_expr = F.element_at(
         _offset_map_expr([(str(pid), off) for pid, off in offsets.items()]),
@@ -152,23 +156,9 @@ def with_running_total(
         .orderBy(*order_cols)
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
-    out = ranged.withColumn(
+    return ranged.withColumn(
         out_col, F.sum(weight_col).over(w) + off_expr
     ).drop("_pid")
-    out._graft_packing_cache = base  # handle for release_running_total_cache
-    out._graft_total = acc  # global weight sum (row count for weight 1)
-    return out
-
-
-def release_running_total_cache(df: DataFrame) -> None:
-    """Unpersist the intermediate range-partitioned cache behind a frame
-    returned by with_running_total / pack_shards. Call AFTER the consuming
-    action (write/collect) — the result plan reads from this cache."""
-    cached = getattr(df, "_graft_packing_cache", None)
-    if cached is not None:
-        cached.unpersist()
-    for extra in getattr(df, "_graft_packing_caches", []) or []:
-        extra.unpersist()
 
 
 def pack_shards(
@@ -184,69 +174,21 @@ def pack_shards(
     weight: shard_id = floor((cumsum - w) / budget). Documents fill shard 0
     until the budget is crossed, then shard 1, ... — the standard
     deterministic shard assembly for training corpora. Deterministic iff
-    (order_col, tie_cols) is a total order (see with_running_total)."""
+    (order_col, tie_cols) is a total order (see with_running_total).
+
+    ``order_col`` must be numeric (approxQuantile range split). The input
+    cache is held: release it with ``session.release_held()`` after the
+    consuming action."""
     with_total = with_running_total(
         df, order_col, weight_col, out_col="_incl",
         num_partitions=num_partitions, tie_cols=tie_cols,
     )
-    out = with_total.withColumn(
+    return with_total.withColumn(
         out_col,
         F.floor((F.col("_incl") - F.col(weight_col)) / F.lit(shard_budget)).cast(
             "long"
         ),
     ).drop("_incl")
-    out._graft_packing_cache = getattr(with_total, "_graft_packing_cache", None)
-    return out
-
-
-def global_ntile(
-    df: DataFrame,
-    order_cols: list[str],
-    k: int,
-    out_col: str = "ntile",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Exact SQL-standard NTILE(k) over a GLOBAL order without the
-    single-partition window ``ntile(k) OVER (ORDER BY ...)`` compiles
-    to. Semantics are the standard: with n rows the first n mod k
-    buckets hold ⌈n/k⌉ rows, the rest ⌊n/k⌋ — bit-identical to any
-    engine's ntile given the same total order, so ``order_cols`` MUST
-    be a total order (append a unique id; ties would otherwise make
-    bucket assignment run-dependent).
-
-    Shape: the two-pass range-partition machinery of
-    ``with_running_total`` with weight 1 yields the global 1-based rank
-    in #partitions driver rows (never #rows); n is one scalar count on
-    the same cached frame; the bucket index is then pure integer
-    arithmetic. Release the cache with
-    ``release_running_total_cache`` after the consuming action."""
-    if k < 1:
-        raise ValueError("k must be >= 1")
-    staged = df.withColumn("_w1", F.lit(1).cast("long"))
-    ranked = with_running_total(
-        staged, order_cols[0], "_w1", out_col="_rk",
-        num_partitions=num_partitions, tie_cols=list(order_cols[1:]),
-    )
-    cache = getattr(ranked, "_graft_packing_cache", None)
-    # row count = the global weight-1 sum pass 2 already accumulated — no
-    # separate count job
-    n = int(getattr(ranked, "_graft_total", 0))
-    q, r = divmod(n, k)
-    head = r * (q + 1)  # rows living in the first r (larger) buckets
-    i = F.col("_rk").cast("long")
-    # `div` is exact BIGINT division — a double quotient's floor could
-    # misround at extreme ranks (the x*x doctrine for integers)
-    bucket = F.when(
-        i <= F.lit(head),
-        F.expr(f"(CAST(_rk AS BIGINT) - 1) div {q + 1}"),
-    ).otherwise(
-        F.expr(f"{r} + (CAST(_rk AS BIGINT) - 1 - {head}) div {max(q, 1)}")
-    )
-    out = ranked.withColumn(
-        out_col, (bucket + F.lit(1)).cast("int")
-    ).drop("_w1", "_rk")
-    out._graft_packing_cache = cache
-    return out
 
 
 def with_grouped_running_total(
@@ -273,14 +215,15 @@ def with_grouped_running_total(
     parallel).
 
     Weights must be integral (LONG) so offsets stay exact; group values
-    must be non-null. Same caching contract as with_running_total:
-    release via ``release_running_total_cache`` after the consuming action.
+    must be non-null. As in with_running_total, ``order_col`` must be
+    numeric unless ``splits`` is passed, and the held input cache is
+    released by ``session.release_held()`` after the consuming action.
     """
     # pid buckets come from the ORDER column alone (deterministic quantile
     # literals, see _range_pid): a pid monotone in the global order is
     # monotone within every group, which is all the per-(pid, group)
     # offset accumulation needs; groups just share bucket ranges.
-    base = df.cache()
+    base = hold(df)
     ranged = base.withColumn(
         "_pid", _range_pid(base, order_col, num_partitions, splits)
     )
@@ -290,8 +233,7 @@ def with_grouped_running_total(
         .orderBy(group_col, "_pid")
         .collect()
     )
-    if not part_sums:  # empty input: no handle to release the cache later
-        base.unpersist()
+    if not part_sums:  # empty input
         return ranged.withColumn(out_col, F.lit(None).cast("long")).drop("_pid")
     offsets: dict[tuple[int, object], int] = {}
     cur_group: object = object()
@@ -319,9 +261,7 @@ def with_grouped_running_total(
         .orderBy(order_col, *(tie_cols or []))
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
-    out = ranged.withColumn(out_col, F.sum(weight_col).over(w) + off_expr).drop("_pid")
-    out._graft_packing_cache = base
-    return out
+    return ranged.withColumn(out_col, F.sum(weight_col).over(w) + off_expr).drop("_pid")
 
 
 def global_ntile_multi(
@@ -331,20 +271,27 @@ def global_ntile_multi(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Several exact global NTILE(k) scores over DIFFERENT orderings of the
-    SAME frame in two shared jobs — the fused form of calling
-    ``global_ntile`` once per metric (RFM runs three).
+    SAME frame in two shared jobs, without the single-partition window
+    ``ntile(k) OVER (ORDER BY ...)`` compiles to (RFM runs three; pass one
+    spec for a single score). Each spec is ``(order_cols, out_col)``.
+
+    Semantics are SQL-standard NTILE: with n rows the first n mod k
+    buckets hold ⌈n/k⌉ rows, the rest ⌊n/k⌋ — bit-identical to any
+    engine's ntile given the same total order, so each ``order_cols``
+    MUST be a total order (append a unique id; ties would otherwise make
+    bucket assignment run-dependent).
 
     Pass 1: ONE multi-column approxQuantile call collects every metric's
-    deterministic bucket literals. Pass 2: ONE aggregate computes every
-    metric's per-bucket row histogram (bucket ids are small ints, so all
-    histograms fit a single collected row). Then each metric's rank is a
-    per-bucket row_number + its exclusive-offset literal — one tiny window
-    per metric, chained, never a single-partition funnel. Semantics are
-    exactly ``global_ntile``'s (SQL NTILE, order_cols a total order);
-    recompute-stable for the same reason (_range_pid doctrine: buckets are
-    pure functions of row values and literals).
+    deterministic bucket literals, so each lead order column must be
+    numeric. Pass 2: ONE aggregate computes every metric's per-bucket row
+    histogram (bucket ids are small ints, so all histograms fit a single
+    collected row). Then each metric's rank is a per-bucket row_number +
+    its exclusive-offset literal — one tiny window per metric, chained,
+    never a single-partition funnel. Recompute-stable (_range_pid
+    doctrine: buckets are pure functions of row values and literals).
 
-    Release the shared cache with ``release_running_total_cache``."""
+    The shared input cache is held: release it with
+    ``session.release_held()`` after the consuming action."""
     if k < 1:
         raise ValueError("k must be >= 1")
     spark = df.sparkSession
@@ -352,7 +299,7 @@ def global_ntile_multi(
     probs = [i / n_parts for i in range(1, n_parts)]
     err = max(1.0 / (4 * n_parts), 0.02)
     lead_cols = [oc[0] for oc, _ in specs]
-    base = df.cache()  # one upstream computation; quantiles read the cache
+    base = hold(df)  # one upstream computation; quantiles read the cache
     raw_splits = (
         base.stat.approxQuantile(lead_cols, probs, err)
         if probs
@@ -403,6 +350,4 @@ def global_ntile_multi(
             F.expr(f"(_rk - 1) div {q + 1}"),
         ).otherwise(F.expr(f"{r} + (_rk - 1 - {head}) div {max(q, 1)}"))
         out = stagedr.withColumn(out_col, (bucket + F.lit(1)).cast("int")).drop("_rk")
-    out = out.drop(*pid_cols)
-    out._graft_packing_cache = base
-    return out
+    return out.drop(*pid_cols)

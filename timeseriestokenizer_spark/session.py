@@ -9,7 +9,29 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+# Frames cached by operators for their own reuse (see ``hold``).
+_held: list[DataFrame] = []
+
+
+def hold(df: DataFrame) -> DataFrame:
+    """Cache ``df`` for an operator's internal reuse and record it, so the
+    caller can drop every such cache with one ``release_held()`` after its
+    consuming action. Operator results come back as ordinary DataFrames:
+    a ``.drop()`` or ``.filter()`` on them loses nothing. Releasing early
+    costs recomputation, never correctness — operators only cache frames
+    whose recomputation reproduces them."""
+    _held.append(df.cache())
+    return df
+
+
+def release_held() -> None:
+    """Unpersist every frame ``hold`` recorded, and forget them. Call it
+    AFTER the action (write/collect/count) that consumed the operator
+    results — their plans read from these caches."""
+    while _held:
+        _held.pop().unpersist()
 
 
 def get_spark(

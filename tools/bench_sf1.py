@@ -96,6 +96,7 @@ def run_ops(spark, path: str, ui_port: int) -> dict:
         ivf_topk,
         train_centroids,
     )
+    from timeseriestokenizer_spark.session import release_held
 
     docs = spark.read.parquet(os.path.join(path, "documents"))
     vecs = spark.read.parquet(os.path.join(path, "embeddings"))
@@ -108,6 +109,7 @@ def run_ops(spark, path: str, ui_port: int) -> dict:
         t0 = time.time()
         res = fn()
         rec = {"wall_s": round(time.time() - t0, 2), **res}
+        release_held()  # operator-internal caches served the count
         st = stage_stats(ui_port, last_stage)
         last_stage = st.pop("max_stage_id", last_stage)
         rec["stages"] = st
@@ -190,9 +192,6 @@ def run_ops(spark, path: str, ui_port: int) -> dict:
     from timeseriestokenizer_spark.functions.sampling import mixture_take
     from timeseriestokenizer_spark.functions.textstats import oov_rate
     from timeseriestokenizer_spark.operators.collocations import collocation_lift
-    from timeseriestokenizer_spark.operators.packing import (
-        release_running_total_cache,
-    )
 
     timed(
         "hashing_tf",
@@ -212,16 +211,15 @@ def run_ops(spark, path: str, ui_port: int) -> dict:
         },
     )
 
-    def _mixture():
-        kept = mixture_take(
-            docs, {"web": 2.0, "books": 1.0, "code": 1.0},
-            token_budget=200_000, key_cols=["doc_id"],
-        )
-        n = kept.count()
-        release_running_total_cache(kept)
-        return {"n_rows": n}
-
-    timed("mixture_take", _mixture)
+    timed(
+        "mixture_take",
+        lambda: {
+            "n_rows": mixture_take(
+                docs, {"web": 2.0, "books": 1.0, "code": 1.0},
+                token_budget=200_000, key_cols=["doc_id"],
+            ).count()
+        },
+    )
 
     cents = train_centroids(vecs, n_cells=32)
     queries = vecs.orderBy("vec_id").limit(100).cache()

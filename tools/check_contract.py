@@ -15,10 +15,11 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 PENDING = "--pending" in sys.argv
 _args = [a for a in sys.argv[1:] if a != "--pending"]
