@@ -305,6 +305,26 @@ def test_connected_components_deep_matches_default_on_shallow(spark):
     assert a == b
 
 
+def test_connected_components_deep_frees_its_checkpoints(spark):
+    """deep=True keeps only the two checkpoints its result reads (the edge
+    list and the converged round; every superseded round is dropped), and
+    none once the caller has consumed the result and run release_held()."""
+    from timeseriestokenizer_spark.operators.dedup import connected_components
+    from timeseriestokenizer_spark.session import release_held
+
+    jsc = spark.sparkContext._jsc
+    base = jsc.getPersistentRDDs().size()
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(40)], "id_a long, id_b long"
+    )
+    out = connected_components(pairs, deep=True)
+    assert jsc.getPersistentRDDs().size() - base == 2
+    labels = out.collect()
+    assert len(labels) == 41 and {r["cluster_id"] for r in labels} == {0}
+    release_held()
+    assert jsc.getPersistentRDDs().size() == base
+
+
 def test_connected_components_default_long_chain(spark):
     """The default union-find path resolves a 1000-node chain (diameter
     999) with default arguments: one component labelled by its minimum."""

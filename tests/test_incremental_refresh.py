@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from timeseriestokenizer_spark.datagen import transcripts_df
 from timeseriestokenizer_spark.functions.signals import derive_signals
+from timeseriestokenizer_spark.operators.kmv import kmv_rollup_from_finer, kmv_rollup_tier
 from timeseriestokenizer_spark.operators.rollup import (
     distinct_rollup_cascade,
     rollup_cascade,
@@ -33,7 +34,8 @@ def _rows(df, cols):
 
 
 def _assert_store_equals_scratch(spark, store, full_raw):
-    scratch = rollup_cascade(derive_signals(full_raw))
+    sig = derive_signals(full_raw)
+    scratch = rollup_cascade(sig)
     cols = [
         "conv_id", "bucket_ts", "n_turns", "n_lat", "sum_lat", "min_lat",
         "max_lat", "sum_chars", "sum_tokens", "n_tool_calls",
@@ -43,7 +45,7 @@ def _assert_store_equals_scratch(spark, store, full_raw):
         exp = _rows(scratch[tier], cols)
         assert got == exp, f"tier {tier} diverged from from-scratch"
     # HLL tiers: sketch blobs depend on merge order; the ESTIMATES must match
-    hll_scratch = distinct_rollup_cascade(derive_signals(full_raw))
+    hll_scratch = distinct_rollup_cascade(sig)
     for tier in TIERS:
         got = _rows(
             with_distinct_estimate(read_tier(spark, store, f"hll_{tier}")),
@@ -51,6 +53,12 @@ def _assert_store_equals_scratch(spark, store, full_raw):
         )
         exp = _rows(with_distinct_estimate(hll_scratch[tier]), ["bucket_ts", "n_distinct"])
         assert got == exp, f"hll tier {tier} estimate diverged"
+    # KMV (theta) tiers: the blobs themselves, merges being byte-equal to builds
+    kmv = None
+    for tier in TIERS:
+        kmv = kmv_rollup_tier(sig, tier) if kmv is None else kmv_rollup_from_finer(kmv, tier)
+        got = _rows(read_tier(spark, store, f"kmv_{tier}"), ["bucket_ts", "sketch"])
+        assert got == _rows(kmv, ["bucket_ts", "sketch"]), f"kmv tier {tier} diverged"
 
 
 def _assert_day_rows_equal_raw(spark, store, raw):
@@ -78,7 +86,7 @@ def test_incremental_store_equals_from_scratch(spark, tmp_path):
     # initial ingest: all but the last two days — auto mode takes the
     # BATCH path (one cascade, dynamic day-partition overwrite)
     head = raw.filter(F.to_date("ts") <= F.lit(days[-3]))
-    stats = refresh_tiers(spark, head, store, with_cms=False, with_kmv=False)
+    stats = refresh_tiers(spark, head, store)
     assert len(stats) == 1 and stats[0]["mode"] == "batch"
     assert stats[0]["days"] == days[:-2]
     assert completed_days(spark, store) == days[:-2]
@@ -89,7 +97,7 @@ def test_incremental_store_equals_from_scratch(spark, tmp_path):
         (F.to_date("ts") <= F.lit(days[-2]))
         | ((F.to_date("ts") == F.lit(days[-1])) & (F.crc32("conv_id") % 2 == 0))
     )
-    stats = refresh_tiers(spark, part, store, with_cms=False, with_kmv=False)
+    stats = refresh_tiers(spark, part, store)
     assert [s["days"] for s in stats] == [[d] for d in days[-2:]]
     # before the late-data replay rewrites day -1: its run must have read
     # the snapshot through day -2, written by the run just before it
@@ -100,7 +108,7 @@ def test_incremental_store_equals_from_scratch(spark, tmp_path):
     # (its raw count changed), and one replay absorbs it
     stale = stale_days(spark, raw, store)
     assert stale == [days[-1]]
-    refresh_tiers(spark, raw, store, with_cms=False, with_kmv=False)
+    refresh_tiers(spark, raw, store)
     assert stale_days(spark, raw, store) == []
 
     _assert_store_equals_scratch(spark, store, raw)
@@ -495,11 +503,7 @@ def test_incremental_cms_kmv_tiers(spark, tmp_path):
         cms_rollup_from_finer,
         cms_rollup_tier,
     )
-    from timeseriestokenizer_spark.operators.kmv import (
-        kmv_estimate,
-        kmv_rollup_from_finer,
-        kmv_rollup_tier,
-    )
+    from timeseriestokenizer_spark.operators.kmv import kmv_estimate
 
     store = str(tmp_path / "store")
     raw = transcripts_df(spark, C=25, seed=5)
@@ -518,12 +522,11 @@ def test_incremental_cms_kmv_tiers(spark, tmp_path):
                         ["bucket_ts", "row", "col", "cnt"])
             exp = _rows(cms, ["bucket_ts", "row", "col", "cnt"])
             assert got == exp, f"cms tier {tier} diverged from scratch"
-            gotk = _rows(read_tier(spark, store, f"kmv_{tier}"),
-                         ["bucket_ts", "h", "rank"])
-            expk = _rows(kmv, ["bucket_ts", "h", "rank"])
+            gotk = _rows(read_tier(spark, store, f"kmv_{tier}"), ["bucket_ts", "sketch"])
+            expk = _rows(kmv, ["bucket_ts", "sketch"])
             assert gotk == expk, f"kmv tier {tier} diverged from scratch"
 
-    # exact small regime on the 1d tier: 25 convs < k=64 and width=256
+    # exact small regime on the 1d tier: 25 convs < 128 nominal entries and width=256
     day_truth = {
         (r["d"], r["conv_id"]): r["n"]
         for r in sig.groupBy(
@@ -535,8 +538,7 @@ def test_incremental_cms_kmv_tiers(spark, tmp_path):
         n_distinct[d] = n_distinct.get(d, 0) + 1
     kmv_1d = kmv_estimate(read_tier(spark, store, "kmv_1d"), ["bucket_ts"])
     for r in kmv_1d.collect():
-        assert r["n_sketch"] == n_distinct[r["bucket_ts"]]
-        assert r["est"] == float(n_distinct[r["bucket_ts"]])
+        assert r["est"] == n_distinct[r["bucket_ts"]]
 
     cms_1d = read_tier(spark, store, "cms_1d")
     days = [r["bucket_ts"] for r in cms_1d.select("bucket_ts").distinct().collect()]
@@ -554,3 +556,24 @@ def test_incremental_cms_kmv_tiers(spark, tmp_path):
             assert e >= true
             if true > 0:
                 assert e == true  # 25 keys into 256 cells: no collisions here
+
+
+def test_refresh_rejects_bottom_k_kmv_store(spark, tmp_path):
+    """A kmv_<tier> directory of bottom-k (bucket_ts, h, rank) rows, as
+    stores built before the theta sketches hold, stops a refresh with the
+    KMV family on before it writes anything."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    part = tmp_path / "store" / "kmv_1d" / "day=2024-01-01"
+    part.mkdir(parents=True)
+    pq.write_table(
+        pa.table({"bucket_ts": [dt.datetime(2024, 1, 1)], "h": [7], "rank": [1]}),
+        str(part / "part-0.parquet"),
+    )
+    raw = transcripts_df(spark, C=5, seed=1)
+    with pytest.raises(ValueError, match="predate the theta sketches"):
+        refresh_tiers(spark, raw, str(tmp_path / "store"))
+    assert sorted(os.listdir(tmp_path / "store")) == ["kmv_1d"]

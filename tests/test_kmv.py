@@ -1,11 +1,16 @@
-"""KMV bottom-k sketch: estimator accuracy, exact small regime, merge
-closure, Jaccard sanity, and the TakeOrderedAndProject global-build plan."""
+"""KMV theta sketches: estimator accuracy above the exact regime, exact
+small regime, merge == direct build, and union/intersection estimates
+against exact set sizes."""
 
 from __future__ import annotations
+
+import datetime as dt
+import math
 
 from pyspark.sql import functions as F
 
 from timeseriestokenizer_spark.operators.kmv import (
+    LG_NOM_ENTRIES,
     kmv_build,
     kmv_estimate,
     kmv_merge,
@@ -21,35 +26,47 @@ def _evk(spark, sf="sf0.01"):
 
 
 def test_estimate_within_kmv_error_band(spark):
+    """~860 distinct keys per event type, far above the nominal entries:
+    every estimate within 3 sigma (RSE 1/sqrt(nominal entries)) of the
+    exact countDistinct."""
     evk = _evk(spark)
-    true = evk.select("k").distinct().count()
-    est = kmv_estimate(kmv_build(evk, "k", k=64), k=64).collect()[0]["est"]
-    # std error ~ 1/sqrt(k-2) ≈ 12.7% at k=64; allow 3 sigma
-    assert abs(est - true) / true < 0.4, (est, true)
+    true = {
+        r["event_type"]: r["n"]
+        for r in evk.groupBy("event_type").agg(F.countDistinct("k").alias("n")).collect()
+    }
+    assert min(true.values()) > 500
+    est = kmv_estimate(kmv_build(evk, "k", ["event_type"]), ["event_type"]).collect()
+    assert {r["event_type"] for r in est} == set(true)
+    for r in est:
+        n = true[r["event_type"]]
+        assert abs(r["est"] - n) / n < 3 / math.sqrt(1 << LG_NOM_ENTRIES), (r, n)
 
 
 def test_exact_below_k(spark):
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    sk = kmv_build(ev, "event_type", k=64)
-    row = kmv_estimate(sk, k=64).collect()[0]
-    assert row["n_sketch"] == 5 and row["est"] == 5.0
+    row = kmv_estimate(kmv_build(ev, "event_type")).collect()[0]
+    assert row["est"] == 5
+    # exact through the nominal entries, any partitioning
+    nominal = 1 << LG_NOM_ENTRIES
+    for n in (nominal - 1, nominal):
+        for parts in (1, 3):
+            sk = kmv_build(spark.range(n).repartition(parts), "id")
+            assert kmv_estimate(sk).collect()[0]["est"] == n
 
 
 def test_merge_equals_direct_exactly(spark):
+    """Per-day sketches merged equal the direct build byte for byte."""
     evk = _evk(spark).withColumn(
         "day", F.date_trunc("day", F.col("ts").cast("timestamp"))
     )
-    direct = {r["h"] for r in kmv_build(evk, "k", k=64).collect()}
-    merged = {
-        r["h"]
-        for r in kmv_merge(kmv_build(evk, "k", ["day"], k=64), k=64).collect()
-    }
-    assert direct == merged and len(direct) == 64
+    direct = kmv_build(evk, "k").collect()[0]["sketch"]
+    merged = kmv_merge(kmv_build(evk, "k", ["day"])).collect()[0]["sketch"]
+    assert bytes(direct) == bytes(merged)
 
 
 def test_jaccard_estimate_tracks_truth(spark):
     evk = _evk(spark)
-    pairs = kmv_overlap_pairs(evk, "k", "event_type", k=64).collect()
+    pairs = kmv_overlap_pairs(evk, "k", "event_type").collect()
     assert len(pairs) == 10
     sets = {
         r["event_type"]: set(
@@ -66,34 +83,22 @@ def test_jaccard_estimate_tracks_truth(spark):
         assert abs(p["inter_est"] - true_i) / max(true_i, 1) < 0.5
 
 
-def test_global_build_is_take_ordered(spark):
-    evk = _evk(spark)
-    hashes = kmv_build(evk, "k", k=64)
-    plan = hashes._jdf.queryExecution().executedPlan().toString()
-    assert "TakeOrderedAndProject" in plan, plan
-
-
 def test_retention_series_tracks_truth(spark):
     """kmv_retention_series vs exact day-over-day overlap on real data;
-    pairs exist only where both days exist; estimates inside the k=64
-    band."""
+    pairs exist only where both days exist; estimates inside the band the
+    k=64 bottom-k sketch kept."""
     ev = spark.read.parquet("/root/testdata/sf0.01/events.parquet").select(
         F.date_trunc("day", F.col("ts").cast("timestamp")).alias("bucket_ts"),
         "user_id",
     )
-    cells = kmv_build(ev, "user_id", ["bucket_ts"], k=64)
-    got = {
-        r["bucket_ts"]: r
-        for r in kmv_retention_series(cells, k=64).collect()
-    }
+    cells = kmv_build(ev, "user_id", ["bucket_ts"])
+    got = {r["bucket_ts"]: r for r in kmv_retention_series(cells).collect()}
     days = sorted(r["bucket_ts"] for r in ev.select("bucket_ts").distinct().collect())
     sets = {
         d: {r["user_id"] for r in ev.filter(F.col("bucket_ts") == d)
             .select("user_id").distinct().collect()}
         for d in days
     }
-    import datetime as dt
-
     expected_pairs = {
         d for d in days if (d + dt.timedelta(days=1)) in sets
     }
@@ -104,27 +109,3 @@ def test_retention_series_tracks_truth(spark):
         assert abs(got[d]["jaccard_est"] - true_j) < 0.25
         true_i = len(a & b)
         assert abs(got[d]["inter_est"] - true_i) / max(true_i, 1) < 0.5
-
-
-def test_h_cap_prefilter_is_lossless_above_kth(spark):
-    """kmv_build(h_cap=...): with the cap above the true kth hash the
-    sketch is IDENTICAL; the filter sits before the rank window (the
-    unbounded-cardinality scale knob); an over-tight cap is detectable
-    (n_sketch < k)."""
-    evk = _evk(spark).withColumn(
-        "day", F.date_trunc("day", F.col("ts").cast("timestamp"))
-    )
-    full = kmv_build(evk, "k", ["day"], k=64)
-    kth_max = max(r["h"] for r in full.filter("rank = 64").collect())
-    capped = kmv_build(evk, "k", ["day"], k=64, h_cap=kth_max + 1)
-    a = sorted(tuple(r) for r in full.select("day", "h", "rank").collect())
-    b = sorted(tuple(r) for r in capped.select("day", "h", "rank").collect())
-    assert a == b
-
-    plan = capped._jdf.queryExecution().executedPlan().toString()
-    assert "Filter" in plan and plan.index("Window") < plan.index("Scan"), plan
-
-    tight = kmv_build(evk, "k", ["day"], k=64, h_cap=kth_max // 100)
-    from timeseriestokenizer_spark.operators.kmv import kmv_estimate
-    est = kmv_estimate(tight, ["day"], k=64).collect()
-    assert any(r["n_sketch"] < 64 for r in est)  # detectably under-filled

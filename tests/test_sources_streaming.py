@@ -397,8 +397,8 @@ def test_streaming_cms_matches_batch(spark, tmp_path):
 
 
 def test_streaming_kmv_matches_batch(spark, tmp_path):
-    """stream_kmv_1m: streamed bottom-k state equals a batch
-    kmv_rollup_tier over the same rows exactly (closure under union)."""
+    """stream_kmv_1m: streamed theta-sketch state equals a batch
+    kmv_rollup_tier over the same rows byte for byte."""
     from timeseriestokenizer_spark.operators.kmv import kmv_rollup_tier
     from timeseriestokenizer_spark.streaming.rollup_stream import stream_kmv_1m
 
@@ -420,9 +420,8 @@ def test_streaming_kmv_matches_batch(spark, tmp_path):
         spark, src, df.schema, str(tmp_path / "kmv_ckpt"),
         str(tmp_path / "kmv_store"),
     )
-    got = sorted(tuple(r) for r in state.select("bucket_ts", "h", "rank").collect())
+    got = sorted((r["bucket_ts"], bytes(r["sketch"])) for r in state.collect())
     exp = sorted(
-        tuple(r)
-        for r in kmv_rollup_tier(df, "1m").select("bucket_ts", "h", "rank").collect()
+        (r["bucket_ts"], bytes(r["sketch"])) for r in kmv_rollup_tier(df, "1m").collect()
     )
     assert got == exp and got

@@ -188,15 +188,21 @@ def q_lm_doc_score(spark, sf_dir):
     return unigram_lm_score(contract.load(spark, sf_dir, "documents"))
 
 
+def _events_k64(spark, sf_dir):
+    """_events_k restricted to k < 64: at most 64 distinct keys in any
+    sketch, inside theta's exact regime at the KMV size (operators/kmv),
+    so every estimate is an exact distinct count a DuckDB count(DISTINCT)
+    checks."""
+    return _events_k(spark, sf_dir).filter(F.col("k") < 64)
+
+
 def q_kmv_distinct(spark, sf_dir):
-    """KMV bottom-64 distinct estimates per event_type (operators/kmv):
-    est vs exact distinct — the oracle replays the sketch (md5-60 order,
-    (k-1)*2^60/h_(k) estimator) so est matches by hash."""
+    """Theta distinct estimates per event_type (operators/kmv) next to the
+    exact countDistinct, in the exact regime (est == true_distinct)."""
     from .operators.kmv import kmv_build, kmv_estimate
 
-    evk = _events_k(spark, sf_dir)
-    sk = kmv_build(evk, "k", ["event_type"], k=64)
-    est = kmv_estimate(sk, ["event_type"], k=64)
+    evk = _events_k64(spark, sf_dir)
+    est = kmv_estimate(kmv_build(evk, "k", ["event_type"]), ["event_type"])
     true = evk.groupBy("event_type").agg(
         F.countDistinct("k").cast("long").alias("true_distinct")
     )
@@ -204,26 +210,25 @@ def q_kmv_distinct(spark, sf_dir):
 
 
 def q_kmv_overlap(spark, sf_dir):
-    """Pairwise segment overlap from KMV sketches (operators/kmv.
-    kmv_overlap_pairs): Jaccard / union / intersection estimates for all
-    event-type pairs — the set-operation capability HLL lacks."""
+    """Pairwise segment overlap from theta sketches (operators/kmv.
+    kmv_overlap_pairs): union / intersection / Jaccard estimates for all
+    event-type pairs — the set-operation capability HLL lacks; exact
+    regime, so the oracle counts the exact unions and intersections."""
     from .operators.kmv import kmv_overlap_pairs
 
-    return kmv_overlap_pairs(_events_k(spark, sf_dir), "k", "event_type", k=64)
+    return kmv_overlap_pairs(_events_k64(spark, sf_dir), "k", "event_type")
 
 
 def q_kmv_union_cascade(spark, sf_dir):
-    """KMV mergeability: bottom-k(A∪B) ⊆ bottom-k(A) ∪ bottom-k(B), so
-    merging per-day sketches reproduces the direct global sketch EXACTLY
-    (not approximately) — oracle = direct build in SQL."""
+    """KMV mergeability: per-day sketches merged with theta_union_agg give
+    the global distinct count — oracle = exact count(DISTINCT) over all
+    days."""
     from .operators.kmv import kmv_build, kmv_estimate, kmv_merge
 
-    evk = _events_k(spark, sf_dir).withColumn(
+    evk = _events_k64(spark, sf_dir).withColumn(
         "day", F.date_trunc("day", F.col("ts").cast("timestamp"))
     )
-    daily = kmv_build(evk, "k", ["day"], k=64)
-    merged = kmv_merge(daily, [], k=64)
-    return kmv_estimate(merged, [], k=64)
+    return kmv_estimate(kmv_merge(kmv_build(evk, "k", ["day"])))
 
 
 def q_hw_forecast(spark, sf_dir):
@@ -274,18 +279,18 @@ def q_bloom_membership(spark, sf_dir):
 
 
 def q_kmv_retention_days(spark, sf_dir):
-    """Day-over-day returning-user estimates from daily KMV sketches
-    alone (operators/kmv.kmv_retention_series) — membership of
-    union-sketch hashes against the two stored sketches is provably
-    exact, so the SQL replay hash-matches estimates, not a band."""
+    """Day-over-day returning-user estimates from daily theta sketches
+    alone (operators/kmv.kmv_retention_series) for the user_id < 64
+    cohort — at most 64 users per sketch, inside the exact regime, so
+    union and intersection estimates equal the oracle's exact counts."""
     from .operators.kmv import kmv_build, kmv_retention_series
 
-    ev = contract.load(spark, sf_dir, "events").select(
+    ev = contract.load(spark, sf_dir, "events").filter(F.col("user_id") < 64)
+    ev = ev.select(
         F.date_trunc("day", F.col("ts").cast("timestamp")).alias("bucket_ts"),
         "user_id",
     )
-    cells = kmv_build(ev, "user_id", ["bucket_ts"], k=64)
-    return kmv_retention_series(cells, k=64)
+    return kmv_retention_series(kmv_build(ev, "user_id", ["bucket_ts"]))
 
 
 def q_count_bracket(spark, sf_dir):
@@ -567,76 +572,43 @@ GROUP BY 1
 """
 
 
-_KMV_HASH = "CAST(concat(\'0x\', substr(md5(CAST(k AS VARCHAR)), 1, 15)) AS BIGINT)"
+_KMV_KEYS_SQL = """
+keys AS (
+  SELECT * FROM (
+    SELECT event_type,
+           ((CAST(round(value*100) AS BIGINT) % 1000) + 1000) % 1000 AS k
+    FROM events)
+  WHERE k < 64)"""
 
 _KMV_DISTINCT_SQL = f"""
-WITH keys AS (
-  SELECT event_type,
-         ((CAST(round(value*100) AS BIGINT) % 1000) + 1000) % 1000 AS k
-  FROM events),
-h AS (SELECT DISTINCT event_type, {_KMV_HASH} AS h FROM keys),
-r AS (SELECT event_type, h,
-             row_number() OVER (PARTITION BY event_type ORDER BY h) AS rank
-      FROM h),
-sk AS (SELECT * FROM r WHERE rank <= 64),
-a AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_sketch, max(h) AS kth
-      FROM sk GROUP BY 1),
-t AS (SELECT event_type, CAST(count(DISTINCT k) AS BIGINT) AS true_distinct
-      FROM keys GROUP BY 1)
-SELECT a.event_type, a.n_sketch,
-       round(CASE WHEN a.n_sketch < 64 THEN a.n_sketch::DOUBLE
-             ELSE CAST(63 AS DOUBLE) * CAST(1152921504606846976 AS DOUBLE)
-                  / (a.kth + 1)::DOUBLE END, 4) AS est,
-       t.true_distinct
-FROM a JOIN t USING (event_type)
+WITH {_KMV_KEYS_SQL}
+SELECT event_type, CAST(count(DISTINCT k) AS BIGINT) AS est,
+       CAST(count(DISTINCT k) AS BIGINT) AS true_distinct
+FROM keys GROUP BY 1
 """
 
 _KMV_OVERLAP_SQL = f"""
-WITH keys AS (
-  SELECT event_type,
-         ((CAST(round(value*100) AS BIGINT) % 1000) + 1000) % 1000 AS k
-  FROM events),
-h AS (SELECT DISTINCT event_type AS seg, {_KMV_HASH} AS h FROM keys),
-segs AS (SELECT DISTINCT seg FROM h),
+WITH {_KMV_KEYS_SQL},
+segs AS (SELECT DISTINCT event_type AS seg FROM keys),
 pairs AS (SELECT a.seg AS seg_a, b.seg AS seg_b
           FROM segs a, segs b WHERE a.seg < b.seg),
-tagged AS (
-  SELECT p.seg_a, p.seg_b, h.h FROM pairs p JOIN h ON h.seg = p.seg_a
-  UNION ALL
-  SELECT p.seg_a, p.seg_b, h.h FROM pairs p JOIN h ON h.seg = p.seg_b),
 presence AS (
-  SELECT seg_a, seg_b, h, count(*) AS n_in FROM tagged GROUP BY 1, 2, 3),
-r AS (SELECT *, row_number() OVER (PARTITION BY seg_a, seg_b ORDER BY h) AS rank
-      FROM presence),
-sk AS (SELECT * FROM r WHERE rank <= 64),
-a AS (SELECT seg_a, seg_b, CAST(count(*) AS BIGINT) AS n_union_sketch,
-             CAST(sum(CASE WHEN n_in = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_both,
-             max(h) AS kth
-      FROM sk GROUP BY 1, 2),
-z AS (SELECT *,
-             CASE WHEN n_union_sketch < 64 THEN n_union_sketch::DOUBLE
-                  ELSE CAST(63 AS DOUBLE) * CAST(1152921504606846976 AS DOUBLE)
-                       / (kth + 1)::DOUBLE END AS uest
-      FROM a)
-SELECT seg_a, seg_b, n_union_sketch, n_both,
-       round(n_both::DOUBLE / n_union_sketch::DOUBLE, 6) AS jaccard_est,
-       round(uest, 4) AS union_est,
-       round((n_both::DOUBLE / n_union_sketch::DOUBLE) * uest, 4) AS inter_est
-FROM z
+  SELECT p.seg_a, p.seg_b, k.k,
+         count(DISTINCT k.event_type) AS n_in
+  FROM pairs p JOIN keys k ON k.event_type IN (p.seg_a, p.seg_b)
+  GROUP BY 1, 2, 3),
+a AS (
+  SELECT seg_a, seg_b, CAST(count(*) AS BIGINT) AS union_est,
+         CAST(sum(CASE WHEN n_in = 2 THEN 1 ELSE 0 END) AS BIGINT) AS inter_est
+  FROM presence GROUP BY 1, 2)
+SELECT seg_a, seg_b, union_est, inter_est,
+       inter_est::DOUBLE / union_est::DOUBLE AS jaccard_est
+FROM a
 """
 
 _KMV_CASCADE_SQL = f"""
-WITH keys AS (
-  SELECT ((CAST(round(value*100) AS BIGINT) % 1000) + 1000) % 1000 AS k
-  FROM events),
-h AS (SELECT DISTINCT {_KMV_HASH} AS h FROM keys),
-sk AS (SELECT h FROM h ORDER BY h LIMIT 64),
-a AS (SELECT CAST(count(*) AS BIGINT) AS n_sketch, max(h) AS kth FROM sk)
-SELECT n_sketch,
-       round(CASE WHEN n_sketch < 64 THEN n_sketch::DOUBLE
-             ELSE CAST(63 AS DOUBLE) * CAST(1152921504606846976 AS DOUBLE)
-                  / (kth + 1)::DOUBLE END, 4) AS est
-FROM a
+WITH {_KMV_KEYS_SQL}
+SELECT CAST(count(DISTINCT k) AS BIGINT) AS est FROM keys
 """
 
 
@@ -738,40 +710,25 @@ SELECT h.k, h.bloom_hit, act.actual FROM hits h JOIN act USING (k)
 
 
 _KMV_RETENTION_SQL = """
-WITH hh AS (
-  SELECT DISTINCT date_trunc('day', ts) AS b,
-         CAST(concat('0x', substr(md5(CAST(user_id AS VARCHAR)), 1, 15)) AS BIGINT) AS h
-  FROM events),
-sk AS (
-  SELECT b, h FROM (
-    SELECT b, h, row_number() OVER (PARTITION BY b ORDER BY h) AS rnk FROM hh
-  ) WHERE rnk <= 64),
-bl AS (SELECT DISTINCT b FROM sk),
-valid AS (SELECT a.b FROM bl a JOIN bl c ON c.b = a.b + INTERVAL 1 DAY),
+WITH u AS (
+  SELECT DISTINCT CAST(date_trunc('day', ts) AS TIMESTAMP) AS b, user_id
+  FROM events WHERE user_id < 64),
+days AS (SELECT DISTINCT b FROM u),
+valid AS (SELECT a.b FROM days a JOIN days c ON c.b = a.b + INTERVAL 1 DAY),
 tagged AS (
-  SELECT s.b, s.h, 0 AS side FROM sk s JOIN valid v ON v.b = s.b
+  SELECT v.b, u.user_id, 0 AS side FROM valid v JOIN u ON u.b = v.b
   UNION ALL
-  SELECT s.b - INTERVAL 1 DAY AS b, s.h, 1 AS side
-  FROM sk s JOIN valid v ON v.b = s.b - INTERVAL 1 DAY),
+  SELECT v.b, u.user_id, 1 AS side
+  FROM valid v JOIN u ON u.b = v.b + INTERVAL 1 DAY),
 presence AS (
-  SELECT b, h, count(DISTINCT side) AS n_in FROM tagged GROUP BY 1, 2),
-r AS (SELECT *, row_number() OVER (PARTITION BY b ORDER BY h) AS rnk FROM presence),
-u AS (SELECT * FROM r WHERE rnk <= 64),
+  SELECT b, user_id, count(DISTINCT side) AS n_in FROM tagged GROUP BY 1, 2),
 a AS (
-  SELECT b AS bucket_ts, CAST(count(*) AS BIGINT) AS n_union_sketch,
-         CAST(sum(CASE WHEN n_in = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_both,
-         max(h) AS kth
-  FROM u GROUP BY 1),
-z AS (SELECT *,
-             CASE WHEN n_union_sketch < 64 THEN n_union_sketch::DOUBLE
-                  ELSE CAST(63 AS DOUBLE) * CAST(1152921504606846976 AS DOUBLE)
-                       / (kth + 1)::DOUBLE END AS uest
-      FROM a)
-SELECT bucket_ts, n_union_sketch, n_both,
-       round(n_both::DOUBLE / n_union_sketch::DOUBLE, 6) AS jaccard_est,
-       round(uest, 4) AS union_est,
-       round((n_both::DOUBLE / n_union_sketch::DOUBLE) * uest, 4) AS inter_est
-FROM z
+  SELECT b AS bucket_ts, CAST(count(*) AS BIGINT) AS union_est,
+         CAST(sum(CASE WHEN n_in = 2 THEN 1 ELSE 0 END) AS BIGINT) AS inter_est
+  FROM presence GROUP BY 1)
+SELECT bucket_ts, union_est, inter_est,
+       inter_est::DOUBLE / union_est::DOUBLE AS jaccard_est
+FROM a
 """
 
 

@@ -1,16 +1,12 @@
 """Multimodal columns: opaque binary payloads with typed metadata.
 
 Image/audio/video ride as BinaryType columns; decode/feature-extraction run
-as Arrow-batched pandas UDFs over mapInPandas. FOUR containers decode for
-REAL with pure numpy/struct/stdlib (no third-party codec libraries):
-RIFF/WAVE PCM-16 (`decode_wav`) and BMP BI_RGB-24 (`decode_bmp`) —
-byte-exact roundtrips — baseline JPEG (`jpeg.decode_jpeg_baseline`, a full
-T.81 baseline-sequential decoder + encoder, lossy envelope pytest-pinned),
-and PNG (`png.decode_png`, stdlib zlib + all five scanline filters,
-LOSSLESS roundtrip pytest-pinned). Only perceptual audio/video codecs
-(MP3/MP4) remain out — they genuinely need a DSP stack; those kinds raise
+as Arrow-batched pandas UDFs over mapInPandas. Two containers decode for
+REAL with pure numpy/struct (no third-party codec libraries): RIFF/WAVE
+PCM-16 (`decode_wav`) and BMP BI_RGB-24 (`decode_bmp`), byte-exact
+roundtrips. Compressed kinds (JPEG, PNG, MP3, MP4) raise
 NotImplementedError; `fake=True` keeps the deterministic byte-derived
-stand-in for pipeline-shape tests.
+stand-in for pipeline-shape tests (the `multimodal_features` row).
 """
 
 from __future__ import annotations
@@ -132,26 +128,18 @@ def decode_media(payload: bytes, kind: str, fake: bool = False) -> np.ndarray:
     """Decode a media payload to a pixel/sample array.
 
     Real pure-numpy codecs: 'audio/wav' (PCM-16) and 'image/bmp' (BI_RGB
-    24-bit). Compressed kinds need PIL/ffmpeg (absent in this container) and
-    raise; fake=True returns the deterministic byte-derived stand-in so the
+    24-bit). Compressed kinds (JPEG, PNG, MP3, MP4) need codec libraries
+    and raise; fake=True returns the deterministic byte-derived stand-in so the
     pipeline shape stays testable for any kind."""
     if kind == "audio/wav":
         return decode_wav(bytes(payload))[0]
     if kind == "image/bmp":
         return decode_bmp(bytes(payload))
-    if kind == "image/jpeg":
-        from .jpeg import decode_jpeg_baseline
-
-        return decode_jpeg_baseline(bytes(payload))
-    if kind == "image/png":
-        from .png import decode_png
-
-        return decode_png(bytes(payload))
     if fake:
         arr = np.frombuffer(payload, dtype=np.uint8)
         return arr[: (len(arr) // 4) * 4].reshape(-1, 4)
     raise NotImplementedError(
-        f"no pure-numpy codec for {kind!r}; MP3/MP4-grade audio/video "
+        f"no pure-numpy codec for {kind!r}; compressed image/audio/video "
         "decoding requires codec libraries not present in this environment "
         "(fake=True for the stand-in)"
     )

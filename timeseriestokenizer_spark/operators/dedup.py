@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from ..session import hold
+from ..session import free_checkpoint, hold, hold_checkpoint
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
@@ -562,8 +562,11 @@ def _star_rounds(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
     twice) and caching alone does not truncate the logical plan — by ~12
     rounds Catalyst planning alone OOMs the driver. Checkpointing resets the
     lineage to a leaf. (On a real cluster prefer spark.checkpoint with a
-    reliable dir — localCheckpoint re-computes from scratch on executor
-    loss; same truncation semantics.)"""
+    reliable dir — a localCheckpoint's blocks die with their executor and
+    a later read of them fails; same truncation semantics.) A round's
+    checkpoint is dropped as soon as the next round supersedes it; the
+    converged one is left to ``session.release_held``, since the caller's
+    result reads it."""
     e = edges
     rounds = 0
     for _ in range(max_iter):
@@ -592,11 +595,13 @@ def _star_rounds(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
             .unionByName(smins.select("src", F.col("m").alias("dst")))
             .filter(F.col("src") != F.col("dst"))
             .distinct()
-            .localCheckpoint(eager=True)
+            .transform(hold_checkpoint)
         )
         changed = (
             small.exceptAll(e).limit(1).count() + e.exceptAll(small).limit(1).count()
         )
+        if e is not edges:
+            free_checkpoint(e)
         e = small
         if changed == 0:
             break
@@ -759,7 +764,7 @@ def connected_components(
                 F.least(F.col(id_a), F.col(id_b)).alias("dst"),
             )
             .distinct()
-            .localCheckpoint(eager=True)
+            .transform(hold_checkpoint)
         )
         stars, _ = _star_rounds(canon.filter(F.col("src") != F.col("dst")), max_iter)
         members = stars.select(

@@ -1,270 +1,134 @@
-"""KMV (k-minimum-values / bottom-k) distinct sketch — the set-OPERATION
-sketch the HLL tier can't provide (Bar-Yossef et al., "Counting distinct
-elements in a data stream", RANDOM 2002; Beyer et al., "On synopses for
-distinct-value estimation under multiset operations", SIGMOD 2007).
+"""KMV distinct-set sketches — the set-OPERATION sketch the HLL tier can't
+provide, kept as Spark's native DataSketches theta sketches (the KMV /
+bottom-k sketch generalised: Bar-Yossef et al., RANDOM 2002; Dasgupta et
+al., "A Framework for Estimating Stream Expression Cardinalities",
+ICDT 2016).
 
 HLL estimates |A| and |A ∪ B| but not |A ∩ B| (inclusion-exclusion on two
-noisy estimates explodes for small overlaps). A KMV sketch — the k
-SMALLEST distinct 60-bit key hashes — supports all three: the union of two
-sketches is the bottom-k of their merged hashes (closed under merge, like
-every tier sketch here), and because the bottom-k of the union is a
-uniform sample of A ∪ B, the fraction of it present in both sides is an
-unbiased Jaccard estimator:
+noisy estimates explodes for small overlaps). A theta sketch keeps the
+smallest key hashes below a threshold, so it supports all three: the
+union and the intersection of two sketches are sketches again
+(``theta_union`` / ``theta_intersection``), and a per-bucket sketch merges
+to coarser buckets with ``theta_union_agg``.
 
-    distinct_est = (k-1) * 2^60 / h_(k)      (kth smallest hash)
-    jaccard_est  = |bottom-k(A ∪ B) ∩ A ∩ B| / k
-    inter_est    = jaccard_est * union_est
+Every sketch here has ``LG_NOM_ENTRIES`` = 7, i.e. 128 nominal entries
+(relative standard error ~1/sqrt(128) = 8.8%). Build and merge use the
+same size on purpose: a merge at that size is byte-identical to a direct
+build over the same keys, whatever the input partitioning — the tier
+store's incremental == from-scratch invariant (pytest-pinned). Exact
+regime: a sketch of at most 128 distinct keys holds all of them, so its
+estimate, and the estimates of unions and intersections of such sketches,
+are exact distinct counts (how the contract rows are proven against
+DuckDB ``count(DISTINCT ...)``).
 
-Everything is DETERMINISTIC (md5-order, no RNG): rerun-, repartition- and
-engine-stable, so a DuckDB oracle replays the sketch exactly — estimates
-match by hash, not within a tolerance band. Exact small regime: fewer
-than k distinct hashes IS the exact distinct count (est = n), same
-provability convention as the MG/CMS tiers.
-
-Scale shape: hashes are distinct fixed-width int64s before any ranking
-(raw keys die at the first select); the global sketch compiles to
-TakeOrderedAndProject (partial bottom-k per partition, k rows to the
-driver-side reduce — never a global sort); per-bucket sketches rank with
-one window over the bucket exchange. Pairwise overlap fans each segment's
-sketch-sized hash set (≤ its distinct count, bounded by the segment
-filter) across the pair list — pairs are dimension-sized, hashes are
-already distinct, so nothing quadratic touches raw rows. PURE Catalyst.
-No reference counterpart (graft-new scale machinery).
+The build is one aggregate per bucket (partial sketches map-side, only
+sketch bytes shuffle); pairwise overlap and bucket-over-bucket retention
+work on the stored sketches alone, never on raw keys. PURE Catalyst.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window as W
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-DEFAULT_K = 64
-_M60 = float(1 << 60)
-
-
-def _h60(key_col: str):
-    """60-bit md5 hash — the repo's cross-engine int hash (CLAUDE.md)."""
-    return F.conv(
-        F.substring(F.md5(F.col(key_col).cast("string")), 1, 15), 16, 10
-    ).cast("long")
+# log2 of the nominal entries of every sketch: 128 (RSE ~8.8%, exact
+# through 128 distinct keys). Not 64: there the day-over-day
+# intersections of the sf0.01 test data (~130 of the same 150 users a day)
+# reach 53% relative error, outside test_kmv's 50% retention band; at 128
+# the worst is 6%.
+LG_NOM_ENTRIES = 7
 
 
 def kmv_build(
     df: DataFrame,
     key_col: str,
     bucket_cols: list[str] | None = None,
-    k: int = DEFAULT_K,
-    h_cap: int | None = None,
 ) -> DataFrame:
-    """Sketch table (bucket..., h, rank): the k smallest distinct hashes
-    per bucket (all of them when fewer). Global (no bucket) builds stay
-    a TakeOrderedAndProject; bucketed builds rank over the bucket key.
-
-    ``h_cap`` is the bucketed build's scale knob: the per-bucket window
-    sorts every distinct hash, so at unbounded key cardinality pass an
-    upper bound on the expected kth hash (e.g. 2× a previous period's
-    h_(k), or k/n_est · 2^60 from any cardinality estimate) and the
-    filter prunes BEFORE the rank shuffle — survivors are
-    ~k·(cap/h_(k)) per bucket instead of the full distinct set. Safe by
-    construction when cap ≥ the true h_(k) (all bottom-k hashes pass;
-    results identical — pytest-pinned); a too-tight cap is detectable
-    after the fact (n_sketch < k) and the build re-runs wider."""
+    """(bucket..., sketch): one theta sketch of ``key_col`` per bucket (a
+    single row without buckets). NULL keys are not counted."""
     b = list(bucket_cols or [])
-    hashes = df.select(*b, _h60(key_col).alias("h")).distinct()
-    if h_cap is not None:
-        hashes = hashes.filter(F.col("h") < int(h_cap))
-    if not b:
-        topk = hashes.orderBy("h").limit(int(k))
-        return topk.withColumn("rank", F.row_number().over(W.orderBy("h")))
-    w = W.partitionBy(*b).orderBy("h")
-    return (
-        hashes.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= int(k))
+    return df.groupBy(*b).agg(
+        F.theta_sketch_agg(key_col, LG_NOM_ENTRIES).alias("sketch")
     )
 
 
-def kmv_merge(
-    cells: DataFrame,
-    bucket_cols: list[str] | None = None,
-    k: int = DEFAULT_K,
-) -> DataFrame:
-    """Merge sketches to a coarser bucketing: distinct hashes re-ranked,
-    bottom-k kept — closed under merge, order-insensitive."""
+def kmv_merge(cells: DataFrame, bucket_cols: list[str] | None = None) -> DataFrame:
+    """Merge sketches to a coarser bucketing (order-insensitive, equal to
+    a direct build over the union of the keys)."""
     b = list(bucket_cols or [])
-    hashes = cells.select(*b, "h").distinct()
-    if not b:
-        topk = hashes.orderBy("h").limit(int(k))
-        return topk.withColumn("rank", F.row_number().over(W.orderBy("h")))
-    w = W.partitionBy(*b).orderBy("h")
-    return (
-        hashes.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= int(k))
+    return cells.groupBy(*b).agg(
+        F.theta_union_agg("sketch", LG_NOM_ENTRIES).alias("sketch")
     )
 
 
-def kmv_estimate(
-    cells: DataFrame,
-    bucket_cols: list[str] | None = None,
-    k: int = DEFAULT_K,
-) -> DataFrame:
-    """(bucket..., n_sketch, est): exact count below k, the (k-1)·2^60/h_(k)
-    estimator at k. h_(k)+1 guards the (measure-zero, but deterministic on
-    both engines) h=0 hash; est rounds to 4 dp (one double divide)."""
+def kmv_estimate(cells: DataFrame, bucket_cols: list[str] | None = None) -> DataFrame:
+    """(bucket..., est): the distinct-count estimate (bigint) of each
+    sketch — exact in the small regime."""
     b = list(bucket_cols or [])
-    agg = cells.groupBy(*b).agg(
-        F.count(F.lit(1)).cast("long").alias("n_sketch"),
-        F.max("h").alias("kth"),
-    )
-    est = F.when(
-        F.col("n_sketch") < int(k), F.col("n_sketch").cast("double")
-    ).otherwise(
-        F.lit(float(int(k) - 1)) * F.lit(_M60)
-        / (F.col("kth") + 1).cast("double")
-    )
-    return agg.select(*b, "n_sketch", F.round(est, 4).alias("est"))
+    return cells.select(*b, F.theta_sketch_estimate("sketch").alias("est"))
 
 
-def kmv_overlap_pairs(
-    df: DataFrame,
-    key_col: str,
-    seg_col: str,
-    k: int = DEFAULT_K,
-) -> DataFrame:
+def _set_estimates(a: str, b: str) -> list:
+    """union_est / inter_est (bigint) and jaccard_est = inter / union for
+    two sketch columns."""
+    union = F.theta_sketch_estimate(F.theta_union(a, b, LG_NOM_ENTRIES))
+    inter = F.theta_sketch_estimate(F.theta_intersection(a, b))
+    return [
+        union.alias("union_est"),
+        inter.alias("inter_est"),
+        (inter.cast("double") / union.cast("double")).alias("jaccard_est"),
+    ]
+
+
+def kmv_overlap_pairs(df: DataFrame, key_col: str, seg_col: str) -> DataFrame:
     """Pairwise segment overlap from sketches alone: for every unordered
-    segment pair (seg_a < seg_b) — union-sketch size, how many of its
-    hashes both segments contain, Jaccard / union / intersection
-    estimates. Segments are dimension-sized (event types, sources, days);
-    hashes are pre-distinct int64s."""
-    h = df.select(F.col(seg_col).alias("seg"), _h60(key_col).alias("h")).distinct()
-    segs = h.select("seg").distinct()
-    pairs = (
-        segs.select(F.col("seg").alias("seg_a"))
-        .crossJoin(segs.select(F.col("seg").alias("seg_b")))
+    segment pair (seg_a < seg_b), union / intersection / Jaccard
+    estimates of the two key sets. Segments are dimension-sized (event
+    types, sources, days); only one sketch per segment crosses the pair
+    list."""
+    sk = kmv_build(df, key_col, [seg_col])
+    a = sk.select(F.col(seg_col).alias("seg_a"), F.col("sketch").alias("a"))
+    b = sk.select(F.col(seg_col).alias("seg_b"), F.col("sketch").alias("b"))
+    return (
+        a.crossJoin(b)
         .filter(F.col("seg_a") < F.col("seg_b"))
-    )
-    tagged = (
-        pairs.join(h.withColumnRenamed("seg", "seg_a"), "seg_a")
-        .select("seg_a", "seg_b", "h")
-        .unionByName(
-            pairs.join(h.withColumnRenamed("seg", "seg_b"), "seg_b")
-            .select("seg_a", "seg_b", "h")
-        )
-    )
-    presence = tagged.groupBy("seg_a", "seg_b", "h").agg(
-        F.count(F.lit(1)).alias("n_in")
-    )
-    w = W.partitionBy("seg_a", "seg_b").orderBy("h")
-    sk = presence.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= int(k)
-    )
-    agg = sk.groupBy("seg_a", "seg_b").agg(
-        F.count(F.lit(1)).cast("long").alias("n_union_sketch"),
-        F.sum((F.col("n_in") == 2).cast("long")).alias("n_both"),
-        F.max("h").alias("kth"),
-    )
-    union_est = F.when(
-        F.col("n_union_sketch") < int(k),
-        F.col("n_union_sketch").cast("double"),
-    ).otherwise(
-        F.lit(float(int(k) - 1)) * F.lit(_M60)
-        / (F.col("kth") + 1).cast("double")
-    )
-    jac = F.col("n_both").cast("double") / F.col("n_union_sketch").cast("double")
-    return agg.select(
-        "seg_a", "seg_b", "n_union_sketch", "n_both",
-        F.round(jac, 6).alias("jaccard_est"),
-        F.round(union_est, 4).alias("union_est"),
-        F.round(jac * union_est, 4).alias("inter_est"),
+        .select("seg_a", "seg_b", *_set_estimates("a", "b"))
     )
 
 
-def kmv_rollup_tier(
-    signals: DataFrame,
-    tier: str,
-    key: str = "conv_id",
-    k: int = DEFAULT_K,
-) -> DataFrame:
-    """Finest KMV tier over the rollup bucketing: per-bucket bottom-k key
-    sketch — the tier that answers bucket-over-bucket OVERLAP questions
+def kmv_rollup_tier(signals: DataFrame, tier: str, key: str = "conv_id") -> DataFrame:
+    """Finest KMV tier over the rollup bucketing: (bucket_ts, sketch) —
+    the tier that answers bucket-over-bucket OVERLAP questions
     (returning-series retention, audience intersection) which the
     hll_{tier} cardinality state cannot."""
     from .rollup import bucket_ts
 
     return kmv_build(
-        signals.select(bucket_ts(tier).alias("bucket_ts"), F.col(key)),
-        key,
-        ["bucket_ts"],
-        k,
+        signals.select(bucket_ts(tier).alias("bucket_ts"), key), key, ["bucket_ts"]
     )
 
 
-def kmv_rollup_from_finer(finer: DataFrame, tier: str, k: int = DEFAULT_K) -> DataFrame:
-    """Coarser KMV tier by bottom-k merge (exactly equal to a direct
-    build — bottom-k is closed under union)."""
+def kmv_rollup_from_finer(finer: DataFrame, tier: str) -> DataFrame:
+    """Coarser KMV tier by merging the finer tier's sketches (byte-equal
+    to a direct build)."""
     from .rollup import bucket_ts
 
-    coarse = finer.withColumn(
-        "bucket_ts2", bucket_ts(tier, "bucket_ts")
-    ).drop("bucket_ts").withColumnRenamed("bucket_ts2", "bucket_ts")
-    return kmv_merge(coarse, ["bucket_ts"], k)
+    return kmv_merge(
+        finer.select(bucket_ts(tier, "bucket_ts").alias("bucket_ts"), "sketch"),
+        ["bucket_ts"],
+    )
 
 
-def kmv_retention_series(
-    cells: DataFrame,
-    k: int = DEFAULT_K,
-    step: str = "INTERVAL 1 DAY",
-) -> DataFrame:
+def kmv_retention_series(cells: DataFrame, step: str = "INTERVAL 1 DAY") -> DataFrame:
     """Bucket-over-bucket returning-key estimates from KMV TIER STATE
     alone (no raw re-scan — the drift_series doctrine applied to set
-    overlap): for each bucket pair (b, b+step) present in the store,
-    Jaccard / union / intersection estimates of the two key sets.
-
-    Soundness of sketch-only membership: for any hash h in the bottom-k
-    of A ∪ B, h ∈ A implies h ∈ bottom-k(A) (fewer than k union elements
-    precede h, so fewer than k of A do) — so testing union-sketch members
-    against the two stored sketches is EXACT, never a guess. Output
-    (bucket_ts, n_union_sketch, n_both, jaccard_est, union_est,
-    inter_est) keyed by the EARLIER bucket; pairs where either bucket is
-    absent from the store are omitted (no fake zeros)."""
-    buckets = cells.select("bucket_ts").distinct()
-    valid = buckets.join(
-        buckets.select(
-            (F.col("bucket_ts") - F.expr(step)).alias("bucket_ts")
-        ),
-        "bucket_ts",
-    )  # buckets whose successor exists
-    prev = cells.select(
-        F.col("bucket_ts"), "h", F.lit(0).alias("side")
-    ).join(valid, "bucket_ts")
-    nxt = cells.select(
+    overlap): for each bucket pair (b, b+step) present in ``cells``
+    (bucket_ts, sketch), union / intersection / Jaccard estimates of the
+    two key sets, keyed by the EARLIER bucket. Pairs where either bucket
+    is absent are omitted (no fake zeros)."""
+    a = cells.select("bucket_ts", F.col("sketch").alias("a"))
+    b = cells.select(
         (F.col("bucket_ts") - F.expr(step)).alias("bucket_ts"),
-        "h",
-        F.lit(1).alias("side"),
-    ).join(valid, "bucket_ts")
-    presence = (
-        prev.unionByName(nxt)
-        .groupBy("bucket_ts", "h")
-        .agg(F.count_distinct("side").alias("n_in"))
+        F.col("sketch").alias("b"),
     )
-    w = W.partitionBy("bucket_ts").orderBy("h")
-    sk = presence.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= int(k)
-    )
-    agg = sk.groupBy("bucket_ts").agg(
-        F.count(F.lit(1)).cast("long").alias("n_union_sketch"),
-        F.sum((F.col("n_in") == 2).cast("long")).alias("n_both"),
-        F.max("h").alias("kth"),
-    )
-    union_est = F.when(
-        F.col("n_union_sketch") < int(k),
-        F.col("n_union_sketch").cast("double"),
-    ).otherwise(
-        F.lit(float(int(k) - 1)) * F.lit(_M60)
-        / (F.col("kth") + 1).cast("double")
-    )
-    jac = F.col("n_both").cast("double") / F.col("n_union_sketch").cast("double")
-    return agg.select(
-        "bucket_ts", "n_union_sketch", "n_both",
-        F.round(jac, 6).alias("jaccard_est"),
-        F.round(union_est, 4).alias("union_est"),
-        F.round(jac * union_est, 4).alias("inter_est"),
-    )
+    return a.join(b, "bucket_ts").select("bucket_ts", *_set_estimates("a", "b"))

@@ -226,6 +226,31 @@ def _data_files(part: str) -> list[str]:
     ]
 
 
+def _check_kmv_layout(store_root: str) -> None:
+    """Raise if a ``kmv_<tier>`` directory holds rows of another layout
+    than (bucket_ts, sketch) — the (bucket_ts, h, rank) bottom-k rows of a
+    store built before the KMV family became a theta sketch. A refresh
+    would mix both schemas in one directory, and merging to coarser
+    buckets skips the NULL sketches of the old days without a word. Reads
+    one parquet footer per tier, no Spark job."""
+    import pyarrow.parquet as pq
+
+    for tier in TIERS:
+        root = os.path.join(store_root, _tier_dir("kmv", tier))
+        if not os.path.isdir(root):
+            continue
+        parts = sorted(d for d in os.listdir(root) if d.startswith("day="))
+        files = _data_files(os.path.join(root, parts[0])) if parts else []
+        names = pq.read_schema(files[0]).names if files else ["bucket_ts", "sketch"]
+        if names != ["bucket_ts", "sketch"]:
+            raise ValueError(
+                f"{root} holds {names} rows, not (bucket_ts, sketch): its KMV "
+                "tiers predate the theta sketches — delete the kmv_<tier> "
+                "directories and replay every completed day to rebuild them, "
+                "or refresh with with_kmv=False"
+            )
+
+
 def _file_count(df: DataFrame) -> int:
     """Files for one day of ``df`` at ``TARGET_FILE_BYTES`` each, from the
     optimizer's size estimate, capped at the shuffle partitions a one-day
@@ -364,12 +389,16 @@ def refresh_tiers(
     bulk-load/backfill shape, O(1) job rounds), or 'auto' (default): batch
     when 3+ days and none is already completed (initial load / multi-day
     catch-up), per-day otherwise. ``with_<family>`` turns a sketch family
-    of ``_families`` on or off; the base tiers always refresh.
+    of ``_families`` on or off; the base tiers always refresh. With the KMV
+    family on, a store whose ``kmv_<tier>`` rows predate the theta
+    sketches raises (``_check_kmv_layout``).
 
     Returns one {days, n_raw, tiers, wall_s, mode} dict per run; ``tiers``
     holds the base tiers' row counts."""
     flags = locals()  # with_<prefix> for every sketch family
     families = {p: f for p, f in _families().items() if not p or flags[f"with_{p}"]}
+    if "kmv" in families:
+        _check_kmv_layout(store_root)
     if days is None:
         days = stale_days(spark, raw, store_root)
     days = sorted(days)

@@ -8,11 +8,13 @@ unchanged to ``spark-submit --py-files`` on a real cluster.
 from __future__ import annotations
 
 import os
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Frames cached by operators for their own reuse (see ``hold``).
-_held: list[DataFrame] = []
+# Release callbacks for what operators cached or checkpointed for their
+# own reuse (see ``hold`` and ``hold_checkpoint``).
+_held: list[Callable[[], object]] = []
 
 
 def hold(df: DataFrame) -> DataFrame:
@@ -22,16 +24,42 @@ def hold(df: DataFrame) -> DataFrame:
     a ``.drop()`` or ``.filter()`` on them loses nothing. Releasing early
     costs recomputation, never correctness — operators only cache frames
     whose recomputation reproduces them."""
-    _held.append(df.cache())
+    _held.append(df.cache().unpersist)
     return df
 
 
+def hold_checkpoint(df: DataFrame) -> DataFrame:
+    """Eagerly ``localCheckpoint`` ``df`` (its plan becomes a leaf, which
+    iterative operators need so Catalyst's plan does not grow per round)
+    and record the checkpoint for ``release_held``. Unlike a ``hold``
+    cache, the returned frame READS the checkpoint: once released it can
+    no longer be computed, so release only after the consuming action."""
+    cp = df.localCheckpoint(eager=True)
+    _held.append(lambda: free_checkpoint(cp))
+    return cp
+
+
+def free_checkpoint(cp: DataFrame) -> None:
+    """Drop the blocks behind a frame ``localCheckpoint`` returned (the
+    RDD its plan reads); ``cp`` cannot be read afterwards."""
+    cp._jdf.queryExecution().logical().rdd().unpersist(False)
+
+
 def release_held() -> None:
-    """Unpersist every frame ``hold`` recorded, and forget them. Call it
-    AFTER the action (write/collect/count) that consumed the operator
-    results — their plans read from these caches."""
+    """Unpersist every frame ``hold`` recorded, drop every checkpoint
+    ``hold_checkpoint`` recorded, and forget them. Call it AFTER the
+    action (write/collect/count) that consumed the operator results —
+    their plans read from these caches and checkpoints.
+
+    The list is one per process, so a call made for one operator also
+    releases every other operator's entries. For ``hold`` caches an early
+    call costs recomputation only; for ``hold_checkpoint`` entries it
+    breaks the result: a ``connected_components(deep=True)`` result, and
+    any frame derived from it, cannot be read afterwards. Materialise
+    (write, collect, or cache and count) whatever still needs such a
+    result before any ``release_held()`` call."""
     while _held:
-        _held.pop().unpersist()
+        _held.pop()()
 
 
 def get_spark(

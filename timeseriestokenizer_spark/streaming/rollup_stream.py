@@ -335,13 +335,13 @@ def stream_kmv_1m(
     checkpoint_dir: str,
     store_path: str,
     key_col: str = "conv_id",
-    k: int = 64,
 ):
-    """Streaming KMV tier — bottom-k state merge on the shared runner.
-    The merge re-ranks the distinct union of stored and batch hashes and
-    keeps the bottom k: order-insensitive AND exactly equal to a batch
-    build (bottom-k is closed under union), so the stream/batch reconcile
-    is an equality, not an estimate comparison."""
+    """Streaming KMV tier — theta-sketch state merge on the shared runner.
+    Each micro-batch builds one theta sketch per 1-minute bucket it
+    touched; the merge is ``theta_union_agg`` over the stored and batch
+    sketches: order-insensitive AND byte-equal to a batch build (the same
+    sketch size on both sides), so the stream/batch reconcile is an
+    equality, not an estimate comparison."""
     from ..operators.kmv import kmv_merge, kmv_rollup_tier
 
     return _run_state_merge_stream(
@@ -350,8 +350,8 @@ def stream_kmv_1m(
         schema,
         checkpoint_dir,
         store_path,
-        partial_fn=lambda batch: kmv_rollup_tier(batch, "1m", key=key_col, k=k),
-        merge_fn=lambda state: kmv_merge(state, ["bucket_ts"], k),
+        partial_fn=lambda batch: kmv_rollup_tier(batch, "1m", key=key_col),
+        merge_fn=lambda state: kmv_merge(state, ["bucket_ts"]),
     )
 
 

@@ -22,12 +22,15 @@ import os
 import subprocess
 import sys
 
+# this checkout's root: the child scripts import its package, not another one
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 GEN = r"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from timeseriestokenizer_spark.session import get_spark
 from timeseriestokenizer_spark.datagen_spark import transcripts_spark
-path, convs, avg_len = sys.argv[1], int(sys.argv[2]), int(sys.argv[3])
+path, convs, avg_len = sys.argv[2], int(sys.argv[3]), int(sys.argv[4])
 spark = get_spark("scaling-gen", master="local[32]", shuffle_partitions=32)
 df = transcripts_spark(spark, C=convs, avg_len=avg_len, n_partitions=64)
 df.write.mode("overwrite").parquet(path)
@@ -36,12 +39,12 @@ print("GEN", spark.read.parquet(path).count())
 
 CHILD = r"""
 import json, shutil, sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from timeseriestokenizer_spark.session import get_spark
 from timeseriestokenizer_spark.functions.signals import signals_narrow
 from timeseriestokenizer_spark.operators.rollup import rollup_from_finer, rollup_tier
 
-path, cores = sys.argv[1], int(sys.argv[2])
+path, cores = sys.argv[2], int(sys.argv[3])
 spark = get_spark(f"scaling-{cores}", master=f"local[{cores}]", shuffle_partitions=cores)
 work = f"/tmp/scaling_tiers_{cores}"
 
@@ -79,7 +82,7 @@ def main():
 
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         gen = subprocess.run(
-            [sys.executable, "-c", GEN, path, str(convs), str(avg_len)],
+            [sys.executable, "-c", GEN, ROOT, path, str(convs), str(avg_len)],
             capture_output=True, text=True, timeout=1800,
         )
         assert "GEN" in gen.stdout, gen.stderr[-2000:]
@@ -108,7 +111,7 @@ def main():
     for _ in range(reps):
         for cores in (lo_cores, hi_cores):
             out = subprocess.run(
-                [sys.executable, "-c", CHILD, path, str(cores)],
+                [sys.executable, "-c", CHILD, ROOT, path, str(cores)],
                 capture_output=True, text=True, timeout=3600,
             )
             line = [l for l in out.stdout.strip().splitlines() if l.startswith("{")][-1]
@@ -139,8 +142,7 @@ def main():
     # artifact consumed by bench.py — the bench JSON must carry MEASURED
     # scaling numbers, never stale literals (a regression would otherwise
     # keep reporting old evidence as fresh)
-    artifact = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                            "BENCH", "scaling_latest.json")
+    artifact = os.path.join(ROOT, "BENCH", "scaling_latest.json")
     with open(artifact, "w") as f:
         json.dump(result, f, indent=1)
 

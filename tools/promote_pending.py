@@ -17,7 +17,7 @@ the driver cap), then tells you to run:
 
     python tools/check_ledger.py
     python tools/check_contract.py          # full registry
-    python -m pytest tests/test_contract.py tests/test_pending_contract.py
+    python -m pytest tests/test_cache_release.py tests/test_pending_contract.py
 
 The q_ functions and oracle SQL stay defined in contract_pending.py —
 "promote verbatim" per that module's docstring; the registry block only
