@@ -251,12 +251,12 @@ def test_weighted_sample_is_take_ordered(spark):
 
 
 def test_session3_rows_stay_join_free(spark):
-    """The session-3 pending rows' scale claims, pinned: every one is an
+    """The session-3 rows' scale claims, pinned: every one is an
     aggregation/window form — NO join anywhere — and the docstrings'
     exchange budgets hold (ccf/pettitt/dft/predict_linear cluster
     everything on the series key; the two drift rows spend one extra
     exchange on the map-side-combined (key, value) histogram)."""
-    from timeseriestokenizer_spark import contract_pending as cp
+    from timeseriestokenizer_spark import contract
 
     budgets = {  # (max joins, max exchanges)
         "ccf_lead_lag": (0, 1),
@@ -280,7 +280,7 @@ def test_session3_rows_stay_join_free(spark):
         "benford_deviation": (0, 1),
     }
     for name, (max_j, max_x) in budgets.items():
-        df = cp.PENDING_QUERIES[name](spark, "/root/testdata/sf0.001")
+        df = contract.QUERIES[name](spark, "/root/testdata/sf0.001")
         plan = df._jdf.queryExecution().executedPlan().toString()
         n_x = plan.count("Exchange") - plan.count("ReusedExchange")
         assert plan.count("Join") <= max_j, (name, plan.count("Join"))

@@ -114,13 +114,6 @@ def minhash_from_hashes(hs_col, n_hashes: int = 6):
     )
 
 
-def minhash_signature(shingles_col, n_hashes: int = 6):
-    """Signature straight from shingles (compatibility form; the pipeline
-    materializes shingle_hashes in the cached table instead so the md5 pass
-    is guaranteed single-evaluation)."""
-    return minhash_from_hashes(shingle_hashes(shingles_col), n_hashes)
-
-
 def shingle_sets(
     df: DataFrame,
     id_col: str,

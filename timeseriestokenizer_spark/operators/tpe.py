@@ -245,64 +245,6 @@ def train_universal(
     return model
 
 
-STATS_SCHEMA = T.StructType(
-    [
-        T.StructField("series_id", T.StringType()),
-        T.StructField("in_len", T.LongType()),
-        T.StructField("out_len", T.LongType()),
-        T.StructField("n_merges", T.IntegerType()),
-        T.StructField("compression", T.DoubleType()),
-        T.StructField("roundtrip_ok", T.BooleanType()),
-    ]
-)
-
-
-def tpe_roundtrip_stats(
-    df: DataFrame,
-    key: str,
-    token_col: str,
-    order_col: str,
-    target_vocab_size: int,
-    actual_vocab_size: int,
-) -> DataFrame:
-    """Fused train→encode→decode→verify in ONE grouped pass (one shuffle).
-
-    The separate tpe_train/tpe_encode/tpe_decode operators exist for
-    pipelines that persist/broadcast models; when the goal is per-series
-    compression stats + roundtrip verification, fusing avoids two extra
-    exchanges and the driver-side models collect (BENCH/PLANS.md §6)."""
-
-    # collapse each series to an ordered token array JVM-side, then run the
-    # Python BPE over BATCHES of series (mapInPandas) — per-group grouped-map
-    # dispatch costs ~5ms/group, which dominates when series are short
-    # (1500 groups: 12s grouped-map → ~1s batched)
-    seqs = df.groupBy(F.col(key).alias("series_id")).agg(
-        F.expr(
-            f"transform(array_sort(collect_list(struct({order_col} as o, {token_col} as t))), x -> x.t)"
-        ).alias("toks")
-    )
-
-    def _run(batches):
-        for pdf in batches:
-            rows = []
-            for sid, toks in zip(pdf["series_id"], pdf["toks"]):
-                toks = [int(t) for t in toks]
-                model = TpeModel(actual_vocab_size)
-                out = model.train(toks, target_vocab_size)
-                ok = model.decode(model.encode(toks)) == toks
-                rows.append(
-                    (sid, len(toks), len(out), len(model.merges),
-                     len(toks) / len(out) if out else 0.0, ok)
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["series_id", "in_len", "out_len", "n_merges",
-                         "compression", "roundtrip_ok"],
-            )
-
-    return seqs.mapInPandas(_run, STATS_SCHEMA)
-
-
 ROUNDTRIP_ARR_SCHEMA = T.StructType(
     [
         T.StructField("series_id", T.StringType()),

@@ -1,6 +1,6 @@
 """Cross-engine result comparison — the driver's value-hash contract,
-factored out so tools/check_contract.py and the pending-row pytest harness
-hash results identically (order-insensitive, column-name-sorted, floats at
+shared by tools/check_contract.py and tests/test_registry_contract.py so
+both hash results identically (order-insensitive, column-name-sorted, floats at
 9 significant decimals AFTER the queries' own explicit rounding)."""
 
 from __future__ import annotations

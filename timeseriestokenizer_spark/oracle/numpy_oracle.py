@@ -43,13 +43,6 @@ def equal_width_edges(data: np.ndarray, n_bins: int) -> np.ndarray:
     return np.linspace(data.min(), data.max(), n_bins)
 
 
-def effective_n_bins(N: int, special_tokens: dict | None) -> int:
-    """N minus the number of special tokens (utils/discretisize.py:18-20)."""
-    if special_tokens:
-        return N - len(special_tokens)
-    return N
-
-
 def digitize_tokens(data: np.ndarray, edges: np.ndarray) -> np.ndarray:
     """symbols = np.digitize(data, edges[1:], right=True) + 1
     (utils/discretisize.py:26). In-range values land in 1..len(edges)-1."""
