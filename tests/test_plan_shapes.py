@@ -49,7 +49,7 @@ def test_broadcast_join_for_dims(spark):
 
 
 def test_gorilla_pack_single_exchange(spark):
-    """Batched gorilla pack = collapse agg + mapInPandas: exactly ONE
+    """Batched gorilla pack = collapse agg + mapInArrow: exactly ONE
     Exchange (the groupBy), no FlatMapGroupsInPandas per-group dispatch."""
     from timeseriestokenizer_spark.operators.gorilla import gorilla_pack
 

@@ -317,7 +317,7 @@ def test_paa_sax_semantics_and_plan(spark):
 
     plan = out._jdf.queryExecution().executedPlan().toString()
     for py_stage in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
-                     "FlatMapGroupsInPandas"):
+                     "MapInArrow", "FlatMapGroupsInPandas"):
         assert py_stage not in plan, py_stage
 
 

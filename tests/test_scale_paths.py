@@ -266,7 +266,7 @@ def test_scale_join_path_equals_udf_path_and_plan(spark):
     plan = join_df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     for py_stage in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
-                     "FlatMapGroupsInPandas"):
+                     "MapInArrow", "FlatMapGroupsInPandas"):
         assert py_stage not in plan, py_stage
 
     shuffled = inverse_scale_expr(

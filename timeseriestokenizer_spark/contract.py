@@ -808,7 +808,7 @@ def q_dtw_to_target(spark, sf_dir):
     """Dynamic Time Warping distance from every user's series to the
     min-user target (operators/dtw.dtw_to): L1 cost on integer cents
     keeps every DP cell an exact int64, so the batched-arrays
-    mapInPandas result hash-matches a DuckDB recursive CTE that carries
+    mapInArrow result hash-matches a DuckDB recursive CTE that carries
     the DP row as a LIST and folds the within-row recurrence with
     list_reduce. Linear one-vs-all shape (the correlate_to precedent)."""
     from .operators.dtw import dtw_to

@@ -40,10 +40,11 @@ bounded by the longest single series (see operators/rollup.py notes).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
+
+from .series import map_series, ts_micros
 
 
 def cusum_changepoints(
@@ -445,78 +446,44 @@ def sample_entropy(
     if m != 2:
         raise NotImplementedError("sample_entropy implements m=2 (standard)")
     rr = int(r)
-    seqs = (
-        df.select(
-            F.col(key).alias("k"),
-            F.unix_micros(F.col(ts_col).cast("timestamp")).alias("t"),
-            F.col(id_col).alias("i"),
-            F.col(val_col).cast("long").alias("v"),
-        )
-        .groupBy("k")
-        .agg(F.expr("array_sort(collect_list(struct(t, i, v)))").alias("seq"))
-        .select(
-            F.col("k"),
-            F.expr("transform(seq, x -> x.v)").alias("vals"),
-        )
-    )
-    out_schema = T.StructType(
+    budget = int(cell_budget)
+
+    def _sampen(k, vals):
+        # chunk the pair scan so one long series can't materialize an
+        # (n-2)x(n-2) matrix (the CLAUDE.md padded-matrix gotcha: three
+        # full 10^4-square int64 matrices = GBs); the cell budget keeps
+        # every transient under ~64 MB regardless of series length
+        x = np.asarray(vals, dtype=np.int64)
+        n = len(x)
+        b_cnt = a_cnt = 0
+        if n >= 4:  # need at least two m+1 templates
+            nt = n - 2  # templates i = 0..nt-1 (length 2 and 3)
+            step = max(1, budget // nt)
+            for i0 in range(0, nt - 1, step):
+                i1 = min(i0 + step, nt - 1)
+                rows = np.arange(i0, i1)
+                d0 = np.abs(x[rows, None] - x[None, :nt])
+                d1 = np.abs(x[rows + 1, None] - x[None, 1 : nt + 1])
+                bm = np.maximum(d0, d1) <= rr
+                # strict upper triangle: j > i only
+                bm &= np.arange(nt)[None, :] > rows[:, None]
+                b_cnt += int(bm.sum())
+                d2 = np.abs(x[rows + 2, None] - x[None, 2 : nt + 2])
+                a_cnt += int((bm & (d2 <= rr)).sum())
+        sampen = -float(np.log(a_cnt / b_cnt)) if a_cnt > 0 and b_cnt > 0 else None
+        return {key: [k], "n_points": [n], "b_count": [b_cnt],
+                "a_count": [a_cnt], "sampen": [sampen]}
+
+    schema = T.StructType(
         [
-            T.StructField("out_key", df.schema[key].dataType),
+            T.StructField(key, df.schema[key].dataType),
             T.StructField("n_points", T.LongType()),
             T.StructField("b_count", T.LongType()),
             T.StructField("a_count", T.LongType()),
             T.StructField("sampen", T.DoubleType()),
         ]
     )
-
-    budget = int(cell_budget)
-
-    def _sampen(batches):
-        # chunk the pair scan so one long series can't materialize an
-        # (n-2)x(n-2) matrix (the CLAUDE.md padded-matrix gotcha: three
-        # full 10^4-square int64 matrices = GBs); the cell budget keeps
-        # every transient under ~64 MB regardless of series length
-        for pdf in batches:
-            ks, ns, bs, as_, es = [], [], [], [], []
-            for k, vals in zip(pdf["k"], pdf["vals"]):
-                x = np.asarray(vals, dtype=np.int64)
-                n = len(x)
-                b_cnt = a_cnt = 0
-                if n >= 4:  # need at least two m+1 templates
-                    nt = n - 2  # templates i = 0..nt-1 (length 2 and 3)
-                    step = max(1, budget // nt)
-                    for i0 in range(0, nt - 1, step):
-                        i1 = min(i0 + step, nt - 1)
-                        rows = np.arange(i0, i1)
-                        d0 = np.abs(x[rows, None] - x[None, :nt])
-                        d1 = np.abs(x[rows + 1, None] - x[None, 1 : nt + 1])
-                        bm = np.maximum(d0, d1) <= rr
-                        # strict upper triangle: j > i only
-                        bm &= np.arange(nt)[None, :] > rows[:, None]
-                        b_cnt += int(bm.sum())
-                        d2 = np.abs(x[rows + 2, None] - x[None, 2 : nt + 2])
-                        a_cnt += int((bm & (d2 <= rr)).sum())
-                ks.append(k)
-                ns.append(n)
-                bs.append(b_cnt)
-                as_.append(a_cnt)
-                es.append(
-                    -float(np.log(a_cnt / b_cnt))
-                    if a_cnt > 0 and b_cnt > 0
-                    else None
-                )
-            yield pd.DataFrame(
-                {
-                    "out_key": ks,
-                    "n_points": ns,
-                    "b_count": bs,
-                    "a_count": as_,
-                    "sampen": es,
-                }
-            )
-
-    return (
-        seqs.mapInPandas(_sampen, out_schema)
-        .withColumnRenamed("out_key", key)
-        .withColumn("sampen", F.round(F.col("sampen"), 6))
-    )
+    return map_series(
+        df, F.col(key), [ts_micros(ts_col), F.col(id_col)],
+        [F.col(val_col).cast("long")], _sampen, schema,
+    ).withColumn("sampen", F.round(F.col("sampen"), 6))

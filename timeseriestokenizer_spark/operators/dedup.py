@@ -88,32 +88,6 @@ def shingle_hashes(shingles_col):
     )
 
 
-def minhash_from_hashes(hs_col, n_hashes: int = 6):
-    """MinHash signatures from precomputed shingle hashes: n_hashes
-    universal-hash permutations h_j = (a_j*h + b_j) mod P, P = 2^31-1 —
-    pure int64 arithmetic, so extra seeds are ~free instead of a fresh md5
-    per (shingle, seed) as in the naive family (6x less hashing; a_j*h
-    stays < 2^62, no overflow). md5 + mod arithmetic are engine-portable,
-    so oracles reproduce the signatures exactly."""
-    assert n_hashes <= len(MINHASH_A)
-    a_arr = F.array(*[F.lit(a).cast("long") for a in MINHASH_A[:n_hashes]])
-    b_arr = F.array(*[F.lit(b).cast("long") for b in MINHASH_B[:n_hashes]])
-    p = F.lit(MINHASH_P).cast("long")
-    return F.transform(
-        F.sequence(F.lit(1), F.lit(n_hashes)),
-        lambda j: F.array_min(
-            F.transform(
-                hs_col,
-                lambda h: (
-                    F.element_at(a_arr, j.cast("int")) * (h % p)
-                    + F.element_at(b_arr, j.cast("int"))
-                )
-                % p,
-            )
-        ),
-    )
-
-
 def shingle_sets(
     df: DataFrame,
     id_col: str,

@@ -15,19 +15,20 @@ Semantics (deterministic, engine- and oracle-pinned):
   to the earliest timestamp.
 
 Spark shape: series collapse to sorted arrays (collect_list struct — ONE
-exchange) and stream through mapInPandas batches, the same
-grouped-dispatch-free pattern as gorilla/TPE (CLAUDE.md gotcha: per-group
-applyInPandas costs ~25 ms/group). The greedy recurrence is sequential per
-series but two-at-a-time vectorized per bucket in numpy.
+exchange) and stream through Arrow batches (``series.map_series``), the
+same grouped-dispatch-free pattern as gorilla/TPE (CLAUDE.md gotcha:
+per-group applyInPandas costs ~25 ms/group). The greedy recurrence is
+sequential per series but two-at-a-time vectorized per bucket in numpy.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .series import map_series, ts_micros
 
 LTTB_SCHEMA = T.StructType(
     [
@@ -78,39 +79,31 @@ def lttb_downsample(
 ) -> DataFrame:
     """Per-series LTTB to ``n_out`` points. One exchange (the collect_list
     group-by); the per-series greedy loop runs inside Arrow batches."""
-    packed = (
-        df.select(
-            F.col(key).cast("string").alias("series_id"),
-            F.col(ts_col).cast("timestamp").alias("ts"),
-            F.col(val_col).cast("double").alias("value"),
-        )
-        .groupBy("series_id")
-        .agg(F.sort_array(F.collect_list(F.struct("ts", "value"))).alias("pts"))
+
+    def _run(sid, ts, ys):
+        # x = epoch µs MINUS the series' first µs: keeps every x (and
+        # every partial sum inside a bucket mean) below 2^53, so the
+        # arithmetic is EXACT and bit-identical to the SQL oracle's
+        # epoch_us(ts) - min(...) regardless of either engine's
+        # summation order (the raw-ns form is not even
+        # double-representable)
+        xi = ts.astype(np.int64)
+        sel = lttb_select((xi - xi[0]).astype(np.float64), ys, n_out)
+        return {
+            "series_id": [sid] * len(sel),
+            "ts": ts[sel],
+            "value": ys[sel],
+            "sel_idx": np.arange(len(sel)),
+        }
+
+    return map_series(
+        df,
+        F.col(key).cast("string"),
+        [],
+        [F.col(ts_col).cast("timestamp"), F.col(val_col).cast("double")],
+        _run,
+        LTTB_SCHEMA,
     )
-
-    def _run(batches):
-        for pdf in batches:
-            rows = []
-            for sid, pts in zip(pdf["series_id"], pdf["pts"]):
-                # x = epoch µs MINUS the series' first µs: keeps every
-                # x (and every partial sum inside a bucket mean) below
-                # 2^53, so the arithmetic is EXACT and bit-identical to
-                # the SQL oracle's epoch_us(ts) - min(...) regardless of
-                # either engine's summation order (the raw-ns form is not
-                # even double-representable)
-                xi = np.array(
-                    [pd.Timestamp(p["ts"]).value // 1000 for p in pts],
-                    dtype=np.int64,
-                )
-                xs = (xi - xi[0]).astype(np.float64)
-                ys = np.array([p["value"] for p in pts], dtype=np.float64)
-                for rank, j in enumerate(lttb_select(xs, ys, n_out)):
-                    rows.append((sid, pts[j]["ts"], float(ys[j]), rank))
-            yield pd.DataFrame(
-                rows, columns=["series_id", "ts", "value", "sel_idx"]
-            )
-
-    return packed.mapInPandas(_run, LTTB_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -252,6 +245,28 @@ def sax_motifs(
     )
 
 
+def sdt_door(ta, va, min_hi, max_lo, tp, vp, t, v, E):
+    """One swinging-door step (see ``swinging_door``): point (t, v)
+    against anchor (ta, va), running doors min_hi / max_lo and the point
+    before it, (tp, vp). Returns (closed, ta, va, min_hi, max_lo); when
+    the doors close, (tp, vp) is archived and is the new anchor. Shared
+    with the streaming twin (streaming/sdt_stream.py), so both replay the
+    same IEEE op order."""
+    dt = t - ta
+    if dt < 1:
+        dt = 1
+    hi = (v + E - va) / float(dt)
+    lo = (v - E - va) / float(dt)
+    nh = hi if hi < min_hi else min_hi
+    nl = lo if lo > max_lo else max_lo
+    if nl > nh:  # not `<=`: a NaN door must leave the doors open
+        d2 = t - tp
+        if d2 < 1:
+            d2 = 1
+        return True, tp, vp, (v + E - vp) / float(d2), (v - E - vp) / float(d2)
+    return False, ta, va, nh, nl
+
+
 def swinging_door(
     df: DataFrame,
     key: str = "user_id",
@@ -288,65 +303,36 @@ def swinging_door(
     of whole series, no per-group dispatch, no driver state. At 100 TB
     this is the retention-tier compressor that runs BEFORE gorilla packing
     (SDT decides which points survive; gorilla encodes the survivors)."""
-    seqs = (
-        df.select(
-            F.col(key).alias("k"),
-            F.unix_micros(F.col(ts_col).cast("timestamp")).alias("t"),
-            F.col(id_col).alias("i"),
-            F.col(val_col).cast("double").alias("v"),
-        )
-        .groupBy("k")
-        .agg(F.expr("array_sort(collect_list(struct(t, i, v)))").alias("seq"))
-        .select(
-            F.expr("transform(seq, x -> x.t)").alias("ts_us"),
-            F.expr("transform(seq, x -> x.i)").alias("ids"),
-            F.expr("transform(seq, x -> x.v)").alias("vals"),
-        )
-    )
     E = float(comp_dev)
     if not E > 0:
         raise ValueError(f"comp_dev must be positive, got {comp_dev}")
-    out_schema = T.StructType(
+
+    def _sdt(k, ts_us, ids, vals):
+        ts, vs = ts_us.tolist(), vals.tolist()
+        n = len(ts)
+        kept = [0] * n
+        kept[0] = 1
+        kept[n - 1] = 1
+        ta, va, min_hi, max_lo = ts[0], vs[0], 1e308, -1e308
+        for i in range(1, n):
+            closed, ta, va, min_hi, max_lo = sdt_door(
+                ta, va, min_hi, max_lo, ts[i - 1], vs[i - 1], ts[i], vs[i], E
+            )
+            if closed:
+                kept[i - 1] = 1
+        return {id_col: ids, "kept": kept}
+
+    schema = T.StructType(
         [
-            T.StructField("out_id", df.schema[id_col].dataType),
+            T.StructField(id_col, df.schema[id_col].dataType),
             T.StructField("kept", T.IntegerType()),
         ]
     )
-
-    def _sdt(batches):
-        for pdf in batches:
-            out_ids, out_kept = [], []
-            for ts_us, ids, vals in zip(pdf["ts_us"], pdf["ids"], pdf["vals"]):
-                n = len(ids)
-                kept = [0] * n
-                kept[0] = 1
-                kept[n - 1] = 1
-                tA, vA = int(ts_us[0]), float(vals[0])
-                min_hi, max_lo = 1e308, -1e308
-                for i in range(1, n):
-                    t, v = int(ts_us[i]), float(vals[i])
-                    dt = t - tA
-                    if dt < 1:
-                        dt = 1
-                    hi = (v + E - vA) / float(dt)
-                    lo = (v - E - vA) / float(dt)
-                    nh = hi if hi < min_hi else min_hi
-                    nl = lo if lo > max_lo else max_lo
-                    if nl > nh:
-                        kept[i - 1] = 1
-                        tA, vA = int(ts_us[i - 1]), float(vals[i - 1])
-                        d2 = t - tA
-                        if d2 < 1:
-                            d2 = 1
-                        min_hi = (v + E - vA) / float(d2)
-                        max_lo = (v - E - vA) / float(d2)
-                    else:
-                        min_hi, max_lo = nh, nl
-                out_ids.extend(ids)
-                out_kept.extend(kept)
-            yield pd.DataFrame({"out_id": out_ids, "kept": out_kept})
-
-    return seqs.mapInPandas(_sdt, out_schema).withColumnRenamed("out_id", id_col)
+    return map_series(
+        df, F.col(key), [],
+        [ts_micros(ts_col), F.col(id_col), F.col(val_col).cast("double")],
+        _sdt, schema,
+    )
 
 
 def rdp_keep(
@@ -393,55 +379,39 @@ def rdp_keep(
     eps = int(epsilon)
     if eps < 0:
         raise ValueError(f"epsilon must be non-negative, got {epsilon}")
-    seqs = (
-        df.select(
-            F.col(key).alias("k"),
-            F.unix_micros(F.col(ts_col).cast("timestamp")).alias("t"),
-            F.col(id_col).alias("i"),
-            F.col(val_col).cast("long").alias("v"),
-        )
-        .groupBy("k")
-        .agg(F.expr("array_sort(collect_list(struct(t, i, v)))").alias("seq"))
-        .select(
-            F.expr("transform(seq, x -> x.i)").alias("ids"),
-            F.expr("transform(seq, x -> x.v)").alias("vals"),
-        )
-    )
-    out_schema = T.StructType(
+    eps2 = eps * eps
+
+    def _rdp(k, ids, vals):
+        n = len(ids)
+        ys = [int(v) for v in vals]  # Python ints: no int64 wrap
+        kept = [0] * n
+        kept[0] = 1
+        kept[n - 1] = 1
+        stack = [(0, n - 1)]
+        while stack:
+            lo, hi = stack.pop()
+            if hi - lo < 2:
+                continue
+            dx, dy = hi - lo, ys[hi] - ys[lo]
+            best_c2, best_j = -1, -1
+            for j in range(lo + 1, hi):
+                cross = dx * (ys[j] - ys[lo]) - dy * (j - lo)
+                c2 = cross * cross
+                if c2 > best_c2:  # strict: first max wins
+                    best_c2, best_j = c2, j
+            if best_c2 > eps2 * (dx * dx + dy * dy):
+                kept[best_j] = 1
+                stack.append((lo, best_j))
+                stack.append((best_j, hi))
+        return {id_col: ids, "kept": kept}
+
+    schema = T.StructType(
         [
-            T.StructField("out_id", df.schema[id_col].dataType),
+            T.StructField(id_col, df.schema[id_col].dataType),
             T.StructField("kept", T.IntegerType()),
         ]
     )
-    eps2 = eps * eps
-
-    def _rdp(batches):
-        for pdf in batches:
-            out_ids, out_kept = [], []
-            for ids, vals in zip(pdf["ids"], pdf["vals"]):
-                n = len(ids)
-                ys = [int(v) for v in vals]  # Python ints: no int64 wrap
-                kept = [0] * n
-                kept[0] = 1
-                kept[n - 1] = 1
-                stack = [(0, n - 1)]
-                while stack:
-                    lo, hi = stack.pop()
-                    if hi - lo < 2:
-                        continue
-                    dx, dy = hi - lo, ys[hi] - ys[lo]
-                    best_c2, best_j = -1, -1
-                    for j in range(lo + 1, hi):
-                        cross = dx * (ys[j] - ys[lo]) - dy * (j - lo)
-                        c2 = cross * cross
-                        if c2 > best_c2:  # strict: first max wins
-                            best_c2, best_j = c2, j
-                    if best_c2 > eps2 * (dx * dx + dy * dy):
-                        kept[best_j] = 1
-                        stack.append((lo, best_j))
-                        stack.append((best_j, hi))
-                out_ids.extend(ids)
-                out_kept.extend(kept)
-            yield pd.DataFrame({"out_id": out_ids, "kept": out_kept})
-
-    return seqs.mapInPandas(_rdp, out_schema).withColumnRenamed("out_id", id_col)
+    return map_series(
+        df, F.col(key), [ts_micros(ts_col)],
+        [F.col(id_col), F.col(val_col).cast("long")], _rdp, schema,
+    )

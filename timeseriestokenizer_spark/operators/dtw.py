@@ -9,13 +9,13 @@ BY DEFINITION; at scale you shortlist candidates first (SAX words /
 [[sax_motifs]], MinHash on PAA symbols) and run DTW only on the
 shortlist, exactly like the dedup family's candidates-then-verify.
 
-Execution shape (the ewma/gorilla batched-arrays pattern): series
-collapse JVM-side to sorted arrays (ONE exchange on key), the target's
-array rides into the Python workers as a closure constant (it is one
-series — metadata-sized, like the scaler registry; PAA-reduce upstream
-if your series are long: DTW cost is O(n*m) per pair regardless of
-engine), and mapInPandas computes the DP over BATCHES of series with no
-per-row Python dispatch.
+Execution shape (the ewma/gorilla batched-arrays pattern,
+``series.map_series``): series collapse JVM-side to sorted arrays (ONE
+exchange on key), the target's array rides into the Python workers as a
+closure constant (it is one series — metadata-sized, like the scaler
+registry; PAA-reduce upstream if your series are long: DTW cost is
+O(n*m) per pair regardless of engine), and the DP runs over Arrow
+batches of whole series with no per-row Python dispatch.
 
 Float contract: with integer input (cents) and L1 cost |a-b|, every DP
 cell is an exact int64 — min/add of integers — so the emitted distance
@@ -27,10 +27,11 @@ exactly, no rounding anywhere.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 import pyspark.sql.types as T
+
+from .series import map_series, ts_micros
 
 
 def _dtw_dist(a: np.ndarray, b: np.ndarray) -> float:
@@ -62,49 +63,28 @@ def dtw_to(
     (key, n_points, m_points, dtw_dist); the target itself scores 0."""
     if target_key is None:
         target_key = df.agg(F.min(key)).first()[0]
-    seqs = (
-        df.select(
-            F.col(key).alias("k"),
-            F.unix_micros(F.col(ts_col).cast("timestamp")).alias("t"),
-            F.col(id_col).alias("i"),
-            F.col(val_col).alias("v"),
-        )
-        .groupBy("k")
-        .agg(F.expr("array_sort(collect_list(struct(t, i, v)))").alias("seq"))
-        .select("k", F.expr("transform(seq, x -> x.v)").alias("vals"))
+    order = [ts_micros(ts_col), F.col(id_col)]
+    # the target's rows sort driver-side, in the series order map_series uses
+    tgt_rows = sorted(
+        df.filter(F.col(key) == F.lit(target_key)).select(*order, val_col).collect()
     )
-    tgt_rows = seqs.filter(F.col("k") == F.lit(target_key)).select("vals").collect()
     if not tgt_rows:
         raise ValueError(f"target key {target_key!r} has no rows")
     integral = df.schema[val_col].dataType.typeName() in ("long", "integer", "short")
     np_t = np.int64 if integral else np.float64
-    b = np.asarray(tgt_rows[0]["vals"], dtype=np_t)
-    out_schema = T.StructType(
+    b = np.asarray([r[-1] for r in tgt_rows], dtype=np_t)
+
+    def _compute(k, vals):
+        a = np.asarray(vals, dtype=np_t)
+        return {key: [k], "n_points": [len(a)], "m_points": [len(b)],
+                "dtw_dist": [_dtw_dist(a, b)]}
+
+    schema = T.StructType(
         [
-            T.StructField("out_key", df.schema[key].dataType),
+            T.StructField(key, df.schema[key].dataType),
             T.StructField("n_points", T.LongType()),
             T.StructField("m_points", T.LongType()),
-            T.StructField(
-                "dtw_dist", T.LongType() if integral else T.DoubleType()
-            ),
+            T.StructField("dtw_dist", T.LongType() if integral else T.DoubleType()),
         ]
     )
-
-    def _compute(batches):
-        for pdf in batches:
-            ks, ns, ds = [], [], []
-            for k, vals in zip(pdf["k"], pdf["vals"]):
-                a = np.asarray(vals, dtype=np_t)
-                ks.append(k)
-                ns.append(len(a))
-                ds.append(_dtw_dist(a, b))
-            yield pd.DataFrame(
-                {
-                    "out_key": ks,
-                    "n_points": ns,
-                    "m_points": [len(b)] * len(ks),
-                    "dtw_dist": ds,
-                }
-            )
-
-    return seqs.mapInPandas(_compute, out_schema).withColumnRenamed("out_key", key)
+    return map_series(df, F.col(key), order, [F.col(val_col)], _compute, schema)

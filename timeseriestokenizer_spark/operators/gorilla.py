@@ -30,6 +30,8 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .series import map_series, ts_micros
+
 
 class _BitWriter:
     __slots__ = ("buf", "acc", "nbits")
@@ -196,42 +198,22 @@ def gorilla_pack(
     the '|'-joined key.
 
     Shape: series collapse to sorted arrays JVM-side (one exchange), then
-    Python packs BATCHES of series via mapInPandas — grouped-map dispatch
-    costs ~25 ms/group in a coalesced task, which dominated wall time at
-    thousands of small series (measured 9 s → ~2 s on 150 series)."""
+    Python packs Arrow batches of whole series (``series.map_series``) —
+    grouped-map dispatch costs ~25 ms/group in a coalesced task, which
+    dominated wall time at thousands of small series (measured 9 s → ~2 s
+    on 150 series)."""
     keys = [key] if isinstance(key, str) else list(key)
     sid = F.concat_ws("|", *[F.col(k).cast("string") for k in keys])
-    seqs = (
-        df.select(
-            sid.alias("series_id"),
-            # cast defensively: parquet NTZ timestamps need an explicit cast
-            # before unix_micros (Spark 4 gotcha, CLAUDE.md)
-            F.unix_micros(F.col(ts_col).cast("timestamp")).alias("t"),
-            F.col(val_col).alias("v"),
-        )
-        .groupBy("series_id")
-        .agg(F.expr("array_sort(collect_list(struct(t, v)))").alias("seq"))
-        .select(
-            "series_id",
-            F.expr("transform(seq, x -> x.t)").alias("ts_arr"),
-            F.expr("transform(seq, x -> x.v)").alias("val_arr"),
-        )
+
+    def _pack(s, ts, vals):
+        blob = pack_series(ts, vals)
+        return {"series_id": [s], "n_points": [len(ts)],
+                "raw_bytes": [len(ts) * 16], "packed_bytes": [len(blob)],
+                "blob": [blob]}
+
+    return map_series(
+        df, sid, [], [ts_micros(ts_col), F.col(val_col)], _pack, PACKED_SCHEMA
     )
-
-    def _pack(batches):
-        for pdf in batches:
-            rows = []
-            for s, ts_l, vs_l in zip(pdf["series_id"], pdf["ts_arr"], pdf["val_arr"]):
-                ts = np.asarray(ts_l, dtype=np.int64)
-                vals = np.asarray(vs_l, dtype=np.float64)
-                blob = pack_series(ts, vals)
-                rows.append((s, len(ts), len(ts) * 16, len(blob), blob))
-            yield pd.DataFrame(
-                rows,
-                columns=["series_id", "n_points", "raw_bytes", "packed_bytes", "blob"],
-            )
-
-    return seqs.mapInPandas(_pack, PACKED_SCHEMA)
 
 
 UNPACKED_SCHEMA = T.StructType(

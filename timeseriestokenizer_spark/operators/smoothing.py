@@ -2,12 +2,11 @@
 
 y_0 = x_0, y_i = alpha * x_i + (1 - alpha) * y_{i-1} — inherently
 sequential per series, so it cannot be a Catalyst window expression.
-Shape follows the gorilla/tpe batched pattern: series collapse to sorted
-arrays JVM-side (ONE exchange on key), then Python smooths BATCHES of
-series via mapInPandas using pandas' C-implemented
-``Series.ewm(alpha, adjust=False).mean()`` — no per-row Python dispatch,
-no grouped-map 25 ms/group tax — and posexplode-free reassembly via the
-carried id column.
+Every operator here runs through ``series.map_series``: series collapse
+to sorted arrays JVM-side (ONE exchange on key), Python steps whole
+series per Arrow batch, and the carried id column reassembles the output
+without a posexplode. EWMA uses pandas' C-implemented
+``Series.ewm(alpha, adjust=False).mean()``.
 
 Float contract: with adjust=False pandas computes
 ``((1-a)*y + a*x) / ((1-a) + a)``. At DYADIC alpha (0.5, 0.25, ...) the
@@ -21,10 +20,53 @@ recurrence at 1e-9 tolerance instead).
 
 from __future__ import annotations
 
+import math
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 import pyspark.sql.types as T
+
+from .series import map_series, ts_micros
+
+
+def _per_point(df, key, ts_col, val_col, id_col, step, fields):
+    """Run ``step(xs) -> {field: list}`` over each series' values (sorted
+    by ts, then id, then value; NULL reads as NaN) and emit one
+    ``(id_col, *fields)`` row per input point. ``fields`` is
+    ``[(name, DataType)]``."""
+    schema = T.StructType(
+        [T.StructField(id_col, df.schema[id_col].dataType)]
+        + [T.StructField(n, t) for n, t in fields]
+    )
+    return map_series(
+        df,
+        F.col(key),
+        [ts_micros(ts_col)],
+        [F.col(id_col), F.col(val_col).cast("double")],
+        lambda k, ids, vals: {id_col: ids, **step(vals.tolist())},
+        schema,
+    )
+
+
+def _hw_step(xs, a, bcf, g, m):
+    """Step the additive Holt-Winters recurrence (see ``holt_winters``)
+    over one series; return the per-point level, trend and season lists
+    and the final season ring."""
+    l = xs[0]
+    b = xs[1] - xs[0] if len(xs) >= 2 else 0.0
+    seas = [0.0] * m
+    l_all, b_all, s_all = [l], [b], [0.0]
+    for t in range(1, len(xs)):
+        x = xs[t]
+        s_old = seas[t % m]
+        l_new = a * (x - s_old) + (1.0 - a) * (l + b)
+        b = bcf * (l_new - l) + (1.0 - bcf) * b
+        s_new = g * (x - l_new) + (1.0 - g) * s_old
+        seas[t % m] = s_new
+        l = l_new
+        l_all.append(l); b_all.append(b); s_all.append(s_new)
+    return l_all, b_all, s_all, seas
 
 
 def ewma(
@@ -35,38 +77,13 @@ def ewma(
     id_col: str = "event_id",
     alpha: float = 0.5,
 ) -> DataFrame:
-    """Per-series EWMA; returns (id_col, ewma) rows, 6-dp rounded.
+    """Per-series EWMA; returns (id_col, ewma) rows, unrounded (see below).
     Ordering inside a series is (ts, id) — deterministic under ties."""
-    seqs = (
-        df.select(
-            F.col(key).alias("k"),
-            F.unix_micros(F.col(ts_col).cast("timestamp")).alias("t"),
-            F.col(id_col).alias("i"),
-            F.col(val_col).cast("double").alias("v"),
-        )
-        .groupBy("k")
-        .agg(F.expr("array_sort(collect_list(struct(t, i, v)))").alias("seq"))
-        .select(
-            F.expr("transform(seq, x -> x.i)").alias("ids"),
-            F.expr("transform(seq, x -> x.v)").alias("vals"),
-        )
-    )
     a = float(alpha)
-    out_schema = T.StructType(
-        [
-            T.StructField("out_id", df.schema[id_col].dataType),
-            T.StructField("ewma", T.DoubleType()),
-        ]
-    )
 
-    def _smooth(batches):
-        for pdf in batches:
-            ids_all, y_all = [], []
-            for ids, vals in zip(pdf["ids"], pdf["vals"]):
-                y = pd.Series(vals, dtype="float64").ewm(alpha=a, adjust=False).mean()
-                ids_all.extend(ids)
-                y_all.extend(y.tolist())
-            yield pd.DataFrame({"out_id": ids_all, "ewma": y_all})
+    def _step(xs):
+        y = pd.Series(xs, dtype="float64").ewm(alpha=a, adjust=False).mean()
+        return {"ewma": y.to_numpy()}
 
     # deliberately UNROUNDED: at dyadic alpha the smoothed doubles are
     # bit-identical across engines (pandas ewm == naive recurrence ==
@@ -76,7 +93,9 @@ def ewma(
     # DuckDB (nearest on the binary value) disagree. The usual
     # round-both-sides rule is for order-dependent aggregates; here the
     # raw value IS deterministic.
-    return seqs.mapInPandas(_smooth, out_schema).withColumnRenamed("out_id", id_col)
+    return _per_point(
+        df, key, ts_col, val_col, id_col, _step, [("ewma", T.DoubleType())]
+    )
 
 
 def holt(
@@ -101,47 +120,23 @@ def holt(
     formulas) hash-matches without rounding; at non-dyadic coefficients
     formulations drift in last ulps (engine-tested with tolerance).
     Same one-exchange batched-arrays shape as ewma."""
-    seqs = (
-        df.select(
-            F.col(key).alias("k"),
-            F.unix_micros(F.col(ts_col).cast("timestamp")).alias("t"),
-            F.col(id_col).alias("i"),
-            F.col(val_col).cast("double").alias("v"),
-        )
-        .groupBy("k")
-        .agg(F.expr("array_sort(collect_list(struct(t, i, v)))").alias("seq"))
-        .select(
-            F.expr("transform(seq, x -> x.i)").alias("ids"),
-            F.expr("transform(seq, x -> x.v)").alias("vals"),
-        )
-    )
     a, bcf = float(alpha), float(beta)
-    out_schema = T.StructType(
-        [
-            T.StructField("out_id", df.schema[id_col].dataType),
-            T.StructField("holt_level", T.DoubleType()),
-            T.StructField("holt_trend", T.DoubleType()),
-        ]
+
+    def _step(xs):
+        l = xs[0]
+        b = xs[1] - xs[0] if len(xs) >= 2 else 0.0
+        l_all, b_all = [l], [b]
+        for x in xs[1:]:
+            l_new = a * x + (1.0 - a) * (l + b)
+            b = bcf * (l_new - l) + (1.0 - bcf) * b
+            l = l_new
+            l_all.append(l); b_all.append(b)
+        return {"holt_level": l_all, "holt_trend": b_all}
+
+    return _per_point(
+        df, key, ts_col, val_col, id_col, _step,
+        [("holt_level", T.DoubleType()), ("holt_trend", T.DoubleType())],
     )
-
-    def _smooth(batches):
-        for pdf in batches:
-            ids_all, l_all, b_all = [], [], []
-            for ids, vals in zip(pdf["ids"], pdf["vals"]):
-                l = float(vals[0])
-                b = float(vals[1]) - float(vals[0]) if len(vals) >= 2 else 0.0
-                ids_all.append(ids[0]); l_all.append(l); b_all.append(b)
-                for x in vals[1:]:
-                    l_new = a * float(x) + (1.0 - a) * (l + b)
-                    b = bcf * (l_new - l) + (1.0 - bcf) * b
-                    l = l_new
-                    l_all.append(l); b_all.append(b)
-                ids_all.extend(ids[1:])
-            yield pd.DataFrame(
-                {"out_id": ids_all, "holt_level": l_all, "holt_trend": b_all}
-            )
-
-    return seqs.mapInPandas(_smooth, out_schema).withColumnRenamed("out_id", id_col)
 
 
 def holt_winters(
@@ -180,62 +175,20 @@ def holt_winters(
     UNROUNDED on purpose (rounding is what breaks parity, not the
     arithmetic). Same one-exchange batched-arrays shape as ewma: series
     collapse to sorted arrays JVM-side, Python steps batches via
-    mapInPandas, no grouped-map dispatch tax, no per-row Python."""
-    seqs = (
-        df.select(
-            F.col(key).alias("k"),
-            F.unix_micros(F.col(ts_col).cast("timestamp")).alias("t"),
-            F.col(id_col).alias("i"),
-            F.col(val_col).cast("double").alias("v"),
-        )
-        .groupBy("k")
-        .agg(F.expr("array_sort(collect_list(struct(t, i, v)))").alias("seq"))
-        .select(
-            F.expr("transform(seq, x -> x.i)").alias("ids"),
-            F.expr("transform(seq, x -> x.v)").alias("vals"),
-        )
-    )
+    map_series, no grouped-map dispatch tax, no per-row Python."""
     a, bcf, g, m = float(alpha), float(beta), float(gamma), int(period)
     if m < 1:
         raise ValueError("period must be >= 1")
-    out_schema = T.StructType(
-        [
-            T.StructField("out_id", df.schema[id_col].dataType),
-            T.StructField("hw_level", T.DoubleType()),
-            T.StructField("hw_trend", T.DoubleType()),
-            T.StructField("hw_season", T.DoubleType()),
-        ]
+
+    def _step(xs):
+        l_all, b_all, s_all, _ = _hw_step(xs, a, bcf, g, m)
+        return {"hw_level": l_all, "hw_trend": b_all, "hw_season": s_all}
+
+    return _per_point(
+        df, key, ts_col, val_col, id_col, _step,
+        [("hw_level", T.DoubleType()), ("hw_trend", T.DoubleType()),
+         ("hw_season", T.DoubleType())],
     )
-
-    def _smooth(batches):
-        for pdf in batches:
-            ids_all, l_all, b_all, s_all = [], [], [], []
-            for ids, vals in zip(pdf["ids"], pdf["vals"]):
-                l = float(vals[0])
-                b = float(vals[1]) - float(vals[0]) if len(vals) >= 2 else 0.0
-                seas = [0.0] * m
-                ids_all.append(ids[0])
-                l_all.append(l); b_all.append(b); s_all.append(0.0)
-                for t, x in enumerate(vals[1:], start=1):
-                    x = float(x)
-                    s_old = seas[t % m]
-                    l_new = a * (x - s_old) + (1.0 - a) * (l + b)
-                    b = bcf * (l_new - l) + (1.0 - bcf) * b
-                    s_new = g * (x - l_new) + (1.0 - g) * s_old
-                    seas[t % m] = s_new
-                    l = l_new
-                    l_all.append(l); b_all.append(b); s_all.append(s_new)
-                ids_all.extend(ids[1:])
-            yield pd.DataFrame(
-                {
-                    "out_id": ids_all,
-                    "hw_level": l_all,
-                    "hw_trend": b_all,
-                    "hw_season": s_all,
-                }
-            )
-
-    return seqs.mapInPandas(_smooth, out_schema).withColumnRenamed("out_id", id_col)
 
 
 def ewm_band(
@@ -270,57 +223,25 @@ def ewm_band(
     *step* scaling is additionally exact, but bit-parity only needs the
     identical order. Returns (id_col, ewm_mean, ewm_var, breach)
     UNROUNDED. Same one-exchange batched-arrays shape as ewma."""
-    import math
-
-    seqs = (
-        df.select(
-            F.col(key).alias("k"),
-            F.unix_micros(F.col(ts_col).cast("timestamp")).alias("t"),
-            F.col(id_col).alias("i"),
-            F.col(val_col).cast("double").alias("v"),
-        )
-        .groupBy("k")
-        .agg(F.expr("array_sort(collect_list(struct(t, i, v)))").alias("seq"))
-        .select(
-            F.expr("transform(seq, x -> x.i)").alias("ids"),
-            F.expr("transform(seq, x -> x.v)").alias("vals"),
-        )
-    )
     a, zz = float(alpha), float(z)
-    out_schema = T.StructType(
-        [
-            T.StructField("out_id", df.schema[id_col].dataType),
-            T.StructField("ewm_mean", T.DoubleType()),
-            T.StructField("ewm_var", T.DoubleType()),
-            T.StructField("breach", T.BooleanType()),
-        ]
+
+    def _step(xs):
+        m, v = xs[0], 0.0
+        m_all, v_all, br_all = [m], [v], [False]
+        for x in xs[1:]:
+            d = x - m
+            br_all.append(v > 0.0 and abs(d) > zz * math.sqrt(v))
+            step = a * d
+            m = m + step
+            v = (1.0 - a) * (v + step * d)
+            m_all.append(m); v_all.append(v)
+        return {"ewm_mean": m_all, "ewm_var": v_all, "breach": br_all}
+
+    return _per_point(
+        df, key, ts_col, val_col, id_col, _step,
+        [("ewm_mean", T.DoubleType()), ("ewm_var", T.DoubleType()),
+         ("breach", T.BooleanType())],
     )
-
-    def _band(batches):
-        for pdf in batches:
-            ids_all, m_all, v_all, br_all = [], [], [], []
-            for ids, vals in zip(pdf["ids"], pdf["vals"]):
-                m, v = float(vals[0]), 0.0
-                ids_all.append(ids[0])
-                m_all.append(m); v_all.append(v); br_all.append(False)
-                for x in vals[1:]:
-                    d = float(x) - m
-                    br_all.append(v > 0.0 and abs(d) > zz * math.sqrt(v))
-                    step = a * d
-                    m = m + step
-                    v = (1.0 - a) * (v + step * d)
-                    m_all.append(m); v_all.append(v)
-                ids_all.extend(ids[1:])
-            yield pd.DataFrame(
-                {
-                    "out_id": ids_all,
-                    "ewm_mean": m_all,
-                    "ewm_var": v_all,
-                    "breach": br_all,
-                }
-            )
-
-    return seqs.mapInPandas(_band, out_schema).withColumnRenamed("out_id", id_col)
 
 
 def kalman_level(
@@ -352,54 +273,24 @@ def kalman_level(
     state variance (shrinks toward the Riccati fixed point), kf_gain the
     gain used at that step (gain 0 for the first point: the prior IS the
     observation). Same one-exchange batched-arrays shape as ewma/holt."""
-    seqs = (
-        df.select(
-            F.col(key).alias("k"),
-            F.unix_micros(F.col(ts_col).cast("timestamp")).alias("t"),
-            F.col(id_col).alias("i"),
-            F.col(val_col).cast("double").alias("v"),
-        )
-        .groupBy("k")
-        .agg(F.expr("array_sort(collect_list(struct(t, i, v)))").alias("seq"))
-        .select(
-            F.expr("transform(seq, x -> x.i)").alias("ids"),
-            F.expr("transform(seq, x -> x.v)").alias("vals"),
-        )
-    )
     qf, rf = float(q), float(r)
-    out_schema = T.StructType(
-        [
-            T.StructField("out_id", df.schema[id_col].dataType),
-            T.StructField("kf_mean", T.DoubleType()),
-            T.StructField("kf_var", T.DoubleType()),
-            T.StructField("kf_gain", T.DoubleType()),
-        ]
+
+    def _step(zs):
+        x, p = zs[0], rf
+        x_all, p_all, k_all = [x], [p], [0.0]
+        for z in zs[1:]:
+            p_pred = p + qf
+            gain = p_pred / (p_pred + rf)
+            x = x + gain * (z - x)
+            p = (1.0 - gain) * p_pred
+            x_all.append(x); p_all.append(p); k_all.append(gain)
+        return {"kf_mean": x_all, "kf_var": p_all, "kf_gain": k_all}
+
+    return _per_point(
+        df, key, ts_col, val_col, id_col, _step,
+        [("kf_mean", T.DoubleType()), ("kf_var", T.DoubleType()),
+         ("kf_gain", T.DoubleType())],
     )
-
-    def _filt(batches):
-        for pdf in batches:
-            ids_all, x_all, p_all, k_all = [], [], [], []
-            for ids, vals in zip(pdf["ids"], pdf["vals"]):
-                x, p = float(vals[0]), rf
-                ids_all.append(ids[0])
-                x_all.append(x); p_all.append(p); k_all.append(0.0)
-                for z in vals[1:]:
-                    p_pred = p + qf
-                    gain = p_pred / (p_pred + rf)
-                    x = x + gain * (float(z) - x)
-                    p = (1.0 - gain) * p_pred
-                    x_all.append(x); p_all.append(p); k_all.append(gain)
-                ids_all.extend(ids[1:])
-            yield pd.DataFrame(
-                {
-                    "out_id": ids_all,
-                    "kf_mean": x_all,
-                    "kf_var": p_all,
-                    "kf_gain": k_all,
-                }
-            )
-
-    return seqs.mapInPandas(_filt, out_schema).withColumnRenamed("out_id", id_col)
 
 
 def holt_winters_forecast(
@@ -428,52 +319,29 @@ def holt_winters_forecast(
     Output (key, h, yhat) for h = 1..horizon — the rollup-tier companion
     ("what do the next h buckets look like") to the smoothing filters.
     Same one-exchange batched-arrays shape."""
-    seqs = (
-        df.select(
-            F.col(key).alias("k"),
-            F.unix_micros(F.col(ts_col).cast("timestamp")).alias("t"),
-            F.col(id_col).alias("i"),
-            F.col(val_col).cast("double").alias("v"),
-        )
-        .groupBy("k")
-        .agg(F.expr("array_sort(collect_list(struct(t, i, v)))").alias("seq"))
-        .select("k", F.expr("transform(seq, x -> x.v)").alias("vals"))
-    )
     a, bcf, g = float(alpha), float(beta), float(gamma)
     m, H = int(period), int(horizon)
     if m < 1 or H < 1:
         raise ValueError("period and horizon must be >= 1")
-    out_schema = T.StructType(
+    hs = list(range(1, H + 1))
+
+    def _forecast(k, vals):
+        l_all, b_all, _, seas = _hw_step(vals.tolist(), a, bcf, g, m)
+        l, b, t_last = l_all[-1], b_all[-1], len(vals) - 1
+        return {
+            key: [k] * H,
+            "h": hs,
+            "yhat": [l + float(h) * b + seas[(t_last + h) % m] for h in hs],
+        }
+
+    schema = T.StructType(
         [
-            T.StructField("out_key", df.schema[key].dataType),
+            T.StructField(key, df.schema[key].dataType),
             T.StructField("h", T.IntegerType()),
             T.StructField("yhat", T.DoubleType()),
         ]
     )
-
-    def _forecast(batches):
-        for pdf in batches:
-            keys_all, h_all, y_all = [], [], []
-            for k, vals in zip(pdf["k"], pdf["vals"]):
-                l = float(vals[0])
-                b = float(vals[1]) - float(vals[0]) if len(vals) >= 2 else 0.0
-                seas = [0.0] * m
-                for t, x in enumerate(vals[1:], start=1):
-                    x = float(x)
-                    s_old = seas[t % m]
-                    l_new = a * (x - s_old) + (1.0 - a) * (l + b)
-                    b = bcf * (l_new - l) + (1.0 - bcf) * b
-                    seas[t % m] = g * (x - l_new) + (1.0 - g) * s_old
-                    l = l_new
-                t_last = len(vals) - 1
-                for h in range(1, H + 1):
-                    keys_all.append(k)
-                    h_all.append(h)
-                    y_all.append(l + float(h) * b + seas[(t_last + h) % m])
-            yield pd.DataFrame(
-                {"out_key": keys_all, "h": h_all, "yhat": y_all}
-            )
-
-    return seqs.mapInPandas(_forecast, out_schema).withColumnRenamed(
-        "out_key", key
+    return map_series(
+        df, F.col(key), [ts_micros(ts_col), F.col(id_col)],
+        [F.col(val_col).cast("double")], _forecast, schema,
     )

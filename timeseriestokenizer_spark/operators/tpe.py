@@ -4,8 +4,8 @@ The reference trains one TokenBasedTokenizer per (dataset, column)
 (utils/token_based.py:48-157) — sequential per vocabulary but independent
 across series. Spark shape (SURVEY.md §2.9):
 
-* tpe_train   — groupBy(series).applyInPandas; each group's turn stream is
-  sorted locally by the ordinal, trained with the oracle's reference-exact
+* tpe_train   — ``series.map_series``; each series' turn stream arrives
+  sorted by the ordinal, is trained with the oracle's reference-exact
   greedy loop (dict-order tie-breaks), and emitted as one row per series:
   ``bpe_models(series_id, actual_vocab_size, merges array<struct>, in_len, out_len)``.
   Train parallelism = #series; a group never leaves one task.
@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..oracle.numpy_oracle import TpeModel
+from .series import map_series
 
 MODEL_SCHEMA = T.StructType(
     [
@@ -69,41 +70,25 @@ def tpe_train(
     """Train one TPE model per series, in parallel across series.
 
     Batched shape: series collapse to ordered token arrays JVM-side (one
-    exchange), then Python trains BATCHES of series via mapInPandas —
-    grouped-map dispatch costs ~25 ms/group in a coalesced task, which
-    dominates when series are short (see BENCH/PLANS.md §5)."""
-    seqs = df.groupBy(F.col(key).alias("series_id")).agg(
-        F.expr(
-            f"transform(array_sort(collect_list(struct({order_col} as o, {token_col} as t))), x -> x.t)"
-        ).alias("toks")
+    exchange), then Python trains Arrow batches of whole series
+    (``series.map_series``) — grouped-map dispatch costs ~25 ms/group in a
+    coalesced task, which dominates when series are short (see
+    BENCH/PLANS.md §5)."""
+
+    def _train(sid, toks):
+        toks = [int(t) for t in toks]
+        model = TpeModel(actual_vocab_size)
+        out = model.train(toks, target_vocab_size)
+        merges = [
+            {"left": int(l), "right": int(r), "id": int(i)}
+            for (l, r), i in model.merges.items()
+        ]
+        return {"series_id": [sid], "actual_vocab_size": [model.actual_vocab_size],
+                "merges": [merges], "in_len": [len(toks)], "out_len": [len(out)]}
+
+    return map_series(
+        df, F.col(key), [F.col(order_col)], [F.col(token_col)], _train, MODEL_SCHEMA
     )
-
-    def _train(batches):
-        for pdf in batches:
-            rows = []
-            for sid, toks in zip(pdf["series_id"], pdf["toks"]):
-                toks = [int(t) for t in toks]
-                model = TpeModel(actual_vocab_size)
-                out = model.train(toks, target_vocab_size)
-                merges = [
-                    {"left": int(l), "right": int(r), "id": int(i)}
-                    for (l, r), i in model.merges.items()
-                ]
-                rows.append(
-                    {
-                        "series_id": sid,
-                        "actual_vocab_size": model.actual_vocab_size,
-                        "merges": merges,
-                        "in_len": len(toks),
-                        "out_len": len(out),
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=["series_id", "actual_vocab_size", "merges", "in_len", "out_len"],
-            )
-
-    return seqs.mapInPandas(_train, MODEL_SCHEMA)
 
 
 def tpe_train_resumable(
@@ -245,11 +230,11 @@ def train_universal(
     return model
 
 
-ROUNDTRIP_ARR_SCHEMA = T.StructType(
+ROUNDTRIP_SCHEMA = T.StructType(
     [
         T.StructField("series_id", T.StringType()),
-        T.StructField("pos", T.ArrayType(T.LongType())),
-        T.StructField("tokens", T.ArrayType(T.IntegerType())),
+        T.StructField("pos", T.LongType()),
+        T.StructField("token", T.IntegerType()),
     ]
 )
 
@@ -272,34 +257,21 @@ def tpe_roundtrip_tokens(
     SQL quantize oracle verifies the whole chain. One shuffle (the groupBy),
     no model collect; pass ``model`` to apply a pre-trained universal model
     instead of training per series."""
-    seqs = df.groupBy(F.col(key).alias("series_id")).agg(
-        F.expr(
-            f"array_sort(collect_list(struct({order_col} as o, {token_col} as t)))"
-        ).alias("seq")
-    )
 
-    def _run(batches):
-        for pdf in batches:
-            rows = []
-            for sid, seq in zip(pdf["series_id"], pdf["seq"]):
-                pos = [int(s["o"]) for s in seq]
-                toks = [int(s["t"]) for s in seq]
-                if model is None:
-                    m = TpeModel(actual_vocab_size)
-                    m.train(toks, target_vocab_size)
-                else:
-                    m = model
-                dec = m.decode(m.encode(toks))
-                rows.append((sid, pos, dec))
-            yield pd.DataFrame(rows, columns=["series_id", "pos", "tokens"])
+    def _run(sid, pos, toks):
+        toks = [int(t) for t in toks]
+        if model is None:
+            m = TpeModel(actual_vocab_size)
+            m.train(toks, target_vocab_size)
+        else:
+            m = model
+        # map_series raises when the decoded stream's length differs from
+        # the input's, so a broken roundtrip can never emit a short series
+        dec = m.decode(m.encode(toks))
+        return {"series_id": [sid] * len(pos), "pos": pos, "token": dec}
 
-    arr = seqs.mapInPandas(_run, ROUNDTRIP_ARR_SCHEMA)
-    # explode JVM-side; arrays_zip null-pads on length mismatch, so a broken
-    # roundtrip surfaces as null tokens (hash mismatch), never silently
-    return arr.select(
-        "series_id", F.explode(F.arrays_zip("pos", "tokens")).alias("z")
-    ).select(
-        "series_id", F.col("z.pos").alias("pos"), F.col("z.tokens").alias("token")
+    return map_series(
+        df, F.col(key), [], [F.col(order_col), F.col(token_col)], _run, ROUNDTRIP_SCHEMA
     )
 
 

@@ -120,7 +120,7 @@ def get_spark(
     return spark
 
 
-def python_stage_conf(min_partition: str | None = None) -> dict:
+def python_stage_conf() -> dict:
     """Extra conf for sessions dominated by Arrow/pandas (per-row Python)
     stages: floor AQE's byte-based coalescing so a small shuffle feeding a
     Python stage keeps its parallelism (measured: Gorilla pack of 150
@@ -131,7 +131,5 @@ def python_stage_conf(min_partition: str | None = None) -> dict:
 
     64k default from a full-headline A/B (21.2 s vs 22.1 s at 16k — a lone
     TPE roundtrip prefers 16k, 3.5 s vs 5.9 s, but gorilla and the JVM
-    rollups prefer 64k and win in the mix). Override per workload via the
-    argument or SPARK_GRAFT_PY_MIN_PARTITION."""
-    floor = min_partition or os.environ.get("SPARK_GRAFT_PY_MIN_PARTITION", "64k")
-    return {"spark.sql.adaptive.coalescePartitions.minPartitionSize": floor}
+    rollups prefer 64k and win in the mix)."""
+    return {"spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k"}

@@ -6,10 +6,10 @@ Process historians run SDT ON THE INGEST PATH: a point is archived the
 moment a LATER point closes the doors, so the archive trails the stream
 by exactly one held point per series. GroupState carries the anchor, the
 two door slopes and the held point — six scalars, bounded forever,
-checkpointed across micro-batches and restarts. Arithmetic is the batch
-operator's exact op order (two adds + one IEEE divide per door, then
-min/max/compare), so the streamed archive reconciles with the batch
-keep-set EXACTLY: streamed archived points == batch kept points minus
+checkpointed across micro-batches and restarts. Each point steps the
+batch operator's own door update (``downsample.sdt_door``: two adds + one
+IEEE divide per door, then min/max/compare), so the streamed archive
+reconciles with the batch keep-set EXACTLY: streamed archived points == batch kept points minus
 each series' final point (which the batch form keeps by convention but a
 never-ending stream must hold pending; it surfaces on the next door
 close). First points archive immediately (they are the first anchor).
@@ -26,6 +26,8 @@ import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
+
+from ..operators.downsample import sdt_door
 
 SDT_OUTPUT_SCHEMA = T.StructType(
     [
@@ -84,25 +86,13 @@ def stream_sdt_archive(
                     o_ts.append(ts_us)
                     o_v.append(v)
                     continue
-                dt = ts_us - ta
-                if dt < 1:
-                    dt = 1
-                hi = (v + E - va) / float(dt)
-                lo = (v - E - va) / float(dt)
-                nh = hi if hi < min_hi else min_hi
-                nl = lo if lo > max_lo else max_lo
-                if nl > nh:
-                    # doors closed: the HELD point archives and re-anchors
+                closed, ta, va, min_hi, max_lo = sdt_door(
+                    ta, va, min_hi, max_lo, tp, vp, ts_us, v, E
+                )
+                if closed:
+                    # the HELD point archived and is the new anchor
                     o_ts.append(tp)
                     o_v.append(vp)
-                    ta, va = tp, vp
-                    d2 = ts_us - ta
-                    if d2 < 1:
-                        d2 = 1
-                    min_hi = (v + E - va) / float(d2)
-                    max_lo = (v - E - va) / float(d2)
-                else:
-                    min_hi, max_lo = nh, nl
                 tp, vp = ts_us, v
         state.update((ta, va, min_hi, max_lo, tp, vp))
         if o_ts:

@@ -36,6 +36,7 @@ COUNT_OPS = (
     "BroadcastNestedLoopJoin",
     "CartesianProduct",
     "MapInPandas",
+    "MapInArrow",
     "FlatMapGroupsInPandas",
     "ArrowEvalPython",
     "BatchEvalPython",
