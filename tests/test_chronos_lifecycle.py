@@ -52,7 +52,7 @@ def test_universal_vocab_lifecycle(spark, series_long):
 
     model = train_universal(tok, "series_id", "token", "pos", 90, 50, max_rows=4000)
     assert len(model.merges) > 0
-    enc = tpe_encode(spark, tok, "series_id", "token", "pos", model=model).toPandas()
+    enc = tpe_encode(tok, "series_id", "token", "pos", model).toPandas()
     assert set(enc["series_id"]) == kept_ids
     assert (enc["n_tokens"] <= 200).all()
     # the one global vocabulary compresses at least some series

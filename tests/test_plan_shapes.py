@@ -1,6 +1,7 @@
 """Plan-shape regression tests — the scale claims in BENCH/PLANS.md must not
 silently regress."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from timeseriestokenizer_spark.datagen import transcripts_df
@@ -195,6 +196,29 @@ def test_quantize_closed_form_path_is_pinned(spark, tmp_path):
     folded = quantize_with_edges(ev, edges.drop("lo", "hi"), "uid", "value")
     assert not closed_form(folded)
     assert sorted(folded.collect()) == sorted(want)
+
+
+@pytest.mark.parametrize("row", ["zscore_roundtrip", "detokenize_score"])
+def test_table_artifact_rows_build_without_jobs(spark, row):
+    """Building these rows fires no Spark job: their scalers and bin edges
+    are tables joined in when the query runs, never collected to the
+    driver while the DataFrame is built."""
+    from timeseriestokenizer_spark import contract
+
+    sf_dir = "/root/testdata/sf0.001"
+    # the first read of a parquet file runs one schema-inference job; the
+    # builder reuses the memoized handle
+    contract.load(spark, sf_dir, "events")
+    sc = spark.sparkContext
+    group = f"build-{row}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        df = contract.QUERIES[row](spark, sf_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert "Python" not in _plan(df)
 
 
 def test_reconcile_with_batch_has_no_join(spark):

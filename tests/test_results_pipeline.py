@@ -24,9 +24,13 @@ def fixture_f5(spark):
     preds[11] = 0.0            # token 0 → below-range decode
     pdf_p = pd.DataFrame({"series_id": "s", "pos": range(n), "token": preds})
     pdf_t = pd.DataFrame({"series_id": "s", "pos": range(n), "token": trues})
+    edges_df = spark.createDataFrame(
+        [("s", edges.tolist())], "series_id string, edges array<double>"
+    )
     return (
         spark.createDataFrame(pdf_p),
         spark.createDataFrame(pdf_t),
+        edges_df,
         {"s": edges},
         pdf_p,
         pdf_t,
@@ -42,8 +46,8 @@ def test_apply_ceiling(spark):
 
 
 def test_score_predictions_matches_oracle(spark, fixture_f5):
-    preds, trues, edges, pdf_p, pdf_t = fixture_f5
-    got = score_predictions(spark, preds, trues, edges).collect()[0]
+    preds, trues, edges_df, edges, pdf_p, pdf_t = fixture_f5
+    got = score_predictions(preds, trues, edges_df).collect()[0]
 
     # oracle twin: ceil (NaN→0) → decode with extrapolation → masked metrics
     ceiled = np.where(
@@ -61,9 +65,22 @@ def test_score_predictions_matches_oracle(spark, fixture_f5):
 def test_score_predictions_extrapolation_hit(spark, fixture_f5):
     """The out-of-range tokens decode via the reference's extrapolation
     branches instead of being dropped."""
-    preds, trues, edges, pdf_p, _ = fixture_f5
-    got = score_predictions(spark, preds, trues, edges).collect()[0]
+    preds, trues, edges_df, _, pdf_p, _ = fixture_f5
+    got = score_predictions(preds, trues, edges_df).collect()[0]
     assert got["valid_samples"] == len(pdf_p)  # nothing masked (no NaN decode)
+
+
+def test_score_predictions_masks_and_drops(spark, fixture_f5):
+    """A negative predicted token decodes to NULL and its pair is masked; a
+    series with no fitted edges drops out of the score."""
+    preds, trues, edges_df, edges, pdf_p, pdf_t = fixture_f5
+    neg = preds.withColumn(
+        "token", F.when(F.col("pos") == 5, F.lit(-3.5)).otherwise(F.col("token"))
+    )
+    other = trues.withColumn("series_id", F.lit("unfitted"))
+    got = score_predictions(neg.union(other), trues.union(other), edges_df).collect()
+    assert [r["series_id"] for r in got] == ["s"]
+    assert got[0]["valid_samples"] == len(pdf_p) - 1
 
 
 def test_sanitize_name(spark):

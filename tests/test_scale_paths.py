@@ -1,10 +1,13 @@
-"""Scale-path twins must equal the broadcast-dict registry paths, and must
-not collect registries to the driver (VERDICT round 1, "What's wrong" #3):
+"""Scale-path (table) twins of the tokenizer artifacts must equal the numpy
+reference, and must not collect registries to the driver (VERDICT round 1,
+"What's wrong" #3):
 
-* fit_edges_df + quantize_with_edges/dequantize_with_edges (Catalyst join)
-  == fit_edges dict + make_quantize_udf/make_dequantize_udf (Arrow UDF)
-* tpe_encode_with_models/tpe_decode_with_models (cogroup vs the models TABLE)
-  == tpe_encode/tpe_decode (collected {series: model} registry broadcast)
+* fit_edges_df == fit_edges dict == the numpy edge fits
+* quantize_with_edges/dequantize_with_edges (Catalyst join)
+  == make_quantize_udf/make_dequantize_udf (Arrow UDF over the dict)
+* tpe_encode_with_models/tpe_decode_with_models (cogroup vs the models
+  TABLE) == TpeModel.encode/decode on the collected models
+* scale_expr/inverse_scale_expr == numpy arithmetic on the fitted scalers
 * tpe_roundtrip_tokens (fused one-exchange train→encode→decode) reproduces
   the input stream exactly (decode∘encode = id)
 """
@@ -34,17 +37,28 @@ def _events(spark, n_users=7, n=400, seed=11):
 
 @pytest.mark.parametrize("kind", ["equal_width", "adaptive"])
 def test_fit_edges_df_matches_dict(spark, kind):
+    """The table, its collected dict and the numpy fit agree bit-for-bit:
+    equal_width is the same linspace arithmetic, adaptive runs the same
+    numpy loop (both are order-independent)."""
+    from timeseriestokenizer_spark.oracle import numpy_oracle as O
+
     ev = _events(spark)
     dict_edges = fit_edges(ev, "uid", "value", 16, kind=kind)
     df_edges = {
         r["series_id"]: np.asarray(r["edges"])
         for r in fit_edges_df(ev, "uid", "value", 16, kind=kind).collect()
     }
-    assert set(dict_edges) == set(df_edges)
-    for k in dict_edges:
-        # equal_width must be bit-identical (same linspace arithmetic);
-        # adaptive runs the same numpy loop on both paths
-        np.testing.assert_array_equal(dict_edges[k], df_edges[k])
+    values = {}
+    for r in ev.collect():
+        values.setdefault(r["uid"], []).append(r["value"])
+    assert set(dict_edges) == set(df_edges) == set(values)
+    for k, v in values.items():
+        if kind == "equal_width":
+            want = O.equal_width_edges(np.asarray(v), 16)
+        else:
+            want, _, _ = O.adaptive_bins_discretize(np.asarray(v), N=16)
+        np.testing.assert_array_equal(dict_edges[k], want)
+        np.testing.assert_array_equal(df_edges[k], want)
 
 
 def test_quantize_join_path_equals_udf_path(spark):
@@ -104,12 +118,12 @@ def test_dequantize_join_extrapolation_branches(spark):
     assert out[3] == pytest.approx(3.75)  # center of [2.5, 5]
 
 
-def test_tpe_models_table_paths_equal_registry_paths(spark):
+def test_tpe_models_table_paths_match_oracle(spark):
+    """Cogroup encode/decode against the models table equal TpeModel's own
+    encode/decode with the same merges, and decode∘encode = identity."""
     from timeseriestokenizer_spark.operators.tpe import (
         models_to_registry,
-        tpe_decode,
         tpe_decode_with_models,
-        tpe_encode,
         tpe_encode_with_models,
         tpe_train,
     )
@@ -123,32 +137,22 @@ def test_tpe_models_table_paths_equal_registry_paths(spark):
     tok = spark.createDataFrame(rows, "uid string, pos long, token int")
     models = tpe_train(tok, "uid", "token", "pos", 20, 8).cache()
     reg = models_to_registry(models)
+    orig = {}
+    for u, _, t in sorted(rows, key=lambda r: (r[0], r[1])):
+        orig.setdefault(u, []).append(t)
 
-    enc_dict = {
-        r["series_id"]: list(r["tokens"])
-        for r in tpe_encode(spark, tok, "uid", "token", "pos", registry=reg).collect()
-    }
     enc_tbl_df = tpe_encode_with_models(tok, models, "uid", "token", "pos")
     enc_tbl = {r["series_id"]: list(r["tokens"]) for r in enc_tbl_df.collect()}
-    assert enc_dict == enc_tbl
+    assert enc_tbl == {u: reg[u].encode(seq) for u, seq in orig.items()}
+    assert any(len(enc_tbl[u]) < len(orig[u]) for u in orig)  # merges applied
 
-    dec_dict = {
-        r["series_id"]: list(r["tokens"])
-        for r in tpe_decode(spark, enc_tbl_df, registry=reg).collect()
-    }
     dec_tbl = {
         r["series_id"]: list(r["tokens"])
         for r in tpe_decode_with_models(enc_tbl_df, models).collect()
     }
-    assert dec_dict == dec_tbl
-    # and decode∘encode = identity against the original streams
-    orig = {
-        r["uid"]: [x["token"] for x in sorted(r["seq"], key=lambda s: s["pos"])]
-        for r in tok.groupBy("uid")
-        .agg(F.collect_list(F.struct("pos", "token")).alias("seq"))
-        .collect()
-    }
-    assert dec_tbl == {k: v for k, v in orig.items()}
+    assert dec_tbl == {u: reg[u].decode(enc_tbl[u]) for u in orig}
+    assert dec_tbl == orig
+    models.unpersist()
 
 
 def test_tpe_models_table_missing_series_raises(spark):
@@ -221,21 +225,16 @@ def test_quantile_edges_approx_vs_exact(spark):
     assert np.all(np.abs(approx - exact) <= gap + 1e-12)
 
 
-def test_scale_join_path_equals_udf_path_and_plan(spark):
-    """The collect-free scale/inverse join path (scale_expr +
-    inverse_scale_expr) must equal the broadcast-dict UDF path bit-for-bit
-    on every row, compile to BroadcastHashJoin with ZERO Python stages at
-    the default, and degrade to a shuffle join (still no driver collect)
-    with broadcast=False for registry-as-data cardinalities."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
+def test_scale_join_path_matches_numpy_and_plan(spark):
+    """The scale/inverse join path (scale_expr + inverse_scale_expr) equals
+    numpy arithmetic on the fitted scalers table bit-for-bit on every row,
+    with ZERO Python stages, whether AQE broadcasts the table or (with
+    broadcasting off, the registry-as-data case) shuffles both sides. A
+    series with no fitted row keeps its rows with NULL outputs."""
     from timeseriestokenizer_spark.functions.scaling import (
         fit_scalers,
         inverse_scale_expr,
-        make_scale_udf,
         scale_expr,
-        scalers_to_registry,
     )
 
     rng = np.random.RandomState(23)
@@ -247,30 +246,38 @@ def test_scale_join_path_equals_udf_path_and_plan(spark):
     rows.append(("const", 4.0, 501))
     df = spark.createDataFrame(rows, "uid string, value double, rid long")
     scalers = fit_scalers(df, "uid", "value")
+    fitted = {r["series_id"]: (r["mean"], r["std"]) for r in scalers.collect()}
+    assert fitted["const"] == (4.0, 1.0)
 
-    reg = scalers_to_registry(scalers)
-    sc, inv = make_scale_udf(spark, reg), make_scale_udf(spark, reg, inverse=True)
-    udf_out = {
-        r["rid"]: (r["z"], r["recon"])
-        for r in df.withColumn("z", sc("uid", "value"))
-        .withColumn("recon", inv("uid", "z"))
-        .collect()
-    }
-    join_df = inverse_scale_expr(
-        scale_expr(df, scalers, "uid", "value", out_col="z"),
-        scalers, "uid", "z", out_col="recon",
-    )
-    join_out = {r["rid"]: (r["z"], r["recon"]) for r in join_df.collect()}
-    assert join_out == udf_out  # same IEEE ops -> bit-identical
+    want = {}
+    for uid, v, rid in rows:
+        mean, std = fitted[uid]
+        z = (np.float64(v) - mean) / std
+        want[rid] = (float(z), float(z * std + mean))
+    want[502] = (None, None)  # no fitted row: NULL, not dropped
 
+    df = df.union(spark.createDataFrame([("unfitted", 1.0, 502)], df.schema))
+
+    def roundtrip():
+        out = inverse_scale_expr(
+            scale_expr(df, scalers, "uid", "value", out_col="z"),
+            scalers, "uid", "z", out_col="recon",
+        )
+        return out, {r["rid"]: (r["z"], r["recon"]) for r in out.collect()}
+
+    join_df, got = roundtrip()
+    assert got == want  # same IEEE ops -> bit-identical
     plan = join_df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
     for py_stage in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
                      "MapInArrow", "FlatMapGroupsInPandas"):
         assert py_stage not in plan, py_stage
 
-    shuffled = inverse_scale_expr(
-        scale_expr(df, scalers, "uid", "value", out_col="z", broadcast=False),
-        scalers, "uid", "z", out_col="recon", broadcast=False,
-    )
-    assert {r["rid"]: (r["z"], r["recon"]) for r in shuffled.collect()} == udf_out
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        shuffled, got = roundtrip()
+        assert got == want
+        plan = shuffled._jdf.queryExecution().executedPlan().toString()
+        assert "BroadcastHashJoin" not in plan and "SortMergeJoin" in plan
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)

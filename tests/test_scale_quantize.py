@@ -1,21 +1,23 @@
-"""Scaler registry + quantize/dequantize UDFs vs the NumPy oracle:
-the full scale→quantize→dequantize→inverse-scale chain reconstructs the
-bin-center values exactly (SURVEY §5.2.2)."""
+"""Scaler table + quantize/dequantize (table joins and UDFs) vs the NumPy
+oracle: the full scale→quantize→dequantize→inverse-scale chain reconstructs
+the bin-center values exactly (SURVEY §5.2.2)."""
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
 from timeseriestokenizer_spark.functions.quantize import (
+    dequantize_with_edges,
     fit_edges,
-    make_dequantize_udf,
+    fit_edges_df,
     make_quantize_udf,
     quantize_sql_expr,
+    quantize_with_edges,
 )
 from timeseriestokenizer_spark.functions.scaling import (
     fit_scalers,
-    make_scale_udf,
-    scalers_to_registry,
+    inverse_scale_expr,
+    scale_expr,
 )
 from timeseriestokenizer_spark.oracle import numpy_oracle as O
 
@@ -34,9 +36,13 @@ def _series_df(spark, n=400, n_series=3, seed=7):
     return spark.createDataFrame(pdf), pdf
 
 
+def _scalers(scalers_df) -> dict:
+    return {r["series_id"]: (r["mean"], r["std"]) for r in scalers_df.collect()}
+
+
 def test_scaler_fit_matches_oracle(spark):
     df, pdf = _series_df(spark)
-    reg = scalers_to_registry(fit_scalers(df, "series_id", "v"))
+    reg = _scalers(fit_scalers(df, "series_id", "v"))
     for sid, grp in pdf.groupby("series_id"):
         mean, std = O.fit_scaler(grp["v"].to_numpy())
         assert np.isclose(reg[sid][0], mean, atol=1e-9)
@@ -45,14 +51,11 @@ def test_scaler_fit_matches_oracle(spark):
 
 def test_scale_inverse_roundtrip(spark):
     df, pdf = _series_df(spark)
-    reg = scalers_to_registry(fit_scalers(df, "series_id", "v"))
-    scale_udf = make_scale_udf(spark, reg)
-    inv_udf = make_scale_udf(spark, reg, inverse=True)
-    out = (
-        df.withColumn("z", scale_udf("series_id", "v"))
-        .withColumn("recon", inv_udf("series_id", "z"))
-        .toPandas()
-    )
+    scalers = fit_scalers(df, "series_id", "v")
+    out = inverse_scale_expr(
+        scale_expr(df, scalers, "series_id", "v", out_col="z"),
+        scalers, "series_id", "z", out_col="recon",
+    ).toPandas()
     assert np.allclose(out["recon"], out["v"], atol=1e-9)
     # z-scores standardized per series (population std)
     for sid, grp in out.groupby("series_id"):
@@ -95,28 +98,30 @@ def test_quantize_sql_expr_matches_udf(spark):
 
 
 def test_full_chain_reconstructs_bin_centers(spark):
-    """scale → quantize → dequantize → inverse-scale == bin-center
-    reconstruction computed by the oracle (north-star round-trip)."""
+    """scale → quantize → dequantize → inverse-scale on the fitted tables
+    == bin-center reconstruction computed by the oracle (north-star
+    round-trip)."""
     df, pdf = _series_df(spark)
-    scalers = scalers_to_registry(fit_scalers(df, "series_id", "v"))
-    scale_udf = make_scale_udf(spark, scalers)
-    scaled = df.withColumn("z", scale_udf("series_id", "v")).cache()
-    edges = fit_edges(scaled, "series_id", "z", n_bins=50)
-    q = make_quantize_udf(spark, edges)
-    dq = make_dequantize_udf(spark, edges)
-    inv = make_scale_udf(spark, scalers, inverse=True)
+    scalers_df = fit_scalers(df, "series_id", "v")
+    scaled = scale_expr(df, scalers_df, "series_id", "v", out_col="z").cache()
+    edges_df = fit_edges_df(scaled, "series_id", "z", n_bins=50)
+    tok = quantize_with_edges(scaled, edges_df, "series_id", "z", out_col="tok")
     out = (
-        scaled.withColumn("tok", q("series_id", "z"))
-        .withColumn("zc", dq("series_id", "tok"))
-        .withColumn("recon", inv("series_id", "zc"))
+        inverse_scale_expr(
+            dequantize_with_edges(tok, edges_df, "series_id", "tok", out_col="zc"),
+            scalers_df, "series_id", "zc", out_col="recon",
+        )
         .orderBy("series_id", "pos")
         .toPandas()
     )
+    scalers = _scalers(scalers_df)
+    edges = {r["series_id"]: np.asarray(r["edges"]) for r in edges_df.collect()}
     for sid, grp in out.groupby("series_id"):
         raw = pdf[pdf.series_id == sid].sort_values("pos")["v"].to_numpy()
-        # same registry + edges as the engine: the chain must match bit-for-bit
+        # same scalers + edges as the engine: the chain must match bit-for-bit
         mean, std = scalers[sid]
         z = O.scale(raw, mean, std)
+        np.testing.assert_array_equal(edges[sid], O.equal_width_edges(z, 50))
         sym = O.digitize_tokens(z, edges[sid])
         assert np.array_equal(grp["tok"].to_numpy(), sym)
         dec = np.array(O.decode_tokens(sym, edges[sid]))
@@ -141,11 +146,7 @@ def test_chronos_rebin_mode_matches_oracle(spark):
     """F13: mode='chronos' on the broadcast-edges UDF and the Catalyst
     SQL-expr twin both reproduce numpy_oracle.chronos_rebin
     (transform_with_chronos_vocab.py:188-194 — right=False, no +1, clipped)."""
-    from timeseriestokenizer_spark.functions.quantize import (
-        chronos_rebin_sql_expr,
-        fit_edges_df,
-        quantize_with_edges,
-    )
+    from timeseriestokenizer_spark.functions.quantize import chronos_rebin_sql_expr
 
     df, pdf = _series_df(spark, n=300, n_series=2)
     n_bins = 16

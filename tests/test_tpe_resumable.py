@@ -2,8 +2,11 @@
 missing series; the merged registry equals a one-shot train (B8 memoization
 at table scale)."""
 
+import os
+
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from timeseriestokenizer_spark.operators.tpe import (
@@ -54,3 +57,26 @@ def test_resume_noop_when_complete(spark, tmp_path):
     again = tpe_train_resumable(df, "series_id", "token", "pos", 30, 20, path)
     assert again.count() == 6  # unchanged, nothing retrained twice
     assert again.groupBy("series_id").count().filter("count > 1").count() == 0
+
+
+def test_corrupt_models_table_raises_and_commits_nothing(spark, tmp_path):
+    """A models directory holding a file that is not parquet fails the run;
+    it is not read as "nothing trained", so no series retrains and no new
+    part file is committed next to the corrupt one."""
+    df = _token_df(spark)
+    path = tmp_path / "models"
+    path.mkdir()
+    (path / "part-00000.parquet").write_bytes(b"not a parquet file")
+    before = sorted(os.listdir(path))
+    with pytest.raises(Exception):
+        tpe_train_resumable(df, "series_id", "token", "pos", 30, 20, str(path))
+    assert sorted(os.listdir(path)) == before
+
+
+def test_empty_models_directory_trains_everything(spark, tmp_path):
+    """An existing but empty models directory reads as no models."""
+    df = _token_df(spark)
+    path = tmp_path / "models"
+    path.mkdir()
+    full = tpe_train_resumable(df, "series_id", "token", "pos", 30, 20, str(path))
+    assert sorted(r["series_id"] for r in full.collect()) == [f"s{i}" for i in range(6)]

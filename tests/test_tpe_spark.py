@@ -2,13 +2,14 @@
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 
 from timeseriestokenizer_spark.operators.tpe import (
     models_to_registry,
     tokens_to_rows,
     tpe_decode,
+    tpe_decode_with_models,
     tpe_encode,
+    tpe_encode_with_models,
     tpe_train,
     train_universal,
 )
@@ -48,31 +49,32 @@ def test_train_matches_oracle(spark):
 
 def test_encode_decode_roundtrip_distributed(spark):
     df, pdf = _token_df(spark)
-    models = tpe_train(df, "series_id", "token", "pos", 80, 50)
-    reg = models_to_registry(models)
-    enc = tpe_encode(spark, df, "series_id", "token", "pos", registry=reg).cache()
-    dec = tpe_decode(spark, enc, registry=reg).toPandas()
+    models = tpe_train(df, "series_id", "token", "pos", 80, 50).cache()
+    enc = tpe_encode_with_models(df, models, "series_id", "token", "pos").cache()
+    dec = tpe_decode_with_models(enc, models).toPandas()
     for _, row in dec.iterrows():
         orig = (
             pdf[pdf.series_id == row["series_id"]].sort_values("pos")["token"].tolist()
         )
         assert list(row["tokens"]) == orig  # decode(encode(x)) == x
     # encode equals oracle encode (training sequence replay)
+    reg = models_to_registry(models)
     encp = enc.toPandas()
+    assert set(encp["series_id"]) == set(pdf["series_id"])
     for _, row in encp.iterrows():
         sid = row["series_id"]
         seq = pdf[pdf.series_id == sid].sort_values("pos")["token"].tolist()
-        m = TpeModel(50, {(p["left"], p["right"]): p["id"] for p in
-                          models.filter(F.col("series_id") == sid).collect()[0]["merges"]})
+        m = TpeModel(50, reg[sid].merges)
         assert list(row["tokens"]) == m.encode(seq)
+        assert row["n_tokens"] == len(row["tokens"]) < len(seq)
     enc.unpersist()
+    models.unpersist()
 
 
 def test_tokens_to_rows(spark):
     df, _ = _token_df(spark, n_series=1, n=50)
     models = tpe_train(df, "series_id", "token", "pos", 60, 50)
-    reg = models_to_registry(models)
-    enc = tpe_encode(spark, df, "series_id", "token", "pos", registry=reg)
+    enc = tpe_encode_with_models(df, models, "series_id", "token", "pos")
     rows = tokens_to_rows(enc).toPandas()
     assert rows["pos"].is_monotonic_increasing
 
@@ -88,11 +90,17 @@ def test_universal_vocab_deterministic(spark):
     exp.train(sample, 70)
     assert m1.merges == exp.merges
     # universal model encodes any series
-    enc = tpe_encode(spark, df, "series_id", "token", "pos", model=m1)
-    dec = tpe_decode(spark, enc, model=m1).toPandas()
+    enc = tpe_encode(df, "series_id", "token", "pos", m1)
+    encp = enc.toPandas()
+    dec = tpe_decode(enc, m1).toPandas()
+    assert set(dec["series_id"]) == set(pdf["series_id"])
     for _, row in dec.iterrows():
         orig = pdf[pdf.series_id == row["series_id"]].sort_values("pos")["token"].tolist()
         assert list(row["tokens"]) == orig
+        assert row["n_tokens"] == len(orig)
+        enc_row = encp[encp.series_id == row["series_id"]].iloc[0]
+        assert list(enc_row["tokens"]) == m1.encode(orig)
+        assert enc_row["n_tokens"] == len(enc_row["tokens"])
 
 
 def test_compression_rate_at_reference_scale():

@@ -925,31 +925,14 @@ def q_scaler_fit(spark, sf_dir):
     )
 
 
-def q_zscore_roundtrip(spark, sf_dir):
-    """F11: scale → inverse-scale reconstruction, counted per user. Spark path
-    uses the broadcast-registry Arrow UDFs (functions/scaling.py); the oracle
-    recomputes in SQL — both must report zero bad reconstructions."""
-    from .functions.scaling import fit_scalers, make_scale_udf, scalers_to_registry
-
-    ev = load(spark, sf_dir, "events").withColumn("uid", F.col("user_id").cast("string"))
-    reg = scalers_to_registry(fit_scalers(ev, "uid", "value"))
-    sc = make_scale_udf(spark, reg)
-    inv = make_scale_udf(spark, reg, inverse=True)
-    out = ev.withColumn("z", sc("uid", "value")).withColumn("recon", inv("uid", "z"))
-    return out.groupBy("user_id").agg(
-        F.sum((F.abs(F.col("recon") - F.col("value")) > 1e-9).cast("long")).alias("n_bad"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
 def q_scale_join_roundtrip(spark, sf_dir):
-    """F11 via the COLLECT-FREE table-join path (functions/scaling
-    scale_expr + inverse_scale_expr): the fitted scalers stay a DataFrame
-    end-to-end — broadcast-hash-joined into both the scale and the
-    inverse expression, nothing ever touches the driver (the scale twin
-    of quantize_with_edges; round-5 VERDICT item). Same roundtrip
-    accounting as zscore_roundtrip, so the same SQL oracle applies; the
-    no-collect plan shape is pinned in tests/test_scale_paths.py."""
+    """F11: scale → inverse-scale reconstruction, counted per user, on the
+    table-join path (functions/scaling scale_expr + inverse_scale_expr):
+    the fitted scalers stay a DataFrame joined into both expressions,
+    nothing touches the driver. The oracle recomputes in SQL — both must
+    report zero bad reconstructions. Registered as both
+    ``zscore_roundtrip`` and ``scale_join_roundtrip``; the no-Python plan
+    shape is pinned in tests/test_scale_paths.py."""
     from .functions.scaling import fit_scalers, inverse_scale_expr, scale_expr
 
     ev = load(spark, sf_dir, "events").withColumn(
@@ -1205,23 +1188,21 @@ def q_detokenize_score(spark, sf_dir):
     (exercising the ceil and the NaN→0 placeholder), then ceil → dequantize
     BOTH sides → (series, pos) equi-join → per-series MSE/RMSE/MAE/MAPE/
     MSPE/R2. The 0-token placeholder and the s=N_BINS overflow both take the
-    reference's extrapolation branches."""
-    from .functions.quantize import fit_edges, make_quantize_udf
+    reference's extrapolation branches. Quantize, dequantize and score all
+    run on the fitted edges table (fit_edges_df): no Python in the plan."""
+    from .functions.quantize import fit_edges_df, quantize_with_edges
     from .operators.results import score_predictions
 
     ev = load(spark, sf_dir, "events").withColumn("uid", F.col("user_id").cast("string"))
-    edges = fit_edges(ev, "uid", "value", N_BINS)
-    q = make_quantize_udf(spark, edges)
-    tok = ev.select(
-        "uid",
-        F.col("event_id").alias("pos"),
-        q("uid", "value").cast("double").alias("token"),
+    edges = fit_edges_df(ev, "uid", "value", N_BINS)
+    tok = quantize_with_edges(ev, edges, "uid", "value").select(
+        "uid", F.col("event_id").alias("pos"), "token"
     )
     w = W.partitionBy("uid").orderBy("pos")
     preds = tok.select(
         "uid", "pos", (F.lag("token").over(w) + F.lit(0.3)).alias("token")
     )
-    out = score_predictions(spark, preds, tok, edges, key="uid")
+    out = score_predictions(preds, tok, edges, key="uid")
     return out.select(
         F.col("uid").cast("long").alias("user_id"),
         _r(F.col("MSE")).alias("mse"),
@@ -6994,7 +6975,7 @@ QUERIES = {
     "retention_split": q_retention_split,
     "doc_lang_guess": q_doc_lang_guess,
     "universal_vocab": q_universal_vocab,
-    "zscore_roundtrip": q_zscore_roundtrip,
+    "zscore_roundtrip": q_scale_join_roundtrip,
     "rollup_1d": q_rollup_1d,
     "latency": q_latency,
     "ebos_marks": q_ebos_marks,

@@ -1,16 +1,21 @@
 """Quantize / dequantize: scaled floats <-> token bins.
 
-Exact reference semantics (utils/discretisize.py:8-32, 246-279) inside
-Arrow-vectorized pandas UDFs with broadcast per-series edges:
+Exact reference semantics (utils/discretisize.py:8-32, 246-279):
 
 * edges   = linspace(min, max, n_bins)            (n_bins EDGES)
 * symbol  = np.digitize(x, edges[1:], right=True) + 1   (in-range → 1..n_bins-1)
 * decode  = bin centers, with the reference's extrapolation rules for s == 0
             and s >= len(edges), NaN otherwise.
 
-Edge construction is a distributed agg (min/max per series) + tiny driver
-linspace; edges ride a broadcast into the UDFs (north-star J3 pattern — no
-join in the plan, the dimension side is a dict).
+The fitted artifact is one table, ``fit_edges_df`` (series_id, edges), and
+`quantize_with_edges` / `dequantize_with_edges` join it back in and compute
+in Catalyst — no driver collect, no Python in the plan. A series with no
+fitted row drops out of both (inner join).
+
+`fit_edges` collects that table into a dict for the broadcast-edges pandas
+UDFs (`make_quantize_udf` / `make_dequantize_udf`), which raise ``KeyError``
+for a series the dict lacks. The `quantize_tokens` / `dequantize_recon`
+registry rows still run that twin.
 
 A pure-SQL expression twin (`quantize_sql_expr`) exists for oracle
 cross-checks: symbol = 1 + count of edges[1:] strictly below x, which is
@@ -33,50 +38,14 @@ def fit_edges(
     df: DataFrame, key: str, value_col: str, n_bins: int, kind: str = "equal_width",
     accuracy: int = 100000,
 ) -> dict[str, np.ndarray]:
-    """Per-series bin edges. equal_width needs only (min, max) — one agg.
-    quantile uses percentile_approx at scale (exact np.quantile on collected
-    values would not distribute); adaptive pulls per-series histograms via
-    the oracle inside applyInPandas (A6 is sequential per series).
-
-    ``accuracy``: percentile_approx's rank-error knob — each returned edge
-    sits within n/accuracy RANKS of the exact quantile (Greenwald-Khanna
-    style guarantee; memory grows with the knob). The VALUE error this
-    implies grows with tail skew — on a heavy tail, one rank step can move
-    the value a lot — so skewed corpora wanting tight tail edges should
-    raise it (A/B measured in tests/test_quantile_accuracy.py and
-    summarized in BENCH/BASELINE.md)."""
-    if kind == "equal_width":
-        rows = df.groupBy(key).agg(
-            F.min(value_col).alias("lo"), F.max(value_col).alias("hi")
-        ).collect()
-        return {
-            r[key]: np.linspace(r["lo"], r["hi"], n_bins) for r in rows
-        }
-    if kind == "quantile":
-        probs = list(np.linspace(0.0, 1.0, n_bins + 1))
-        rows = df.groupBy(key).agg(
-            F.percentile_approx(value_col, probs, int(accuracy)).alias("qs")
-        ).collect()
-        return {r[key]: np.asarray(r["qs"], dtype=np.float64) for r in rows}
-    if kind == "adaptive":
-        import pyspark.sql.types as T
-
-        out_schema = T.StructType(
-            [
-                T.StructField("series_id", T.StringType()),
-                T.StructField("edges", T.ArrayType(T.DoubleType())),
-            ]
-        )
-
-        def _fit(pdf: pd.DataFrame) -> pd.DataFrame:
-            edges, _, _ = O.adaptive_bins_discretize(
-                pdf[value_col].to_numpy(dtype=np.float64), N=n_bins
-            )
-            return pd.DataFrame({"series_id": [pdf[key].iloc[0]], "edges": [list(edges)]})
-
-        rows = df.select(key, value_col).groupBy(key).applyInPandas(_fit, out_schema).collect()
-        return {r["series_id"]: np.asarray(r["edges"], dtype=np.float64) for r in rows}
-    raise ValueError(kind)
+    """``fit_edges_df`` collected to ``{series_id: edges}`` for the
+    broadcast-edges UDFs (one driver collect; the table is the artifact)."""
+    return {
+        r["series_id"]: np.asarray(r["edges"], dtype=np.float64)
+        for r in fit_edges_df(df, key, value_col, n_bins, kind, accuracy)
+        .select("series_id", "edges")
+        .collect()
+    }
 
 
 _EQUAL_WIDTH_BINS = "equal_width_bins"
@@ -100,14 +69,21 @@ def fit_edges_df(
     df: DataFrame, key: str, value_col: str, n_bins: int, kind: str = "equal_width",
     accuracy: int = 100000,
 ) -> DataFrame:
-    """Per-series bin edges as a TABLE ``(series_id, edges array<double>)`` —
-    the scale path twin of fit_edges: no driver collect, so per-conversation
-    series counts (10^6+) never concentrate on the driver. equal_width edges
-    use the Catalyst linspace twin (bit-identical to np.linspace — the same
+    """Per-series bin edges as a TABLE ``(series_id, edges array<double>)``:
+    no driver collect, so per-conversation series counts (10^6+) never
+    concentrate on the driver. equal_width edges use the Catalyst linspace
+    twin (bit-identical to np.linspace — the same
     ``start + k*((stop-start)/div)`` with the last edge pinned to stop);
     quantile uses percentile_approx; adaptive runs the allocation loop
     distributed inside applyInPandas (one task per series, never collected).
-    """
+
+    ``accuracy``: percentile_approx's rank-error knob — each returned edge
+    sits within n/accuracy RANKS of the exact quantile (Greenwald-Khanna
+    style guarantee; memory grows with the knob). The VALUE error this
+    implies grows with tail skew — on a heavy tail, one rank step can move
+    the value a lot — so skewed corpora wanting tight tail edges should
+    raise it (A/B measured in tests/test_quantile_accuracy.py and
+    summarized in BENCH/BASELINE.md)."""
     n1 = n_bins - 1
     if kind == "equal_width":
         ext = df.groupBy(F.col(key).alias("series_id")).agg(
@@ -209,7 +185,8 @@ def quantize_with_edges(
 
     No broadcast hint: AQE broadcasts when the edges table is dimension-sized
     and falls back to a co-partitioned shuffle join when it is not (the
-    per-conversation case the driver-dict path cannot survive)."""
+    per-conversation case a driver dict cannot survive). The join is inner:
+    a series with no row in ``edges_df`` drops out of the result."""
     n_bins = _equal_width_bins(edges_df)
     if n_bins is not None:
         # closed-form fast path: join only (lo, hi) — Catalyst prunes the
@@ -266,7 +243,8 @@ def dequantize_with_edges(
 ) -> DataFrame:
     """Scale-path dequantize: bin centers with the reference's extrapolation
     rules (utils/discretisize.py:246-279) as Catalyst expressions over the
-    joined edges array (1-indexed element_at)."""
+    joined edges array (1-indexed element_at). Inner join, as in
+    `quantize_with_edges`: a series with no fitted edges drops out."""
     n_bins = _equal_width_bins(edges_df)
     if n_bins is not None:
         # closed-form twin of the array path: evaluate the two needed edges
@@ -307,7 +285,8 @@ def dequantize_with_edges(
              WHEN {token_col} >= size(edges)
                THEN element_at(edges, -1) + (element_at(edges, -1) - element_at(edges, -2)) / 2
              WHEN {token_col} >= 1
-               THEN 0.5 * (element_at(edges, {token_col}) + element_at(edges, {token_col} + 1))
+               THEN 0.5 * (element_at(edges, CAST({token_col} AS INT))
+                           + element_at(edges, CAST({token_col} AS INT) + 1))
              ELSE CAST(NULL AS DOUBLE) END
         """
     )

@@ -1,25 +1,22 @@
-"""Per-series StandardScaler registry: fit as a distributed agg, apply inside
-vectorized Arrow UDFs with a broadcast (series -> (mean, std)) dict.
+"""Per-series StandardScaler registry as a table: fit as a distributed agg,
+apply as a join inside Catalyst.
 
 Reference: one pickled sklearn StandardScaler per (dataset, column)
 (transform_files_into_tokens.py:173-183). sklearn uses population std
 (ddof=0) and maps zero scale to 1.0 — so the fit is
 ``groupBy(series).agg(avg, stddev_pop)`` (SURVEY.md §2.4 A1, §4.3.7).
 
-Two apply paths:
-* expression path (`scale_expr`) — pure Catalyst, joins the scalers table;
-  whole-stage-codegen'd, preferred when the scaler table is a DataFrame.
-* broadcast-UDF path (`make_scale_udf`) — the north-star form: the registry
-  dict rides a Spark broadcast into a pandas_udf, no join in the plan.
+The fitted table ``scalers(series_id, mean, std)`` is the artifact; both
+directions (`scale_expr`, `inverse_scale_expr`) join it back in and compute
+in-line, so the registry never reaches the driver and the plan holds no
+Python stage. No broadcast hint: AQE broadcasts the table when it is
+dimension-sized and shuffles both sides when the registry itself is data.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
 
 
 def fit_scalers(df: DataFrame, key: str, value_col: str) -> DataFrame:
@@ -35,66 +32,31 @@ def fit_scalers(df: DataFrame, key: str, value_col: str) -> DataFrame:
     )
 
 
-def scalers_to_registry(scalers: DataFrame) -> dict[str, tuple[float, float]]:
-    """Collect the (small) scalers table to a broadcastable dict."""
-    return {r["series_id"]: (r["mean"], r["std"]) for r in scalers.collect()}
+def _join_scalers(df: DataFrame, scalers: DataFrame, key: str) -> DataFrame:
+    sc = scalers.select(
+        F.col("series_id").alias("_sk"), F.col("mean").alias("_mean"),
+        F.col("std").alias("_std"),
+    )
+    return df.join(sc, F.col(key) == F.col("_sk"), "left")
 
 
 def scale_expr(df: DataFrame, scalers: DataFrame, key: str, value_col: str,
-               out_col: str = "scaled", broadcast: bool = True) -> DataFrame:
-    """Catalyst path: join the scalers table and scale in-line.
-
-    ``broadcast=True`` (default) pins a BroadcastHashJoin — right for the
-    reference-cardinality registry (one row per series/column). At 10^8+
-    series the registry itself is data: pass ``broadcast=False`` and the
-    join shuffles both sides on the key instead of materializing the
-    registry per executor (and never collects it to the driver at all —
-    the scale twin of quantize_with_edges / tpe_encode_with_models)."""
-    sc = F.broadcast(scalers) if broadcast else scalers
+               out_col: str = "scaled") -> DataFrame:
+    """z = (x - mean) / std: left-join the scalers table and scale in-line.
+    A series with no fitted row keeps its rows and gets a NULL ``out_col``."""
     return (
-        df.join(sc, df[key] == sc["series_id"], "left")
-        .withColumn(out_col, (F.col(value_col) - F.col("mean")) / F.col("std"))
-        .drop("series_id", "mean", "std")
+        _join_scalers(df, scalers, key)
+        .withColumn(out_col, (F.col(value_col) - F.col("_mean")) / F.col("_std"))
+        .drop("_sk", "_mean", "_std")
     )
 
 
 def inverse_scale_expr(df: DataFrame, scalers: DataFrame, key: str, value_col: str,
-                       out_col: str = "value", broadcast: bool = True) -> DataFrame:
-    """Catalyst inverse path: x = z * std + mean via the same join shape —
-    the collect-free twin of make_scale_udf(inverse=True) (round-5
-    VERDICT item: no scaling path should require a driver collect)."""
-    sc = F.broadcast(scalers) if broadcast else scalers
+                       out_col: str = "value") -> DataFrame:
+    """x = z * std + mean through the same join shape as `scale_expr`
+    (docs/WORKFLOW.md:336-342). A series with no fitted row gets NULL."""
     return (
-        df.join(sc, df[key] == sc["series_id"], "left")
-        .withColumn(out_col, F.col(value_col) * F.col("std") + F.col("mean"))
-        .drop("series_id", "mean", "std")
+        _join_scalers(df, scalers, key)
+        .withColumn(out_col, F.col(value_col) * F.col("_std") + F.col("_mean"))
+        .drop("_sk", "_mean", "_std")
     )
-
-
-def make_scale_udf(spark, registry: dict[str, tuple[float, float]], inverse: bool = False):
-    """Arrow-vectorized scale / inverse-scale with a broadcast registry.
-
-    Returns a pandas_udf (series_key: str, value: double) -> double.
-    z = (x - mean) / std; x = z * std + mean (docs/WORKFLOW.md:336-342).
-    """
-    bc = spark.sparkContext.broadcast(registry)
-
-    @pandas_udf("double")
-    def _udf(keys: pd.Series, values: pd.Series) -> pd.Series:
-        reg = bc.value
-
-        def _lookup(k):
-            if k not in reg:
-                raise KeyError(
-                    f"series {k!r} has no fitted scaler — fit_scalers must "
-                    "cover every series before scaling"
-                )
-            return reg[k]
-
-        means = keys.map(lambda k: _lookup(k)[0]).to_numpy(dtype=np.float64)
-        stds = keys.map(lambda k: _lookup(k)[1]).to_numpy(dtype=np.float64)
-        x = values.to_numpy(dtype=np.float64)
-        out = x * stds + means if inverse else (x - means) / stds
-        return pd.Series(out)
-
-    return _udf

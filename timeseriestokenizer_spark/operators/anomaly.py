@@ -483,7 +483,9 @@ def sample_entropy(
             T.StructField("sampen", T.DoubleType()),
         ]
     )
+    # a NULL value is skipped, as ewma does: it is no point of the series
+    # (cast to int64 it would read as INT64_MIN); an all-NULL series has no row
     return map_series(
-        df, F.col(key), [ts_micros(ts_col), F.col(id_col)],
-        [F.col(val_col).cast("long")], _sampen, schema,
+        df.filter(F.col(val_col).isNotNull()), F.col(key),
+        [ts_micros(ts_col), F.col(id_col)], [F.col(val_col).cast("long")], _sampen, schema,
     ).withColumn("sampen", F.round(F.col("sampen"), 6))

@@ -3,11 +3,12 @@ process_all_results.py entry point (SURVEY §3.3):
 
     preds ⋈ trues on (series, pos)  [J2 — never row order]
     → ceiling (float tokens → int, NaN → 0 placeholder)  [F8]
-    → dequantize via broadcast vocab  [F3/J3]
+    → dequantize against the fitted edges table  [F3]
     → per-series error metrics  [A11]
 
 The reference pairs preds/trues by DataFrame index and aligns columns by
-name (J1); the engine keys everything on (series_id, pos).
+name (J1); the engine keys everything on (series_id, pos). Every step is a
+Catalyst join or expression: no Python in the plan, no driver collect.
 """
 
 from __future__ import annotations
@@ -26,27 +27,29 @@ def apply_ceiling(df: DataFrame, token_col: str = "token") -> DataFrame:
 
 
 def score_predictions(
-    spark,
     preds: DataFrame,
     trues: DataFrame,
-    edges_by_series: dict,
+    edges_df: DataFrame,
     key: str = "series_id",
     pos_col: str = "pos",
     token_col: str = "token",
 ) -> DataFrame:
-    """Full pipeline: ceil → dequantize both sides → equi-join on (series,
-    pos) → per-series MSE/RMSE/MAE/MAPE/MSPE/R2 with NaN-pair masking and
-    the zero-denominator guard (process_all_results.py:273-319)."""
-    from ..functions.quantize import make_dequantize_udf
+    """Full pipeline: ceil → dequantize both sides against ``edges_df``
+    (a ``fit_edges_df`` table) → equi-join on (series, pos) → per-series
+    MSE/RMSE/MAE/MAPE/MSPE/R2 with NaN-pair masking and the
+    zero-denominator guard (process_all_results.py:273-319). A series with
+    no fitted edges drops out of the score."""
+    from ..functions.quantize import dequantize_with_edges
 
-    dq = make_dequantize_udf(spark, edges_by_series)
-    p = apply_ceiling(preds, token_col).select(
-        key, pos_col, dq(key, token_col).alias("pred")
-    )
-    t = trues.select(key, pos_col, dq(key, token_col).alias("true"))
-    j = p.join(t, [key, pos_col]).filter(
-        ~(F.isnan("pred") | F.isnan("true"))
-    )
+    def decode(df, out_col):
+        return dequantize_with_edges(df, edges_df, key, token_col, out_col).select(
+            key, pos_col, out_col
+        )
+
+    p = decode(apply_ceiling(preds, token_col), "pred")
+    t = decode(trues, "true")
+    # a pair with a NULL decode (negative token) or a NaN one is masked
+    j = p.join(t, [key, pos_col]).dropna(subset=["pred", "true"])
     err = F.col("true") - F.col("pred")
     denom = F.when(F.col("true") != 0, F.col("true")).otherwise(F.lit(1.0))
     g = j.groupBy(key).agg(

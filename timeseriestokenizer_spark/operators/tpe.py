@@ -1,4 +1,4 @@
-"""TPE (token-pair / BPE) compression as grouped-map Spark operators.
+"""TPE (token-pair / BPE) compression as per-series Spark operators.
 
 The reference trains one TokenBasedTokenizer per (dataset, column)
 (utils/token_based.py:48-157) — sequential per vocabulary but independent
@@ -9,13 +9,14 @@ across series. Spark shape (SURVEY.md §2.9):
   greedy loop (dict-order tie-breaks), and emitted as one row per series:
   ``bpe_models(series_id, actual_vocab_size, merges array<struct>, in_len, out_len)``.
   Train parallelism = #series; a group never leaves one task.
-* tpe_encode / tpe_decode — grouped-map with the (small) models table
-  broadcast as {series: merges} — the J3 broadcast-artifact-join pattern;
-  decode uses a driver-precomputed id -> base-expansion map for O(1) lookup.
+* tpe_encode_with_models / tpe_decode_with_models — the per-series models
+  TABLE cogrouped with the token streams, so each series' model meets its
+  turns inside one task and never reaches the driver.
 * train_universal — reference's universal-vocab mode
   (process_chronos_dataset.py:330-353): sample to the driver (the reference
   itself caps at 100k rows), train ONE model in canonical (series, pos)
-  order, broadcast everywhere.
+  order; tpe_encode / tpe_decode apply it on ``series.map_series`` with the
+  model in the worker closure.
 """
 
 from __future__ import annotations
@@ -109,101 +110,54 @@ def tpe_train_resumable(
     Returns the complete models DataFrame (existing ∪ newly trained)."""
     import os
 
-    spark = df.sparkSession
-    existing = None
-    if os.path.exists(models_path):
-        try:
-            existing = spark.read.parquet(models_path)
-        except Exception:
-            existing = None
+    # the fixed schema needs no inference job and reads an empty directory
+    # as no models; a corrupt part file fails the run before anything new
+    # is committed, instead of reading as "nothing trained"
+    read = df.sparkSession.read.schema(MODEL_SCHEMA)
     todo = df
-    if existing is not None:
-        done_keys = existing.select(F.col("series_id").alias(key))
+    if os.path.exists(models_path):
+        done_keys = read.parquet(models_path).select(F.col("series_id").alias(key))
         todo = df.join(F.broadcast(done_keys), key, "left_anti")
     fresh = tpe_train(todo, key, token_col, order_col, target_vocab_size, actual_vocab_size)
     fresh.write.mode("append").parquet(models_path)
-    return spark.read.parquet(models_path)
+    return read.parquet(models_path)
 
 
 def models_to_registry(models: DataFrame) -> dict[str, TpeModel]:
-    """Collect the models table to {series: TpeModel} (broadcast side)."""
-    reg: dict[str, TpeModel] = {}
-    for r in models.collect():
-        merges = {(m["left"], m["right"]): m["id"] for m in r["merges"]}
-        reg[r["series_id"]] = TpeModel(r["actual_vocab_size"], merges)
-    return reg
-
-
-def _grouped_apply(df, key, token_col, order_col, fn, registry_bc, default_model):
-    def _apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col, kind="stable")
-        sid = pdf[key].iloc[0]
-        model = registry_bc.value.get(sid, default_model) if registry_bc else default_model
-        if model is None:
-            raise KeyError(
-                f"series {sid!r} has no TPE model in the registry and no "
-                "default model was provided"
-            )
-        toks = pdf[token_col].to_numpy(dtype=np.int64).tolist()
-        out = fn(model, toks)
-        return pd.DataFrame(
-            {"series_id": [sid], "tokens": [[int(t) for t in out]], "n_tokens": [len(out)]}
-        )
-
-    return (
-        df.select(key, order_col, token_col)
-        .groupBy(key)
-        .applyInPandas(_apply, TOKENS_SCHEMA)
-    )
+    """Collect the models table to {series: TpeModel}."""
+    return {
+        r["series_id"]: _model_from_row(r["actual_vocab_size"], r["merges"])
+        for r in models.collect()
+    }
 
 
 def tpe_encode(
-    spark,
-    df: DataFrame,
-    key: str,
-    token_col: str,
-    order_col: str,
-    registry: dict[str, TpeModel] | None = None,
-    model: TpeModel | None = None,
+    df: DataFrame, key: str, token_col: str, order_col: str, model: TpeModel
 ) -> DataFrame:
-    """Encode each series' token stream with its (or the universal) model."""
-    bc = spark.sparkContext.broadcast(registry) if registry is not None else None
-    return _grouped_apply(
-        df, key, token_col, order_col, lambda m, t: m.encode(t), bc, model
+    """Encode each series' token stream (sorted by ``order_col``) with one
+    universal model: ``(series_id, tokens, n_tokens)``, one row per series.
+    A NULL token fails the task. Per-series models: tpe_encode_with_models."""
+
+    def _enc(sid, toks):
+        out = model.encode([int(t) for t in toks])
+        return {"series_id": [sid], "tokens": [out], "n_tokens": [len(out)]}
+
+    return map_series(
+        df, F.col(key), [F.col(order_col)], [F.col(token_col)], _enc, TOKENS_SCHEMA
     )
 
 
-def tpe_decode(
-    spark,
-    encoded: DataFrame,
-    registry: dict[str, TpeModel] | None = None,
-    model: TpeModel | None = None,
-) -> DataFrame:
-    """Decode (series_id, tokens array) rows back to base tokens via the
-    precomputed expansion maps — vectorizable O(1) per token."""
-    exp_reg = {
-        k: (m.actual_vocab_size, m.expansion_map()) for k, m in (registry or {}).items()
-    }
-    default = (model.actual_vocab_size, model.expansion_map()) if model else None
-    bc = encoded.sparkSession.sparkContext.broadcast((exp_reg, default))
+def tpe_decode(encoded: DataFrame, model: TpeModel) -> DataFrame:
+    """Decode ``(series_id, tokens)`` rows — one per series, as tpe_encode
+    emits — back to base tokens with the universal model."""
 
-    def _decode(pdf: pd.DataFrame) -> pd.DataFrame:
-        reg, dflt = bc.value
-        rows = []
-        for sid, toks in zip(pdf["series_id"], pdf["tokens"]):
-            entry = reg.get(sid, dflt)
-            if entry is None:
-                raise KeyError(
-                    f"series {sid!r} has no TPE model in the registry and no "
-                    "default model was provided"
-                )
-            avs, exp = entry
-            out = _expand_tokens(toks, avs, exp)
-            rows.append({"series_id": sid, "tokens": out, "n_tokens": len(out)})
-        return pd.DataFrame(rows, columns=["series_id", "tokens", "n_tokens"])
+    def _dec(sid, toks):
+        out = model.decode(toks)
+        return {"series_id": [sid], "tokens": [out], "n_tokens": [len(out)]}
 
-    return encoded.groupBy("series_id").applyInPandas(
-        lambda pdf: _decode(pdf), TOKENS_SCHEMA
+    return map_series(
+        tokens_to_rows(encoded), F.col("series_id"), [F.col("pos")], [F.col("token")],
+        _dec, TOKENS_SCHEMA,
     )
 
 
@@ -285,8 +239,8 @@ def tpe_encode_with_models(
     """Scale-path encode: cogroup the token stream with the models TABLE —
     each series' model row meets its turns inside one task, so the models
     never collect to the driver and never ride a session-wide broadcast
-    (per-conversation series counts would OOM both). The dict-registry path
-    (tpe_encode) remains for dimension-sized registries."""
+    (per-conversation series counts would OOM both). A series with no row
+    in ``models`` raises ``KeyError``."""
 
     def _enc(kdf: pd.DataFrame, mdf: pd.DataFrame) -> pd.DataFrame:
         if kdf.empty:
@@ -313,8 +267,8 @@ def tpe_encode_with_models(
 
 def tpe_decode_with_models(encoded: DataFrame, models: DataFrame) -> DataFrame:
     """Scale-path decode: cogroup encoded sequences with the models table
-    (see tpe_encode_with_models); expansion is the vectorized O(1)-per-token
-    map, built once per series inside its task."""
+    (see tpe_encode_with_models) and expand each with ``TpeModel.decode``.
+    A series with no row in ``models`` raises ``KeyError``."""
 
     def _dec(edf: pd.DataFrame, mdf: pd.DataFrame) -> pd.DataFrame:
         if edf.empty:
@@ -325,10 +279,7 @@ def tpe_decode_with_models(encoded: DataFrame, models: DataFrame) -> DataFrame:
                 f"series {sid!r} has no trained TPE model in the models table"
             )
         m = _model_from_row(mdf["actual_vocab_size"].iloc[0], mdf["merges"].iloc[0])
-        rows = []
-        for toks in edf["tokens"]:
-            out = _expand_tokens(toks, m.actual_vocab_size, m.expansion_map())
-            rows.append((sid, out, len(out)))
+        rows = [(sid, out, len(out)) for out in map(m.decode, edf["tokens"])]
         return pd.DataFrame(rows, columns=["series_id", "tokens", "n_tokens"])
 
     return (
@@ -336,19 +287,6 @@ def tpe_decode_with_models(encoded: DataFrame, models: DataFrame) -> DataFrame:
         .cogroup(models.groupBy("series_id"))
         .applyInPandas(_dec, TOKENS_SCHEMA)
     )
-
-
-def _expand_tokens(tokens, avs: int, exp: dict[int, list[int]]) -> list[int]:
-    """Vectorized-ish decode of one sequence via the expansion map."""
-    out: list[int] = []
-    for t in tokens:
-        t = int(t)
-        e = exp.get(t)
-        if t > avs and e is not None:
-            out.extend(e)
-        else:
-            out.append(t)
-    return out
 
 
 def tokens_to_rows(tokens_df: DataFrame) -> DataFrame:

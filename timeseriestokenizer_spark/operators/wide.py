@@ -3,7 +3,8 @@ plus K numeric value columns, processed column-at-a-time — each column is an
 independent series/"language" (transform_files_into_tokens.py:160-166).
 
 Spark mapping (SURVEY §1.3): melt wide → long (series_id = column name), then
-ONE grouped-map pass per column runs the reference's exact per-column chain:
+ONE ``series.map_series`` pass runs the reference's exact per-column chain on
+each column's time-sorted values:
 
     StandardScaler fit+transform (ddof=0)            [A1/F11]
     <PAD>/<EBOS> marking on the calendar spine       [F4/W2/W3]
@@ -14,19 +15,19 @@ ONE grouped-map pass per column runs the reference's exact per-column chain:
 
 Parallelism unit = column (intra-column work is sequential by TPE's nature —
 same as the reference, but K columns run concurrently across the cluster).
-The grouped pass emits one artifact row per column: scaler, edges, marked
+The pass emits one artifact row per column: scaler, edges, marked
 base tokens, merge table, encoded tokens — the Iceberg-able artifact tables.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..oracle import numpy_oracle as O
+from .series import map_series, ts_micros
 
 WIDE_ARTIFACT_SCHEMA = T.StructType(
     [
@@ -72,7 +73,7 @@ def tokenize_wide(
     id_col: str = "date",
     use_specials: bool = True,
 ) -> DataFrame:
-    """Full per-column reference chain as one grouped-map pass.
+    """Full per-column reference chain as one per-series pass.
 
     Special ids: {'<PAD>': N-1, '<EBOS>': N} (transform_files_into_tokens.py:47-48);
     discretization uses N - 2 edges when specials are on.
@@ -80,10 +81,7 @@ def tokenize_wide(
     long = melt_wide(wide, id_col)
     pad_id, ebos_id = N - 1, N
 
-    def _tokenize(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("ts", kind="stable")
-        sid = pdf["series_id"].iloc[0]
-        raw = pdf["value"].to_numpy(dtype=np.float64)
+    def _tokenize(sid, ts_us, raw):
         mean, std = O.fit_scaler(raw)
         scaled = O.scale(raw, mean, std)
 
@@ -92,7 +90,7 @@ def tokenize_wide(
         symbols = O.digitize_tokens(scaled, edges)
 
         if use_specials:
-            ts_s = pdf["ts"].astype("datetime64[us]").astype(np.int64).to_numpy() // 10**6
+            ts_s = ts_us // 10**6
             spine, is_pad, is_ebos = O.mark_special_tokens_spine(
                 ts_s, freq_seconds, hour_toks
             )
@@ -113,17 +111,18 @@ def tokenize_wide(
             {"left": int(l), "right": int(r), "id": int(i)}
             for (l, r), i in model.merges.items()
         ]
-        return pd.DataFrame(
-            {
-                "series_id": [sid],
-                "mean": [mean],
-                "std": [std],
-                "edges": [list(map(float, edges))],
-                "base_tokens": [base],
-                "merges": [merges],
-                "encoded_tokens": [encoded],
-                "compression": [len(base) / len(encoded) if encoded else 0.0],
-            }
-        )
+        return {
+            "series_id": [sid],
+            "mean": [mean],
+            "std": [std],
+            "edges": [list(map(float, edges))],
+            "base_tokens": [base],
+            "merges": [merges],
+            "encoded_tokens": [encoded],
+            "compression": [len(base) / len(encoded) if encoded else 0.0],
+        }
 
-    return long.groupBy("series_id").applyInPandas(_tokenize, WIDE_ARTIFACT_SCHEMA)
+    return map_series(
+        long, F.col("series_id"), [], [ts_micros("ts"), F.col("value").cast("double")], _tokenize,
+        WIDE_ARTIFACT_SCHEMA,
+    )

@@ -6,10 +6,11 @@ count the plan operators that matter at 100 TB —
     BroadcastNestedLoopJoin / CartesianProduct), Python stages (flagging
     per-row BatchEvalPython — the engine bans it), WholeStageCodegen spans.
 
-Building a DataFrame does not execute it, so the census is cheap (a few
-registry builders run small metadata actions — scaler/edge fits — which is
-their documented driver-side shape). Output: one JSON line per query to
-stdout and the aggregate artifact BENCH/plan_census.json.
+Building a DataFrame does not execute it, so the census is cheap. A few
+builders still fire Spark jobs while building (sampling splits, histogram
+and edge collects); each row records them as ``build_jobs``, counted in a
+job group around the builder. Output: one JSON line per query to stdout
+and the aggregate artifact BENCH/plan_census.json.
 
 Usage: python tools/plan_census.py [sf_dir] [query ...]
 """
@@ -68,18 +69,26 @@ def main():
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
+    sc = spark.sparkContext
     results, flagged = {}, []
     for name, fn in entry.queries().items():
         if only and name not in only:
             continue
+        group = f"plan-census/{name}"
         try:
-            df = fn(spark, sf_dir)
+            sc.setLocalProperty("spark.jobGroup.id", group)
+            try:
+                df = fn(spark, sf_dir)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
             plan = df._jdf.queryExecution().explainString(mode)
         except Exception as e:  # a census must not die on one row
             results[name] = {"error": str(e)[:200]}
             flagged.append((name, "error"))
             continue
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
         c = census(plan)
+        c["build_jobs"] = len(sc.statusTracker().getJobIdsForGroup(group))
         results[name] = c
         for op in FLAG_OPS:
             if c.get(op):
