@@ -387,29 +387,24 @@ def test_connected_components_build_fires_no_job(spark):
 
 
 def test_simhash_table_null_text(spark):
-    """A NULL-text document gets a NULL simhash (as the expression form
-    simhash32 gives); the other rows match simhash32 exactly."""
-    from timeseriestokenizer_spark.operators.dedup import simhash32, simhash_table
+    """A NULL-text document gets a NULL simhash; the other rows match the
+    pure-Python reference simhash32_py exactly."""
+    from timeseriestokenizer_spark.operators.dedup import simhash_table
+    from timeseriestokenizer_spark.oracle.numpy_oracle import simhash32_py
 
-    df = spark.createDataFrame(
-        [(1, "the quick brown fox"), (2, None), (3, "lorem ipsum dolor sit")],
-        "doc_id long, text string",
-    )
+    rows = [(1, "the quick brown fox"), (2, None), (3, "lorem ipsum dolor sit")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {r["id"]: r["sh"] for r in simhash_table(df, "doc_id").collect()}
-    want = {
-        r["doc_id"]: r["sh"]
-        for r in df.select("doc_id", simhash32("text").alias("sh")).collect()
-    }
+    want = {i: None if t is None else simhash32_py(t) for i, t in rows}
     assert got == want
     assert got[2] is None and got[1] is not None
 
 
 def test_simhash_deep_block_combination_recall(spark):
-    """simhash_near_pairs_deep (60-bit, 6C3 Manku block-combination keys):
+    """simhash_near_pairs at 60 bits (6C3 Manku block-combination keys):
     pairs whose flipped bits SPREAD across up to max_hamming blocks — the
     worst case for band blocking — must all be found, and the plan must be
     a hash equi-join."""
-    from timeseriestokenizer_spark.operators.dedup import simhash_near_pairs_deep
     from timeseriestokenizer_spark.oracle.numpy_oracle import simhash60_py
 
     base = ["kappa", "lambda", "omicron", "sigma", "upsilon", "omega", "rho"]
@@ -438,12 +433,81 @@ def test_simhash_deep_block_combination_recall(spark):
     assert found_spread >= 1, "no spread pair found in search space"
 
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = simhash_near_pairs_deep(df, "doc_id", max_hamming=3)
+    got = simhash_near_pairs(df, "doc_id", max_hamming=3, n_bits=60, n_blocks=6)
     plan = got._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan and "CartesianProduct" not in plan
     pairs = {(r["id_a"], r["id_b"]): r["hamming"] for r in got.collect()}
     for a, b, d in expected:
         assert pairs.get((a, b)) == d, (a, b, d, pairs)
+
+
+def test_simhash_near_pairs_matches_bruteforce_hamming(spark):
+    """simhash_near_pairs over a grid of n_bits x n_blocks x max_hamming
+    returns exactly the pairs a brute-force Hamming scan over the
+    pure-Python simhash32_py finds: the block-combination keys lose no pair
+    within max_hamming, and the verify admits none beyond it."""
+    import itertools
+    import random
+
+    from timeseriestokenizer_spark.oracle.numpy_oracle import simhash32_py
+
+    rng = random.Random(13)
+    vocab = [f"t{i}" for i in range(300)]
+    rows = []
+    for i in range(25):
+        words = [rng.choice(vocab) for _ in range(rng.randint(20, 40))]
+        rows.append((i * 10, " ".join(words)))
+        rows.append((i * 10 + 1, " ".join(words)))  # exact dup: Hamming 0
+        edited = list(words)
+        edited[rng.randrange(len(words))] = rng.choice(vocab)
+        rows.append((i * 10 + 2, " ".join(edited)))  # one-word edit
+        rows.append((i * 10 + 3, " ".join(words + [rng.choice(vocab)])))
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+
+    hams = {}
+    for n_bits in (32, 60):
+        fp = {i: simhash32_py(t, n_bits) for i, t in rows}
+        hams[n_bits] = {
+            (a, b): bin(fp[a] ^ fp[b]).count("1")
+            for a, b in itertools.combinations(sorted(fp), 2)
+        }
+    # the corpus plants pairs at every distance the grid searches
+    assert {1, 2, 3} <= set(hams[32].values()) and {1, 2, 3} <= set(hams[60].values())
+
+    for n_bits, n_blocks, max_h in [
+        (32, 4, 3), (32, 4, 1), (32, 5, 2), (32, 6, 3), (60, 6, 3), (60, 6, 2), (60, 4, 1),
+    ]:
+        want = {p: d for p, d in hams[n_bits].items() if d <= max_h}
+        got = {
+            (r["id_a"], r["id_b"]): r["hamming"]
+            for r in simhash_near_pairs(
+                df, "doc_id", max_hamming=max_h, n_bits=n_bits, n_blocks=n_blocks
+            ).collect()
+        }
+        assert got == want, (n_bits, n_blocks, max_h)
+    with pytest.raises(ValueError):
+        simhash_near_pairs(df, "doc_id", n_bits=64)
+
+
+def test_null_text_is_no_near_duplicate(spark):
+    """A NULL-text document has no shingle set: it is nobody's near-dup,
+    not a Jaccard-1.0 twin of every other NULL or empty document, so
+    dedup_survivors keeps it."""
+    from timeseriestokenizer_spark.operators.dedup import (
+        dedup_survivors,
+        ngram_jaccard_pairs,
+    )
+
+    df = spark.createDataFrame(
+        [(1, None), (2, None), (3, ""), (4, "the quick brown fox jumps"),
+         (5, "the quick brown fox jumps over")],
+        "doc_id long, text string",
+    )
+    for pairs in (jaccard_verified_pairs(df, "doc_id"),
+                  ngram_jaccard_pairs(df, "doc_id")):
+        assert {tuple(r) for r in pairs.collect()} == {(4, 5, 0.75)}
+    kept = dedup_survivors(df, jaccard_verified_pairs(df, "doc_id"), "doc_id")
+    assert sorted(r["doc_id"] for r in kept.collect()) == [1, 2, 3, 4]
 
 
 def test_ngram_jaccard_exact_vs_exhaustive(spark):
@@ -500,18 +564,13 @@ def test_lsh_hot_bucket_guard(spark):
     """max_bucket drops only mega-bucket candidates: near-dup pairs with a
     cold band survive; a boilerplate cluster larger than the cap stops
     generating quadratic candidates."""
-    from timeseriestokenizer_spark.operators.dedup import (
-        jaccard_verified_pairs,
-        lsh_candidate_pairs,
-    )
-
     boiler = "lorem ipsum dolor sit amet consectetur adipiscing elit sed do"
     rows = [(i, boiler) for i in range(50)]  # 50 identical docs: hot buckets
     real = "the quick brown fox jumps over the lazy dog tonight quietly now"
     rows += [(100, real), (101, real + " extra")]  # genuine near-dup pair
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
-    capped = lsh_candidate_pairs(df, "doc_id", max_bucket=10)
+    capped = jaccard_verified_pairs(df, "doc_id", threshold=0.0, max_bucket=10)
     got = {tuple(r) for r in capped.select("id_a", "id_b").collect()}
     assert (100, 101) in got          # cold-band pair survives the cap
     assert all(a >= 100 for a, _ in got)  # boilerplate m²/2 pairs gone
@@ -678,10 +737,9 @@ def test_ngram_max_df_guard(spark):
 
 
 def test_simhash_deep_max_bucket_guard(spark):
-    """simhash_near_pairs_deep's hot-bucket guard: identical-fingerprint
+    """simhash_near_pairs' hot-bucket guard at 60 bits: identical-fingerprint
     boilerplate buckets are dropped, genuinely-near pairs with cold block
     keys survive."""
-    from timeseriestokenizer_spark.operators.dedup import simhash_near_pairs_deep
 
     boiler = " ".join(f"viral{i}" for i in range(50))
     rows = [(i, boiler) for i in range(20)]
@@ -689,14 +747,16 @@ def test_simhash_deep_max_bucket_guard(spark):
              (101, "rare words one two three four five six eight")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
 
-    full = simhash_near_pairs_deep(docs, "doc_id", max_hamming=3)
+    full = simhash_near_pairs(docs, "doc_id", max_hamming=3, n_bits=60, n_blocks=6)
     full_pairs = {(r["id_a"], r["id_b"]) for r in full.collect()}
     assert (100, 101) in full_pairs if any(
         p == (100, 101) for p in full_pairs
     ) else True  # the rare pair may exceed hamming 3; boiler pairs must exist
     assert sum(1 for a, b in full_pairs if a < 20 and b < 20) == 20 * 19 // 2
 
-    guarded = simhash_near_pairs_deep(docs, "doc_id", max_hamming=3, max_bucket=10)
+    guarded = simhash_near_pairs(
+        docs, "doc_id", max_hamming=3, n_bits=60, n_blocks=6, max_bucket=10
+    )
     g_pairs = {(r["id_a"], r["id_b"]) for r in guarded.collect()}
     assert not any(a < 20 and b < 20 for a, b in g_pairs)  # boiler dropped
     # cold-key pairs keep exactly the same result as unguarded

@@ -92,18 +92,22 @@ def test_gapfill_single_exchange(spark):
 
 
 def test_simhash_near_pairs_is_equi_join(spark):
-    """4x8-bit band blocking must compile to a hash equi-join — the
-    OR-of-band-equalities predicate form regressed to an O(n²)
-    BroadcastNestedLoopJoin (VERDICT r2 #1)."""
+    """Block-combination blocking (4x8-bit bands at 32 bits, 6C3 keys at
+    60) must compile to a hash equi-join — the OR-of-band-equalities
+    predicate form regressed to an O(n²) BroadcastNestedLoopJoin
+    (VERDICT r2 #1)."""
     from timeseriestokenizer_spark.operators.dedup import simhash_near_pairs
 
     df = spark.createDataFrame(
         [(1, "a b c"), (2, "a b d")], "doc_id long, text string"
     )
-    plan = _plan(simhash_near_pairs(df, "doc_id"))
-    assert "BroadcastNestedLoopJoin" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "Join" in plan  # and it IS a join (hash-based)
+    for n_bits, n_blocks in [(32, 4), (60, 6)]:
+        plan = _plan(
+            simhash_near_pairs(df, "doc_id", n_bits=n_bits, n_blocks=n_blocks)
+        )
+        assert "BroadcastNestedLoopJoin" not in plan, plan
+        assert "CartesianProduct" not in plan, plan
+        assert "Join" in plan  # and it IS a join (hash-based)
 
 
 def test_simhash_band_blocking_recall(spark):

@@ -187,21 +187,6 @@ def test_tpe_roundtrip_tokens_identity(spark):
     assert got == want
 
 
-def test_exact_dedup_verified_matches_md5_path(spark):
-    from timeseriestokenizer_spark.operators.dedup import (
-        exact_dedup,
-        exact_dedup_verified,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "aa"), (2, "bb"), (3, "aa"), (4, "cc"), (5, "bb"), (6, "aa")],
-        "doc_id long, text string",
-    )
-    a = {(r["keeper_doc_id"], r["n_copies"]) for r in exact_dedup(docs, "doc_id").collect()}
-    b = {(r["keeper_doc_id"], r["n_copies"]) for r in exact_dedup_verified(docs, "doc_id").collect()}
-    assert a == b == {(1, 3), (2, 2), (4, 1)}
-
-
 def test_quantile_edges_approx_vs_exact(spark):
     """fit_edges(kind='quantile') uses percentile_approx (the only form that
     distributes at scale); document its delta against exact interpolated

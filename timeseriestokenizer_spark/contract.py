@@ -1977,10 +1977,12 @@ def q_doc_simhash(spark, sf_dir):
 
 
 def q_simhash_near_pairs(spark, sf_dir):
-    """SimHash near-dup pairs: 4x8-bit exact-match band blocking (pigeonhole:
-    n_bands=4 > max_hamming=3, so every pair at Hamming <= 3 leaves at least
-    one band untouched — lossless recall) + exact Hamming verify. The banded
-    self-join is a pure equi-join (hash join, never a nested loop). Oracle
+    """SimHash near-dup pairs at simhash_near_pairs' defaults: 32-bit
+    fingerprint, 4 blocks, max_hamming=3, so each of the 4 keys is one 8-bit
+    band (pigeonhole: n_blocks=4 > max_hamming=3, so every pair at Hamming
+    <= 3 leaves at least one band untouched — lossless recall) + exact
+    Hamming verify. The blocked self-join is a pure equi-join (hash join,
+    never a nested loop). Oracle
     reproduces the blocking and popcount with boring arithmetic only
     (mod/floor — the round-1 driver diverged on >>/& bit operators)."""
     from .operators.dedup import simhash_near_pairs

@@ -2,20 +2,26 @@
 SimHash, and n-gram Jaccard verification.
 
 Scale notes (the 100TB story):
-* exact dedup groups on a 64-bit content hash, not the raw text — the shuffle
-  carries 8-byte keys; only within-hash-group ties touch full text.
+* exact dedup groups on md5(text), not the raw text — the shuffle carries
+  a fixed-width key, never the wide text column.
 * all string semantics (tokenization, md5 shingle/word hashing) stay Catalyst
   in the cached shingle tables; the permutation/vote ARITHMETIC over those
   int64 hashes runs as vectorized numpy per Arrow batch (guide §4.2 — the
   interpreted HOF forms cost seconds where the math is milliseconds), so
   only integer arrays ever cross the Python boundary.
-* LSH banding turns O(n²) similarity into a self-equi-join on
-  (band_id, band_signature) — shuffle-partitioned by band key, so candidate
-  generation is linear in docs + quadratic only within a bucket.
-* the exact-Jaccard verify runs only on LSH candidates (tiny).
+* every near-duplicate candidate generator (MinHash bands, SimHash block
+  combinations, n-gram prefixes) is one blocked self-equi-join,
+  ``_blocked_pairs`` — shuffle-partitioned by block key, so candidate
+  generation is linear in docs + quadratic only within a block, and its
+  opt-in hot-bucket guard bounds that quadratic term.
+* the exact Jaccard / Hamming verify runs only on candidates (tiny).
 """
 
 from __future__ import annotations
+
+from functools import reduce
+from itertools import combinations
+from operator import and_
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -29,7 +35,7 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame
     Returns (keeper id, n_copies). Groups by md5(text) — a 32-char hex key
     on the shuffle instead of the wide text column; md5 collisions are
     treated as equality (probability ~n²/2^128, negligible below ~10^18
-    documents; use exact_dedup_verified when that is not acceptable)."""
+    documents)."""
     return (
         df.select(F.col(id_col), F.md5(text_col).alias("_h"))
         .groupBy("_h")
@@ -38,24 +44,6 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame
             F.count(F.lit(1)).alias("n_copies"),
         )
         .drop("_h")
-    )
-
-
-def exact_dedup_verified(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
-    """Collision-proof exact dedup: group by (xxhash64, md5) of the text —
-    two independent hash families must BOTH collide to merge distinct
-    documents. The shuffle key is still fixed-width (8 bytes + 32 hex); the
-    text column never rides the shuffle."""
-    return (
-        df.select(
-            F.col(id_col), F.xxhash64(text_col).alias("_h1"), F.md5(text_col).alias("_h2")
-        )
-        .groupBy("_h1", "_h2")
-        .agg(
-            F.min(id_col).alias(f"keeper_{id_col}"),
-            F.count(F.lit(1)).alias("n_copies"),
-        )
-        .drop("_h1", "_h2")
     )
 
 
@@ -109,7 +97,12 @@ def shingle_sets(
     group file (the classic small-files problem) pins ALL hashing to one
     task (measured 23 s single-task vs ~1 s spread on 5k docs). The shuffle
     moves only raw text once; leave None when the source already has enough
-    splits."""
+    splits.
+
+    A NULL-text document has no shingle set and no row: word_shingles
+    would give it the empty document's one-shingle set [""], making it a
+    Jaccard-1.0 near-duplicate of every other NULL or empty document."""
+    df = df.filter(F.col(text_col).isNotNull())
     if parallelism:
         df = df.repartition(parallelism, id_col)
     return hold(df.select(
@@ -118,19 +111,62 @@ def shingle_sets(
     ))
 
 
+def _blocked_pairs(
+    keys: DataFrame,
+    block: tuple[str, ...],
+    max_bucket: int | None = None,
+    carry: tuple[str, ...] = (),
+) -> DataFrame:
+    """Candidate pairs (id_a < id_b) of ``keys`` rows (an ``id`` column
+    plus the ``block`` columns) that agree on every ``block`` column — each
+    pair once, however many blocks it shares. Each ``carry`` column comes
+    back for both sides as ``<col>_a`` / ``<col>_b``.
+
+    One self EQUI-join on the block columns: a shuffle/broadcast hash join,
+    linear in rows and quadratic only within a block. (An OR of
+    per-block equalities has no extractable equi-key and compiles to a
+    BroadcastNestedLoopJoin, O(n²) at scale — test_plan_shapes pins the
+    hash-join form.)
+
+    ``max_bucket`` (opt-in hot-bucket guard): blocks holding more than this
+    many rows are dropped before the join. One block value shared by m rows
+    yields m²/2 candidates — one viral boilerplate string shared by 1M docs
+    is 5·10¹¹ pairs, the way a blocked self-join dies at corpus scale.
+    Capping trades recall ONLY on pairs whose every shared block is hot
+    (typically boilerplate/empty content, which exact_dedup upstream in the
+    funnel already collapsed); normal near-dup pairs keep their rare blocks.
+    None (default) = exact blocking, what the contract oracles reproduce."""
+    if max_bucket is not None:
+        hot = (
+            keys.groupBy(*block)
+            .count()
+            .filter(F.col("count") > int(max_bucket))
+            .select(*block)
+        )
+        keys = keys.join(F.broadcast(hot), list(block), "left_anti")
+    a, b = keys.alias("a"), keys.alias("b")
+    on = reduce(
+        and_,
+        [F.col(f"a.{c}") == F.col(f"b.{c}") for c in block]
+        + [F.col("a.id") < F.col("b.id")],
+    )
+    return (
+        a.join(b, on)
+        .select(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            *[F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in carry for s in "ab"],
+        )
+        .distinct()
+    )
+
+
 def _bands_from_sets(
     sets_: DataFrame, n_hashes: int, n_bands: int, max_bucket: int | None = None
 ) -> DataFrame:
-    """Candidate pairs (id_a < id_b) from banded minhash signatures.
-
-    ``max_bucket`` (opt-in): exclude band buckets holding more than this
-    many docs from the self-join. A single degenerate band value shared by
-    m docs yields m²/2 candidates — one viral boilerplate string shared by
-    1M docs is 5·10¹¹ pairs, the way an LSH self-join dies at corpus scale.
-    Capping trades recall ONLY on pairs whose every matching band is hot
-    (typically boilerplate/empty content, which exact_dedup upstream in the
-    funnel already collapsed); normal near-dup pairs keep their rare bands.
-    None (default) = exact blocking, what the contract oracles reproduce."""
+    """Candidate pairs (id_a < id_b) from banded minhash signatures: docs
+    sharing any one (band_id, band_sig). ``max_bucket``: _blocked_pairs'
+    hot-bucket guard."""
     rows_per_band = n_hashes // n_bands
     # signature + banding vectorized in numpy per Arrow batch (guide §4.2):
     # the nested-HOF form (transform×array_min per permutation, then a
@@ -175,45 +211,7 @@ def _bands_from_sets(
     bands = hold(sets_.select("id", "hs").mapInPandas(
         _band_rows, f"id {id_type}, band_id int, band_sig string"
     ))
-    if max_bucket is not None:
-        hot = (
-            bands.groupBy("band_id", "band_sig")
-            .count()
-            .filter(F.col("count") > max_bucket)
-            .select("band_id", "band_sig")
-        )
-        bands = bands.join(F.broadcast(hot), ["band_id", "band_sig"], "left_anti")
-    a = bands.alias("a")
-    b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-
-
-def lsh_candidate_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    k: int = 3,
-    n_hashes: int = 6,
-    n_bands: int = 3,
-    parallelism: int | None = None,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """Banded-LSH candidate pairs (id_a < id_b), deduplicated across bands.
-    rows_per_band = n_hashes / n_bands. ``max_bucket``: see
-    _bands_from_sets (hot-bucket guard for corpus-scale skew)."""
-    return _bands_from_sets(
-        shingle_sets(df, id_col, text_col, k, parallelism), n_hashes, n_bands,
-        max_bucket,
-    )
+    return _blocked_pairs(bands, ("band_id", "band_sig"), max_bucket)
 
 
 def jaccard_verified_pairs(
@@ -231,7 +229,7 @@ def jaccard_verified_pairs(
     60-bit-hashed shingle sets (only candidates pay the intersection;
     hashing collisions perturb Jaccard by ~1e-11 — the standard trade at
     scale, where raw shingle strings are never materialized twice).
-    ``max_bucket``: see _bands_from_sets (hot-bucket guard)."""
+    ``max_bucket``: _blocked_pairs' hot-bucket guard on the band buckets."""
     sets_ = shingle_sets(df, id_col, text_col, k, parallelism)
     cands = _bands_from_sets(sets_, n_hashes, n_bands, max_bucket)
     return _verify_jaccard(cands, sets_, threshold)
@@ -285,29 +283,19 @@ def ngram_jaccard_pairs(
     corpora, two extra shuffles). Correctness is unconditional under ANY
     global total order.
 
-    ``max_df`` (hot-shingle guard, the prefix-filter twin of MinHash's
-    ``max_bucket``): prefix hashes whose document frequency exceeds it are
-    EXCLUDED from candidate generation. A shingle shared by d docs
-    contributes ~d^2/2 candidate rows — one viral boilerplate shingle at
-    d=10^5 is 5*10^9 rows, the quadratic blow-up that flooded 29 GB of
-    shuffle on a dense-vocab 50k-doc corpus (BENCH/sf1 round 4). The trade
-    is EXACTNESS: a pair whose prefix overlap consists ONLY of excluded
-    hot shingles is missed (boilerplate-only similarity — usually exactly
-    what dedup wants to ignore); pairs sharing any rarer prefix shingle
-    are still found and still exactly verified. None (default) keeps the
-    lossless guarantee."""
+    ``max_df`` (hot-shingle guard): prefix hashes whose document frequency
+    exceeds it are EXCLUDED from candidate generation — under "hash" order
+    it is _blocked_pairs' ``max_bucket`` on the prefix-hash blocks, under
+    "df" order a filter on the document frequencies already joined. A
+    shingle shared by d docs contributes ~d^2/2 candidate rows — one viral
+    boilerplate shingle at d=10^5 is 5*10^9 rows, the quadratic blow-up
+    that flooded 29 GB of shuffle on a dense-vocab 50k-doc corpus (BENCH/sf1
+    round 4). The trade is EXACTNESS: a pair whose prefix overlap consists
+    ONLY of excluded hot shingles is missed (boilerplate-only similarity —
+    usually exactly what dedup wants to ignore); pairs sharing any rarer
+    prefix shingle are still found and still exactly verified. None
+    (default) keeps the lossless guarantee."""
     sets_ = shingle_sets(df, id_col, text_col, k, parallelism)
-    pref_len = (F.size("hs") - F.ceil(F.lit(float(threshold)) * F.size("hs")) + 1).cast("int")
-    pref = sets_.select(
-        "id", F.explode(F.slice(F.array_sort("hs"), F.lit(1), pref_len)).alias("h")
-    )
-    if max_df is not None and order != "df":
-        hot = (
-            pref.groupBy("h").agg(F.count(F.lit(1)).alias("df_h"))
-            .filter(F.col("df_h") > int(max_df))
-            .select("h")
-        )
-        pref = pref.join(hot, "h", "left_anti")
     if order == "df":
         # All-Pairs refinement: a GLOBAL order by ascending document
         # frequency puts the RAREST shingles in every prefix, so hot
@@ -335,49 +323,17 @@ def ngram_jaccard_pairs(
             # reuse the df counts already joined for the ordering
             pref = pref.filter(F.col("df_h") <= int(max_df))
         pref = pref.select("id", "h")
-    cands = (
-        pref.alias("a")
-        .join(
-            pref.alias("b"),
-            (F.col("a.h") == F.col("b.h")) & (F.col("a.id") < F.col("b.id")),
+    else:
+        pref_len = (
+            F.size("hs") - F.ceil(F.lit(float(threshold)) * F.size("hs")) + 1
+        ).cast("int")
+        pref = sets_.select(
+            "id", F.explode(F.slice(F.array_sort("hs"), F.lit(1), pref_len)).alias("h")
         )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    # under hash order a prefix hash's block size is its document frequency
+    # among the prefixes, so the helper's guard is the max_df filter
+    cands = _blocked_pairs(pref, ("h",), None if order == "df" else max_df)
     return _verify_jaccard(cands, sets_, threshold)
-
-
-def simhash32(text_col="text"):
-    """32-bit SimHash over whitespace tokens, token hash = first 8 md5 hex
-    digits (portable). Bit b set iff the signed token-count sum is > 0.
-
-    Single pass: one aggregate carries a 32-slot vote vector, so each word is
-    md5-hashed exactly once. (The naive 32-separate-aggregates form
-    re-evaluates the md5 transform per bit — 32x the hashing; measured 10.9 s
-    → ~1 s on the sf0.1 documents table.)"""
-    words = F.split(F.lower(F.trim(text_col)), r"\s+")
-    hashes = F.transform(
-        words, lambda w: F.conv(F.substring(F.md5(w), 1, 8), 16, 10).cast("long")
-    )
-    masks = F.array(*[F.lit(1 << b).cast("long") for b in range(32)])
-
-    def _vote(acc, h):
-        return F.zip_with(
-            acc,
-            masks,
-            lambda a, m: a + F.when(h.bitwiseAND(m) != 0, 1).otherwise(-1),
-        )
-
-    votes = F.aggregate(
-        hashes, F.array_repeat(F.lit(0).cast("long"), 32), _vote
-    )
-    return F.aggregate(
-        F.zip_with(
-            votes, masks, lambda v, m: F.when(v > 0, m).otherwise(F.lit(0).cast("long"))
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
 
 
 def simhash_table(
@@ -387,17 +343,25 @@ def simhash_table(
     n_bits: int = 32,
     out_col: str = "sh",
 ) -> DataFrame:
-    """(id, simhash) with the bit votes vectorized in numpy (guide §4.2).
+    """(id, simhash): the ``n_bits`` SimHash over lowercase whitespace
+    tokens. Token hash = the first n_bits/4 md5 hex digits of the word (8
+    for 32 bits; 15 for 60, which stays inside a signed int64, the same
+    trick as shingle_hashes); bit b is set iff the signed per-bit vote over
+    the tokens is > 0. NULL text gets a NULL simhash. ``n_bits`` is 32 or
+    60; anything else raises ValueError.
 
-    The expression form's per-word vote is an interpreted
-    aggregate×zip_with allocating a fresh n_bits-slot array per WORD
-    (~32M lambda evals + 1M allocs on the 5k-doc fixture, >1 s where the
-    arithmetic is milliseconds). Tokenization and the md5 word hashes stay
-    Catalyst — Java regex \\s+ and UTF8String lowercasing never cross into
-    Python, only int64 hash arrays do — and the vote/majority/assemble
-    math is exact integer arithmetic, identical in numpy."""
+    The bit votes run vectorized in numpy (guide §4.2): an expression
+    form's per-word vote is an interpreted aggregate×zip_with allocating a
+    fresh n_bits-slot array per WORD (~32M lambda evals + 1M allocs on the
+    5k-doc fixture, >1 s where the arithmetic is milliseconds).
+    Tokenization and the md5 word hashes stay Catalyst — Java regex \\s+
+    and UTF8String lowercasing never cross into Python, only int64 hash
+    arrays do — and the vote/majority/assemble math is exact integer
+    arithmetic, identical in numpy."""
+    n_hex = {32: 8, 60: 15}.get(n_bits)
+    if n_hex is None:
+        raise ValueError(f"n_bits={n_bits} must be 32 or 60")
     words = F.split(F.lower(F.trim(text_col)), r"\s+")
-    n_hex = {32: 8, 60: 15}[n_bits]
     hashes = F.transform(
         words, lambda w: F.conv(F.substring(F.md5(w), 1, n_hex), 16, 10).cast("long")
     )
@@ -431,77 +395,66 @@ def simhash_near_pairs(
     id_col: str,
     text_col: str = "text",
     max_hamming: int = 3,
-    n_bands: int = 4,
+    n_bits: int = 32,
+    n_blocks: int = 4,
     max_bucket: int | None = None,
 ) -> DataFrame:
-    """SimHash near-dup pairs by Hamming distance, blocked on exact-match
-    bands: the 32-bit hash is split into ``n_bands`` contiguous bit bands
-    (8 bits each for the default 4). Pigeonhole: a pair at Hamming distance
-    ``d`` flips bits in at most ``d`` bands, so with ``n_bands > max_hamming``
-    at least one band is UNTOUCHED and the pair is guaranteed to collide
-    there — the blocking is lossless for Hamming ≤ max_hamming (the earlier
-    2-half-band form silently missed e.g. a 2+1 split across halves).
+    """SimHash near-dup pairs (id_a, id_b, hamming) with Hamming distance
+    ≤ ``max_hamming``, blocked on BLOCK COMBINATIONS (Manku/Jain/Das Sarma,
+    "Detecting Near-Duplicates for Web Crawling", WWW'07 §3): the
+    ``n_bits`` fingerprint (simhash_table) is split into ``n_blocks``
+    contiguous blocks of n_bits // n_blocks bits, and every
+    (n_blocks − max_hamming)-subset of blocks is one exact-match key,
+    ``sh & mask``. Pigeonhole: a pair at Hamming distance d flips bits in
+    at most d blocks, so with n_blocks > max_hamming at least one subset is
+    untouched and the pair collides on it — the blocking is lossless for
+    Hamming ≤ max_hamming. Candidates pay one exact popcount verify.
 
-    Plan shape: explode each doc to its (band_id, band_val) rows, then a
-    single self EQUI-join on both columns — a shuffle/broadcast hash join on
-    a ≤(2+8)-bit key. (An OR-of-band-equalities predicate has no extractable
-    equi-key and compiles to BroadcastNestedLoopJoin, O(n²) at scale —
-    test_plan_shapes pins the hash-join form.) The simhash table is cached
-    so the per-word md5 pass runs once, not once per self-join side."""
-    if n_bands <= max_hamming:
+    At the defaults (32 bits, 4 blocks, Hamming 3) the keys are the four
+    8-bit bands, buckets ~n/2^8 — the row the DuckDB oracle checks.
+    ``n_bits=60, n_blocks=6`` is the corpus-scale setting, where 32 bits
+    saturate (birthday collisions ~2^16 docs): 6-choose-3 = 20 keys of 30
+    bits, buckets ~n/2^30, the difference between linear and quadratic
+    candidate generation at 10^8+ docs. Cost: C(n_blocks, max_hamming) key
+    rows per doc, still one equi-join (_blocked_pairs). The simhash table
+    is cached so the per-word md5 pass runs once, not once per join side.
+
+    ``max_bucket``: _blocked_pairs' hot-bucket guard on the (combo, key)
+    blocks. d identical fingerprints (viral boilerplate) share every key
+    and cost C(n_blocks, max_hamming)·d²/2 candidate rows unguarded; under
+    the guard a pair whose only shared keys are hot is missed — run exact
+    dedup first, which is where identical text belongs anyway. With
+    max_hamming < n_blocks − 1 each key spans several blocks, so the guard
+    counts smaller buckets than a one-block banding of the same
+    fingerprint would and can drop different pairs."""
+    if n_blocks <= max_hamming:
         raise ValueError(
-            f"n_bands={n_bands} must exceed max_hamming={max_hamming} for "
-            "the exact-match banding to be lossless (pigeonhole)"
+            f"n_blocks={n_blocks} must exceed max_hamming={max_hamming} for "
+            "the exact-match blocking to be lossless (pigeonhole)"
         )
-    bits_per = 32 // n_bands
-    mask = (1 << bits_per) - 1
-    s = hold(simhash_table(df, id_col, text_col, n_bits=32))
-    bands = s.select(
+    s = hold(simhash_table(df, id_col, text_col, n_bits=n_bits))
+    bits_per = n_bits // n_blocks
+    block_mask = (1 << bits_per) - 1
+    masks = [
+        sum(block_mask << (b * bits_per) for b in combo)
+        for combo in combinations(range(n_blocks), n_blocks - max_hamming)
+    ]
+    keys = s.select(
         "id",
         "sh",
         F.explode(
             F.array(
                 *[
                     F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.shiftright("sh", b * bits_per)
-                        .bitwiseAND(F.lit(mask))
-                        .alias("band_val"),
+                        F.lit(ci).alias("combo"),
+                        F.col("sh").bitwiseAND(F.lit(m)).alias("key"),
                     )
-                    for b in range(n_bands)
+                    for ci, m in enumerate(masks)
                 ]
             )
-        ).alias("band"),
-    ).select("id", "sh", "band.band_id", "band.band_val")
-    if max_bucket is not None:
-        # hot-bucket guard (same trade as _bands_from_sets): a band value
-        # shared by m docs is m²/2 candidates; degenerate content (empty/
-        # boilerplate docs hashing to the same simhash) makes one bucket
-        # quadratic at corpus scale. Dropping buckets > max_bucket keeps
-        # the lossless guarantee for every pair that retains a cold band.
-        hot = (
-            bands.groupBy("band_id", "band_val")
-            .count()
-            .filter(F.col("count") > max_bucket)
-            .select("band_id", "band_val")
-        )
-        bands = bands.join(F.broadcast(hot), ["band_id", "band_val"], "left_anti")
-    a, b = bands.alias("a"), bands.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.sh").alias("sh_a"),
-            F.col("b.sh").alias("sh_b"),
-        )
-        .distinct()
-    )
+        ).alias("k"),
+    ).select("id", "sh", "k.combo", "k.key")
+    cands = _blocked_pairs(keys, ("combo", "key"), max_bucket, carry=("sh",))
     xor = F.col("sh_a").bitwiseXOR(F.col("sh_b"))
     return (
         cands.withColumn("hamming", F.bit_count(xor))
@@ -573,129 +526,6 @@ def _star_rounds(edges: DataFrame, max_iter: int) -> tuple[DataFrame, int]:
         if changed == 0:
             break
     return e, rounds
-
-
-def simhash60(text_col="text"):
-    """60-bit SimHash (token hash = first 15 md5 hex digits — stays inside a
-    signed int64, the same trick as shingle_hashes), single-pass 60-slot
-    vote. The 32-bit simhash32 is the oracle-checked default; this one
-    exists for corpus-scale near-pair search where 32 bits saturate
-    (birthday collisions ~2^16 docs) and 8-bit bands stop filtering."""
-    words = F.split(F.lower(F.trim(text_col)), r"\s+")
-    hashes = F.transform(
-        words, lambda w: F.conv(F.substring(F.md5(w), 1, 15), 16, 10).cast("long")
-    )
-    masks = F.array(*[F.lit(1 << b).cast("long") for b in range(60)])
-
-    def _vote(acc, h):
-        return F.zip_with(
-            acc,
-            masks,
-            lambda a, m: a + F.when(h.bitwiseAND(m) != 0, 1).otherwise(-1),
-        )
-
-    votes = F.aggregate(hashes, F.array_repeat(F.lit(0).cast("long"), 60), _vote)
-    return F.aggregate(
-        F.zip_with(
-            votes, masks, lambda v, m: F.when(v > 0, m).otherwise(F.lit(0).cast("long"))
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
-def simhash_near_pairs_deep(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    max_hamming: int = 3,
-    n_blocks: int = 6,
-    max_bucket: int | None = None,
-) -> DataFrame:
-    """Corpus-scale SimHash near-pairs: 60-bit fingerprint + BLOCK-COMBINATION
-    blocking (Manku/Jain/Das Sarma, "Detecting Near-Duplicates for Web
-    Crawling", WWW'07 §3): split the hash into ``n_blocks`` blocks and use
-    every (n_blocks - max_hamming)-subset of blocks as an exact-match key.
-    A pair at Hamming ≤ d flips bits in ≤ d blocks, leaving ≥ n_blocks - d
-    untouched — so at least one subset matches completely: lossless recall,
-    like the 4x8-bit scheme, but each key carries (n_blocks-d)/n_blocks of
-    the hash bits (30 of 60 for 6C3) instead of 8 of 32, so bucket sizes
-    stay ~n/2^30 instead of ~n/2^8 — the difference between linear and
-    quadratic candidate generation at 10^8+ docs. Cost: C(n_blocks, d)
-    keys per doc (20 for 6 choose 3) on the explode, still one equi-join.
-
-    Engine-tested (pytest recall + plan shape); the oracle-checked contract
-    row stays on the 32-bit variant whose arithmetic DuckDB reproduces.
-
-    ``max_bucket`` (hot-bucket guard, same trade as the 32-bit variant's):
-    (combo_id, combo_key) buckets larger than it are dropped from candidate
-    generation. d exact-duplicate fingerprints (viral boilerplate) share
-    EVERY combo key, costing C(n_blocks,d)*d^2/2 candidate rows unguarded;
-    pairs whose only matching combos are viral are missed under the guard —
-    run exact dedup first, which is where identical text belongs anyway."""
-    from itertools import combinations
-
-    if n_blocks <= max_hamming:
-        raise ValueError(
-            f"n_blocks={n_blocks} must exceed max_hamming={max_hamming}"
-        )
-    total_bits = 60
-    bits_per = total_bits // n_blocks
-    mask = (1 << bits_per) - 1
-    keep = n_blocks - max_hamming
-    combos = list(combinations(range(n_blocks), keep))
-    s = hold(simhash_table(df, id_col, text_col, n_bits=60))
-
-    def _block(b):
-        return F.shiftright("sh", b * bits_per).bitwiseAND(F.lit(mask))
-
-    keys = s.select(
-        "id",
-        "sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(ci).alias("combo_id"),
-                        F.concat_ws(
-                            "|", *[_block(b).cast("string") for b in combo]
-                        ).alias("combo_key"),
-                    )
-                    for ci, combo in enumerate(combos)
-                ]
-            )
-        ).alias("k"),
-    ).select("id", "sh", "k.combo_id", "k.combo_key")
-    if max_bucket is not None:
-        hot = (
-            keys.groupBy("combo_id", "combo_key")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > int(max_bucket))
-            .select("combo_id", "combo_key")
-        )
-        keys = keys.join(hot, ["combo_id", "combo_key"], "left_anti")
-    a, b = keys.alias("a"), keys.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.combo_id") == F.col("b.combo_id"))
-            & (F.col("a.combo_key") == F.col("b.combo_key"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.sh").alias("sh_a"),
-            F.col("b.sh").alias("sh_b"),
-        )
-        .distinct()
-    )
-    xor = F.col("sh_a").bitwiseXOR(F.col("sh_b"))
-    return (
-        cands.withColumn("hamming", F.bit_count(xor))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-    )
 
 
 def connected_components(
@@ -819,7 +649,8 @@ def ngram_contamination(
     hashes (fixed-width ints, never text) and the check is one semi-join
     from exploded eval shingles — linear shuffle in corpus size; eval sets
     are typically small enough that AQE broadcasts them. No Python in the
-    plan. Returns (id_col, n_shingles, contamination)."""
+    plan. Returns (id_col, n_shingles, contamination); a NULL-text doc has
+    no shingles on either side and no output row (shingle_sets)."""
     tr = (
         shingle_sets(train, id_col, text_col, k, parallelism)
         .select(F.explode("hs").alias("h"))
@@ -871,7 +702,8 @@ def span_contamination(
     Returns (id_col, n_grams, n_hit, max_span_tokens); span converts from
     gram-run length L to tokens as min(L + w - 1, n_words) — the min
     handles the shorter-than-w doc branch, whose single whole-text gram
-    can only ever span the doc itself.
+    can only ever span the doc itself. NULL-text docs have no gram on
+    either side and no output row, the rule of shingle_sets.
 
     The positional eval side is cached (``session.hold``). It is the BIG
     corpus when a decontamination job swaps roles (train docs screened
@@ -884,6 +716,7 @@ def span_contamination(
         .select(F.explode("hs").alias("h"))
         .distinct()
     )
+    eval_df = eval_df.filter(F.col(text_col).isNotNull())
     if parallelism:
         # same single-row-group trap as shingle_sets: without a spread the
         # eval side's positional md5 hashing pins to the source's (often

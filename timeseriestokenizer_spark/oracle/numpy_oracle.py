@@ -208,11 +208,12 @@ def chronos_rebin(x: np.ndarray, edges: np.ndarray) -> np.ndarray:
 
 
 def simhash32_py(text: str, n_bits: int = 32) -> int:
-    """Pure-Python twin of operators/dedup.simhash32 (token hash = first 8
-    md5 hex digits of each lowercase whitespace word, signed per-bit vote,
-    bit set iff vote > 0) — lets tests craft inputs with targeted Hamming
-    geometry without a Spark round-trip. n_bits=60 gives the simhash60
-    twin (token hash = first 15 hex digits)."""
+    """Pure-Python reference for operators/dedup.simhash_table (token hash =
+    first 8 md5 hex digits of each lowercase whitespace word, signed
+    per-bit vote, bit set iff vote > 0) — tests compare the engine against
+    it and craft inputs with targeted Hamming geometry without a Spark
+    round-trip. n_bits=60 gives the 60-bit fingerprint (token hash = first
+    15 hex digits)."""
     import hashlib
 
     hex_digits = n_bits // 4
@@ -225,7 +226,7 @@ def simhash32_py(text: str, n_bits: int = 32) -> int:
 
 
 def simhash60_py(text: str) -> int:
-    """Twin of operators/dedup.simhash60."""
+    """simhash32_py at 60 bits: simhash_table(n_bits=60)'s reference."""
     return simhash32_py(text, n_bits=60)
 
 

@@ -89,7 +89,7 @@ def run_ops(spark, path: str, ui_port: int) -> dict:
         connected_components,
         jaccard_verified_pairs,
         ngram_jaccard_pairs,
-        simhash_near_pairs_deep,
+        simhash_near_pairs,
         span_contamination,
     )
     from timeseriestokenizer_spark.operators.similarity import (
@@ -152,14 +152,17 @@ def run_ops(spark, path: str, ui_port: int) -> dict:
     timed(
         "simhash_deep",
         lambda: {
-            "n_pairs": simhash_near_pairs_deep(docs, "doc_id", max_hamming=3).count()
+            "n_pairs": simhash_near_pairs(
+                docs, "doc_id", max_hamming=3, n_bits=60, n_blocks=6
+            ).count()
         },
     )
     timed(
         "simhash_deep_guarded",
         lambda: {
-            "n_pairs": simhash_near_pairs_deep(
-                docs, "doc_id", max_hamming=3, max_bucket=200
+            "n_pairs": simhash_near_pairs(
+                docs, "doc_id", max_hamming=3, n_bits=60, n_blocks=6,
+                max_bucket=200,
             ).count()
         },
     )
