@@ -359,6 +359,33 @@ def test_retention_sweep_store(spark, tmp_path):
     raw.unpersist()
 
 
+@pytest.mark.parametrize("ts_type", ["timestamp", "timestamp_ntz"])
+def test_base_tier_schema_is_what_spark_infers(spark, tmp_path, ts_type):
+    """retention_sweep reads the expiring 1m day with a declared schema: it
+    must be the one Spark infers for a freshly written day, whichever
+    timestamp type the raw ``ts`` has, and the read runs no Spark job."""
+    from timeseriestokenizer_spark.plans.incremental import _BASE_TIER_SCHEMA
+
+    raw = transcripts_df(spark, C=4, seed=17).withColumn("ts", F.col("ts").cast(ts_type))
+    assert dict(raw.dtypes)["ts"] == ts_type
+    day = str(raw.select(F.min(F.to_date("ts"))).first()[0])
+    store = str(tmp_path / "st")
+    refresh_tiers(spark, raw, store, days=[day], mode="per_day", with_hll=False,
+                  with_hist=False, with_kll=False, with_heavy=False, with_cms=False,
+                  with_kmv=False)
+    part = os.path.join(store, "1m", f"day={day}")
+
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", "declared-schema-read")
+    try:
+        declared = spark.read.schema(_BASE_TIER_SCHEMA).parquet(part).schema
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup("declared-schema-read")) == []
+    assert declared == spark.read.parquet(part).schema
+
+
 def test_compact_store(spark, tmp_path):
     """Compaction rewrites many-file day partitions to the target file
     count with identical rows, skips already-compact days (idempotent)."""

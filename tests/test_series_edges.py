@@ -2,7 +2,9 @@
 ``operators.series.map_series``: empty input, a single-point series, and a
 series with one NULL value. A NaN a kernel computes must come back as NULL.
 The expected rows are the outputs of the mapInPandas implementations these
-operators replaced."""
+operators replaced, except the NULL-series rows of ``rdp_keep``,
+``tpe_train`` and ``tpe_roundtrip_tokens``: those implementations failed
+the task, and these operators skip the NULL value instead."""
 
 import datetime as dt
 
@@ -24,11 +26,8 @@ def _frame(spark, vals):
     return spark.createDataFrame(rows, SCHEMA)
 
 
-# the kernel converts each value to int, so a NULL fails the task
-RAISES = PythonException
-
 # op -> (build, empty-input columns or the ValueError message, single-point
-# rows, NULL-series rows or RAISES)
+# rows, NULL-series rows)
 CASES = {
     "ewma": (
         smoothing.ewma,
@@ -80,7 +79,7 @@ CASES = {
         lambda d: downsample.rdp_keep(d, key="conv_id", epsilon=1),
         ["event_id", "kept"],
         [(1, 1)],
-        RAISES,
+        [(1, 1), (3, 1), (4, 1)],  # the NULL value is skipped, as in ewma
     ),
     "lttb_downsample": (
         lambda d: downsample.lttb_downsample(d, n_out=3),
@@ -113,13 +112,13 @@ CASES = {
         lambda d: tpe.tpe_train(d, "conv_id", "token", "pos", 12, 7),
         ["series_id", "actual_vocab_size", "merges", "in_len", "out_len"],
         [("a", 7, [], 1, 1)],
-        RAISES,
+        [("a", 7, [(1, 3, 8), (8, 2, 9)], 3, 1)],  # the NULL token is skipped
     ),
     "tpe_roundtrip_tokens": (
         lambda d: tpe.tpe_roundtrip_tokens(d, "conv_id", "token", "pos", 12, 7),
         ["series_id", "pos", "token"],
         [("a", 0, 5)],
-        RAISES,
+        [("a", 0, 1), ("a", 2, 3), ("a", 3, 2)],  # the NULL token is skipped
     ),
 }
 
@@ -139,11 +138,7 @@ def test_edge_cases(spark, op):
         assert out.columns == empty_cols
         assert out.collect() == []
     assert rows([5.0]) == single
-    if with_null is RAISES:
-        with pytest.raises(PythonException):
-            rows([1.0, None, 3.0, 2.0])
-    else:
-        assert rows([1.0, None, 3.0, 2.0]) == with_null
+    assert rows([1.0, None, 3.0, 2.0]) == with_null
 
 
 def test_kernel_columns_of_unequal_length_raise(spark):

@@ -363,9 +363,11 @@ def rdp_keep(
     kept set with no tolerance. First/last points always survive; a
     series of ≤ 2 points is kept whole.
 
-    Emits (id_col, kept int) for EVERY input point, the swinging_door
-    contract shape. ``epsilon`` is in the same integer units as
-    ``val_col`` (pass cents with an integer-cents column).
+    Emits (id_col, kept int) for EVERY non-NULL input point, the
+    swinging_door contract shape. A NULL value is skipped, as in ewma and
+    sample_entropy: it is no point of the series and gets no row, and the
+    positions count the remaining points. ``epsilon`` is in the same
+    integer units as ``val_col`` (pass cents with an integer-cents column).
 
     Scale shape: the same one-exchange batched-arrays form as
     swinging_door/ewma — series collapse to sorted arrays JVM-side,
@@ -412,6 +414,6 @@ def rdp_keep(
         ]
     )
     return map_series(
-        df, F.col(key), [ts_micros(ts_col)],
+        df.filter(F.col(val_col).isNotNull()), F.col(key), [ts_micros(ts_col)],
         [F.col(id_col), F.col(val_col).cast("long")], _rdp, schema,
     )

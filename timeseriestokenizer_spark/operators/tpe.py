@@ -74,7 +74,9 @@ def tpe_train(
     exchange), then Python trains Arrow batches of whole series
     (``series.map_series``) — grouped-map dispatch costs ~25 ms/group in a
     coalesced task, which dominates when series are short (see
-    BENCH/PLANS.md §5)."""
+    BENCH/PLANS.md §5). A NULL token is skipped, as in ewma and
+    sample_entropy: it is no token of the series (``in_len`` does not
+    count it)."""
 
     def _train(sid, toks):
         toks = [int(t) for t in toks]
@@ -88,7 +90,8 @@ def tpe_train(
                 "merges": [merges], "in_len": [len(toks)], "out_len": [len(out)]}
 
     return map_series(
-        df, F.col(key), [F.col(order_col)], [F.col(token_col)], _train, MODEL_SCHEMA
+        df.filter(F.col(token_col).isNotNull()), F.col(key), [F.col(order_col)],
+        [F.col(token_col)], _train, MODEL_SCHEMA,
     )
 
 
@@ -210,7 +213,9 @@ def tpe_roundtrip_tokens(
     output must equal the input ``(order, token)`` rows exactly, so a plain
     SQL quantize oracle verifies the whole chain. One shuffle (the groupBy),
     no model collect; pass ``model`` to apply a pre-trained universal model
-    instead of training per series."""
+    instead of training per series. A NULL token is skipped, as in ewma
+    and sample_entropy: it is no token of the series, and its row does not
+    come back."""
 
     def _run(sid, pos, toks):
         toks = [int(t) for t in toks]
@@ -225,7 +230,8 @@ def tpe_roundtrip_tokens(
         return {"series_id": [sid] * len(pos), "pos": pos, "token": dec}
 
     return map_series(
-        df, F.col(key), [], [F.col(order_col), F.col(token_col)], _run, ROUNDTRIP_SCHEMA
+        df.filter(F.col(token_col).isNotNull()), F.col(key), [],
+        [F.col(order_col), F.col(token_col)], _run, ROUNDTRIP_SCHEMA,
     )
 
 

@@ -80,6 +80,13 @@ from .manifest import commit_partition, read_manifest, write_counted
 TARGET_FILE_BYTES = 128 * 1024 * 1024
 # the snapshot's fixed schema: reading it needs no inference job
 _STATE_SCHEMA = "conv_id string, last_ts timestamp"
+# a base tier day's fixed schema (rollup_tier / rollup_from_finer output;
+# date_trunc makes bucket_ts TIMESTAMP whether the raw ts is TIMESTAMP or
+# TIMESTAMP_NTZ): reading it needs no inference job either
+_BASE_TIER_SCHEMA = (
+    "conv_id string, bucket_ts timestamp, n_turns bigint, n_lat bigint, sum_lat double, "
+    "min_lat double, max_lat double, sum_chars bigint, sum_tokens bigint, n_tool_calls bigint"
+)
 
 
 def _families() -> dict[str, tuple]:
@@ -503,7 +510,7 @@ def retention_sweep(
                     cold_root = os.path.join(store_root, f"cold_{tier}")
                     cold_tmp = os.path.join(cold_root, f".day={day}.pack.tmp")
                     cold_final = os.path.join(cold_root, f"day={day}")
-                    expiring = spark.read.parquet(part).withColumn(
+                    expiring = spark.read.schema(_BASE_TIER_SCHEMA).parquet(part).withColumn(
                         "_day", F.lit(day)
                     )
                     if sdt_comp_dev is not None:

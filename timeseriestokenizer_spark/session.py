@@ -62,6 +62,17 @@ def release_held() -> None:
         _held.pop()()
 
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _worker_import_path() -> list[str]:
+    """Where a local Python worker started by ``python -m`` looks for
+    modules besides pyspark's own: its working directory (the driver's)
+    and the ``PYTHONPATH`` the JVM inherits."""
+    paths = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    return [os.path.abspath(p) for p in paths if p]
+
+
 def get_spark(
     app_name: str = "timeseriestokenizer_spark",
     master: str | None = None,
@@ -73,6 +84,15 @@ def get_spark(
     master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
     shuffle_partitions defaults to the core count — at cluster scale this is
     instead sized so a shuffle partition holds ~128-256MB.
+
+    Python workers start from ``worker_daemon`` (Spark's daemon, minus a
+    per-task re-read of ``pyspark.zip``: every Python task pays a fixed
+    start-up cost, and on CPython 3.11 most of it was that re-read). Spark
+    starts the daemon with ``python -m``, so the package must be importable
+    where workers start: from the working directory (tests and tools run
+    from the repo root) or from ``PYTHONPATH`` (perfbench sets it). For a
+    local master where neither holds, and for any other master, workers
+    start from Spark's own daemon.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if master is None:
@@ -113,6 +133,9 @@ def get_spark(
         # pass 10-12; metaspace after a full-registry pass 189 -> 192 MB.
         .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
+    if master.startswith("local") and _PACKAGE_ROOT in _worker_import_path():
+        builder = builder.config(
+            "spark.python.daemon.module", "timeseriestokenizer_spark.worker_daemon")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -47,12 +47,28 @@ COUNT_OPS = (
 )
 
 
+def plan_tree(plan: str) -> str:
+    """The operator-tree lines of a "formatted" explain: the block under
+    its header and under each subquery's header. The numbered details
+    after each block name every operator a second time."""
+    lines, in_tree = [], False
+    for line in plan.splitlines():
+        if line.startswith(("== Physical Plan ==", "Subquery:")):
+            in_tree = True
+        elif not line.strip():
+            in_tree = False
+        elif in_tree:
+            lines.append(line)
+    return "\n".join(lines)
+
+
 def census(plan: str) -> dict:
     out = {}
+    tree = plan_tree(plan)
     for op in COUNT_OPS:
         # word-boundary match so "Exchange" doesn't count "BroadcastExchange"
         # or "ReusedExchange" and joins don't match inside codegen labels
-        n = len(re.findall(rf"(?<![A-Za-z]){op}(?![a-z])", plan))
+        n = len(re.findall(rf"(?<![A-Za-z]){op}(?![a-z])", tree))
         if n:
             out[op] = n
     return out
