@@ -36,3 +36,22 @@ def transcripts_pdf():
     from timeseriestokenizer_spark.datagen import make_transcripts_pdf
 
     return make_transcripts_pdf(C=40, seed=42)
+
+
+def _family_rows(prefix, state):
+    """A tier-store family's state as sorted, comparable rows: HLL by its
+    estimate (the sketch bytes depend on the merge order), every other
+    family by all of its columns (theta sketches by their bytes)."""
+    from pyspark.sql import functions as F
+
+    if prefix == "hll":
+        state = state.select("bucket_ts", F.hll_sketch_estimate("key_hll").alias("est"))
+    return sorted(
+        tuple(bytes(v) if isinstance(v, bytearray) else v for v in r)
+        for r in state.select(*sorted(state.columns)).collect()
+    )
+
+
+@pytest.fixture
+def family_rows():
+    return _family_rows

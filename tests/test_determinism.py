@@ -7,7 +7,7 @@ import pandas as pd
 
 from timeseriestokenizer_spark.datagen import transcripts_df
 from timeseriestokenizer_spark.functions.signals import derive_signals
-from timeseriestokenizer_spark.operators.rollup import rollup_cascade
+from timeseriestokenizer_spark.plans.incremental import cascade
 from timeseriestokenizer_spark.operators.tpe import models_to_registry, tpe_train
 
 
@@ -24,7 +24,7 @@ def test_rollup_identical_across_shuffle_widths(spark, transcripts):
     def run(parts, repart):
         def _job():
             t = transcripts.repartition(repart)
-            tiers = rollup_cascade(derive_signals(t))
+            tiers = cascade("", derive_signals(t))
             return (
                 tiers["1h"]
                 .toPandas()
@@ -79,10 +79,7 @@ def test_dedup_and_sketch_ops_identical_across_partitioning(spark):
         ngram_contamination,
         ngram_jaccard_pairs,
     )
-    from timeseriestokenizer_spark.operators.rollup import (
-        distinct_rollup_cascade,
-        with_distinct_estimate,
-    )
+    from timeseriestokenizer_spark.operators.rollup import with_distinct_estimate
 
     rng = random.Random(11)
     vocab = [f"w{i}" for i in range(25)]
@@ -123,7 +120,7 @@ def test_dedup_and_sketch_ops_identical_across_partitioning(spark):
 
     def hll(repart, width):
         def _job():
-            tiers = distinct_rollup_cascade(ev.repartition(repart), "conv_id")
+            tiers = cascade("hll", ev.repartition(repart))
             return sorted(
                 (r["bucket_ts"], r["n_distinct"])
                 for r in with_distinct_estimate(tiers["1h"]).collect()

@@ -7,12 +7,11 @@ import pandas as pd
 
 from timeseriestokenizer_spark.operators.heavy import (
     _shrink,
-    heavy_cascade,
-    heavy_rollup_from_finer,
     heavy_rollup_tier,
     heavy_topk,
     hot_keys,
 )
+from timeseriestokenizer_spark.plans.incremental import cascade
 
 
 def test_shrink_exact_and_eviction():
@@ -87,7 +86,7 @@ def test_spark_exact_regime_topk_and_cascade(spark):
         for _ in range(3000)
     ]
     df = spark.createDataFrame(rows, "ts timestamp, conv_id string")
-    tiers = heavy_cascade(df, "conv_id", "ts", k=256)
+    tiers = cascade("heavy", df)
     got = {
         (r["bucket_ts"], r["rank"]): (r["key"], r["est_count"], r["err"])
         for r in heavy_topk(tiers["1d"], 5).collect()

@@ -11,13 +11,9 @@ from pyspark.sql import functions as F
 
 from timeseriestokenizer_spark.datagen import transcripts_df
 from timeseriestokenizer_spark.functions.signals import derive_signals
-from timeseriestokenizer_spark.operators.kmv import kmv_rollup_from_finer, kmv_rollup_tier
-from timeseriestokenizer_spark.operators.rollup import (
-    distinct_rollup_cascade,
-    rollup_cascade,
-    with_distinct_estimate,
-)
 from timeseriestokenizer_spark.plans.incremental import (
+    _families,
+    cascade,
     compact_store,
     completed_days,
     read_tier,
@@ -33,32 +29,20 @@ def _rows(df, cols):
     return sorted(tuple(r) for r in df.select(*cols).collect())
 
 
-def _assert_store_equals_scratch(spark, store, full_raw):
-    sig = derive_signals(full_raw)
-    scratch = rollup_cascade(sig)
-    cols = [
-        "conv_id", "bucket_ts", "n_turns", "n_lat", "sum_lat", "min_lat",
-        "max_lat", "sum_chars", "sum_tokens", "n_tool_calls",
-    ]
-    for tier in TIERS:
-        got = _rows(read_tier(spark, store, tier), cols)
-        exp = _rows(scratch[tier], cols)
-        assert got == exp, f"tier {tier} diverged from from-scratch"
-    # HLL tiers: sketch blobs depend on merge order; the ESTIMATES must match
-    hll_scratch = distinct_rollup_cascade(sig)
-    for tier in TIERS:
-        got = _rows(
-            with_distinct_estimate(read_tier(spark, store, f"hll_{tier}")),
-            ["bucket_ts", "n_distinct"],
-        )
-        exp = _rows(with_distinct_estimate(hll_scratch[tier]), ["bucket_ts", "n_distinct"])
-        assert got == exp, f"hll tier {tier} estimate diverged"
-    # KMV (theta) tiers: the blobs themselves, merges being byte-equal to builds
-    kmv = None
-    for tier in TIERS:
-        kmv = kmv_rollup_tier(sig, tier) if kmv is None else kmv_rollup_from_finer(kmv, tier)
-        got = _rows(read_tier(spark, store, f"kmv_{tier}"), ["bucket_ts", "sketch"])
-        assert got == _rows(kmv, ["bucket_ts", "sketch"]), f"kmv tier {tier} diverged"
+def _assert_store_equals_scratch(spark, store, full_raw, family_rows):
+    """Every family's stored tiers equal its from-scratch ``cascade`` over
+    the full raw rows (HLL by estimate, the rest by all columns)."""
+    sig = derive_signals(full_raw).cache()
+    for prefix in _families():
+        # each cached tier feeds the next one's scratch build
+        scratch = {t: df.cache() for t, df in cascade(prefix, sig).items()}
+        for tier in TIERS:
+            name = f"{prefix}_{tier}" if prefix else tier
+            got = family_rows(prefix, read_tier(spark, store, name))
+            assert got == family_rows(prefix, scratch[tier]), f"{name} diverged from scratch"
+        for df in scratch.values():
+            df.unpersist()
+    sig.unpersist()
 
 
 def _assert_day_rows_equal_raw(spark, store, raw):
@@ -75,7 +59,7 @@ def _assert_day_rows_equal_raw(spark, store, raw):
     assert got == want
 
 
-def test_incremental_store_equals_from_scratch(spark, tmp_path):
+def test_incremental_store_equals_from_scratch(spark, tmp_path, family_rows):
     raw = transcripts_df(spark, C=40, seed=7).cache()
     days = sorted(
         str(r["d"]) for r in raw.select(F.to_date("ts").alias("d")).distinct().collect()
@@ -101,7 +85,7 @@ def test_incremental_store_equals_from_scratch(spark, tmp_path):
     assert [s["days"] for s in stats] == [[d] for d in days[-2:]]
     # before the late-data replay rewrites day -1: its run must have read
     # the snapshot through day -2, written by the run just before it
-    _assert_store_equals_scratch(spark, store, part)
+    _assert_store_equals_scratch(spark, store, part, family_rows)
     _assert_day_rows_equal_raw(spark, store, part)
 
     # late data lands for the newest day: stale_days flags ONLY that day
@@ -111,7 +95,7 @@ def test_incremental_store_equals_from_scratch(spark, tmp_path):
     refresh_tiers(spark, raw, store)
     assert stale_days(spark, raw, store) == []
 
-    _assert_store_equals_scratch(spark, store, raw)
+    _assert_store_equals_scratch(spark, store, raw, family_rows)
     _assert_day_rows_equal_raw(spark, store, raw)
     raw.unpersist()
 
@@ -195,7 +179,7 @@ def test_corrupt_manifest_raises(spark, tmp_path):
         completed_days(spark, str(tmp_path / "store"))
 
 
-def test_batch_equals_per_day_equals_scratch(spark, tmp_path):
+def test_batch_equals_per_day_equals_scratch(spark, tmp_path, family_rows):
     """The bulk-load batch path (one cascade, dynamic partition overwrite)
     must produce the same store as the per-day path for every family —
     and both the same base/HLL tiers as the from-scratch cascade."""
@@ -216,17 +200,12 @@ def test_batch_equals_per_day_equals_scratch(spark, tmp_path):
     assert [(o["mode"], o["days"]) for o in out_b] == [("batch", days[:5])]
     out_d = refresh_tiers(spark, raw, s_daily, mode="per_day")
     assert [o["days"] for o in out_d] == [[d] for d in days[:5]]
-    families = ["", "hll", "hist", "kll", "heavy", "cms", "kmv"]
+    families = list(_families())
     for fam in families:
         for tier in TIERS:
             name = f"{fam}_{tier}" if fam else tier
-            b, d = read_tier(spark, s_batch, name), read_tier(spark, s_daily, name)
-            if fam == "hll":  # sketch blobs depend on merge order
-                b, d = with_distinct_estimate(b), with_distinct_estimate(d)
-                cols = ["bucket_ts", "n_distinct"]
-            else:
-                cols = b.columns
-            got_b, got_d = _rows(b, cols), _rows(d, cols)
+            got_b = family_rows(fam, read_tier(spark, s_batch, name))
+            got_d = family_rows(fam, read_tier(spark, s_daily, name))
             assert got_b and got_b == got_d, f"{name}: batch != per_day"
 
     def manifest_rows(store):
@@ -238,7 +217,7 @@ def test_batch_equals_per_day_equals_scratch(spark, tmp_path):
     assert {t for t, _, _ in got} == {
         f"{f}_{t}" if f else t for f in families for t in TIERS
     } | {"_day"}
-    _assert_store_equals_scratch(spark, s_batch, raw)
+    _assert_store_equals_scratch(spark, s_batch, raw, family_rows)
     raw.unpersist()
 
 
@@ -456,18 +435,18 @@ def test_read_tier_with_cold(spark, tmp_path):
 
 def test_incremental_kll_tiers(spark, tmp_path):
     """KLL quantile tiers refresh incrementally: the refreshed kll_1h /
-    kll_1d state answers the same p95 as a from-scratch kll_cascade, and
+    kll_1d state answers the same p95 as a from-scratch cascade, and
     in the small (exact) regime the same p95 as the true rank selection
     over raw latencies."""
     import numpy as np
 
-    from timeseriestokenizer_spark.operators.kll import kll_cascade, kll_percentile
+    from timeseriestokenizer_spark.operators.kll import kll_percentile
 
     store = str(tmp_path / "store")
     raw = transcripts_df(spark, C=25, seed=5)
     refresh_tiers(spark, raw, store, with_hll=False, with_hist=False, with_cms=False, with_kmv=False)
 
-    scratch = kll_cascade(derive_signals(raw))
+    scratch = cascade("kll", derive_signals(raw))
     for tier in ("1h", "1d"):
         got = _rows(
             kll_percentile(read_tier(spark, store, f"kll_{tier}"), 0.95),
@@ -501,13 +480,13 @@ def test_incremental_heavy_tiers(spark, tmp_path):
     """Heavy-hitter tiers refresh incrementally: refreshed heavy_1d state
     answers the same top-5 as a from-scratch cascade, exactly, in the
     no-eviction regime."""
-    from timeseriestokenizer_spark.operators.heavy import heavy_cascade, heavy_topk
+    from timeseriestokenizer_spark.operators.heavy import heavy_topk
 
     store = str(tmp_path / "store")
     raw = transcripts_df(spark, C=25, seed=9)
     refresh_tiers(spark, raw, store, with_hll=False, with_hist=False, with_kll=False, with_cms=False, with_kmv=False)
 
-    scratch = heavy_cascade(raw, "conv_id", "ts")
+    scratch = cascade("heavy", raw)
     got = _rows(
         heavy_topk(read_tier(spark, store, "heavy_1d"), 5),
         ["bucket_ts", "key", "est_count", "rank", "n", "err"],
@@ -525,11 +504,7 @@ def test_incremental_cms_kmv_tiers(spark, tmp_path):
     equal the from-scratch cascade cell for cell, and in the exact small
     regime the kmv_1d sketch recovers the true distinct-conv count while
     cms_1d point estimates equal true per-conv counts."""
-    from timeseriestokenizer_spark.operators.cms import (
-        cms_point_estimate,
-        cms_rollup_from_finer,
-        cms_rollup_tier,
-    )
+    from timeseriestokenizer_spark.operators.cms import cms_point_estimate
     from timeseriestokenizer_spark.operators.kmv import kmv_estimate
 
     store = str(tmp_path / "store")
@@ -540,18 +515,14 @@ def test_incremental_cms_kmv_tiers(spark, tmp_path):
     )
     sig = derive_signals(raw)
 
-    cms = kmv = None
-    for i, tier in enumerate(TIERS):
-        cms = cms_rollup_tier(sig, tier) if i == 0 else cms_rollup_from_finer(cms, tier)
-        kmv = kmv_rollup_tier(sig, tier) if i == 0 else kmv_rollup_from_finer(kmv, tier)
-        if tier in ("1h", "1d"):
-            got = _rows(read_tier(spark, store, f"cms_{tier}"),
-                        ["bucket_ts", "row", "col", "cnt"])
-            exp = _rows(cms, ["bucket_ts", "row", "col", "cnt"])
-            assert got == exp, f"cms tier {tier} diverged from scratch"
-            gotk = _rows(read_tier(spark, store, f"kmv_{tier}"), ["bucket_ts", "sketch"])
-            expk = _rows(kmv, ["bucket_ts", "sketch"])
-            assert gotk == expk, f"kmv tier {tier} diverged from scratch"
+    cms, kmv = cascade("cms", sig), cascade("kmv", sig)
+    for tier in ("1h", "1d"):
+        got = _rows(read_tier(spark, store, f"cms_{tier}"), ["bucket_ts", "row", "col", "cnt"])
+        exp = _rows(cms[tier], ["bucket_ts", "row", "col", "cnt"])
+        assert got == exp, f"cms tier {tier} diverged from scratch"
+        gotk = _rows(read_tier(spark, store, f"kmv_{tier}"), ["bucket_ts", "sketch"])
+        expk = _rows(kmv[tier], ["bucket_ts", "sketch"])
+        assert gotk == expk, f"kmv tier {tier} diverged from scratch"
 
     # exact small regime on the 1d tier: 25 convs < 128 nominal entries and width=256
     day_truth = {

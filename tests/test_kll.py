@@ -10,9 +10,9 @@ from timeseriestokenizer_spark.operators.kll import (
     DEFAULT_K,
     KllSketch,
     kll_percentile,
-    kll_rollup_from_finer,
     kll_rollup_tier,
 )
+from timeseriestokenizer_spark.plans.incremental import coarser
 
 
 def _exact_quantile(vals, p):
@@ -135,8 +135,8 @@ def test_spark_tier_exact_and_cascade(spark):
         )
     df = spark.createDataFrame(rows, "ts timestamp, latency_s double")
     t1m = kll_rollup_tier(df, "1m", "latency_s", k=DEFAULT_K)
-    t1h = kll_rollup_from_finer(t1m, "1h", k=DEFAULT_K)
-    t1d = kll_rollup_from_finer(t1h, "1d", k=DEFAULT_K)
+    t1h = coarser("kll", t1m, "1h")
+    t1d = coarser("kll", t1h, "1d")
     got = {
         r["bucket_ts"]: (r["p95_est"], r["n"])
         for r in kll_percentile(t1d, 0.95).collect()

@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from timeseriestokenizer_spark.datagen import transcripts_df
 from timeseriestokenizer_spark.functions.signals import signals_narrow
-from timeseriestokenizer_spark.operators.rollup import rollup_cascade
+from timeseriestokenizer_spark.plans.incremental import cascade
 
 
 def _plan(df) -> str:
@@ -17,7 +17,7 @@ def test_cascade_single_exchange(spark):
     """The whole 1m→5m→1h→1d cascade must reuse the window's conv_id
     partitioning: exactly ONE Exchange in the 1d plan."""
     t = transcripts_df(spark, C=5, seed=2)
-    plan = _plan(rollup_cascade(signals_narrow(t))["1d"])
+    plan = _plan(cascade("", signals_narrow(t))["1d"])
     assert plan.count("Exchange") == 1, plan
 
 

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from timeseriestokenizer_spark.operators.pq import (
     pq_adc_topk,
-    pq_decode,
     pq_encode,
     pq_train,
 )
@@ -72,8 +71,8 @@ def test_pq_roundtrip_reconstruction_error(spark):
 
     def rmse(books):
         rec = {
-            r["vec_id"]: np.asarray(r["recon"])
-            for r in pq_decode(pq_encode(df, books), books).collect()
+            r["vec_id"]: np.concatenate([books[j][c] for j, c in enumerate(r["codes"])])
+            for r in pq_encode(df, books).collect()
         }
         R = np.stack([rec[i] for i in range(len(X))])
         return float(np.sqrt(((R - X) ** 2).mean()))
@@ -200,7 +199,6 @@ def test_ivfpq_residual_beats_flat_pq(spark):
     from timeseriestokenizer_spark.operators.pq import (
         ivfpq_encode,
         ivfpq_train,
-        pq_decode,
         pq_encode,
         pq_train,
     )
@@ -208,8 +206,8 @@ def test_ivfpq_residual_beats_flat_pq(spark):
     df, X = _vecs(spark, n_centers=32, noise=1.0, scale=2.0)
     flat = pq_train(df, m=8, k=16, sample_n=400)
     rec_flat = {
-        r["vec_id"]: np.asarray(r["recon"])
-        for r in pq_decode(pq_encode(df, flat), flat).collect()
+        r["vec_id"]: np.concatenate([flat[j][c] for j, c in enumerate(r["codes"])])
+        for r in pq_encode(df, flat).collect()
     }
     cents, books = ivfpq_train(df, n_cells=16, m=8, k=16, sample_n=400)
     m = books.shape[0]

@@ -118,9 +118,9 @@ def test_histogram_properties(spark):
 
     from timeseriestokenizer_spark.operators.rollup import (
         histogram_percentile,
-        histogram_rollup_from_finer,
         histogram_rollup_tier,
     )
+    from timeseriestokenizer_spark.plans.incremental import coarser
 
     rng = np.random.RandomState(11)
     edges = [0.5, 1.0, 4.0, 9.0]
@@ -138,7 +138,7 @@ def test_histogram_properties(spark):
         h1h = histogram_rollup_tier(df, "1h", edges=edges)
         assert h1h.agg(F.sum("n")).first()[0] == n
         direct = histogram_rollup_tier(df, "1d", edges=edges)
-        cascade = histogram_rollup_from_finer(h1h, "1d")
+        cascade = coarser("hist", h1h, "1d")
         assert sorted(map(tuple, cascade.collect())) == sorted(map(tuple, direct.collect()))
         prev = None
         for p in (0.25, 0.5, 0.9):

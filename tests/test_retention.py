@@ -12,11 +12,11 @@ from timeseriestokenizer_spark.operators.retention import (
     cold_pack_expired,
     split_expired,
 )
-from timeseriestokenizer_spark.operators.rollup import rollup_cascade
+from timeseriestokenizer_spark.plans.incremental import cascade
 
 
 def test_split_expired_partitions_rows(spark, transcripts):
-    tiers = rollup_cascade(derive_signals(transcripts))
+    tiers = cascade("", derive_signals(transcripts))
     t1h = tiers["1h"].cache()
     now = t1h.agg(F.max("bucket_ts")).first()[0]
     hot, expired = split_expired(t1h, now, keep_seconds=3 * 86400)
@@ -30,7 +30,7 @@ def test_split_expired_partitions_rows(spark, transcripts):
 
 
 def test_policy_none_keeps_everything(spark, transcripts):
-    tiers = rollup_cascade(derive_signals(transcripts))
+    tiers = cascade("", derive_signals(transcripts))
     now = tiers["1d"].agg(F.max("bucket_ts")).first()[0]
     out = apply_retention(
         {"1d": tiers["1d"]}, now, policy={"1d": None}
@@ -42,7 +42,7 @@ def test_policy_none_keeps_everything(spark, transcripts):
 def test_cold_pack_roundtrip(spark, transcripts):
     """Expired 1h points move to Gorilla blobs; unpack reproduces every
     (series, bucket_ts, value) point exactly."""
-    tiers = rollup_cascade(derive_signals(transcripts))
+    tiers = cascade("", derive_signals(transcripts))
     t1h = tiers["1h"].filter(F.col("sum_lat").isNotNull()).cache()
     now = t1h.agg(F.max("bucket_ts")).first()[0]
     _, expired = split_expired(t1h, now, keep_seconds=5 * 86400)

@@ -6,10 +6,10 @@ import pandas as pd
 from timeseriestokenizer_spark.functions.signals import derive_signals
 from timeseriestokenizer_spark.operators.rollup import (
     TIER_SECONDS,
-    rollup_cascade,
     rollup_tier,
     with_derived_metrics,
 )
+from timeseriestokenizer_spark.plans.incremental import cascade, coarser
 
 
 def _pandas_signals(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -82,7 +82,7 @@ def test_rollup_tiers_match_pandas(spark, transcripts, transcripts_pdf):
 def test_cascade_exactly_equals_direct(spark, transcripts):
     """Coarser tiers derived from finer tiers == computed from raw (exact)."""
     sig = derive_signals(transcripts).cache()
-    tiers = rollup_cascade(sig)
+    tiers = cascade("", sig)
     for tier in ["5m", "1h", "1d"]:
         direct = rollup_tier(sig, tier).toPandas().sort_values(["conv_id", "bucket_ts"]).reset_index(drop=True)
         cascaded = tiers[tier].toPandas().sort_values(["conv_id", "bucket_ts"]).reset_index(drop=True)
@@ -124,7 +124,6 @@ def test_distinct_rollup_sketch_cascade(spark):
     from pyspark.sql import functions as F
 
     from timeseriestokenizer_spark.operators.rollup import (
-        distinct_rollup_cascade,
         distinct_rollup_tier,
         with_distinct_estimate,
     )
@@ -140,7 +139,7 @@ def test_distinct_rollup_sketch_cascade(spark):
     )
     df = big.unionByName(small)
 
-    tiers = distinct_rollup_cascade(df, "conv_id")
+    tiers = cascade("hll", df)
     est_1d = {
         r["bucket_ts"].day: r["n_distinct"]
         for r in with_distinct_estimate(tiers["1d"]).collect()
@@ -191,7 +190,6 @@ def test_histogram_tiers_cascade_and_percentile(spark):
 
     from timeseriestokenizer_spark.operators.rollup import (
         histogram_percentile,
-        histogram_rollup_from_finer,
         histogram_rollup_tier,
     )
 
@@ -210,7 +208,7 @@ def test_histogram_tiers_cascade_and_percentile(spark):
     edges = [1.0, 2.0, 5.0, 10.0, 30.0]
 
     h1h = histogram_rollup_tier(df, "1h", edges=edges)
-    h1d_cascade = histogram_rollup_from_finer(h1h, "1d")
+    h1d_cascade = coarser("hist", h1h, "1d")
     h1d_direct = histogram_rollup_tier(df, "1d", edges=edges)
     key = lambda frame: sorted(tuple(r) for r in frame.collect())
     assert key(h1d_cascade) == key(h1d_direct)

@@ -4,7 +4,7 @@ the shuffle-lean projection is a pure optimization, not a semantic change."""
 import pandas as pd
 
 from timeseriestokenizer_spark.functions.signals import derive_signals, signals_narrow
-from timeseriestokenizer_spark.operators.rollup import rollup_cascade
+from timeseriestokenizer_spark.plans.incremental import cascade
 
 
 COLS = ["conv_id", "turn_idx", "ts", "latency_s", "n_chars", "n_tokens", "is_tool_call"]
@@ -29,8 +29,8 @@ def test_narrow_equals_full(spark, transcripts):
 
 
 def test_narrow_rollup_equals_full_rollup(spark, transcripts):
-    ta = rollup_cascade(derive_signals(transcripts))["1h"]
-    tb = rollup_cascade(signals_narrow(transcripts))["1h"]
+    ta = cascade("", derive_signals(transcripts))["1h"]
+    tb = cascade("", signals_narrow(transcripts))["1h"]
     a = ta.toPandas().sort_values(["conv_id", "bucket_ts"]).reset_index(drop=True)
     b = tb.toPandas().sort_values(["conv_id", "bucket_ts"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(a, b[a.columns])

@@ -1,12 +1,16 @@
 """Artifact IO parity (.fvocab / minbpe model), streaming rollup twin,
 chronological split."""
 
+import os
+
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from timeseriestokenizer_spark.oracle import numpy_oracle as O
 from timeseriestokenizer_spark.oracle.numpy_oracle import TpeModel
+from timeseriestokenizer_spark.plans.incremental import _families
 from timeseriestokenizer_spark.sources.bpe_model_io import (
     load_model,
     save_model,
@@ -170,47 +174,8 @@ def test_explode_sequence_columns_matches_pandas(spark, tmp_path):
     assert spark.read.parquet(out).count() == 6  # 3 + 2 + 1 NULL row
 
 
-def test_streaming_kll_matches_batch(spark, tmp_path):
-    """foreachBatch KLL state merge (streaming/rollup_stream.stream_kll_1m):
-    the stream-built per-minute sketch store answers the same p95 as a
-    batch kll_rollup_tier over the same rows — across MULTIPLE micro
-    batches (two source files => the second batch must merge with stored
-    state, not replace it), in the exact regime."""
-    from timeseriestokenizer_spark.operators.kll import kll_percentile, kll_rollup_tier
-    from timeseriestokenizer_spark.streaming.rollup_stream import stream_kll_1m
-
-    rng = np.random.RandomState(43)
-    base = pd.Timestamp("2026-07-01")
-    rows = [
-        (
-            (base + pd.Timedelta(seconds=int(rng.randint(0, 1800)))).to_pydatetime(),
-            float(np.round(rng.uniform(0, 9), 3)),
-        )
-        for _ in range(400)
-    ]
-    df = spark.createDataFrame(rows, "ts timestamp, latency_s double")
-    src = str(tmp_path / "kll_src")
-    # two files -> two availableNow micro-batches with maxFilesPerTrigger
-    df.limit(200).coalesce(1).write.mode("append").parquet(src)
-    df.subtract(df.limit(200)).coalesce(1).write.mode("append").parquet(src)
-
-    store = str(tmp_path / "kll_store")
-    state = stream_kll_1m(
-        spark, src, df.schema, str(tmp_path / "kll_ckpt"), store
-    )
-    got = {
-        r["bucket_ts"]: (r["p95_est"], r["n"])
-        for r in kll_percentile(state, 0.95).collect()
-    }
-    exp = {
-        r["bucket_ts"]: (r["p95_est"], r["n"])
-        for r in kll_percentile(kll_rollup_tier(df, "1m", "latency_s"), 0.95).collect()
-    }
-    assert got == exp and got
-
-
 def test_streaming_kll_crash_recovery_no_double_merge(spark, tmp_path):
-    """Simulated stream_kll_1m crash between store removal and tmp rename:
+    """Simulated stream_family_1m crash between store removal and tmp rename:
     the recovery path renames the completed tmp in, and the _applied_batch
     marker stops the replayed batch from double-merging (a KLL merge is
     not idempotent — without the marker the replay would double n)."""
@@ -218,7 +183,7 @@ def test_streaming_kll_crash_recovery_no_double_merge(spark, tmp_path):
     import shutil
 
     from timeseriestokenizer_spark.operators.kll import kll_percentile
-    from timeseriestokenizer_spark.streaming.rollup_stream import stream_kll_1m
+    from timeseriestokenizer_spark.streaming.rollup_stream import stream_family_1m
 
     rng = np.random.RandomState(47)
     base = pd.Timestamp("2026-07-01")
@@ -233,7 +198,7 @@ def test_streaming_kll_crash_recovery_no_double_merge(spark, tmp_path):
     src = str(tmp_path / "src")
     df.coalesce(1).write.parquet(src)
     store = str(tmp_path / "store")
-    state = stream_kll_1m(spark, src, df.schema, str(tmp_path / "ckpt"), store)
+    state = stream_family_1m(spark, "kll", src, df.schema, str(tmp_path / "ckpt"), store)
     want = sorted(
         tuple(r) for r in kll_percentile(state, 0.95).collect()
     )
@@ -246,53 +211,9 @@ def test_streaming_kll_crash_recovery_no_double_merge(spark, tmp_path):
     os.rename(store, tmp)
     # a FRESH checkpoint replays batch 0 from scratch against the recovery
     shutil.rmtree(str(tmp_path / "ckpt"))
-    state2 = stream_kll_1m(spark, src, df.schema, str(tmp_path / "ckpt2"), store)
+    state2 = stream_family_1m(spark, "kll", src, df.schema, str(tmp_path / "ckpt2"), store)
     got = sorted(tuple(r) for r in kll_percentile(state2, 0.95).collect())
     assert got == want  # recovered, and batch 0 NOT merged twice
-
-
-def test_streaming_heavy_matches_batch(spark, tmp_path):
-    """foreachBatch Misra-Gries state merge (streaming/rollup_stream.
-    stream_heavy_1m): stream-built per-minute heavy-hitter state answers
-    the same top-k as a batch heavy_rollup_tier over the same rows across
-    multiple micro batches, in the no-eviction exact regime."""
-    from timeseriestokenizer_spark.operators.heavy import (
-        heavy_rollup_tier,
-        heavy_topk,
-    )
-    from timeseriestokenizer_spark.streaming.rollup_stream import stream_heavy_1m
-
-    rng = np.random.RandomState(44)
-    base = pd.Timestamp("2026-07-02")
-    # zipf-ish keys over a small alphabet: well inside the k=32 exact regime
-    keys = [f"u{int(rng.zipf(1.7)) % 12}" for _ in range(400)]
-    rows = [
-        (
-            (base + pd.Timedelta(seconds=int(rng.randint(0, 1800)))).to_pydatetime(),
-            k,
-        )
-        for k in keys
-    ]
-    df = spark.createDataFrame(rows, "ts timestamp, conv_id string")
-    src = str(tmp_path / "mg_src")
-    # split by index, not subtract: zipf keys make duplicate rows, which
-    # a set-difference would silently dedupe out of the second file
-    spark.createDataFrame(rows[:200], df.schema).coalesce(1).write.mode("append").parquet(src)
-    spark.createDataFrame(rows[200:], df.schema).coalesce(1).write.mode("append").parquet(src)
-
-    state = stream_heavy_1m(
-        spark, src, df.schema, str(tmp_path / "mg_ckpt"),
-        str(tmp_path / "mg_store"),
-    )
-    got = {
-        (r["bucket_ts"], r["key"]): (r["est_count"], r["rank"])
-        for r in heavy_topk(state, 5).collect()
-    }
-    exp = {
-        (r["bucket_ts"], r["key"]): (r["est_count"], r["rank"])
-        for r in heavy_topk(heavy_rollup_tier(df, "1m"), 5).collect()
-    }
-    assert got == exp and got
 
 
 def test_streaming_sessions_match_batch(spark, tmp_path):
@@ -362,66 +283,77 @@ def test_streaming_sessions_match_batch(spark, tmp_path):
     assert len(exp) == 3  # a x2 + b x1 — the fixture really split sessions
 
 
-def test_streaming_cms_matches_batch(spark, tmp_path):
-    """foreachBatch CMS state merge (streaming/rollup_stream.stream_cms_1m):
-    stream-built cells equal a batch cms_rollup_tier over the same rows
-    EXACTLY across multiple micro-batches (counters sum, no estimate
-    regime caveat)."""
-    from timeseriestokenizer_spark.operators.cms import cms_rollup_tier
-    from timeseriestokenizer_spark.streaming.rollup_stream import stream_cms_1m
+def _stream_in_two_files(spark, tmp_path, rows, schema):
+    """Stream ``rows`` through two source files — two micro-batches, so the
+    second must merge with the stored state — and return the input frame."""
+    src = str(tmp_path / "src")
+    half = len(rows) // 2
+    for part in (rows[:half], rows[half:]):
+        spark.createDataFrame(part, schema).coalesce(1).write.mode("append").parquet(src)
+    return spark.createDataFrame(rows, schema), src
 
-    rng = np.random.RandomState(47)
+
+@pytest.mark.parametrize("prefix", [p for p in _families() if p])
+def test_stream_equals_batch(spark, tmp_path, family_rows, prefix):
+    """Every sketch family of the tier-store table, streamed through
+    stream_family_1m over two micro-batches, equals the family's batch
+    1m build over the same rows: HLL by estimate, theta sketches by bytes,
+    the rest by every column (KLL/heavy in their exact regimes; CMS and
+    histogram counters always). NULL latencies are in the input."""
+    from timeseriestokenizer_spark.streaming.rollup_stream import stream_family_1m
+
+    rng = np.random.RandomState(43)
     base = pd.Timestamp("2026-07-01")
     rows = [
         (
             (base + pd.Timedelta(seconds=int(rng.randint(0, 1800)))).to_pydatetime(),
-            f"conv-{int(rng.randint(0, 40))}",
+            f"conv-{int(rng.zipf(1.7)) % 40}",
+            None if i % 17 == 0 else float(np.round(rng.uniform(0, 90), 3)),
         )
-        for _ in range(400)
+        for i in range(400)
     ]
-    df = spark.createDataFrame(rows, "ts timestamp, conv_id string")
-    src = str(tmp_path / "cms_src")
-    df.limit(200).coalesce(1).write.mode("append").parquet(src)
-    df.subtract(df.limit(200)).coalesce(1).write.mode("append").parquet(src)
-
-    store = str(tmp_path / "cms_store")
-    state = stream_cms_1m(
-        spark, src, df.schema, str(tmp_path / "cms_ckpt"), store
+    df, src = _stream_in_two_files(
+        spark, tmp_path, rows, "ts timestamp, conv_id string, latency_s double"
     )
-    got = sorted(tuple(r) for r in state.select("bucket_ts", "row", "col", "cnt").collect())
-    exp = sorted(
-        tuple(r)
-        for r in cms_rollup_tier(df, "1m").select("bucket_ts", "row", "col", "cnt").collect()
-    )
-    assert got == exp and got
+    store = str(tmp_path / "store")
+    state = stream_family_1m(spark, prefix, src, df.schema, str(tmp_path / "ckpt"), store)
+    with open(os.path.join(store, "_applied_batch")) as f:
+        assert f.read() == "1"  # the second micro-batch merged into the first
+    build = _families()[prefix][0]
+    got = family_rows(prefix, state)
+    assert got and got == family_rows(prefix, build(df, "1m"))
 
 
-def test_streaming_kmv_matches_batch(spark, tmp_path):
-    """stream_kmv_1m: streamed theta-sketch state equals a batch
-    kmv_rollup_tier over the same rows byte for byte."""
-    from timeseriestokenizer_spark.operators.kmv import kmv_rollup_tier
-    from timeseriestokenizer_spark.streaming.rollup_stream import stream_kmv_1m
+def test_stream_heavy_uses_the_store_k(spark, tmp_path):
+    """The streamed heavy_1m state is the store's summary (k =
+    DEFAULT_MG_K): one minute with 120 distinct keys, more than a k=32
+    summary holds, streams to exactly the batch heavy_rollup_tier state
+    (top-k rows and err)."""
+    from timeseriestokenizer_spark.operators.heavy import heavy_rollup_tier, heavy_topk
+    from timeseriestokenizer_spark.streaming.rollup_stream import stream_family_1m
 
-    rng = np.random.RandomState(53)
-    base = pd.Timestamp("2026-07-01")
+    base = pd.Timestamp("2026-07-03 10:00:00")
     rows = [
-        (
-            (base + pd.Timedelta(seconds=int(rng.randint(0, 600)))).to_pydatetime(),
-            f"conv-{int(rng.randint(0, 200))}",
-        )
-        for _ in range(500)
+        ((base + pd.Timedelta(seconds=i % 60)).to_pydatetime(), f"u{i % 120:03d}")
+        for i in range(600)
     ]
-    df = spark.createDataFrame(rows, "ts timestamp, conv_id string")
-    src = str(tmp_path / "kmv_src")
-    df.limit(250).coalesce(1).write.mode("append").parquet(src)
-    df.subtract(df.limit(250)).coalesce(1).write.mode("append").parquet(src)
+    df, src = _stream_in_two_files(spark, tmp_path, rows, "ts timestamp, conv_id string")
+    state = stream_family_1m(
+        spark, "heavy", src, df.schema, str(tmp_path / "ckpt"), str(tmp_path / "store")
+    )
 
-    state = stream_kmv_1m(
-        spark, src, df.schema, str(tmp_path / "kmv_ckpt"),
-        str(tmp_path / "kmv_store"),
-    )
-    got = sorted((r["bucket_ts"], bytes(r["sketch"])) for r in state.collect())
-    exp = sorted(
-        (r["bucket_ts"], bytes(r["sketch"])) for r in kmv_rollup_tier(df, "1m").collect()
-    )
-    assert got == exp and got
+    def top(mg):
+        return sorted(tuple(r) for r in heavy_topk(mg, 256).collect())
+
+    exp = top(heavy_rollup_tier(df, "1m"))
+    assert len(exp) == 120 and all(r[-1] == 0 for r in exp)  # exact: err 0
+    assert top(state) == exp
+
+
+@pytest.mark.parametrize("prefix", ["", "nope"], ids=["base", "unknown"])
+def test_stream_family_rejects_non_sketch_prefix(spark, tmp_path, prefix):
+    """The base family and unknown prefixes raise before any stream starts."""
+    from timeseriestokenizer_spark.streaming.rollup_stream import stream_family_1m
+
+    with pytest.raises(ValueError, match="valid prefixes"):
+        stream_family_1m(spark, prefix, str(tmp_path), None, str(tmp_path), str(tmp_path))

@@ -186,8 +186,8 @@ def test_stream_backfill_reconciliation(spark, tmp_path):
 
     from timeseriestokenizer_spark.datagen import transcripts_df
     from timeseriestokenizer_spark.functions.signals import derive_signals
-    from timeseriestokenizer_spark.operators.rollup import rollup_cascade
     from timeseriestokenizer_spark.plans.incremental import (
+        cascade,
         completed_days,
         read_tier,
         refresh_tiers,
@@ -262,7 +262,7 @@ def test_stream_backfill_reconciliation(spark, tmp_path):
     common = ["conv_id", "bucket_ts", "n_turns", "sum_chars", "sum_tokens", "n_tool_calls"]
     expected = sorted(
         tuple(r)
-        for r in rollup_cascade(derive_signals(raw))["1m"].select(common).collect()
+        for r in cascade("", derive_signals(raw))["1m"].select(common).collect()
     )
     # the stream alone undercounts (late rows dropped) — reconciliation is
     # doing real work
@@ -282,74 +282,19 @@ def test_stream_backfill_reconciliation(spark, tmp_path):
     raw.unpersist()
 
 
-def test_streaming_histogram_matches_batch(spark, tmp_path):
-    """Streaming 1m histogram (availableNow, append) == batch
-    histogram_rollup_tier on the finalized windows."""
-    import pyspark.sql.types as T
-
-    from timeseriestokenizer_spark.operators.rollup import histogram_rollup_tier
-    from timeseriestokenizer_spark.streaming.rollup_stream import (
-        streaming_histogram_1m,
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("series", T.StringType()),
-            T.StructField("ts", T.TimestampType()),
-            T.StructField("latency_s", T.DoubleType()),
-        ]
-    )
-    base = pd.Timestamp("2026-05-01 00:00:00")
-    rows = [
-        ("s", base + pd.Timedelta(seconds=30 * i), float(0.5 + (i % 40)))
-        for i in range(240)
-    ]
-    src, ckpt, out = (str(tmp_path / d) for d in ("hsrc", "hck", "hout"))
-    pdf = pd.DataFrame(rows, columns=["series", "ts", "latency_s"])
-    spark.createDataFrame(pdf, schema=schema).write.parquet(src)
-
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = (
-        streaming_histogram_1m(stream)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = {
-        (r["bucket_ts"], r["bin"]): r["n"] for r in spark.read.parquet(out).collect()
-    }
-    batch = histogram_rollup_tier(spark.createDataFrame(pdf, schema=schema), "1m")
-    exp = {
-        (r["bucket_ts"], r["bin"]): r["n"] for r in batch.collect()
-    }
-    # append mode withholds windows the watermark has not passed (the hot
-    # tail); every finalized streaming row must equal its batch twin, and
-    # all but the tail minutes must have finalized
-    assert got and all(exp[k] == v for k, v in got.items())
-    finalized_minutes = {k[0] for k in got}
-    all_minutes = {k[0] for k in exp}
-    assert len(all_minutes - finalized_minutes) <= 3
-
-
 def test_stream_histogram_store_feeds_drift_series(spark, tmp_path):
-    """Composition: the STREAM-built histogram store drives drift
+    """Composition: the STREAM-built hist_1m store drives drift
     monitoring identically to the batch tier — histogram_drift_series
-    (bucket-over-bucket TVD) over the streamed sink equals the same read
-    over histogram_rollup_tier, restricted to the finalized buckets. Drift
-    is a pure read-time derivation of rollup state, so the lambda split
-    (stream hot path / batch backfill) cannot change the monitoring
+    (bucket-over-bucket TVD) over the streamed store equals the same read
+    over histogram_rollup_tier, on every bucket (the stream store is exact).
+    Drift is a pure read-time derivation of rollup state, so the lambda
+    split (stream hot path / batch backfill) cannot change the monitoring
     answer."""
     import pyspark.sql.types as T
 
     from timeseriestokenizer_spark.operators.drift import histogram_drift_series
     from timeseriestokenizer_spark.operators.rollup import histogram_rollup_tier
-    from timeseriestokenizer_spark.streaming.rollup_stream import (
-        streaming_histogram_1m,
-    )
+    from timeseriestokenizer_spark.streaming.rollup_stream import stream_family_1m
 
     schema = T.StructType(
         [
@@ -368,38 +313,25 @@ def test_stream_histogram_store_feeds_drift_series(spark, tmp_path):
         )
         for i in range(60)
     ]
-    src, ckpt, out = (str(tmp_path / d) for d in ("dsrc", "dck", "dout"))
+    src = str(tmp_path / "dsrc")
     pdf = pd.DataFrame(rows, columns=["series", "ts", "latency_s"])
     spark.createDataFrame(pdf, schema=schema).write.parquet(src)
 
-    stream = spark.readStream.schema(schema).parquet(src)
-    q = (
-        streaming_histogram_1m(stream)
-        .writeStream.format("parquet")
-        .option("path", out)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    streamed = stream_family_1m(
+        spark, "hist", src, schema, str(tmp_path / "dck"), str(tmp_path / "dstore")
     )
-    q.awaitTermination()
-    streamed = spark.read.parquet(out)
-    finalized = [r["bucket_ts"] for r in streamed.select("bucket_ts").distinct().collect()]
-    assert len(finalized) >= 5  # enough buckets for a drift series
+    assert streamed.select("bucket_ts").distinct().count() == 10  # every minute
 
-    drift_stream = {
-        r["bucket_ts"]: (r["n_prev"], r["n_cur"], r["tvd_num"], r["tvd"])
-        for r in histogram_drift_series(streamed, step="1 minute").collect()
-    }
-    batch = histogram_rollup_tier(
-        spark.createDataFrame(pdf, schema=schema), "1m"
-    ).filter(F.col("bucket_ts").isin(finalized))
-    drift_batch = {
-        r["bucket_ts"]: (r["n_prev"], r["n_cur"], r["tvd_num"], r["tvd"])
-        for r in histogram_drift_series(batch, step="1 minute").collect()
-    }
-    assert drift_stream == drift_batch
-    # the planted shift registers: some finalized bucket-over-bucket TVD
-    # is large while steady-state neighbors are small
+    def drift(hist):
+        return {
+            r["bucket_ts"]: (r["n_prev"], r["n_cur"], r["tvd_num"], r["tvd"])
+            for r in histogram_drift_series(hist, step="1 minute").collect()
+        }
+
+    drift_stream = drift(streamed)
+    batch = histogram_rollup_tier(spark.createDataFrame(pdf, schema=schema), "1m")
+    assert drift_stream == drift(batch)
+    # the planted shift registers: some bucket-over-bucket TVD is large
+    # while steady-state neighbors are small
     tvds = [v[3] for v in drift_stream.values() if v[3] is not None]
     assert tvds and max(tvds) > 0.9 and min(tvds) < 0.3

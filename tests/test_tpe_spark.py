@@ -103,6 +103,31 @@ def test_universal_vocab_deterministic(spark):
         assert enc_row["n_tokens"] == len(enc_row["tokens"])
 
 
+def test_universal_path_skips_null_tokens(spark):
+    """train_universal and tpe_encode skip a NULL token, as tpe_train does:
+    the model and the encoded streams equal those of the input without
+    the NULL rows."""
+    _, pdf = _token_df(spark, n_series=3, n=200)
+    holed = pdf.astype({"token": "Int64"})
+    holed.loc[holed["pos"] % 7 == 3, "token"] = pd.NA
+    df = spark.createDataFrame(
+        [(r.series_id, int(r.pos), None if pd.isna(r.token) else int(r.token))
+         for r in holed.itertuples()],
+        "series_id string, pos long, token int",
+    )
+    clean = df.filter("token IS NOT NULL")
+    m = train_universal(df, "series_id", "token", "pos", 70, 50)
+    assert m.merges == train_universal(clean, "series_id", "token", "pos", 70, 50).merges
+
+    def enc(d):
+        return sorted(
+            (r["series_id"], list(r["tokens"]), r["n_tokens"])
+            for r in tpe_encode(d, "series_id", "token", "pos", m).collect()
+        )
+
+    assert enc(df) == enc(clean)
+
+
 def test_compression_rate_at_reference_scale():
     """Reference doc anchor: ~2x compression on smooth hourly series at N=200,
     vocab 600 (docs/SCRIPTS_REFERENCE.md:394-397, BASELINE.md)."""

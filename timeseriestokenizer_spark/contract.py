@@ -835,7 +835,7 @@ def q_m4_downsample(spark, sf_dir):
 
 def q_distinct_rollup(spark, sf_dir):
     """Distinct-cardinality tier via MERGEABLE HLL sketch state
-    (operators/rollup.distinct_rollup_cascade): 1m sketches built from raw,
+    (the tier-store family table's ``hll`` row): 1m sketches built from raw,
     1h derived by two hll_union_agg cascades (1m→5m→1h). Exact distinct does
     not cascade; register-max sketch union does — at 100 TB this turns
     per-tier countDistinct reshuffles of raw keys into unions of KiB blobs.
@@ -846,16 +846,13 @@ def q_distinct_rollup(spark, sf_dir):
     union associativity is still exercised end-to-end. The estimator-regime
     approximation bound (50k ids, <2% rel err) and cascade==direct-build
     equality are pinned in tests/test_rollup.py."""
-    from .operators.rollup import (
-        distinct_rollup_from_finer,
-        distinct_rollup_tier,
-        with_distinct_estimate,
-    )
+    from .operators.rollup import distinct_rollup_tier, with_distinct_estimate
+    from .plans.incremental import coarser
 
     ev = load(spark, sf_dir, "events")
     t1m = distinct_rollup_tier(ev, "1m", "user_id")
-    t5m = distinct_rollup_from_finer(t1m, "5m")
-    t1h = distinct_rollup_from_finer(t5m, "1h")
+    t5m = coarser("hll", t1m, "5m")
+    t1h = coarser("hll", t5m, "1h")
     return with_distinct_estimate(t1h).select(
         "bucket_ts", F.col("n_distinct").cast("long").alias("n_distinct")
     )
@@ -2095,18 +2092,15 @@ def q_hist_p95_cascade(spark, sf_dir):
     up to 1d, then read-time interpolation) — the oracle builds the daily
     histogram DIRECTLY from raw and interpolates identically, so the hash
     match proves cascaded == direct AND the estimator arithmetic."""
-    from .operators.rollup import (
-        histogram_percentile,
-        histogram_rollup_from_finer,
-        histogram_rollup_tier,
-    )
+    from .operators.rollup import histogram_percentile, histogram_rollup_tier
+    from .plans.incremental import coarser
 
     ev = load(spark, sf_dir, "events").withColumnRenamed("value", "latency_s")
     h1h = histogram_rollup_tier(
         ev.withColumn("ts", F.col("ts").cast("timestamp")), "1h",
         val_col="latency_s", edges=_HIST_EDGES,
     )
-    h1d = histogram_rollup_from_finer(h1h, "1d")
+    h1d = coarser("hist", h1h, "1d")
     return histogram_percentile(h1d, 0.95, edges=_HIST_EDGES)
 
 
@@ -2121,13 +2115,14 @@ def q_kll_p95_cascade(spark, sf_dir):
     and the hash match proves build + merge + query end-to-end, the
     distinct_rollup exact-small-regime proof shape. Beyond this regime
     the ~O(1/k) rank bound is pytest-pinned (tests/test_kll.py)."""
-    from .operators.kll import kll_percentile, kll_rollup_from_finer, kll_rollup_tier
+    from .operators.kll import kll_percentile, kll_rollup_tier
+    from .plans.incremental import coarser
 
     ev = load(spark, sf_dir, "events").withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
     s1h = kll_rollup_tier(ev, "1h", val_col="value", k=512)
-    s1d = kll_rollup_from_finer(s1h, "1d", k=512)
+    s1d = coarser("kll", s1h, "1d")
     out = kll_percentile(s1d, 0.95)
     return out.select(
         "bucket_ts", F.col("p95_est").alias("p95"), F.col("n").alias("n_vals")
@@ -2197,13 +2192,14 @@ def q_heavy_hitters_cascade(spark, sf_dir):
     the hash match proves build + merge + rank end-to-end, the
     kll_p95_cascade exact-small-regime proof shape. The eviction-regime
     n/(k+1) bound is pytest-pinned (tests/test_heavy.py)."""
-    from .operators.heavy import heavy_rollup_from_finer, heavy_rollup_tier, heavy_topk
+    from .operators.heavy import heavy_rollup_tier, heavy_topk
+    from .plans.incremental import coarser
 
     ev = load(spark, sf_dir, "events").withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
     h1h = heavy_rollup_tier(ev, "1h", key_col="user_id", k=256)
-    h1d = heavy_rollup_from_finer(h1h, "1d", k=256)
+    h1d = coarser("heavy", h1h, "1d")
     return heavy_topk(h1d, 10).select(
         "bucket_ts", "key", "est_count", "rank"
     )

@@ -157,17 +157,6 @@ def cms_rollup_tier(
     )
 
 
-def cms_rollup_from_finer(finer: DataFrame, tier: str) -> DataFrame:
-    """Coarser CMS tier by counter addition (cascade == direct; also the
-    incremental-refresh merge path)."""
-    from .rollup import bucket_ts
-
-    coarse = finer.withColumn(
-        "bucket_ts2", bucket_ts(tier, "bucket_ts")
-    ).drop("bucket_ts").withColumnRenamed("bucket_ts2", "bucket_ts")
-    return cms_merge(coarse, ["bucket_ts"])
-
-
 def count_bracket(
     mg_df: DataFrame,
     cms_cells: DataFrame,

@@ -113,22 +113,12 @@ def heavy_rollup_tier(
         )
         .mapInPandas(_partials, MG_STATE_SCHEMA)
     )
-    return _merge_groups(partials, kk)
+    return heavy_merge(partials, kk)
 
 
-def heavy_rollup_from_finer(finer: DataFrame, tier: str, k: int = DEFAULT_MG_K) -> DataFrame:
-    """Coarser heavy-hitter tier by summary merge (the cascade AND the
-    incremental-refresh path)."""
-    coarse = (
-        finer.withColumn("bucket_ts2", bucket_ts(tier, "bucket_ts"))
-        .drop("bucket_ts")
-        .withColumnRenamed("bucket_ts2", "bucket_ts")
-    )
-    return _merge_groups(coarse, int(k))
-
-
-def _merge_groups(state: DataFrame, k: int) -> DataFrame:
-    """SUM all collected summaries per bucket (commutative — arrival
+def heavy_merge(state: DataFrame, k: int = DEFAULT_MG_K) -> DataFrame:
+    """Merge summary rows per bucket_ts (the cascade, refresh and stream
+    path alike): SUM all collected summaries (commutative — arrival
     order cannot matter), then shrink once; err accumulates the parts'
     errs plus the new subtraction, preserving the invariant
     true_count in [est, est + err]."""
@@ -154,20 +144,6 @@ def _merge_groups(state: DataFrame, k: int) -> DataFrame:
         .agg(F.collect_list(F.struct("n", "err", "keys", "counts")).alias("parts"))
         .mapInPandas(_merge, MG_STATE_SCHEMA)
     )
-
-
-def heavy_cascade(
-    df: DataFrame,
-    key_col: str = "conv_id",
-    ts_col: str = "ts",
-    k: int = DEFAULT_MG_K,
-) -> dict[str, DataFrame]:
-    """Heavy-hitter state at all four tiers (1m from raw, merged upward)."""
-    t1m = heavy_rollup_tier(df, "1m", key_col, ts_col, k)
-    t5m = heavy_rollup_from_finer(t1m, "5m", k)
-    t1h = heavy_rollup_from_finer(t5m, "1h", k)
-    t1d = heavy_rollup_from_finer(t1h, "1d", k)
-    return {"1m": t1m, "5m": t5m, "1h": t1h, "1d": t1d}
 
 
 def heavy_topk(mg_df: DataFrame, topn: int = 10) -> DataFrame:

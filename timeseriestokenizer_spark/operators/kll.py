@@ -241,23 +241,12 @@ def kll_rollup_tier(
         )
         .mapInPandas(_partials, _KLL_STATE_SCHEMA)
     )
-    return _merge_groups(partials, "bucket_ts", kk)
+    return kll_merge(partials, kk)
 
 
-def kll_rollup_from_finer(
-    finer: DataFrame, tier: str, k: int = DEFAULT_K
-) -> DataFrame:
-    """Coarser KLL tier by sketch MERGE (the cascade path — identical to
-    the incremental-refresh path, so refreshed state equals scratch
-    state). Only sketch rows shuffle."""
-    coarse = finer.withColumn("bucket_ts2", bucket_ts(tier, "bucket_ts")).drop(
-        "bucket_ts"
-    ).withColumnRenamed("bucket_ts2", "bucket_ts")
-    return _merge_groups(coarse, "bucket_ts", int(k))
-
-
-def _merge_groups(state: DataFrame, key: str, k: int) -> DataFrame:
-    """groupBy(key) -> collect_list(sketch) -> batched merge. Arrival
+def kll_merge(state: DataFrame, k: int = DEFAULT_K) -> DataFrame:
+    """Merge sketch rows per bucket_ts: groupBy -> collect_list(sketch) ->
+    batched merge (the cascade, refresh and stream path alike). Arrival
     order of the collected sketches is shuffle-nondeterministic, and once
     compaction engages a KLL merge IS order-dependent (which items
     survive depends on the compaction sequence) — so the partials are
@@ -287,22 +276,10 @@ def _merge_groups(state: DataFrame, key: str, k: int) -> DataFrame:
             )
 
     return (
-        state.groupBy(key)
+        state.groupBy("bucket_ts")
         .agg(F.collect_list(F.struct("n", "coins", "levels")).alias("parts"))
         .mapInPandas(_merge, _KLL_STATE_SCHEMA)
     )
-
-
-def kll_cascade(
-    signals: DataFrame, val_col: str = "latency_s", k: int = DEFAULT_K
-) -> dict[str, DataFrame]:
-    """KLL quantile state at all four tiers (1m built from raw, coarser
-    tiers merged upward — the distinct_rollup_cascade shape)."""
-    t1m = kll_rollup_tier(signals, "1m", val_col, k)
-    t5m = kll_rollup_from_finer(t1m, "5m", k)
-    t1h = kll_rollup_from_finer(t5m, "1h", k)
-    t1d = kll_rollup_from_finer(t1h, "1d", k)
-    return {"1m": t1m, "5m": t5m, "1h": t1h, "1d": t1d}
 
 
 def kll_percentile(kll_df: DataFrame, p: float) -> DataFrame:

@@ -108,17 +108,6 @@ def kmv_rollup_tier(signals: DataFrame, tier: str, key: str = "conv_id") -> Data
     )
 
 
-def kmv_rollup_from_finer(finer: DataFrame, tier: str) -> DataFrame:
-    """Coarser KMV tier by merging the finer tier's sketches (byte-equal
-    to a direct build)."""
-    from .rollup import bucket_ts
-
-    return kmv_merge(
-        finer.select(bucket_ts(tier, "bucket_ts").alias("bucket_ts"), "sketch"),
-        ["bucket_ts"],
-    )
-
-
 def kmv_retention_series(cells: DataFrame, step: str = "INTERVAL 1 DAY") -> DataFrame:
     """Bucket-over-bucket returning-key estimates from KMV TIER STATE
     alone (no raw re-scan — the drift_series doctrine applied to set

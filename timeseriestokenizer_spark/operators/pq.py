@@ -121,36 +121,6 @@ def pq_encode(
     )
 
 
-def pq_decode(
-    codes_df: DataFrame,
-    codebooks: np.ndarray,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Reconstruct approximate vectors from codes (centroid concatenation)
-    — the lossy inverse, used to measure reconstruction error and to serve
-    a decoded sample without touching raw storage."""
-    spark = codes_df.sparkSession
-    B = np.ascontiguousarray(np.asarray(codebooks, dtype=np.float64))
-    bc = spark.sparkContext.broadcast(B)
-
-    def _dec(it):
-        books = bc.value
-        m = books.shape[0]
-        for pdf in it:
-            codes = np.array(list(pdf["codes"]), dtype=np.int64)
-            if len(codes) == 0:
-                yield pd.DataFrame({id_col: [], "recon": []})
-                continue
-            recon = np.concatenate(
-                [books[j][codes[:, j]] for j in range(m)], axis=1
-            )
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].values, "recon": list(recon)}
-            )
-
-    return codes_df.mapInPandas(_dec, schema=f"{id_col} long, recon array<double>")
-
-
 def pq_adc_topk(
     codes_df: DataFrame,
     queries: DataFrame,

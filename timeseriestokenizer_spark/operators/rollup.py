@@ -51,32 +51,30 @@ def rollup_tier(signals: DataFrame, tier: str, key: str = "conv_id") -> DataFram
     )
 
 
-def rollup_from_finer(finer: DataFrame, tier: str, key: str = "conv_id") -> DataFrame:
-    """Derive a coarser tier exactly from a finer tier's state (cascade)."""
-    return (
-        finer.withColumn("bucket_ts2", bucket_ts(tier, "bucket_ts"))
-        .groupBy(key, "bucket_ts2")
-        .agg(
-            F.sum("n_turns").alias("n_turns"),
-            F.sum("n_lat").alias("n_lat"),
-            F.sum("sum_lat").alias("sum_lat"),
-            F.min("min_lat").alias("min_lat"),
-            F.max("max_lat").alias("max_lat"),
-            F.sum("sum_chars").alias("sum_chars"),
-            F.sum("sum_tokens").alias("sum_tokens"),
-            F.sum("n_tool_calls").alias("n_tool_calls"),
-        )
-        .withColumnRenamed("bucket_ts2", "bucket_ts")
+def rebucket(state: DataFrame, tier: str) -> DataFrame:
+    """Tier state with ``bucket_ts`` moved to its (coarser) ``tier`` bucket:
+    the rows a family's merge then folds into one per new bucket."""
+    return state.withColumn("bucket_ts", bucket_ts(tier, "bucket_ts"))
+
+
+def rollup_merge(state: DataFrame, key: str = "conv_id") -> DataFrame:
+    """Merge base state rows per (key, bucket_ts): counts and sums add,
+    min/max fold."""
+    return state.groupBy(key, "bucket_ts").agg(
+        F.sum("n_turns").alias("n_turns"),
+        F.sum("n_lat").alias("n_lat"),
+        F.sum("sum_lat").alias("sum_lat"),
+        F.min("min_lat").alias("min_lat"),
+        F.max("max_lat").alias("max_lat"),
+        F.sum("sum_chars").alias("sum_chars"),
+        F.sum("sum_tokens").alias("sum_tokens"),
+        F.sum("n_tool_calls").alias("n_tool_calls"),
     )
 
 
-def rollup_cascade(signals: DataFrame, key: str = "conv_id") -> dict[str, DataFrame]:
-    """All four tiers: 1m from raw, then 5m←1m, 1h←5m, 1d←1h."""
-    t1m = rollup_tier(signals, "1m", key)
-    t5m = rollup_from_finer(t1m, "5m", key)
-    t1h = rollup_from_finer(t5m, "1h", key)
-    t1d = rollup_from_finer(t1h, "1d", key)
-    return {"1m": t1m, "5m": t5m, "1h": t1h, "1d": t1d}
+def rollup_from_finer(finer: DataFrame, tier: str, key: str = "conv_id") -> DataFrame:
+    """Derive a coarser tier exactly from a finer tier's state (cascade)."""
+    return rollup_merge(rebucket(finer, tier), key)
 
 
 # ---------------------------------------------------------------------------
@@ -103,28 +101,11 @@ def distinct_rollup_tier(
     )
 
 
-def distinct_rollup_from_finer(finer: DataFrame, tier: str) -> DataFrame:
-    """Derive a coarser distinct tier by UNIONING finer sketches (HLL
-    register-max merge is associative, so cascaded unions equal a direct
-    build from raw — tested in test_rollup)."""
-    return (
-        finer.withColumn("bucket_ts2", bucket_ts(tier, "bucket_ts"))
-        .groupBy("bucket_ts2")
-        .agg(F.hll_union_agg("key_hll").alias("key_hll"))
-        .withColumnRenamed("bucket_ts2", "bucket_ts")
-    )
-
-
-def distinct_rollup_cascade(
-    signals: DataFrame, key: str = "conv_id", lg_k: int = 12
-) -> dict[str, DataFrame]:
-    """HLL distinct-cardinality state at all four tiers (1m built from raw,
-    the rest unioned upward)."""
-    t1m = distinct_rollup_tier(signals, "1m", key, lg_k)
-    t5m = distinct_rollup_from_finer(t1m, "5m")
-    t1h = distinct_rollup_from_finer(t5m, "1h")
-    t1d = distinct_rollup_from_finer(t1h, "1d")
-    return {"1m": t1m, "5m": t5m, "1h": t1h, "1d": t1d}
+def hll_merge(state: DataFrame) -> DataFrame:
+    """Merge HLL sketch rows per bucket_ts by UNION (register-max is
+    associative, so cascaded unions equal a direct build from raw —
+    tested in test_rollup)."""
+    return state.groupBy("bucket_ts").agg(F.hll_union_agg("key_hll").alias("key_hll"))
 
 
 def with_distinct_estimate(tier_df: DataFrame, out_col: str = "n_distinct") -> DataFrame:
@@ -214,14 +195,10 @@ def histogram_rollup_tier(
 DEFAULT_LATENCY_EDGES = [1.0, 2.0, 5.0, 10.0, 30.0, 60.0, 120.0, 300.0, 1800.0]
 
 
-def histogram_rollup_from_finer(finer: DataFrame, tier: str) -> DataFrame:
-    """Coarser histogram tier by pure addition (exact — binning is
-    pointwise, so cascaded == direct; pytest-pinned)."""
-    return (
-        finer.withColumn("bucket_ts2", bucket_ts(tier, "bucket_ts"))
-        .groupBy(F.col("bucket_ts2").alias("bucket_ts"), "bin")
-        .agg(F.sum("n").alias("n"))
-    )
+def histogram_merge(state: DataFrame) -> DataFrame:
+    """Merge histogram rows per (bucket_ts, bin) by addition (exact —
+    binning is pointwise, so cascaded == direct; pytest-pinned)."""
+    return state.groupBy("bucket_ts", "bin").agg(F.sum("n").alias("n"))
 
 
 def histogram_percentile(

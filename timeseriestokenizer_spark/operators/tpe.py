@@ -139,10 +139,13 @@ def tpe_encode(
 ) -> DataFrame:
     """Encode each series' token stream (sorted by ``order_col``) with one
     universal model: ``(series_id, tokens, n_tokens)``, one row per series.
-    A NULL token fails the task. Per-series models: tpe_encode_with_models."""
+    A NULL token is skipped, as in tpe_train: it is no token of the series.
+    The kernel drops it (a NaN in its array), not a Filter: Catalyst would
+    push a Filter on ``token_col`` below joins into the expression that
+    computes it. Per-series models: tpe_encode_with_models."""
 
     def _enc(sid, toks):
-        out = model.encode([int(t) for t in toks])
+        out = model.encode([int(t) for t in toks[~np.isnan(toks)]])
         return {"series_id": [sid], "tokens": [out], "n_tokens": [len(out)]}
 
     return map_series(
@@ -175,15 +178,18 @@ def train_universal(
 ) -> TpeModel:
     """One global merge order: deterministic driver-side training over a
     canonically sorted, size-capped sample (reference samples 100k rows,
-    process_chronos_dataset.py:17-18,168-218)."""
+    process_chronos_dataset.py:17-18,168-218). A NULL token is skipped, as
+    in tpe_train: NULLs sort after every token, so the cap takes the first
+    ``max_rows`` non-NULL rows (a sort key, not a Filter, which Catalyst
+    would push below joins into the expression that computes the token)."""
     pdf = (
         df.select(key, order_col, token_col)
-        .orderBy(key, order_col)
+        .orderBy(F.col(token_col).isNull(), key, order_col)
         .limit(max_rows)
         .toPandas()
     )
     model = TpeModel(actual_vocab_size)
-    model.train(pdf[token_col].to_numpy(dtype=np.int64).tolist(), target_vocab_size)
+    model.train(pdf[token_col].dropna().to_numpy(dtype=np.int64).tolist(), target_vocab_size)
     return model
 
 

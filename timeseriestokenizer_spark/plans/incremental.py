@@ -18,10 +18,18 @@ matter how old the previous turn is. The state through the refresh's last
 day is then merged from (state through D-1, the refresh's maxima) —
 incremental itself, #active-conversations rows.
 
+Every family — the base rollup state plus the HLL/histogram/KLL/
+heavy-hitter/CMS/KMV sketches — is declared once in ``_families`` as (build
+from signals, merge of state rows regrouped by ``bucket_ts``); a coarser
+tier is the finer one ``rebucket``-ed and merged (``coarser``), and
+``cascade`` chains that over all four tiers. The streaming sketch tiers
+(``streaming/rollup_stream.stream_family_1m``) take the same build and
+merge from the table, so a streamed ``<prefix>_1m`` state is the one a
+refresh writes for the same rows.
+
 One refresh body handles a contiguous RUN of days: derive signals once,
-then one cascade per family (``_families``: the base rollup state plus the
-HLL/histogram/KLL/heavy-hitter/CMS/KMV sketches), each coarser tier built
-from the cached finer one. ``refresh_tiers``' ``mode`` only groups days
+then one cascade per family, each coarser tier built from the cached finer
+one. ``refresh_tiers``' ``mode`` only groups days
 into runs — ``per_day`` makes one run per day (a snapshot per day, the
 nightly shape), ``batch`` one run for all days (the bulk-load/backfill
 shape). How a tier is written follows from the run's length: one day
@@ -61,17 +69,19 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from ..operators.cms import cms_rollup_from_finer, cms_rollup_tier
-from ..operators.heavy import heavy_rollup_from_finer, heavy_rollup_tier
-from ..operators.kll import kll_rollup_from_finer, kll_rollup_tier
-from ..operators.kmv import kmv_rollup_from_finer, kmv_rollup_tier
+from ..operators.cms import cms_merge, cms_rollup_tier
+from ..operators.heavy import heavy_merge, heavy_rollup_tier
+from ..operators.kll import kll_merge, kll_rollup_tier
+from ..operators.kmv import kmv_merge, kmv_rollup_tier
 from ..operators.rollup import (
     TIERS,
-    distinct_rollup_from_finer,
     distinct_rollup_tier,
-    histogram_rollup_from_finer,
+    histogram_merge,
     histogram_rollup_tier,
+    hll_merge,
+    rebucket,
     rollup_from_finer,
+    rollup_merge,
     rollup_tier,
 )
 from .manifest import commit_partition, read_manifest, write_counted
@@ -90,21 +100,49 @@ _BASE_TIER_SCHEMA = (
 
 
 def _families() -> dict[str, tuple]:
-    """Tier-store families: prefix -> (finest tier from signals, coarser
-    tier from the next finer one). ``""`` is the base rollup state stored
-    as ``<tier>``; every other family is a sketch side state stored as
+    """The tier-store families, each declared once: prefix -> (build,
+    merge). ``build(signals, tier)`` is the family's state at ``tier`` from
+    signal rows; ``merge(state)`` folds state rows that share a
+    ``bucket_ts`` into one (per (conv_id, bucket_ts) for the base family).
+    Everything else derives from these two: a coarser tier is the finer
+    one rebucketed and merged (``coarser``), the cascade and the refresh
+    chain those steps over ``TIERS``, and the streaming sketch tiers
+    (``streaming/rollup_stream.stream_family_1m``) merge stored state with
+    each micro-batch's build. ``""`` is the base rollup state stored as
+    ``<tier>``; every other family is a sketch side state stored as
     ``<prefix>_<tier>``, with the operators' default sketch sizes. Built
     per call, so the builders are the module's names at call time (the
-    perfbench tracer wraps ``rollup_tier``/``rollup_from_finer`` here)."""
+    perfbench tracer wraps ``rollup_tier`` here, and ``rollup_from_finer``,
+    which ``coarser`` calls)."""
     return {
-        "": (rollup_tier, rollup_from_finer),
-        "hll": (distinct_rollup_tier, distinct_rollup_from_finer),
-        "hist": (histogram_rollup_tier, histogram_rollup_from_finer),
-        "kll": (kll_rollup_tier, kll_rollup_from_finer),
-        "heavy": (heavy_rollup_tier, heavy_rollup_from_finer),
-        "cms": (cms_rollup_tier, cms_rollup_from_finer),
-        "kmv": (kmv_rollup_tier, kmv_rollup_from_finer),
+        "": (rollup_tier, rollup_merge),
+        "hll": (distinct_rollup_tier, hll_merge),
+        "hist": (histogram_rollup_tier, histogram_merge),
+        "kll": (kll_rollup_tier, kll_merge),
+        "heavy": (heavy_rollup_tier, heavy_merge),
+        "cms": (cms_rollup_tier, lambda state: cms_merge(state, ["bucket_ts"])),
+        "kmv": (kmv_rollup_tier, lambda state: kmv_merge(state, ["bucket_ts"])),
     }
+
+
+def coarser(prefix: str, finer: DataFrame, tier: str) -> DataFrame:
+    """Family ``prefix``'s state at ``tier`` from its state at a finer
+    tier: the rows rebucketed to ``tier``, then the family's merge. The
+    base family takes the same two steps through ``rollup_from_finer``,
+    called by this module's name (the tracer counts those calls)."""
+    if not prefix:
+        return rollup_from_finer(finer, tier)
+    return _families()[prefix][1](rebucket(finer, tier))
+
+
+def cascade(prefix: str, signals: DataFrame) -> dict[str, DataFrame]:
+    """Family ``prefix``'s state at every tier: the finest built from
+    ``signals``, each coarser one from the tier before it."""
+    build = _families()[prefix][0]
+    out, finer = {}, None
+    for tier in TIERS:  # finest first
+        finer = out[tier] = build(signals, tier) if finer is None else coarser(prefix, finer, tier)
+    return out
 
 
 def _tier_dir(prefix: str, tier: str) -> str:
@@ -333,12 +371,12 @@ def _refresh_run(
         )
 
     tiers = {}
-    for prefix, (first, from_finer) in families.items():
+    for prefix, (build, _) in families.items():
         cur = None
         for tier in TIERS:  # finest first
             finer = cur
             # the next coarser tier derives from this cache, not raw
-            cur = (first(signals, tier) if finer is None else from_finer(finer, tier)).persist()
+            cur = (build(signals, tier) if finer is None else coarser(prefix, finer, tier)).persist()
             name = _tier_dir(prefix, tier)
             base = not prefix and finer is None  # 1m: sum(n_turns) = raw rows
             counts = _write_tier(

@@ -15,6 +15,14 @@ Two sink shapes with DIFFERENT late-data semantics:
   unbounded, so this helper is only for bounded availableNow runs, never a
   continuous query.
 
+The sketch tiers stream through one more shape:
+
+* stream_family_1m — the ``<prefix>_1m`` state of any sketch family of the
+  tier-store table (plans/incremental._families), built and merged by the
+  table's functions in foreachBatch. Exact, not watermarked: every row
+  merges into its bucket, none is dropped, and the store equals the batch
+  build over the same rows. Each micro-batch rewrites the whole store.
+
 The batch cascade remains the source of truth (streaming feeds the hot end).
 
 The per-turn signals that need lag() (latency) are not computable in a pure
@@ -188,192 +196,38 @@ def reconcile_with_batch(
     return batch_part.unionByName(stream_tail)
 
 
-def streaming_histogram_1m(
-    stream_df: DataFrame,
-    val_col: str = "latency_s",
-    edges: list[float] | None = None,
-    watermark: str = "2 minutes",
-) -> DataFrame:
-    """Streaming twin of rollup.histogram_rollup_tier: tumbling 1-minute
-    windows of fixed-bin counts (long format). Bin counts are pure
-    additive aggregation state, so append mode finalizes each
-    (bucket, bin) row once the watermark passes — and the batch refresh
-    reconciles late drops exactly as for the sum/count tier
-    (reconcile semantics identical: day-filter + union, no join)."""
-    from ..operators.rollup import DEFAULT_LATENCY_EDGES
+def stream_family_1m(spark, prefix: str, input_dir: str, schema, checkpoint_dir: str, store_path: str):
+    """Stream the ``<prefix>_1m`` sketch tier of any tier-store family
+    (plans/incremental._families: hll, hist, kll, heavy, cms, kmv) into a
+    parquet store: state(store) = merge(old state ∪ build(batch, "1m")),
+    with the family's build and merge from the table and the operators'
+    default sketch sizes, so the streamed state is the state the refresh
+    writes for the same rows (pytest-pinned per family). Raises
+    ``ValueError`` for the base family ``""`` or an unknown prefix.
 
-    if edges is None:
-        edges = DEFAULT_LATENCY_EDGES
-    v = F.col(val_col)
-    bin_expr = F.aggregate(
-        F.array(*[F.lit(float(e)) for e in edges]),
-        F.lit(0),
-        lambda acc, e: acc + F.when(v >= e, 1).otherwise(0),
-    )
-    return (
-        stream_df.filter(v.isNotNull())
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 minute").alias("w"), bin_expr.alias("bin"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("bucket_ts"), "bin", "n")
-    )
-
-
-def stream_kll_1m(
-    spark,
-    input_dir: str,
-    schema,
-    checkpoint_dir: str,
-    store_path: str,
-    val_col: str = "latency_s",
-    k: int = 512,
-):
-    """Streaming KLL quantile tier: foreachBatch incremental sketch merge.
-
-    Unlike counts/histograms, a KLL sketch is not a Catalyst aggregate, so
-    the streaming form is the foreachBatch state-merge pattern (the same
-    one Delta/Iceberg MERGE streaming pipelines use): each micro-batch
-    builds PARTIAL sketches for the 1-minute buckets it touched
-    (operators/kll.kll_rollup_tier on the batch frame — map-side partials,
-    only sketch rows shuffle), unions them with the stored per-bucket
-    state, re-merges, and swaps the store atomically (dot-prefixed temp,
-    the compact_store crash-safety pattern). State(bucket) =
-    merge(old_state, batch_partial) is exactly the cascade/refresh merge,
-    so stream-built state equals a batch build over the same rows
-    (pytest-pinned in the exact regime; rank-bounded beyond).
-
-    At scale the store is day-partitioned and only TOUCHED day partitions
-    rewrite (buckets arrive nearly-ordered under a watermark); the full
-    rewrite here keeps the sandbox twin simple and the semantics
-    identical. Restart-safe AND exactly-once: the checkpoint tracks input
-    offsets, and because a KLL merge is not idempotent the store carries
-    an ``_applied_batch`` marker written before the atomic swap — a
+    A sketch is not a Catalyst streaming aggregate, so this is the
+    foreachBatch state-merge pattern (the one Delta/Iceberg MERGE
+    streaming pipelines use): each micro-batch builds partial state for
+    the 1-minute buckets it touched, unions it with the stored state,
+    re-merges, and rewrites the WHOLE store — one write per micro-batch
+    whose cost grows with the store, not with the batch — swapped in
+    atomically (dot-prefixed temp, the compact_store crash-safety
+    pattern). Every merge is arrival-order-insensitive, so the batch
+    split cannot change the state. Restart-safe AND exactly-once: the checkpoint
+    tracks input offsets, and because a sketch merge is not idempotent the
+    store carries an ``_applied_batch`` marker written before the swap — a
     replayed batch that already reached the store is skipped, so no crash
     window can double-merge or lose state (see _merge_batch)."""
-    from ..operators.kll import _merge_groups, kll_rollup_tier
-
-    return _run_state_merge_stream(
-        spark,
-        input_dir,
-        schema,
-        checkpoint_dir,
-        store_path,
-        partial_fn=lambda batch: kll_rollup_tier(batch, "1m", val_col, k),
-        merge_fn=lambda state: _merge_groups(state, "bucket_ts", k),
-    )
-
-
-def stream_heavy_1m(
-    spark,
-    input_dir: str,
-    schema,
-    checkpoint_dir: str,
-    store_path: str,
-    key_col: str = "conv_id",
-    k: int = 32,
-):
-    """Streaming heavy-hitter (Misra-Gries) tier — the skew-monitoring
-    companion to stream_kll_1m, same foreachBatch state-merge shape:
-    each micro-batch folds into per-bucket MG partials
-    (operators/heavy.heavy_rollup_tier), merges with stored state
-    (sum-all-then-shrink-once, so shuffle/batch arrival order cannot
-    leak into the summary — the CLAUDE.md MG-merge rule), and swaps the
-    store atomically with the exactly-once ``_applied_batch`` marker.
-    Stream-built state equals a batch build over the same rows in the
-    no-eviction regime (pytest-pinned)."""
-    from ..operators.heavy import _merge_groups, heavy_rollup_tier
-
-    return _run_state_merge_stream(
-        spark,
-        input_dir,
-        schema,
-        checkpoint_dir,
-        store_path,
-        partial_fn=lambda batch: heavy_rollup_tier(
-            batch, "1m", key_col=key_col, k=k
-        ),
-        merge_fn=lambda state: _merge_groups(state, k),
-    )
-
-
-def stream_cms_1m(
-    spark,
-    input_dir: str,
-    schema,
-    checkpoint_dir: str,
-    store_path: str,
-    key_col: str = "conv_id",
-    depth: int = 4,
-    width: int = 256,
-):
-    """Streaming count-min tier — same foreachBatch state-merge shape as
-    stream_kll_1m / stream_heavy_1m, but the merge is PLAIN COUNTER
-    ADDITION (groupBy sum over (bucket, row, col)): commutative and
-    idempotence-free like the others, so it rides the exactly-once
-    ``_applied_batch`` marker unchanged. Stream-built cells equal a batch
-    build over the same rows EXACTLY (counters, not estimates — no
-    regime caveat needed)."""
-    from ..operators.cms import cms_merge, cms_rollup_tier
-
-    return _run_state_merge_stream(
-        spark,
-        input_dir,
-        schema,
-        checkpoint_dir,
-        store_path,
-        partial_fn=lambda batch: cms_rollup_tier(
-            batch, "1m", key=key_col, depth=depth, width=width
-        ),
-        merge_fn=lambda state: cms_merge(state, ["bucket_ts"]),
-    )
-
-
-def stream_kmv_1m(
-    spark,
-    input_dir: str,
-    schema,
-    checkpoint_dir: str,
-    store_path: str,
-    key_col: str = "conv_id",
-):
-    """Streaming KMV tier — theta-sketch state merge on the shared runner.
-    Each micro-batch builds one theta sketch per 1-minute bucket it
-    touched; the merge is ``theta_union_agg`` over the stored and batch
-    sketches: order-insensitive AND byte-equal to a batch build (the same
-    sketch size on both sides), so the stream/batch reconcile is an
-    equality, not an estimate comparison."""
-    from ..operators.kmv import kmv_merge, kmv_rollup_tier
-
-    return _run_state_merge_stream(
-        spark,
-        input_dir,
-        schema,
-        checkpoint_dir,
-        store_path,
-        partial_fn=lambda batch: kmv_rollup_tier(batch, "1m", key=key_col),
-        merge_fn=lambda state: kmv_merge(state, ["bucket_ts"]),
-    )
-
-
-def _run_state_merge_stream(
-    spark,
-    input_dir: str,
-    schema,
-    checkpoint_dir: str,
-    store_path: str,
-    partial_fn,
-    merge_fn,
-):
-    """The generic foreachBatch sketch-state merger both sketch tiers
-    share: state(store) = merge_fn(old_state ∪ partial_fn(batch)), with
-    crash-safe atomic store swaps and exactly-once replay skipping.
-    ``partial_fn(batch_df)`` builds per-bucket partial summaries;
-    ``merge_fn(unioned_df)`` re-merges per bucket and must be
-    arrival-order-insensitive (canonical-sort / sum-then-shrink — the
-    CLAUDE.md sketch-merge rule)."""
     import os
     import shutil
 
+    from ..plans.incremental import _families
+
+    families = _families()
+    sketches = [p for p in families if p]
+    if prefix not in sketches:
+        raise ValueError(f"no sketch family {prefix!r}; valid prefixes: {sketches}")
+    build, merge = families[prefix]
     tmp = os.path.join(
         os.path.dirname(store_path), "." + os.path.basename(store_path) + ".tmp"
     )
@@ -406,11 +260,11 @@ def _run_state_merge_stream(
             return  # already fully applied by a crashed-then-recovered run
         if not batch_df.head(1):
             return
-        partial = partial_fn(batch_df)
+        partial = build(batch_df, "1m")
         sess = batch_df.sparkSession
         if os.path.isdir(store_path):
             old = sess.read.parquet(store_path)
-            merged = merge_fn(old.unionByName(partial))
+            merged = merge(old.unionByName(partial))
         else:
             merged = partial
         merged.write.mode("overwrite").parquet(tmp)

@@ -4,7 +4,8 @@ count the plan operators that matter at 100 TB —
 
     exchanges (shuffles), broadcast exchanges, join strategies (flagging
     BroadcastNestedLoopJoin / CartesianProduct), Python stages (flagging
-    per-row BatchEvalPython — the engine bans it), WholeStageCodegen spans.
+    per-row BatchEvalPython — the engine bans it). WholeStageCodegen is not
+    counted: the census reads AQE's initial plan, which has no codegen spans.
 
 Building a DataFrame does not execute it, so the census is cheap. A few
 builders still fire Spark jobs while building (sampling splits, histogram
@@ -41,9 +42,9 @@ COUNT_OPS = (
     "MapInPandas",
     "MapInArrow",
     "FlatMapGroupsInPandas",
+    "FlatMapCoGroupsInPandas",
     "ArrowEvalPython",
     "BatchEvalPython",
-    "WholeStageCodegen",
 )
 
 
